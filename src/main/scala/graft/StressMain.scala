@@ -118,6 +118,19 @@ object StressMain {
     embPath
   }
 
+  /** Print a state base's PTR and generation dirs, read through the
+    * Hadoop FileSystem API the store itself writes with (a java.nio
+    * read would verify a stale local shadow of a non-local scheme). */
+  private def printGens(spark: SparkSession, tag: String, dir: String): Unit = {
+    val base = new org.apache.hadoop.fs.Path(dir)
+    val fs = graft.util.StateFs.fs(spark, base)
+    val ptr = graft.util.StateFs.readString(fs,
+      new org.apache.hadoop.fs.Path(base, "PTR"))
+    val gens = fs.listStatus(base).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("g")).sorted
+    println(s"[stress] $tag: PTR=$ptr gens=[${gens.mkString(",")}]")
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -891,13 +904,6 @@ object StressMain {
       println(s"[stress] ivfpq-stream corpus   rows=${corpus.count()}")
       val state = "/tmp/stress/ivfpq_stream_state"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(state))
-      // r15: SPARK_GRAFT_STRESS_PTR=1 runs the same alternation with
-      // the codes store in pointer mode — the object-store-safe swap
-      // — as the 1M regression that folds stay flat and compaction
-      // publishes via the PTR rewrite (generation turnover + GC)
-      // instead of the rename-aside swap.
-      val ptrMode = sys.env.contains("SPARK_GRAFT_STRESS_PTR")
-      if (ptrMode) StreamingIvfPq.enablePointerMode(spark, state)
       val queries = corpus.filter(col("vec_id") < 8)
       def serve(tag: String): Unit =
         time(s"ivfpq-stream serve $tag")(
@@ -927,20 +933,8 @@ object StressMain {
         }
       }
       serve("final+1append")
-      if (ptrMode) {
-        // StateFs accessors, not java.nio (ADVICE r16 / VERDICT r17 #3
-        // — the last of the four pointer-verification blocks to move):
-        // verification must read the layout through the SAME filesystem
-        // scheme the store writes, or an s3a-backed run would verify a
-        // stale local shadow
-        val codes = new org.apache.hadoop.fs.Path(s"$state/codes")
-        val ffs = graft.util.StateFs.fs(spark, codes)
-        val ptr = graft.util.StateFs.readString(ffs,
-          new org.apache.hadoop.fs.Path(codes, "PTR")).trim
-        val gens = ffs.listStatus(codes).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("g")).sorted
-        println(s"[stress] ivfpq-stream PTR=$ptr gens=${gens.mkString(",")}")
-      }
+      // generation turnover + GC after the compactions
+      printGens(spark, "ivfpq-stream codes", s"$state/codes")
       corpus.unpersist(): Unit
     }
     // Trained-vs-seed codebook ablation for the STREAMED IVF-PQ
@@ -1228,15 +1222,6 @@ object StressMain {
       }
       val terms = Seq("spark", "vector", "customer")
       val inc = fresh("inc")
-      // r16: SPARK_GRAFT_STRESS_PTR=1 runs the same fold sequence with
-      // the two family stores in pointer mode — the 1M regression for
-      // the BM25 pointer rollout (VERDICT r15 #1): folds must stay
-      // flat (appends land inside the live generation; only the
-      // compaction swap differs) and compact() must publish each
-      // family via its PTR rewrite, keeping the predecessor as the
-      // grace window.
-      val ptrMode = sys.env.contains("SPARK_GRAFT_STRESS_PTR")
-      if (ptrMode) operators.Bm25Index.enablePointerMode(spark, inc)
       for (b <- 0 until 10) {
         val lo = b * 100000L; val hi = lo + 100000L
         time(f"bm25inc batch $b%02d (100k)")({
@@ -1250,122 +1235,16 @@ object StressMain {
       time("bm25inc compact")({ operators.Bm25Index.compact(spark, inc); 1L })
       time("bm25inc retrieve compacted")(
         operators.Bm25Index.retrieve(spark, inc, terms).count())
-      if (ptrMode)
-        // Hadoop API, not java.nio (ADVICE r16 — same reasoning as the
-        // alternation's verification block)
-        for (sub <- Seq("postings", "dl")) {
-          val famPath = new org.apache.hadoop.fs.Path(s"$inc/$sub")
-          val ffs = graft.util.StateFs.fs(spark, famPath)
-          val ptr = graft.util.StateFs.readString(ffs,
-            new org.apache.hadoop.fs.Path(famPath, "PTR"))
-          val gens = ffs.listStatus(famPath).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith("g")).sorted.mkString(",")
-          println(s"[stress] bm25inc $sub: PTR=$ptr gens=[$gens]")
-        }
+      // compact() publishes each family via its PTR rewrite, keeping
+      // the predecessor as the grace window
+      for (sub <- Seq("postings", "dl"))
+        printGens(spark, s"bm25inc $sub", s"$inc/$sub")
       val full = fresh("full")
       time("bm25inc full rebuild 1M")({
         operators.Bm25Index.appendBatch(spark, full, docs, 0L); 1000000L
       })
       time("bm25inc retrieve rebuilt")(
         operators.Bm25Index.retrieve(spark, full, terms).count())
-    }
-    // In-place rename->pointer migration at 1M (round-17, VERDICT
-    // r16 #1): the operational claim — a LIVE deployed index adopts
-    // the object-store-safe layout without a rebuild — measured at
-    // scale: a 1M-doc BM25 index (both families, including a
-    // compacted generation) and a 1M-vector IVF lists store are built
-    // in rename mode, migrated in place, and must serve IDENTICAL
-    // results before and after, with post-migration appends and
-    // compactions publishing via PTR. The interesting numbers: the
-    // migration cost (one copy of the live tree — the full-rebuild
-    // alternative re-tokenizes/re-assigns the corpus) vs the rebuild
-    // anchor the BM25INC section records.
-    if (sys.env.contains("SPARK_GRAFT_STRESS_MIGRATE")) {
-      import org.apache.spark.sql.functions._
-      ensure1mCorpus(spark)
-      val docs = Tables.documents(spark, "/tmp/stress1m")
-        .select(col("doc_id"), col("text"))
-      val terms = Seq("spark", "vector", "customer")
-      val bmState = "/tmp/stress_migrate/bm"
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File("/tmp/stress_migrate"))
-      // 4 batches (800k) pre-migration — the 5th slice folds AFTER
-      // the flip, so the post-migration append cost is a real batch
-      for (b <- 0 until 4) {
-        val lo = b * 200000L; val hi = lo + 200000L
-        time(f"mig bm25 fold $b%02d (200k, rename mode)")({
-          operators.Bm25Index.appendBatch(spark, bmState,
-            docs.filter(col("doc_id") >= lo && col("doc_id") < hi), b.toLong)
-          200000L
-        })
-        // a mid-history compaction so the migrated tree carries a
-        // compacted generation + manifest state, not just appends
-        if (b == 2) time("mig bm25 compact (rename mode)")({
-          operators.Bm25Index.compact(spark, bmState); 1L })
-      }
-      val bmBefore = operators.Bm25Index.retrieve(spark, bmState, terms)
-        .collect().map(_.toString).toSeq
-      time("mig bm25 MIGRATE 800k-doc index (copy-staged g0, both families)")({
-        operators.Bm25Index.migrateToPointerMode(spark, bmState); 1L })
-      val bmAfter = operators.Bm25Index.retrieve(spark, bmState, terms)
-        .collect().map(_.toString).toSeq
-      assert(bmAfter == bmBefore,
-        "BM25 migration must not change the served ranking")
-      println(s"[stress] mig bm25: served ranking IDENTICAL across the " +
-        s"flip (${bmBefore.size} rows)")
-      time("mig bm25 post-migration fold (200k -> 1M)")({
-        operators.Bm25Index.appendBatch(spark, bmState,
-          docs.filter(col("doc_id") >= 800000L && col("doc_id") < 1000000L),
-          4L)
-        200000L
-      })
-      time("mig bm25 post-migration compact (PTR publish)")({
-        operators.Bm25Index.compact(spark, bmState); 1L })
-      for (sub <- Seq("postings", "dl")) {
-        val famPath = new org.apache.hadoop.fs.Path(s"$bmState/$sub")
-        val ffs = graft.util.StateFs.fs(spark, famPath)
-        val ptr = graft.util.StateFs.readString(ffs,
-          new org.apache.hadoop.fs.Path(famPath, "PTR"))
-        println(s"[stress] mig bm25 $sub: PTR=$ptr")
-      }
-      time("mig bm25 retrieve post-compact")(
-        operators.Bm25Index.retrieve(spark, bmState, terms).count())
-      // IVF lists: 1M vectors in rename mode, migrate, probe equality
-      val vecs = spark.read.parquet(ensureAnn1m(spark))
-      val ivState = "/tmp/stress_migrate/iv"
-      for (b <- 0 until 4) {
-        val lo = b * 200000L; val hi = lo + 200000L
-        time(f"mig ivf fold $b%02d (200k, rename mode)")({
-          streaming.StreamingIvf.appendBatch(spark, ivState,
-            vecs.filter(col("vec_id") >= lo && col("vec_id") < hi),
-            StressConfigs.sivfcCentroids, b.toLong)
-          200000L
-        })
-      }
-      val qs = vecs.filter(col("vec_id") < 8)
-      val ivBefore = streaming.StreamingIvf.probe(spark, ivState, qs,
-        k = StressConfigs.annK, nProbe = StressConfigs.sivfcNProbe)
-        .collect().map(_.toString).sorted.toSeq
-      time("mig ivf MIGRATE 800k-vector lists (copy-staged g0)")({
-        streaming.StreamingIvf.migrateToPointerMode(spark, ivState); 1L })
-      val ivAfter = streaming.StreamingIvf.probe(spark, ivState, qs,
-        k = StressConfigs.annK, nProbe = StressConfigs.sivfcNProbe)
-        .collect().map(_.toString).sorted.toSeq
-      assert(ivAfter == ivBefore,
-        "IVF migration must not change the probe results")
-      println(s"[stress] mig ivf: probe results IDENTICAL across the flip " +
-        s"(${ivBefore.size} rows)")
-      time("mig ivf post-migration fold (200k -> 1M)")({
-        streaming.StreamingIvf.appendBatch(spark, ivState,
-          vecs.filter(col("vec_id") >= 800000L && col("vec_id") < 1000000L),
-          StressConfigs.sivfcCentroids, 4L)
-        200000L
-      })
-      time("mig ivf post-migration compact (PTR publish)")({
-        streaming.StreamingIvf.compact(spark, ivState); 1L })
-      time("mig ivf probe post-compact")(
-        streaming.StreamingIvf.probe(spark, ivState, qs,
-          k = StressConfigs.annK, nProbe = StressConfigs.sivfcNProbe).count())
     }
     // Drain/compact alternation e2e (round-13, VERDICT r12 #6): the
     // 24/7-deployment shape the scaladocs prescribe — an AvailableNow
@@ -1386,16 +1265,6 @@ object StressMain {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val terms = Seq("spark", "vector", "customer")
       val qs = vecs1m.filter(col("vec_id") < 8)
-      // r16: SPARK_GRAFT_STRESS_PTR=1 runs the whole alternation with
-      // ALL THREE stored-state indexes in pointer mode — the
-      // object-store-shape capstone: every compaction below publishes
-      // via PTR rewrites, no directory rename load-bearing anywhere.
-      val ptrMode = sys.env.contains("SPARK_GRAFT_STRESS_PTR")
-      if (ptrMode) {
-        operators.Bm25Index.enablePointerMode(spark, s"$base/bm/state")
-        streaming.StreamingIvf.enablePointerMode(spark, s"$base/iv/state")
-        streaming.StreamingIvfPq.enablePointerMode(spark, s"$base/pq/state")
-      }
       for (b <- 0 until 10) {
         val lo = b * 100000L; val hi = lo + 100000L
         docs1m.filter(col("doc_id") >= lo && col("doc_id") < hi)
@@ -1469,23 +1338,12 @@ object StressMain {
         streaming.StreamingIvfPq.probe(spark, s"$base/pq/state", qs,
           k = StressConfigs.annK, nProbe = StressConfigs.streamNProbe,
           m = StressConfigs.streamM, subLen = StressConfigs.streamSubLen).count())
-      if (ptrMode)
-        // through the Hadoop FileSystem API like the product code
-        // (ADVICE r16): a java.nio verification would silently break
-        // the moment this stress base models a non-local scheme —
-        // exactly what this capstone section claims to cover
-        for ((tag, dir) <- Seq(("bm25/postings", s"$base/bm/state/postings"),
-            ("bm25/dl", s"$base/bm/state/dl"),
-            ("ivf/lists", s"$base/iv/state/lists"),
-            ("ivfpq/codes", s"$base/pq/state/codes"))) {
-          val basePath = new org.apache.hadoop.fs.Path(dir)
-          val fs = graft.util.StateFs.fs(spark, basePath)
-          val ptr = graft.util.StateFs.readString(fs,
-            new org.apache.hadoop.fs.Path(basePath, "PTR"))
-          val gens = fs.listStatus(basePath).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith("g")).sorted.mkString(",")
-          println(s"[stress] alt $tag: PTR=$ptr gens=[$gens]")
-        }
+      // every compaction published via PTR rewrites
+      for ((tag, dir) <- Seq(("bm25/postings", s"$base/bm/state/postings"),
+          ("bm25/dl", s"$base/bm/state/dl"),
+          ("ivf/lists", s"$base/iv/state/lists"),
+          ("ivfpq/codes", s"$base/pq/state/codes")))
+        printGens(spark, s"alt $tag", dir)
     }
     // q_rag_incremental cost profile (round-12): the bench's slowest
     // query — two in-query Bm25Index batches + one served retrieve.

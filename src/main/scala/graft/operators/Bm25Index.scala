@@ -63,27 +63,23 @@ import graft.util.StateFs
   *
   * At 100 TB: the per-batch append dirs are the compaction unit —
   * [[compact]] rewrites the visible dirs of each family into one
-  * generation (tkb layout preserved) behind a heal-able rename-aside
-  * swap, so N-batch read fan-in is a maintenance knob, not a decay
-  * curve; `df` merge cost is vocabulary-scale, not corpus-scale;
-  * `dl` probes join on (doc_id, chunk_id) after the postings filter
-  * has already shrunk the left side to matching chunks only.
+  * generation (tkb layout preserved), so N-batch read fan-in is a
+  * maintenance knob, not a decay curve; `df` merge cost is
+  * vocabulary-scale, not corpus-scale; `dl` probes join on
+  * (doc_id, chunk_id) after the postings filter has already shrunk the
+  * left side to matching chunks only.
   *
-  * Object-store note (r15/r16): the merged `df`/`stats` store already
-  * IS a version-pointer layout (`merged/CURRENT` — no rename is
-  * load-bearing there), and since r16 the two family stores can opt
-  * into the same discipline via [[enablePointerMode]]
-  * ([[graft.util.StateFs.enablePointerMode]] per family dir, the
-  * streamed-vector-index wiring): each family dir becomes a container
-  * of `g<k>` generation dirs plus a one-line `PTR` file, compaction
-  * stages its rewrite in the UNPUBLISHED next generation and
-  * publishes with one atomic small-file rewrite, and the superseded
-  * generation survives as an in-flight-reader grace window until the
-  * next compaction entry's GC. With that mode on, NO directory rename
-  * anywhere in this index is load-bearing — the s3a://-safe shape.
-  * Rename mode stays the default (one fewer indirection on
-  * rename-atomic filesystems); the two layouts must not mix, so the
-  * mode is chosen once on a virgin state dir.
+  * Object-store shape: the merged `df`/`stats` store is a
+  * version-pointer layout (`merged/CURRENT`), and each family dir uses
+  * the one [[graft.util.StateFs]] state layout — a container of `g<k>`
+  * generation dirs plus a one-line `PTR` file, the append dirs above
+  * living inside the live generation. Compaction stages its rewrite in
+  * the UNPUBLISHED next generation and publishes with one atomic
+  * small-file rewrite; the superseded generation survives as an
+  * in-flight-reader grace window until the next compaction entry's GC.
+  * NO directory rename anywhere in this index is load-bearing — the
+  * s3a://-safe shape. A family dir left in the retired rename-aside
+  * layout is refused loudly (StateFs scaladoc).
   */
 object Bm25Index {
 
@@ -152,52 +148,14 @@ object Bm25Index {
 
   private def familyBase(stateDir: String, sub: String) = new Path(stateDir, sub)
 
-  /** The live tree of one append family: the family dir itself in the
-    * default rename-swap mode; the PTR-named generation dir under it
-    * in pointer mode ([[graft.util.StateFs.resolveLive]] — the
-    * [[graft.streaming.StreamingIvf]] device). */
+  /** The live generation of one append family — the PTR-named
+    * generation dir under the family dir
+    * ([[graft.util.StateFs.resolveLive]]; `g0`, not created, on a
+    * virgin index). */
   private def familyLive(spark: SparkSession, stateDir: String, sub: String): Path = {
     val base = familyBase(stateDir, sub)
     StateFs.resolveLive(StateFs.fs(spark, base), base)
   }
-
-  /** Opt this index's two append families (`postings/`, `dl/`) into
-    * the version-pointer swap mode — the object-store-safe layout
-    * where [[compact]] publishes each family via one atomic `PTR`
-    * rewrite instead of a directory rename (header scaladoc; the
-    * merged `df`/`stats` store is already pointer-based, so with this
-    * on no rename in the index is load-bearing). Call ONCE on a
-    * virgin state dir, before the first batch; the mode is recorded
-    * per family dir and every later read/append/compact follows it
-    * transparently. */
-  def enablePointerMode(spark: SparkSession, stateDir: String): Unit =
-    for (sub <- Seq("postings", "dl"))
-      StateFs.enablePointerMode(spark, familyBase(stateDir, sub))
-
-  /** In-place rename→pointer migration of a LIVE index (VERDICT r16
-    * #1 — [[enablePointerMode]] is virgin-dir-only, so a deployed
-    * index could previously adopt the object-store-safe layout only
-    * by re-ingesting the corpus): each family's committed v-dirs are
-    * staged as a COPY under generation `g0` and the mode flipped with
-    * one atomic marker create
-    * ([[graft.util.StateFs.migrateToPointerMode]] — its scaladoc has
-    * the full crash matrix: any crash leaves either the untouched
-    * rename-mode index or a fully-published pointer one). Run in the
-    * no-reader/no-writer maintenance slot (enforced by the staging
-    * snapshot re-check); idempotent, so a crashed run is completed by
-    * rerunning. The two families migrate independently — a crash
-    * between them leaves a mixed state every code path already
-    * handles, because the swap mode is resolved per family. */
-  def migrateToPointerMode(spark: SparkSession, stateDir: String): Unit =
-    for (sub <- Seq("postings", "dl")) {
-      val base = familyBase(stateDir, sub)
-      val f = StateFs.fs(spark, base)
-      if (!f.exists(base)) StateFs.enablePointerMode(spark, base) // virgin
-      else {
-        if (!StateFs.pointerMode(f, base)) StateFs.healWriter(f, base)
-        StateFs.migrateToPointerMode(spark, base)
-      }
-    }
 
   /** The committed merged version name, or None before the first
     * fully-committed batch. A version is served only if the pointer
@@ -240,7 +198,6 @@ object Bm25Index {
     * committed batch, or None before the first. */
   def readState(spark: SparkSession, stateDir: String)
       : Option[(DataFrame, DataFrame, DataFrame, DataFrame)] = {
-    healReaderAll(spark, stateDir)
     val cur = readMerged(spark, stateDir)
     // Merged-state loss detection (review r13, the read-side twin of
     // the appendBatch guard): None with committed append dirs present
@@ -376,7 +333,8 @@ object Bm25Index {
     * or empty batch). */
   def appendBatch(spark: SparkSession, stateDir: String, docs: DataFrame,
       batchId: Long): Boolean = {
-    healWriterAll(spark, stateDir)
+    // writer entry: a virgin family publishes PTR=g0 before any write
+    for (sub <- Seq("postings", "dl")) StateFs.openLive(spark, familyBase(stateDir, sub))
     val cur = readMerged(spark, stateDir)
     // Loud-loss gate (review r13): the commit below derives the NEW
     // manifest from the on-disk listing — without this check, an
@@ -522,26 +480,6 @@ object Bm25Index {
     StateFs.gcVersions(StateFs.fs(spark, md), md, vname)
   }
 
-  /** Crash-window repair, split by caller role (graft.util.StateFs):
-    * readers only restore a mid-swap-crashed family so its data is
-    * visible; writers additionally drop stale `.bak`/orphan `.tmp`
-    * dirs. Readers running the full destructive heal could delete a
-    * live compaction's `.tmp` out from under it (review r12). In
-    * pointer mode both are structural no-ops — a generation dir never
-    * has `.bak`/`.tmp` siblings; its crash states are GC'd at compact
-    * entry instead ([[graft.util.StateFs.gcStaleGens]]). */
-  private def healReaderAll(spark: SparkSession, stateDir: String): Unit =
-    for (sub <- Seq("postings", "dl")) {
-      val live = familyLive(spark, stateDir, sub)
-      StateFs.healReader(StateFs.fs(spark, live), live)
-    }
-
-  private def healWriterAll(spark: SparkSession, stateDir: String): Unit =
-    for (sub <- Seq("postings", "dl")) {
-      val live = familyLive(spark, stateDir, sub)
-      StateFs.healWriter(StateFs.fs(spark, live), live)
-    }
-
   /** Background compaction — the coalesce the scaladoc above promised:
     * rewrite the served postings/dl append dirs into ONE generation
     * each (named at the committed frontier, so readers' `<= frontier`
@@ -552,23 +490,17 @@ object Bm25Index {
     * it is already one frame. Run this when no writer is active
     * (single-writer discipline, as with every file-layout compactor);
     * concurrent READERS on another session see either generation,
-    * never half of one, thanks to the rename-aside windows being
-    * healable and `_SUCCESS`-gated.
+    * never half of one: each family publishes by one PTR rewrite.
     *
-    * Crash contract (reworked per ADVICE r12 — the old flow's
-    * `swapIn` destroyed the old generations BEFORE the manifest
-    * re-commit, so a crash in between left the committed manifest
-    * naming dirs that no longer existed and the index wedged): each
-    * swap now keeps its `.bak` ([[graft.util.StateFs.swapInKeepBak]])
-    * and the compacted generation carries a `_COMPACTED` marker
-    * listing the dir names it folded; old generations are dropped
-    * only AFTER the manifest re-commit lands. A crash anywhere leaves
-    * a servable state: before any swap → old layout; between a swap
+    * Crash contract: the compacted generation carries a `_COMPACTED`
+    * marker listing the dir names it folded, and the superseded
+    * generation survives the manifest re-commit (it is collected only
+    * at the next compact entry). A crash anywhere leaves a servable
+    * state: before a PTR rewrite → old layout; between a PTR rewrite
     * and the manifest commit → [[resolveFamily]] detects the folded
     * names and serves the compacted generation in their place, and
     * the next [[compact]] completes the interrupted manifest
-    * re-commit; after the commit → at worst a stale `.bak` the next
-    * writer heal drops.
+    * re-commit.
     *
     * NO CONCURRENT WRITERS — enforced, not assumed (VERDICT r14 #1,
     * the [[graft.sink.Compactor]] standard): a batch committed by a
@@ -582,15 +514,14 @@ object Bm25Index {
     * swaps, so one re-check covers the whole rewrite window; any
     * difference aborts loudly with both rewrites discarded and the
     * live index (the concurrent batch included) intact. Residual: the
-    * instants between the re-check and the first rename, the
+    * instants between the re-check and the first PTR rewrite, the
     * documented Compactor residual.
     *
     * Returns true iff it changed state — a rewrite, or the
     * manifest-completion of a crash-interrupted earlier run (false =
     * nothing to merge). */
-  def compact(spark: SparkSession, stateDir: String,
-      retainGens: Int = 0): Boolean =
-    compactImpl(spark, stateDir, () => (), retainGens)
+  def compact(spark: SparkSession, stateDir: String): Boolean =
+    compactImpl(spark, stateDir, () => ())
 
   /** Name-level concurrency snapshot: committed postings/dl v-dir
     * names plus the raw `merged/CURRENT` value — everything a
@@ -610,24 +541,15 @@ object Bm25Index {
 
   /** [[compact]] with the injectable pre-swap test seam (the
     * Compactor/StreamingIvf device). */
-  /** `retainGens` deepens the pointer-mode reader grace window per
-    * family (the [[graft.util.StateFs.pointerSwap]] contract: a scan
-    * may span `retainGens + 1` compactions; default 0 = one). */
   private[graft] def compactImpl(spark: SparkSession, stateDir: String,
-      beforeSwap: () => Unit, retainGens: Int = 0): Boolean = {
-    // writer-entry repair, per swap mode: rename mode heals the
-    // rename-aside crash windows; pointer mode GCs stale generations
-    // — a crashed compaction's partial unpublished target, or the
-    // superseded generation kept as the reader grace window
-    // ([[graft.util.StateFs.gcStaleGens]]). Resolve AFTER the GC so a
-    // half-enabled dir cannot change resolution mid-call.
+      beforeSwap: () => Unit): Boolean = {
+    // writer-entry GC per family: a crashed compaction's partial
+    // unpublished target, or the superseded generation kept as the
+    // reader grace window ([[graft.util.StateFs.gcStaleGens]])
     for (sub <- Seq("postings", "dl")) {
       val base = familyBase(stateDir, sub)
       val f = StateFs.fs(spark, base)
-      if (StateFs.pointerMode(f, base))
-        StateFs.gcStaleGens(f, base, StateFs.resolveLive(f, base).getName,
-          retainGens)
-      else StateFs.healWriter(f, StateFs.resolveLive(f, base))
+      StateFs.gcStaleGens(f, base, StateFs.resolveLive(f, base).getName)
     }
     // the concurrency snapshot is taken at ENTRY, before readMerged /
     // resolveFamily / the migration schema probes (review r15 — taken
@@ -665,19 +587,10 @@ object Bm25Index {
     // layout → true no-op; a stale manifest alone still needs the
     // completion commit below
     if (!doP && !doDl && !pStale && !dlStale) return false
-    // per-family staging target: rename mode stages under
-    // `<family>.tmp` and installs by rename-aside swap; pointer mode
-    // stages in the UNPUBLISHED next generation and installs with one
-    // atomic PTR rewrite — no directory rename is load-bearing, the
-    // object-store-safe path (StateFs pointer-mode scaladoc)
-    def stageTarget(sub: String, live: Path): Path = {
-      val base = familyBase(stateDir, sub)
-      if (StateFs.pointerMode(StateFs.fs(spark, base), base))
-        StateFs.nextGen(base, live)
-      else StateFs.tmpOf(live)
-    }
-    val pTarget = stageTarget("postings", pLive)
-    val dlTarget = stageTarget("dl", dlLive)
+    // per-family staging target: the UNPUBLISHED next generation,
+    // installed with one atomic PTR rewrite (StateFs scaladoc)
+    val pTarget = StateFs.nextGen(familyBase(stateDir, "postings"), pLive)
+    val dlTarget = StateFs.nextGen(familyBase(stateDir, "dl"), dlLive)
     // stage BOTH rewrites before either family swaps, so the single
     // pre-swap re-check below covers the whole rewrite window (header
     // scaladoc — with write-swap interleaved per family, a concurrent
@@ -714,19 +627,11 @@ object Bm25Index {
         "— rewrites discarded, live index intact including the concurrent " +
         "batch; rerun compaction in the no-writer maintenance slot")
     }
-    // install: one atomic PTR rewrite per pointer-mode family (the
-    // superseded generation survives as the reader grace window and
-    // falls to the next compact entry's GC); rename-aside with kept
-    // `.bak` otherwise (old generations must outlive the manifest
-    // re-commit below — ADVICE r12)
-    def install(sub: String, live: Path, target: Path): Unit = {
-      val base = familyBase(stateDir, sub)
-      val f = StateFs.fs(spark, base)
-      if (StateFs.pointerMode(f, base)) StateFs.pointerSwap(spark, base, live, target)
-      else StateFs.swapInKeepBak(f, live, target)
-    }
-    if (doP) install("postings", pLive, pTarget)
-    if (doDl) install("dl", dlLive, dlTarget)
+    // install: one atomic PTR rewrite per family; the superseded
+    // generation survives the manifest re-commit below as the reader
+    // grace window and falls to the next compact entry's GC
+    if (doP) StateFs.pointerSwap(spark, familyBase(stateDir, "postings"), pTarget)
+    if (doDl) StateFs.pointerSwap(spark, familyBase(stateDir, "dl"), dlTarget)
     // Re-commit the merged generation so the manifest names the
     // compacted layout — without this every manifest-based read after
     // a compaction would take the crash-fallback path. Statistics are
@@ -741,16 +646,6 @@ object Bm25Index {
         .withColumn("p_dirs", typedLit(newP))
         .withColumn("dl_dirs", typedLit(newDl))
         .localCheckpoint(true))
-    // only now is it safe to discard the swapped-away generations:
-    // the committed manifest no longer names them. Rename mode only —
-    // in pointer mode there is no `.bak` (structural no-op here) and
-    // the superseded generation deliberately SURVIVES even past this
-    // commit as the in-flight-reader grace window, collected at the
-    // next compact entry's gcStaleGens.
-    for (sub <- Seq("postings", "dl")) {
-      val live = familyLive(spark, stateDir, sub)
-      StateFs.dropBak(StateFs.fs(spark, live), live)
-    }
     true
   }
 

@@ -11,236 +11,61 @@ import graft.util.StateFs
   * trigger) accumulate small parquet files; scans then pay per-file
   * open/footer costs and lose vectorization efficiency.
   *
-  * `compact` rewrites a directory to ⌈rows/targetRowsPerFile⌉ files,
+  * `compact` rewrites a table to ⌈rows/targetRowsPerFile⌉ files,
   * optionally sort-clustered so parquet row-group min/max statistics
   * become selective for the cluster keys (poor-man's Z-order for the
-  * single-key case). The swap is the shared
-  * [[graft.util.StateFs.swapIn]] rename-aside (VERDICT r12 #2 — this
-  * object previously hand-rolled the two renames, so a crash between
-  * them left NO live directory and nothing healed it, and it lacked
-  * the Hadoop rename-nesting race guard): every `compact` entry first
-  * restores a mid-swap-crashed table from its `.bak`
-  * ([[graft.util.StateFs.healReader]]) and drops a completed swap's
-  * stale `.bak` and any orphan `.tmp` — a crash at ANY point leaves a
-  * state the next compact repairs, PROVIDED no out-of-band writer
-  * touched the directory in between. That proviso is enforced, not
-  * assumed (review r13): unlike the index state dirs, a compacted
-  * TABLE has other writers (the daily ingest job), and one landing
-  * inside the crash window recreates the live dir so the entry heal
-  * cannot tell "completed swap, crashed cleanup" (drop the `.bak`)
-  * from "mid-swap crash, live since recreated by an append" (the
-  * `.bak` IS the table — dropping it destroys history). The rewrite
-  * therefore carries a `_COMPACTOR_GEN` marker: live-with-marker plus
-  * `.bak` is the former (safe cleanup); live-WITHOUT-marker plus
-  * `.bak` fails loudly for manual reconciliation instead of deleting
-  * the only full copy. Plain table READERS (`spark.read.parquet`) do
-  * not heal; a deployment compacting live tables should read through
-  * [[read]] (the one-line healReader-aware path), or schedule
-  * compaction in a no-reader maintenance slot as the StateFs scaladoc
-  * prescribes. The slot must also be no-WRITER — a mid-compact append
-  * would be dropped by the swap; [[compact]]'s pre-swap listing
-  * re-check turns that violation into a loud abort (its scaladoc has
-  * the full contract).
-  * Note renames are atomic on HDFS/local fs; on an object store that
-  * prescription — "pair this with a version-pointer layout" — is REAL
-  * since r16: [[enablePointerMode]] opts a table into the
-  * [[graft.util.StateFs]] pointer layout (`PTRMODE`/`PTR`/`g<k>`),
-  * where [[compact]] stages its rewrite in the UNPUBLISHED next
-  * generation and publishes with one atomic `PTR` rewrite — no
-  * directory rename is load-bearing, the superseded generation
-  * survives as an in-flight-reader grace window until the next
-  * compact entry's GC, and the whole `_COMPACTOR_GEN`/`.bak`
-  * refusal matrix becomes moot (nothing is ever renamed aside).
-  * The DISCIPLINE pointer mode asks of out-of-band writers: resolve
-  * the write target through [[writeDir]] per job, never cache it
-  * across a compaction — a writer holding a pre-swap path would land
-  * its rows in the grace-window generation and lose them to the GC.
-  * Readers go through [[read]] (PTR-resolving) as they already should.
+  * single-key case). A compacted table uses the one
+  * [[graft.util.StateFs]] state layout: the table dir holds `g<k>`
+  * generation dirs plus a `PTR` file naming the live one. [[compact]]
+  * stages its rewrite in the UNPUBLISHED next generation and publishes
+  * it with one atomic `PTR` rewrite — no directory rename is
+  * load-bearing, so the same code is crash-safe on an object store —
+  * and the superseded generation survives as an in-flight-reader
+  * grace window until the next compact entry's GC. A crash at any
+  * point leaves the old generation served; the next compact collects
+  * the partial target. A table dir left in the retired rename-aside
+  * layout (plain parquet files, `.bak`/`.tmp` siblings) is refused
+  * loudly by [[read]], [[writeDir]] and [[compact]], nothing deleted:
+  * rebuild it into a fresh dir.
+  *
+  * The DISCIPLINE the layout asks of writers: resolve the write
+  * target through [[writeDir]] per job, never cache it across a
+  * compaction — a writer holding a pre-swap path would land its rows
+  * in the grace-window generation and lose them to the GC. Readers go
+  * through [[read]] (PTR-resolving).
   */
 object Compactor {
 
-  /** Opt `dir` into the version-pointer swap mode (object-store-safe
-    * compaction — header scaladoc). Call ONCE on a VIRGIN table dir,
-    * before the first write: an existing plain-layout table would
-    * become invisible to pointer-mode readers (the files sit next to,
-    * not inside, the generation dirs), so a non-empty dir is refused
-    * loudly — a LIVE table adopts the layout in place with
-    * [[migrateToPointerMode]] instead, or keeps rename mode (the
-    * default, one less indirection on rename-atomic filesystems). */
-  def enablePointerMode(spark: SparkSession, dir: String): Unit = {
-    val base = new Path(dir)
-    val fs = StateFs.fs(spark, base)
-    if (StateFs.pointerMode(fs, base)) return
-    require(!fs.exists(base) || fs.listStatus(base).isEmpty,
-      s"pointer mode must be enabled on a VIRGIN table dir: $dir already " +
-        "holds data in the plain layout, which pointer-mode readers would " +
-        "not see — use Compactor.migrateToPointerMode, the crash-safe " +
-        "in-place migration, or keep rename mode")
-    StateFs.enablePointerMode(spark, base)
-  }
-
-  /** In-place rename→pointer migration of a LIVE plain-layout table
-    * (VERDICT r16 #1 — [[enablePointerMode]] is virgin-dir-only, so a
-    * deployed table could previously adopt the object-store-safe
-    * layout only by a full rewrite into a fresh dir): the table's
-    * files are staged as a COPY under generation `g0` and the mode
-    * flipped with one atomic marker create
-    * ([[graft.util.StateFs.migrateToPointerMode]] — full crash matrix
-    * there: any crash leaves either the untouched rename-mode table
-    * or a fully-published pointer one; rerunning completes either
-    * way). Entry runs [[healEntry]] first, so the rename-mode
-    * refusal matrix (an ambiguous `.bak`) still protects the only
-    * full copy. Run in the no-reader/no-writer maintenance slot —
-    * enforced by the staging snapshot re-check; note that unlike the
-    * index stores, a MID-MIGRATION crash leaves staged `g0`/`PTR`
-    * children a plain `spark.read.parquet(dir)` would choke on
-    * (loudly, never silently) — [[read]] serves the live table
-    * through them, and [[compact]] refuses with the rerun remedy
-    * until the migration is completed or abandoned. */
-  def migrateToPointerMode(spark: SparkSession, dir: String): Unit = {
-    val base = new Path(dir)
-    val fs = StateFs.fs(spark, base)
-    if (!fs.exists(base)) { enablePointerMode(spark, dir); return } // virgin
-    if (!StateFs.pointerMode(fs, base)) healEntry(fs, base)
-    StateFs.migrateToPointerMode(spark, base)
-  }
-
-  /** The directory writers must target: the table dir itself in the
-    * default rename mode; the PTR-named live generation in pointer
-    * mode. Resolve per job (header scaladoc) — never cache across a
+  /** The directory writers must target: the PTR-named live
+    * generation. On a virgin table dir this publishes `PTR=g0` first.
+    * Resolve per job (header scaladoc) — never cache across a
     * compaction. */
-  def writeDir(spark: SparkSession, dir: String): String = {
-    val base = new Path(dir)
-    StateFs.resolveLive(StateFs.fs(spark, base), base).toString
-  }
+  def writeDir(spark: SparkSession, dir: String): String =
+    StateFs.openLive(spark, new Path(dir)).toString
 
-  /** Names a crashed [[migrateToPointerMode]] stages under a
-    * rename-mode table dir — reserved by the pointer layout, excluded
-    * from rename-mode reads ([[read]]) and counted loads
-    * ([[fileCount]]) so the live table stays servable through the
-    * crash window. `_MIGRATING`/`PTRMODE` are underscore-/marker-
-    * files parquet ignores anyway; `PTR` and `g<k>` are not. */
-  private def migrationJunk(name: String, isDir: Boolean): Boolean =
-    name == "PTR" || name == "PTR.tmp" || name == "_MIGRATING" ||
-      (isDir && name.matches("g\\d+"))
-
-  /** The healReader-aware read path for compacted tables: restore a
-    * mid-swap-crashed table from its `.bak` first (the one repair a
-    * read needs — never deletes anything writer-owned), then read.
-    * Use this instead of a bare `spark.read.parquet` for any table
-    * [[compact]] maintains outside a no-reader maintenance slot.
-    *
-    * Mirrors [[healEntry]]'s out-of-band-recreate guard (ADVICE r13):
-    * in the exact ambiguous state compact() refuses on — live without
-    * the rewrite marker NEXT TO a `.bak`, e.g. an out-of-band writer
-    * recreated the table inside a crashed swap's repair window — the
-    * live table may be partial while the `.bak` holds the only full
-    * copy, so serving it silently would hand out missing history.
-    * Fails loudly with the same decision procedure, deleting nothing
-    * (a reader never cleans writer-owned state). */
+  /** Read the live generation of a compacted table (PTR-resolving; a
+    * mid-compaction reader sees the old generation, protected by the
+    * grace window until the next compact entry's GC). */
   def read(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val base = new Path(dir)
-    val baseFs = StateFs.fs(spark, base)
-    if (StateFs.pointerMode(baseFs, base))
-      // pointer mode: follow PTR — no heal and no refusal matrix
-      // apply (nothing is ever renamed aside; a mid-compaction
-      // reader sees the old generation, protected by the grace
-      // window until the next compact entry's GC)
-      return spark.read.parquet(StateFs.resolveLive(baseFs, base).toString)
-    val live = base
-    val fs = baseFs
-    StateFs.healReader(fs, live)
-    if (fs.exists(live) && fs.exists(StateFs.bakOf(live)) &&
-        !fs.exists(new Path(live, GenMarker)))
-      sys.error(s"read: both $live and ${StateFs.bakOf(live)} exist, and " +
-        s"$live is not a compactor rewrite (no marker) — the live table " +
-        "may be an out-of-band recreate inside a crashed swap's repair " +
-        "window, with the .bak holding the only full copy. Refusing to " +
-        "serve a possibly-partial table: compare the two directories " +
-        "(see Compactor.compact's refusal message for the procedure), " +
-        "reconcile, then reread")
-    // crashed-migration tolerance (VERDICT r16 #1): a mid-migration
-    // crash leaves staged `g0`/`PTR` children the whole-dir parquet
-    // read would choke on — the live table (everything else) is still
-    // authoritative, so serve it through explicit child paths. Readers
-    // never repair: completing or abandoning the migration is the
-    // writer's move (compact names the remedy).
-    val kids = fs.listStatus(live).toSeq
-    if (kids.exists(s => migrationJunk(s.getPath.getName, s.isDirectory))) {
-      val good = kids.filterNot(s =>
-          migrationJunk(s.getPath.getName, s.isDirectory) ||
-            s.getPath.getName.startsWith("_") ||
-            s.getPath.getName.startsWith(".") ||
-            s.getPath.getName.endsWith(".tmp"))
-        .map(_.getPath.toString)
-      require(good.nonEmpty, s"read: $live holds only crashed-migration " +
-        "staging — complete it (Compactor.migrateToPointerMode) first")
-      return spark.read.option("basePath", dir).parquet(good: _*)
-    }
-    spark.read.parquet(dir)
+    spark.read.parquet(StateFs.resolveLive(StateFs.fs(spark, base), base).toString)
   }
 
-  /** Data-file count of the LIVE table (PTR-resolved in pointer mode
-    * — a base-dir recursion there would double-count the grace-window
-    * generation), recursing into partition directories. */
+  /** Data-file count of the LIVE generation (a base-dir recursion
+    * would double-count the grace-window generation), recursing into
+    * partition directories. */
   def fileCount(spark: SparkSession, dir: String): Int = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateFs.fs(spark, base)
     val p = StateFs.resolveLive(fs, base)
-    // rename mode with crashed-migration staging present: count only
-    // the live table's children, not the staged g0 copy of them
-    val roots: Seq[Path] = {
-      val kids = fs.listStatus(p).toSeq
-      if (p == base && kids.exists(s =>
-          migrationJunk(s.getPath.getName, s.isDirectory)))
-        kids.filterNot(s => migrationJunk(s.getPath.getName, s.isDirectory))
-          .map(_.getPath)
-      else Seq(p)
-    }
     var n = 0
-    for (r <- roots) {
-      val it = fs.listFiles(r, true)
+    if (fs.exists(p)) {
+      val it = fs.listFiles(p, true)
       while (it.hasNext) {
         if (it.next().getPath.getName.endsWith(".parquet")) n += 1
       }
     }
     n
-  }
-
-  /** Marker a compaction rewrite carries (underscore-prefixed: parquet
-    * readers ignore it): its presence in the live dir proves live is a
-    * compactor output, which is what disambiguates the crash windows
-    * (header scaladoc). Appends into an existing live dir leave it in
-    * place; an out-of-band overwrite/recreate does not carry it. */
-  private val GenMarker = "_COMPACTOR_GEN"
-
-  /** Entry repair — [[graft.util.StateFs.healWriter]] with the
-    * out-of-band-writer guard in front of the `.bak` drop. The guard
-    * cannot DIAGNOSE, only refuse: live-without-marker + `.bak` is
-    * either (a) an out-of-band writer recreating the table inside a
-    * crashed swap's repair window — the `.bak` holds the only full
-    * pre-crash copy — or (b) a genuinely stale `.bak` next to a live
-    * dir that merely lost (or, pre-marker builds, never had) its
-    * marker, e.g. an out-of-band `mode("overwrite")` after a completed
-    * swap, or a crashed swap of the marker-less previous build. Both
-    * states need a human to look at the two directories' contents;
-    * deleting the `.bak` unprompted in state (a) destroys history, so
-    * refusing loudly with the decision procedure is the only safe
-    * move. */
-  private[graft] def healEntry(fs: org.apache.hadoop.fs.FileSystem, live: Path): Unit = {
-    StateFs.healReader(fs, live)
-    if (fs.exists(live) && fs.exists(StateFs.bakOf(live)) &&
-        !fs.exists(new Path(live, GenMarker)))
-      sys.error(s"compact: both $live and ${StateFs.bakOf(live)} exist, and " +
-        s"$live is not a compactor rewrite (no marker). Either an " +
-        "out-of-band writer recreated the table inside a crashed swap's " +
-        "repair window (the .bak then holds the only full pre-crash copy) " +
-        "or the .bak is stale next to a table that lost its marker. " +
-        "Refusing to guess: compare the two directories — if live is the " +
-        "complete table, delete the .bak and rerun; if live is missing " +
-        "history, merge it into the .bak, restore that as the table, then " +
-        "rerun")
-    StateFs.healWriter(fs, live)
   }
 
   /** Recursive `(path, length, mtime)` listing of every file under
@@ -277,19 +102,16 @@ object Compactor {
     * NO CONCURRENT WRITERS (review r13 — the reader half of this
     * contract was documented in the header; the writer half was only
     * implied): the rewrite reads the table once and the swap REPLACES
-    * the live directory, so a file appended by another job mid-compact
-    * would be silently dropped with it. That is enforced, not assumed:
-    * the live listing is snapshotted at entry and re-checked
-    * immediately before the swap — any difference aborts loudly with
-    * the rewrite discarded and the live table (INCLUDING the
-    * concurrent write) intact. Optimistic concurrency without a
+    * the live generation, so a file appended by another job
+    * mid-compact would be silently dropped with it. That is enforced,
+    * not assumed: the live listing is snapshotted at entry and
+    * re-checked immediately before the swap — any difference aborts
+    * loudly with the rewrite discarded and the live table (INCLUDING
+    * the concurrent write) intact. Optimistic concurrency without a
     * lakehouse: the unguarded window shrinks from the whole rewrite
-    * duration to the instants between the re-check and the swap's
-    * first rename — and an out-of-band recreate INSIDE the swap is
-    * caught by [[graft.util.StateFs.swapInKeepBak]]'s own existence
-    * re-checks. Schedule compaction in a no-writer slot regardless;
-    * the guard turns a violation into a loud retry instead of lost
-    * rows.
+    * duration to the instants between the re-check and the PTR
+    * rewrite. Schedule compaction in a no-writer slot regardless; the
+    * guard turns a violation into a loud retry instead of lost rows.
     *
     * CONTRACT RESIDUAL (ADVICE r14, accepted — part of this method's
     * contract, not an implementation detail): the snapshot keys files
@@ -303,44 +125,22 @@ object Compactor {
     * writers CAN rewrite files in place must not run this compactor
     * concurrently with them, no-writer slot or not. */
   def compact(spark: SparkSession, dir: String, targetRowsPerFile: Long,
-      clusterBy: Seq[String] = Nil, partitionBy: Seq[String] = Nil,
-      retainGens: Int = 0): Int =
-    compactImpl(spark, dir, targetRowsPerFile, clusterBy, partitionBy,
-      () => (), retainGens)
+      clusterBy: Seq[String] = Nil, partitionBy: Seq[String] = Nil): Int =
+    compactImpl(spark, dir, targetRowsPerFile, clusterBy, partitionBy, () => ())
 
   /** [[compact]] with an injectable pre-swap hook — the test seam the
     * concurrent-append guard is pinned through (CompactionSpec); the
-    * public entry point passes a no-op. `retainGens` deepens the
-    * pointer-mode reader grace window: that many of the newest
-    * superseded generations survive each writer-entry GC, so a
-    * reader's scan may span `retainGens + 1` compactions (the
-    * [[graft.util.StateFs.pointerSwap]] contract; default 0 = one
-    * compaction) at the cost of that many stale generations of disk. */
+    * public entry point passes a no-op. */
   private[graft] def compactImpl(spark: SparkSession, dir: String,
       targetRowsPerFile: Long, clusterBy: Seq[String],
-      partitionBy: Seq[String], beforeSwap: () => Unit,
-      retainGens: Int = 0): Int = {
+      partitionBy: Seq[String], beforeSwap: () => Unit): Int = {
     val base = new Path(dir)
     val fs = StateFs.fs(spark, base)
-    val ptrMode = StateFs.pointerMode(fs, base)
     val live = StateFs.resolveLive(fs, base)
-    // entry repair per swap mode: rename heals the rename-aside crash
-    // windows behind the out-of-band-recreate guard; pointer GCs
-    // stale generations — a crashed compaction's partial unpublished
+    require(fs.exists(live), s"compact: no table under $dir")
+    // writer-entry GC: a crashed compaction's partial unpublished
     // target, or the superseded grace-window generation
-    if (ptrMode) StateFs.gcStaleGens(fs, base, live.getName, retainGens)
-    else {
-      healEntry(fs, live)
-      // a crashed rename→pointer migration left its staging here: the
-      // whole-dir read below would choke on the staged g0/PTR, and
-      // compacting around them would race a rerun of the migration —
-      // refuse with the remedy (reads stay served via Compactor.read)
-      if (fs.exists(new Path(base, "_MIGRATING")))
-        sys.error(s"compact: $base carries a staged or crashed " +
-          "rename->pointer migration (_MIGRATING) — rerun " +
-          "Compactor.migrateToPointerMode to complete it, or delete the " +
-          "staged g*/PTR/_MIGRATING children to abandon it, then rerun")
-    }
+    StateFs.gcStaleGens(fs, base, live.getName)
     val snapshot = fileSnapshot(fs, live)
     val df = spark.read.parquet(live.toString)
     require(partitionBy.forall(df.columns.contains),
@@ -354,17 +154,11 @@ object Compactor {
       else if (partitionBy.nonEmpty)
         df.repartition(nFiles, partitionBy.map(col): _*)
       else df.repartition(nFiles)
-    // rename mode stages under `<dir>.tmp` and installs by the
-    // rename-aside swap; pointer mode stages in the UNPUBLISHED next
-    // generation and installs with one atomic PTR rewrite (header
-    // scaladoc) — the `_COMPACTOR_GEN` marker is rename-only (it
-    // disambiguates the rename crash windows, which pointer mode
-    // does not have)
-    val target = if (ptrMode) StateFs.nextGen(base, live) else StateFs.tmpOf(live)
+    // stage in the UNPUBLISHED next generation (header scaladoc)
+    val target = StateFs.nextGen(base, live)
     val writer = arranged.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(target.toString)
-    if (!ptrMode) fs.create(new Path(target, GenMarker), true).close()
     beforeSwap()
     // Optimistic-concurrency re-check (scaladoc): a writer landed in
     // the live dir while we rewrote — swapping now would drop its
@@ -379,8 +173,7 @@ object Compactor {
         "rewrite discarded, live table intact including the concurrent " +
         "write; rerun compaction in a no-writer maintenance slot")
     }
-    if (ptrMode) StateFs.pointerSwap(spark, base, live, target)
-    else StateFs.swapIn(fs, live, target)
+    StateFs.pointerSwap(spark, base, target)
     fileCount(spark, dir)
   }
 }

@@ -30,7 +30,7 @@ import graft.util.StateFs
   *    [[Similarity.ivfIndex]] rule), then frozen. Appends can never
   *    move it; distribution drift away from a frozen quantizer is the
   *    documented rebuild trigger.
-  *  - `lists/v<batchId>/` — each batch's assigned rows land in their
+  *  - `lists/g<k>/v<batchId>/` — each batch's assigned rows land in their
   *    own directory; per-batch cost follows the BATCH size, never the
   *    index size. A directory is visible to readers only once its
   *    `_SUCCESS` marker exists, so a crash mid-write leaves an
@@ -42,7 +42,7 @@ import graft.util.StateFs
   *
   * At 100 TB the per-batch directories are the compaction unit:
   * [[compact]] coalesces every committed directory into one between
-  * drains (heal-able rename-aside swap, read-equivalence spec-pinned
+  * drains (published by one PTR rewrite, read-equivalence spec-pinned
   * in StreamingIvfSpec) — written `partitionBy(cluster)`, so the
   * compacted generation IS the cluster-partitioned layout
   * [[Similarity.ivfIndex]] documents: [[probe]] filters the assigned
@@ -55,9 +55,9 @@ import graft.util.StateFs
   *
   * Loss detection (r13 manifest + r14 append log — together a
   * COMPLETE loud-loss matrix, at zero pointer swaps): [[compact]]
-  * writes a `lists/MANIFEST` file naming the compacted generation
-  * INSIDE the `.tmp` tree, so it becomes visible atomically with
-  * the compaction swap — reads fail loudly if the manifest-named
+  * writes a `MANIFEST` file naming the compacted generation INSIDE
+  * the unpublished next generation, so it becomes visible atomically
+  * with the compaction's PTR rewrite — reads fail loudly if the manifest-named
   * generation is gone (external GC/retention of the compacted
   * corpus would otherwise serve a silently smaller index). Append
   * dirs are covered by the `lists/applog/` append LOG (VERDICT r13
@@ -72,7 +72,7 @@ import graft.util.StateFs
   * completes the missing log entry), and the log deliberately
   * LAGS the commit so a crash can only under-log — an orphan log
   * entry (false loss alarm) cannot arise. Compaction consumes the
-  * log wholesale: `applog/` lives inside the swapped tree, so the
+  * log wholesale: `applog/` lives inside the live generation, so the
   * folded entries vanish atomically with the swap and the
   * compacted mass passes to MANIFEST coverage. The id chain is kept
   * DENSE (r15): empty batches log an `applog/s<id>` marker too, and
@@ -112,47 +112,13 @@ object StreamingIvf {
 
   private def listsBase(stateDir: String) = new Path(stateDir, "lists")
 
-  /** The live lists tree: `lists/` itself in the default rename-swap
-    * mode; the PTR-named generation dir under it in pointer mode
-    * ([[graft.util.StateFs.resolveLive]]). */
+  /** The live lists tree: the PTR-named generation dir under `lists/`
+    * ([[graft.util.StateFs.resolveLive]]; `g0`, not created, on a
+    * virgin index). The centroids dir is written once and never
+    * swapped, so it lives outside the generation layout. */
   private def listsDir(spark: SparkSession, stateDir: String): Path = {
     val base = listsBase(stateDir)
     StateFs.resolveLive(StateFs.fs(spark, base), base)
-  }
-
-  /** Opt this index's lists store into the version-pointer swap mode
-    * — the object-store-safe layout where compaction publishes via
-    * one atomic `PTR` rewrite instead of directory renames
-    * ([[graft.util.StateFs]] pointer-mode scaladoc: on s3a:// a
-    * directory rename is a non-atomic per-object copy, so the
-    * rename-aside swap's crash windows stop being heal-able there).
-    * Call ONCE on a virgin state dir, before the first batch; the
-    * mode is recorded in the dir and every later read/append/compact
-    * follows it transparently. Append cost is unchanged — per-batch
-    * dirs and the applog live inside the current generation; only
-    * the compaction swap differs. */
-  def enablePointerMode(spark: SparkSession, stateDir: String): Unit =
-    StateFs.enablePointerMode(spark, listsBase(stateDir))
-
-  /** In-place rename→pointer migration of a LIVE lists store (VERDICT
-    * r16 #1): the whole lists tree — v-dirs, applog, MANIFEST and the
-    * witness files — is staged as a COPY under generation `g0` and
-    * the mode flipped with one atomic marker create
-    * ([[graft.util.StateFs.migrateToPointerMode]] — full crash matrix
-    * there: any crash leaves either the untouched rename-mode store
-    * or a fully-published pointer one; a rerun completes either way).
-    * Run between drains (the no-reader/no-writer maintenance slot,
-    * enforced by the staging snapshot re-check). The centroids dir is
-    * untouched: it is written once and never swapped, so it needs no
-    * pointer layout. */
-  def migrateToPointerMode(spark: SparkSession, stateDir: String): Unit = {
-    val base = listsBase(stateDir)
-    val f = StateFs.fs(spark, base)
-    if (!f.exists(base)) StateFs.enablePointerMode(spark, base) // virgin
-    else {
-      if (!StateFs.pointerMode(f, base)) StateFs.healWriter(f, base)
-      StateFs.migrateToPointerMode(spark, base)
-    }
   }
 
   /** [[graft.util.StateFs.logAppend]] on the lists dir — one O(1)
@@ -160,12 +126,9 @@ object StreamingIvf {
   private def logAppend(fs: org.apache.hadoop.fs.FileSystem, lists: Path,
       name: String): Unit = StateFs.logAppend(fs, lists, name)
 
-  /** Committed list dirs AFTER the read-side crash repair — state
-    * I/O through the Hadoop FileSystem API (graft.util.StateFs), so
-    * file:// and hdfs:// state dirs behave identically; the repair is
-    * the READER strength only (restore a mid-swap-crashed `lists`
-    * from its `.bak`) — writers run the full heal (review r12: a
-    * reader must not delete an in-flight compaction's `.tmp`). */
+  /** Committed list dirs of the live generation — state I/O through
+    * the Hadoop FileSystem API (graft.util.StateFs), so file:// and
+    * hdfs:// state dirs behave identically. */
   private def committedListDirs(spark: SparkSession, stateDir: String): Seq[Path] = {
     val lists = listsDir(spark, stateDir)
     // The MANIFEST + applog cross-checks live in StateFs.checkedVDirs
@@ -203,9 +166,7 @@ object StreamingIvf {
     // probes against geometry the stored lists were not built with).
     if (cents0.isEmpty) {
       // the manifest-checked listing, not a raw one (review r13 third
-      // pass): it heals a mid-swap crash before listing (an unhealed
-      // listing would come back empty for lists hiding under .bak) AND
-      // fails loudly when lists/MANIFEST names a generation that is
+      // pass): it fails loudly when MANIFEST names a generation that is
       // gone — so TOTAL loss (centroids plus every list dir removed,
       // the plain MANIFEST file surviving v*-targeted GC) is loud too,
       // instead of reading as "no index yet" and inviting a re-seed
@@ -248,13 +209,9 @@ object StreamingIvf {
   def appendBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
       nCentroids: Int, batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
-    val lists = listsDir(spark, stateDir)
+    // writer entry: a virgin lists store publishes PTR=g0 first
+    val lists = StateFs.openLive(spark, listsBase(stateDir))
     val fs = StateFs.fs(spark, lists)
-    // rename mode: restore/clean the swap crash windows. Pointer mode:
-    // a generation dir never has .bak/.tmp siblings, so this is a
-    // no-op there by construction — pointer-mode crash states need no
-    // writer repair (StateFs pointer-mode scaladoc).
-    StateFs.healWriter(fs, lists)
     // Fail-fast gate (ADVICE r13): run the manifest/applog-checked
     // listing at EVERY append entry, not only when seeding — after
     // external loss, appends onto an index every read of which fails
@@ -316,22 +273,22 @@ object StreamingIvf {
     * whose `_SUCCESS` the compacted directory retains (earlier ids are
     * WAL-committed and never replayed — and compaction runs BETWEEN
     * drains, the single-writer discipline shared with
-    * [[graft.operators.Bm25Index.compact]]). The swap is the same
-    * heal-able rename-aside: a crash leaves either the old tree, the
-    * old tree plus a dead `.tmp`, or the new tree plus a dead `.bak`
-    * — readers restore the missing-live case on the next touch
-    * ([[graft.util.StateFs.healReader]]) and writers clean the rest
-    * ([[graft.util.StateFs.healWriter]]).
+    * [[graft.operators.Bm25Index.compact]]). The rewrite lands in the
+    * unpublished next generation and is published by one PTR rewrite:
+    * a crash leaves either the old generation served next to a dead
+    * partial target, or the new one next to its grace-window
+    * predecessor — both collected at the next compaction entry
+    * ([[graft.util.StateFs.gcStaleGens]]).
     *
     * The swap also installs the loss-detection manifest (header
     * scaladoc): `MANIFEST` naming the compacted generation, plus the
     * generation's folded-dirs `_COMPACTED` marker
     * ([[graft.util.StateFs.writeFolded]], diagnostic), are written
-    * into the `.tmp` tree BEFORE the swap — they become visible
+    * into the unpublished generation BEFORE the swap — they become visible
     * atomically with it, so there is no window where the manifest
     * names a generation that does not exist (the trap ADVICE r12
     * found in the Bm25 swap-then-commit ordering cannot arise here:
-    * this index's metadata lives inside the swapped tree, not in a
+    * this index's metadata lives inside the generation, not in a
     * separately-committed stats row).
     *
     * NO CONCURRENT WRITERS — enforced, not assumed (VERDICT r14 #1,
@@ -339,7 +296,7 @@ object StreamingIvf {
     * takes seconds-to-minutes and the swap REPLACES the live tree, so
     * a drain committing an append (parquet dir + applog marker) in
     * that window would be silently destroyed — and because `applog/`
-    * lives INSIDE the swapped tree, the loss-detection evidence would
+    * lives INSIDE the live generation, the loss-detection evidence would
     * vanish with the data: the one hole the r14 loud-loss matrix
     * cannot see. The committed-generation + applog name set is
     * therefore snapshotted at entry
@@ -348,34 +305,26 @@ object StreamingIvf {
     * the rewrite discarded and the live tree (INCLUDING the
     * concurrent append and its log entry) intact; the next clean
     * compaction folds it. The unguarded window shrinks from the whole
-    * rewrite to the instants between the re-check and the swap's
-    * first rename. Schedule compaction between drains regardless; the
+    * rewrite to the instants between the re-check and the PTR
+    * rewrite. Schedule compaction between drains regardless; the
     * guard turns a discipline violation into a loud retry instead of
     * silent loss.
     * Returns true iff a rewrite happened. */
-  def compact(spark: SparkSession, stateDir: String,
-      retainGens: Int = 0): Boolean =
-    compactImpl(spark, stateDir, () => (), retainGens)
+  def compact(spark: SparkSession, stateDir: String): Boolean =
+    compactImpl(spark, stateDir, () => ())
 
   /** [[compact]] with an injectable pre-swap hook — the test seam the
     * concurrent-append guard is pinned through (the
     * CompactionSpec/Compactor device); the public entry passes a
     * no-op. */
-  /** `retainGens` deepens the pointer-mode reader grace window (the
-    * [[graft.util.StateFs.pointerSwap]] contract: a scan may span
-    * `retainGens + 1` compactions; default 0 = one). */
   private[graft] def compactImpl(spark: SparkSession, stateDir: String,
-      beforeSwap: () => Unit, retainGens: Int = 0): Boolean = {
+      beforeSwap: () => Unit): Boolean = {
     val base = listsBase(stateDir)
     val fs = StateFs.fs(spark, base)
-    val ptrMode = StateFs.pointerMode(fs, base)
     val live = StateFs.resolveLive(fs, base)
-    if (ptrMode)
-      // writer-entry GC: stale generations from crashed compactions —
-      // a partial target, or a previous generation whose post-publish
-      // delete crashed (the pointer-mode analogue of healWriter)
-      StateFs.gcStaleGens(fs, base, live.getName, retainGens)
-    else StateFs.healWriter(fs, live)
+    // writer-entry GC: a crashed compaction's partial target, or the
+    // superseded grace-window generation
+    StateFs.gcStaleGens(fs, base, live.getName)
     // the concurrency snapshot is taken BEFORE the fold-set listing
     // (review r15 — taken after, an append committing between the two
     // listings was in the snapshot but NOT in the fold, so the
@@ -396,11 +345,9 @@ object StreamingIvf {
     // skip-logged empty-batch ids, so consuming the applog with the
     // swap cannot open a false hole in the dense id chain
     val vname = StateFs.frontierName(fs, live, dirs)
-    // rename mode: stage under lists.tmp, install by rename-aside
-    // swap. Pointer mode: stage in the UNPUBLISHED next generation
-    // dir, install by one atomic PTR rewrite — no directory rename is
-    // load-bearing, the object-store-safe path (StateFs scaladoc).
-    val target = if (ptrMode) StateFs.nextGen(base, live) else StateFs.tmpOf(live)
+    // stage in the UNPUBLISHED next generation dir, install by one
+    // atomic PTR rewrite (StateFs scaladoc)
+    val target = StateFs.nextGen(base, live)
     dirs.map(d => spark.read.option("basePath", d.toString).parquet(d.toString)
         .withColumn("cluster", col("cluster").cast("long")))
       .reduce(_ unionByName _)
@@ -411,8 +358,8 @@ object StreamingIvf {
       .parquet(new Path(target, vname).toString)
     StateFs.writeFolded(fs, new Path(target, vname), dirs.map(_.getName))
     StateFs.writeFileAtomic(spark, new Path(target, "MANIFEST"), vname)
-    // carry the frontier + genesis witnesses into the new tree (they
-    // live in the swapped root; vname IS the frontier at rest — the
+    // carry the frontier + genesis witnesses into the new generation
+    // (they live in the generation root; vname IS the frontier at rest — the
     // single-writer discipline plus the concurrency guard below
     // enforce "at rest" — and everything at or below it is folded, so
     // density is guaranteed from vname on)
@@ -435,8 +382,7 @@ object StreamingIvf {
         "append; rerun compaction between drains (the no-writer " +
         "maintenance slot)")
     }
-    if (ptrMode) StateFs.pointerSwap(spark, base, live, target)
-    else StateFs.swapIn(fs, live, target)
+    StateFs.pointerSwap(spark, base, target)
     true
   }
 

@@ -37,7 +37,7 @@ import graft.util.StateFs
   *    contract (fold ≡ one-shot encode) is a property of the frozen
   *    pair; distribution drift away from either is the documented
   *    rebuild trigger.
-  *  - `codes/v<batchId>/` — each batch's code-table rows
+  *  - `codes/g<k>/v<batchId>/` — each batch's code-table rows
   *    `(vec_id, sub, code, cell)` in their own `_SUCCESS`-gated dir
   *    (commit doubles as the replay marker), appended by encoding the
   *    BATCH ONLY against the frozen pair. Loss matrix is the r14 IVF
@@ -61,33 +61,13 @@ object StreamingIvfPq {
 
   private def codesBase(stateDir: String) = new Path(stateDir, "codes")
 
-  /** The live codes tree: `codes/` itself in rename mode; the
-    * PTR-named generation dir in pointer mode (the [[StreamingIvf]]
-    * device, [[graft.util.StateFs.resolveLive]]). */
+  /** The live codes tree: the PTR-named generation dir under `codes/`
+    * (the [[StreamingIvf]] device, [[graft.util.StateFs.resolveLive]]).
+    * The frozen quantizer pair is written once and never swapped, so
+    * it lives outside the generation layout. */
   private def codesDir(spark: SparkSession, stateDir: String): Path = {
     val base = codesBase(stateDir)
     StateFs.resolveLive(StateFs.fs(spark, base), base)
-  }
-
-  /** Opt this index's codes store into the version-pointer swap mode
-    * (object-store-safe compaction — [[StreamingIvf.enablePointerMode]]
-    * has the full rationale). Call once on a virgin state dir. */
-  def enablePointerMode(spark: SparkSession, stateDir: String): Unit =
-    StateFs.enablePointerMode(spark, codesBase(stateDir))
-
-  /** In-place rename→pointer migration of a LIVE codes store (VERDICT
-    * r16 #1 — [[StreamingIvf.migrateToPointerMode]] has the full
-    * rationale; [[graft.util.StateFs.migrateToPointerMode]] the crash
-    * matrix). Run between drains; idempotent; the frozen quantizer
-    * pair is untouched (written once, never swapped). */
-  def migrateToPointerMode(spark: SparkSession, stateDir: String): Unit = {
-    val base = codesBase(stateDir)
-    val f = StateFs.fs(spark, base)
-    if (!f.exists(base)) StateFs.enablePointerMode(spark, base) // virgin
-    else {
-      if (!StateFs.pointerMode(f, base)) StateFs.healWriter(f, base)
-      StateFs.migrateToPointerMode(spark, base)
-    }
   }
 
   private def quantizerDir(stateDir: String) = new Path(stateDir, "quantizer")
@@ -171,9 +151,9 @@ object StreamingIvfPq {
       kc: Int, m: Int, subLen: Int, kCb: Int, batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding",
       pqRounds: Int = 0): Boolean = {
-    val codes = codesDir(spark, stateDir)
+    // writer entry: a virgin codes store publishes PTR=g0 first
+    val codes = StateFs.openLive(spark, codesBase(stateDir))
     val fs = StateFs.fs(spark, codes)
-    StateFs.healWriter(fs, codes)
     // fail-fast loss gate at every entry (the r14 IVF discipline) —
     // also feeds the seeding guard below
     val existing = committedCodeDirs(spark, stateDir)
@@ -287,32 +267,26 @@ object StreamingIvfPq {
   /** Background compaction between drains — committed code dirs → ONE
     * generation named at the max committed batch id, written
     * `partitionBy(cell)` (the bucketed serving layout), `MANIFEST` +
-    * `_COMPACTED` installed inside the `.tmp` tree so loss metadata is
-    * atomic with the swap; the applog is consumed wholesale (it lives
-    * inside the swapped tree). Same WAL-replay safety argument as
+    * `_COMPACTED` installed inside the unpublished next generation so
+    * loss metadata is atomic with the PTR swap; the applog is consumed
+    * wholesale (it lives inside the live generation). Same WAL-replay safety argument as
     * [[StreamingIvf.compact]] — and the same enforced no-concurrent-
     * writer contract (VERDICT r14 #1): committed-generation + applog
     * names snapshotted at entry, re-checked immediately before the
     * swap, loud abort discarding only the rewrite (the
     * [[StreamingIvf.compact]] scaladoc has the full argument).
     * Returns true iff a rewrite happened. */
-  def compact(spark: SparkSession, stateDir: String,
-      retainGens: Int = 0): Boolean =
-    compactImpl(spark, stateDir, () => (), retainGens)
+  def compact(spark: SparkSession, stateDir: String): Boolean =
+    compactImpl(spark, stateDir, () => ())
 
   /** [[compact]] with the injectable pre-swap test seam (the
-    * Compactor/StreamingIvf device). `retainGens` deepens the
-    * pointer-mode reader grace window (the
-    * [[graft.util.StateFs.pointerSwap]] contract: a scan may span
-    * `retainGens + 1` compactions; default 0 = one). */
+    * Compactor/StreamingIvf device). */
   private[graft] def compactImpl(spark: SparkSession, stateDir: String,
-      beforeSwap: () => Unit, retainGens: Int = 0): Boolean = {
+      beforeSwap: () => Unit): Boolean = {
     val base = codesBase(stateDir)
     val fs = StateFs.fs(spark, base)
-    val ptrMode = StateFs.pointerMode(fs, base)
     val live = StateFs.resolveLive(fs, base)
-    if (ptrMode) StateFs.gcStaleGens(fs, base, live.getName, retainGens)
-    else StateFs.healWriter(fs, live)
+    StateFs.gcStaleGens(fs, base, live.getName)
     // snapshot BEFORE the fold-set listing (review r15 — the
     // StreamingIvf.compactImpl rationale: an append landing between
     // snapshot and listing joins the fold; one landing after the
@@ -323,10 +297,9 @@ object StreamingIvfPq {
     // the true frontier: max over committed dirs AND skip-logged ids
     // (StreamingIvf.compactImpl rationale — keeps the id chain dense)
     val vname = StateFs.frontierName(fs, live, dirs)
-    // rename mode stages under codes.tmp; pointer mode stages in the
-    // unpublished next generation and installs with one atomic PTR
-    // rewrite (the StreamingIvf/StateFs pointer-mode contract)
-    val target = if (ptrMode) StateFs.nextGen(base, live) else StateFs.tmpOf(live)
+    // stage in the unpublished next generation, install with one
+    // atomic PTR rewrite (the StreamingIvf/StateFs contract)
+    val target = StateFs.nextGen(base, live)
     dirs.map(d => spark.read.option("basePath", d.toString).parquet(d.toString)
         .withColumn("cell", col("cell").cast("long")))
       .reduce(_ unionByName _)
@@ -355,8 +328,7 @@ object StreamingIvfPq {
         "append; rerun compaction between drains (the no-writer " +
         "maintenance slot)")
     }
-    if (ptrMode) StateFs.pointerSwap(spark, base, live, target)
-    else StateFs.swapIn(fs, live, target)
+    StateFs.pointerSwap(spark, base, target)
     true
   }
 

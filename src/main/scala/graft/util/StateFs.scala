@@ -5,54 +5,40 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Hadoop-FileSystem primitives for the stored-state index operators
-  * ([[graft.operators.Bm25Index]], [[graft.streaming.StreamingIvf]]):
+/** Hadoop-FileSystem primitives for the stored-state stores
+  * ([[graft.operators.Bm25Index]], [[graft.streaming.StreamingIvf]],
+  * [[graft.streaming.StreamingIvfPq]], [[graft.sink.Compactor]]):
   * version-dir listing, `_SUCCESS` commit checks, the CURRENT pointer,
-  * and the rename-aside compaction swap with its crash-window heal —
-  * factored here so the swap/heal logic exists ONCE (it previously
-  * lived per-operator on `java.io.File`, which silently confines the
-  * "100 TB" state dirs to the driver's local disk; through the Hadoop
-  * API the same code serves `file://` and `hdfs://` alike — the
-  * [[graft.sink.Compactor]] discipline. On an object store, renames
-  * are copies and not atomic: pair the state layout with a manifest
-  * pointer instead, as the Compactor scaladoc already prescribes).
+  * and the one state layout every stored base uses — factored here so
+  * the layout and its crash matrix exist ONCE. Through the Hadoop API
+  * the same code serves `file://`, `hdfs://` and object stores alike.
   *
-  * Heal has two strengths, split by CALLER ROLE (a review-r12 fix —
-  * readers formerly ran the full destructive heal, so a concurrent
-  * reader could delete the `.tmp` out from under an in-flight
-  * compaction write or un-stage its swap):
+  * THE LAYOUT. A state base dir is a container of generation dirs
+  * `g<k>` plus a one-line `PTR` file naming the live one. Compaction
+  * writes its rewrite into `g<k+1>` (unpublished — readers follow PTR,
+  * so partial writes are invisible), then publishes it by atomically
+  * rewriting PTR: one small-file replace, atomic on HDFS/local via the
+  * FileContext overwrite-rename and on S3-class stores, where a PUT
+  * replaces the whole object. No directory rename is load-bearing —
+  * the log-commit shape object stores support. The previous generation
+  * is KEPT as an in-flight-reader grace window ([[pointerSwap]]) and
+  * collected at the next compaction entry ([[gcStaleGens]]). Crash
+  * matrix, all read-safe with ZERO repair: a partial `g<k+1>` with PTR
+  * at `g<k>` serves the old generation; a moved PTR serves the new one
+  * while the predecessor idles; stale generations and an orphan
+  * `PTR.tmp` are collected at the next compaction entry.
   *
-  *  - [[healReader]] — restore `live` from `live.bak` ONLY when live
-  *    is missing (the one repair a read needs to see data after a
-  *    mid-swap crash). Never deletes anything: a stale `.bak` or an
-  *    in-progress `.tmp` belongs to the writer.
-  *  - [[healWriter]] — the full repair at writer entry: restore, then
-  *    drop stale `.bak` and orphan `.tmp`.
+  * VIRGIN BASES. A base that is absent, empty, or holds only the
+  * `PTR.tmp` of a crashed first publish is virgin: [[resolveLive]]
+  * names `g0` without creating anything, so readers see an empty
+  * store, and the first writer ([[openLive]]) publishes `PTR=g0`
+  * before it writes any generation — no marker file is needed.
   *
-  * Residual race, documented rather than hidden: if a reader's
-  * restore fires INSIDE an in-flight swap's two-rename window, the
-  * swap aborts loudly with the original generation intact — harmless
-  * but wasted work, which is why compaction belongs in the no-reader
-  * maintenance slot the operator scaladocs prescribe; the heal
-  * exists for CRASHED swaps, not as concurrency control. Guarding
-  * that abort takes care on Hadoop: `FileSystem.rename(src, dst)`
-  * with an existing destination DIRECTORY does not fail — a
-  * NON-EMPTY dst NESTS src inside it; an EMPTY dst is silently
-  * REPLACED, POSIX-style, on the LOCAL fs only (both regimes pinned
-  * empirically in StateFsSpec against this build's hadoop 3.4.2
-  * `RawLocalFileSystem`, whose rename delegates to POSIX rename(2);
-  * `java.io.File.renameTo` failed loudly on the non-empty case).
-  * HDFS differs on the empty case: its rename nests src into an
-  * existing dst directory REGARDLESS of emptiness — which is the
-  * stricter regime, so the nesting re-checks below cover hdfs://
-  * state dirs for both cases and the empty-dst-replace boundary is a
-  * local-fs detail, not part of this object's contract. The race
-  * destinations that matter — a reader-restored live generation, an
-  * installed rewrite — are always non-empty, so nesting is the case
-  * the guards handle. Both [[swapIn]] and
-  * [[healReader]] therefore re-check for the nested path after their
-  * rename and un-nest + abort (swap) or un-nest + accept the other
-  * side's win (heal) instead of leaving silent garbage. */
+  * LEFTOVER LAYOUTS. A non-empty base without `PTR` is refused loudly
+  * on read, append and compact, deleting nothing: with generation dirs
+  * present the pointer was lost externally; otherwise it is a leftover
+  * of the retired rename-aside layout (`v*` dirs, parquet files, or
+  * `.bak`/`.tmp` siblings), which must be rebuilt into a fresh dir. */
 object StateFs {
 
   def fs(spark: SparkSession, p: Path): FileSystem =
@@ -104,517 +90,103 @@ object StateFs {
     ()
   }
 
-  def bakOf(live: Path): Path =
-    new Path(live.getParent, live.getName + ".bak")
-  def tmpOf(live: Path): Path =
-    new Path(live.getParent, live.getName + ".tmp")
+  // ---- the generation-pointer layout (object scaladoc) ----
 
-  /** Rename-aside swap: `live` → `.bak`, `tmp` → `live`, drop `.bak`.
-    * A crash at any point leaves a state the heals repair — PROVIDED
-    * no external metadata names the swapped-away content: the
-    * terminal `.bak` delete permanently discards the old generations,
-    * so a caller whose committed manifest still references them (the
-    * [[graft.operators.Bm25Index]] shape) must instead use
-    * [[swapInKeepBak]], re-commit its metadata, and only then call
-    * [[dropBak]] (review r12 — swapIn-then-commit left a crash window
-    * where the manifest named dirs the swap had already destroyed).
-    * If a concurrent reader's [[healReader]] restores the backup
-    * inside the two-rename window, the swap discards its rewrite and
-    * aborts loudly with the original generation intact (see the
-    * nesting caveat in the object scaladoc — the existence re-checks
-    * below are what turn the would-be silent nesting into that
-    * abort). */
-  def swapIn(fs: FileSystem, live: Path, tmp: Path): Unit = {
-    swapInKeepBak(fs, live, tmp)
-    dropBak(fs, live)
-  }
-
-  /** [[swapIn]] without the terminal `.bak` delete — for callers
-    * whose external metadata (a served-dir manifest) still names the
-    * old generations: swap, re-commit the metadata, then [[dropBak]].
-    * Until the drop, the old generations survive under `.bak`. */
-  def swapInKeepBak(fs: FileSystem, live: Path, tmp: Path): Unit = {
-    val bak = bakOf(live)
-    deleteRec(fs, bak)
-    if (!fs.rename(live, bak)) sys.error(s"compact: cannot move $live aside")
-    def abortRestored(): Nothing = {
-      deleteRec(fs, tmp)
-      sys.error(s"compact: $live was restored by a concurrent reader heal " +
-        "mid-swap; original generation intact, rewrite discarded — rerun " +
-        "compaction in the no-reader maintenance slot")
-    }
-    // live reappearing here = a reader heal raced us (bak -> live)
-    if (fs.exists(live)) abortRestored()
-    if (!fs.rename(tmp, live)) {
-      fs.rename(bak, live)
-      sys.error(s"compact: swap failed for $live; original restored")
-    }
-    // TOCTOU window of the check above: the reader's restore landed
-    // between it and our rename, so our rename NESTED tmp inside the
-    // restored old generation instead of installing it — un-nest and
-    // abort the same way
-    val nested = new Path(live, tmp.getName)
-    if (fs.exists(nested)) { fs.rename(nested, tmp); abortRestored() }
-  }
-
-  /** The explicit old-generation drop completing a [[swapInKeepBak]]
-    * — call only AFTER any metadata naming the old generations has
-    * been re-committed. */
-  def dropBak(fs: FileSystem, live: Path): Unit =
-    deleteRec(fs, bakOf(live))
-
-  // ---- version-pointer swap mode (object-store-safe compaction) ----
-  //
-  // The rename-aside swap above is atomic on HDFS and the local fs,
-  // but on an object store a directory rename is a per-object
-  // copy+delete — not atomic, so the swap's crash windows multiply
-  // and the heals' rename-based repairs stop being safe. The
-  // version-POINTER mode (VERDICT r14 #2 — making the "pair this
-  // with a version-pointer layout" prescription real) removes the
-  // load-bearing rename entirely: the state base dir becomes a
-  // container of generation dirs `g<k>` plus a one-line `PTR` file
-  // naming the live one. Compaction writes the rewrite into `g<k+1>`
-  // (unpublished — readers follow PTR, so partial writes are
-  // invisible), then publishes it by atomically rewriting PTR (one
-  // small-object replace: atomic on HDFS/local via the FileContext
-  // overwrite-rename, effectively atomic on S3-class stores where a
-  // PUT replaces the whole object). The previous generation is KEPT
-  // as an in-flight-reader grace window (pointerSwap scaladoc) and
-  // GC'd at the next compaction entry. Crash matrix, all read-safe
-  // with ZERO repair: a partial `g<k+1>` with PTR at `g<k>` serves
-  // the old generation; a moved PTR serves the new one while the
-  // predecessor idles; stale generations are GC'd at the next
-  // compaction entry. The mode is a per-state-dir property recorded by a
-  // `PTRMODE` marker, chosen on a virgin dir (enablePointerMode) or
-  // adopted IN PLACE by a live rename-mode store via the crash-safe
-  // migrateToPointerMode (VERDICT r16 #1) — the two layouts must not
-  // mix, so silent in-place conversion stays refused.
-
-  private val PtrModeMarker = "PTRMODE"
   private val PtrFile = "PTR"
-  private val MigratingMarker = "_MIGRATING"
 
-  def pointerMode(fs: FileSystem, base: Path): Boolean =
-    fs.exists(new Path(base, PtrModeMarker))
+  private def isGen(s: org.apache.hadoop.fs.FileStatus): Boolean =
+    s.isDirectory && s.getPath.getName.matches("g\\d+")
 
-  /** Opt `base` into pointer mode — call once, on a VIRGIN state dir,
-    * before the first write. Idempotent; refuses a dir that already
-    * holds rename-mode state (the generations would become invisible
-    * to pointer-mode readers: silent total loss). The marker is
-    * created BEFORE the pointer (review r15 — the other order's crash
-    * window left a dir that silently reverted to RENAME mode with a
-    * stray PTR file): a crash between the two leaves marker-without-
-    * PTR, which [[resolveLive]] safely defaults to `g0` because no
-    * generation can exist yet. */
-  def enablePointerMode(spark: SparkSession, base: Path): Unit = {
-    val f = fs(spark, base)
-    if (pointerMode(f, base)) return
-    require(committedVDirs(f, base).isEmpty && !f.exists(bakOf(base)) &&
-        !f.exists(tmpOf(base)),
-      s"pointer mode must be enabled on a VIRGIN state dir: $base already " +
-        "holds rename-mode generations — a silent conversion would hide " +
-        "them from pointer-mode readers; use migrateToPointerMode, the " +
-        "crash-safe in-place migration, instead")
-    f.mkdirs(base)
-    f.create(new Path(base, PtrModeMarker), true).close()
-    writeFileAtomic(spark, new Path(base, PtrFile), "g0")
+  /** The live generation of `base`: the PTR-named `g<k>` dir, or `g0`
+    * (not created) for a virgin base. Refuses loudly — deleting
+    * nothing — a base whose PTR is missing but which holds generation
+    * dirs (external loss of the pointer: defaulting to `g0` would
+    * serve an empty store while the next compaction's [[gcStaleGens]]
+    * deleted the real live generation), and a base holding a leftover
+    * rename-aside layout (object scaladoc). */
+  def resolveLive(fs: FileSystem, base: Path): Path = {
+    val ptr = new Path(base, PtrFile)
+    if (fs.exists(ptr)) return new Path(base, readString(fs, ptr))
+    val kids =
+      if (fs.exists(base))
+        fs.listStatus(base).toSeq.filterNot(_.getPath.getName == PtrFile + ".tmp")
+      else Seq.empty
+    val gens = kids.filter(isGen).map(_.getPath.getName).sorted
+    require(gens.isEmpty,
+      s"state inconsistent: $base has no PTR file but generation dir(s) " +
+        s"[${gens.mkString(", ")}] exist — the version pointer was removed " +
+        "externally; restore it (one line naming the live generation) or " +
+        "rebuild the index")
+    val siblings = Seq(".bak", ".tmp")
+      .map(s => new Path(base.getParent, base.getName + s)).filter(fs.exists)
+    if (kids.nonEmpty || siblings.nonEmpty) {
+      val found = (kids.map(_.getPath.getName).sorted ++
+        siblings.map(_.getName)).take(8)
+      sys.error(s"leftover rename layout refused: $base holds state in the " +
+        s"retired rename-aside layout (found: ${found.mkString(", ")}) and " +
+        "no PTR version pointer — only the g<k>/PTR generation layout is " +
+        "served. Rebuild the store into a fresh directory; nothing was " +
+        "deleted")
+    }
+    new Path(base, "g0")
   }
 
-  /** The live tree for state rooted at `base`: `base` itself in
-    * rename mode; the PTR-named generation dir in pointer mode. A
-    * missing PTR is legitimate ONLY in the [[enablePointerMode]]
-    * crash window, where no generation beyond `g0` can exist yet —
-    * with any later generation present it is certain external loss of
-    * the pointer, and defaulting to `g0` would silently serve an
-    * empty index while the next compaction's [[gcStaleGens]] deleted
-    * the real live generation (review r15): loud instead, naming the
-    * one-line repair. */
-  def resolveLive(fs: FileSystem, base: Path): Path =
-    if (!pointerMode(fs, base)) base
+  /** [[resolveLive]] for a WRITER: on a virgin base, publish `PTR=g0`
+    * first, so no generation is ever written without the pointer that
+    * names it. */
+  def openLive(spark: SparkSession, base: Path): Path = {
+    val f = fs(spark, base)
+    val ptr = new Path(base, PtrFile)
+    if (f.exists(ptr)) new Path(base, readString(f, ptr))
     else {
-      val p = new Path(base, PtrFile)
-      if (fs.exists(p)) new Path(base, readString(fs, p))
-      else {
-        val gens =
-          if (fs.exists(base))
-            fs.listStatus(base).toSeq
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-              .map(_.getPath.getName).filterNot(_ == "g0")
-          else Seq.empty
-        require(gens.isEmpty,
-          s"pointer-mode state inconsistent: $base has no PTR file but " +
-            s"generation dir(s) [${gens.sorted.mkString(", ")}] exist — " +
-            "the version pointer was removed externally; restore it (one " +
-            "line naming the live generation) or rebuild the index")
-        new Path(base, "g0")
-      }
+      val live = resolveLive(f, base) // g0, or the loud refusals
+      writeFileAtomic(spark, ptr, live.getName)
+      live
     }
+  }
 
-  /** The target generation dir a pointer-mode compaction writes into:
-    * the successor of the live generation. */
+  /** The target generation dir a compaction writes into: the
+    * successor of the live generation. */
   def nextGen(base: Path, live: Path): Path =
     new Path(base, "g" + (live.getName.drop(1).toLong + 1))
 
   /** Publish `next` as the live generation — ONE atomic PTR rewrite,
-    * nothing else. The previous generation is deliberately KEPT
-    * (ADVICE r15): a reader that resolved it just before the swap may
-    * still be mid-scan, and deleting it inline would fail that read —
-    * the pointer mode's read-safe crash matrix extends to LIVE readers
-    * during compaction only if the superseded generation survives the
-    * swap as a grace window. It is collected by [[gcStaleGens]] at the
-    * next compaction entry, which by the single-writer discipline is
-    * the next point guaranteed free of readers mid-scan on it; the
-    * cost is one stale generation of disk between compactions.
+    * nothing else. The previous generation is deliberately KEPT: a
+    * reader that resolved it just before the swap may still be
+    * mid-scan, and deleting it inline would fail that read. It is
+    * collected by [[gcStaleGens]] at the next compaction entry, which
+    * by the single-writer discipline is the next point guaranteed free
+    * of readers mid-scan on it; the cost is one stale generation of
+    * disk between compactions.
     *
-    * GRACE-WINDOW CONTRACT (review r16 — previously implicit): with
-    * the default retention the window is exactly ONE generation deep,
+    * GRACE-WINDOW CONTRACT: the window is exactly ONE generation deep,
     * so a reader's scan must not span TWO compactions — a reader that
     * resolved generation `g<k>` keeps it through the swap to `g<k+1>`
     * but loses it to the writer-entry GC of the compaction that
-    * publishes `g<k+2>`. Deployments whose scans can outlive a full
-    * compaction cadence deepen the window with [[gcStaleGens]]'s
-    * `retainPredecessors` (a scan may then span
-    * `retainPredecessors + 1` compactions), at the cost of that many
-    * stale generations of disk. */
-  def pointerSwap(spark: SparkSession, base: Path, prev: Path, next: Path): Unit =
+    * publishes `g<k+2>`. */
+  def pointerSwap(spark: SparkSession, base: Path, next: Path): Unit =
     writeFileAtomic(spark, new Path(base, PtrFile), next.getName)
 
-  /** Writer-entry GC for pointer mode: every `g*` generation except
-    * the live one is stale — a crashed compaction's partial target, or
-    * the previous generation [[pointerSwap]] left as the reader grace
-    * window. Also drops orphan `*.tmp` FILES directly under `base`
-    * (ADVICE r15: a crash between [[writeFileAtomicFs]]'s create and
-    * rename strands a `PTR.tmp` nothing else cleans — healWriter is a
-    * no-op in pointer mode and the generation GC only removes
-    * directories).
-    *
-    * `retainPredecessors` (review r16 — the [[pointerSwap]]
-    * grace-window contract's knob) keeps that many of the NEWEST
-    * superseded generations BELOW the live one alive past this GC, so
-    * a reader's scan may safely span `retainPredecessors + 1`
-    * compactions; the default 0 is the one-compaction contract.
-    * Crashed-compaction targets ABOVE the live generation are always
-    * collected — they are partial garbage, never a reader's.
-    *
-    * When the base carries a crashed [[migrateToPointerMode]]'s
-    * `_MIGRATING` sentinel (publish completed, old-layout GC did not),
-    * this also finishes that migration's cleanup: every child that is
-    * not part of the pointer layout is the superseded rename-mode
-    * layout — already invisible to pointer-mode readers — and is
-    * collected, the sentinel last. Since r19 (VERDICT r18 #3) the
-    * sentinel CARRIES the migration's entry snapshot, so this finisher
-    * re-checks what the crashed run could not: if the rename layout
-    * changed since staging (a writer slipped into the instants the
-    * pre-flip guard cannot see, then the migration crashed before its
-    * own post-flip re-check — or aborted loudly there and someone
-    * reran a writer anyway, ADVICE r18), the GC REFUSES loudly with
-    * everything preserved instead of collecting the orphaned write.
-    * The named unblock: copy the changed files aside, remove them so
-    * the layout matches the staged snapshot again (any writer entry
-    * then finishes the GC), or — if an in-place rewrite made the
-    * snapshot unmatchable — truncate the sentinel to empty to accept
-    * one unguarded finish. An EMPTY sentinel (the pre-r19 layout, or
-    * that explicit operator acceptance) keeps the old unguarded
-    * semantics. */
-  def gcStaleGens(fs: FileSystem, base: Path, keep: String,
-      retainPredecessors: Int = 0): Unit = {
-    if (!fs.exists(base)) return
-    val entries = fs.listStatus(base).toSeq
-    val migrating = entries.exists(_.getPath.getName == MigratingMarker)
-    if (migrating) {
-      val staged = parseSnap(readString(fs, new Path(base, MigratingMarker)))
-      for (entrySnap <- staged) {
-        val now = renameLayoutSnapshot(fs, base)
-        if (now != entrySnap) {
-          val changed = ((now diff entrySnap) ++ (entrySnap diff now))
-            .map(_._1).toSeq.sorted
-          sys.error(s"migration finish refused: the superseded rename " +
-            s"layout under $base changed after the migration's staging " +
-            s"snapshot (changed files: ${changed.mkString(", ")}) — a " +
-            "writer landed in the crashed migration's blind window, and " +
-            "collecting the layout now would silently destroy its " +
-            "output. Nothing was deleted. COPY THE CHANGED FILES ASIDE, " +
-            "re-submit their rows through the store's writer API, then " +
-            "remove them so the layout matches the staged snapshot (any " +
-            "writer entry then finishes the GC); if an in-place rewrite " +
-            s"made the snapshot unmatchable, truncate $MigratingMarker " +
-            "to empty to accept one unguarded finish")
-        }
+  /** Writer-entry GC: every `g*` generation except the live `keep` is
+    * stale — a crashed compaction's partial target, or the previous
+    * generation [[pointerSwap]] left as the reader grace window. Also
+    * drops orphan `*.tmp` FILES directly under `base` (a crash between
+    * [[writeFileAtomicFs]]'s create and rename strands a `PTR.tmp`
+    * nothing else cleans). */
+  def gcStaleGens(fs: FileSystem, base: Path, keep: String): Unit =
+    if (fs.exists(base))
+      fs.listStatus(base).toSeq.foreach { s =>
+        val n = s.getPath.getName
+        if (n != keep && (isGen(s) || (s.isFile && n.endsWith(".tmp"))))
+          deleteRec(fs, s.getPath)
       }
-    }
-    def genId(n: String): Option[Long] =
-      if (n.matches("g\\d+")) Some(n.drop(1).toLong) else None
-    val keepId = genId(keep).getOrElse(Long.MaxValue)
-    val retained: Set[String] = entries
-      .flatMap(s => genId(s.getPath.getName).filter(_ < keepId)
-        .map(id => (id, s.getPath.getName)))
-      .sortBy(-_._1).take(math.max(0, retainPredecessors)).map(_._2).toSet
-    entries.foreach { s =>
-      val n = s.getPath.getName
-      val stale =
-        if (n == keep || retained.contains(n) || n == PtrModeMarker ||
-          n == PtrFile || n == MigratingMarker) false
-        else if (s.isDirectory && n.startsWith("g")) true
-        else if (s.isFile && n.endsWith(".tmp")) true
-        else migrating // crashed-migration rename-layout residue
-      if (stale) deleteRec(fs, s.getPath)
-    }
-    if (migrating) deleteRec(fs, new Path(base, MigratingMarker))
-  }
-
-  /** Recursive `(path, len, mtime)` snapshot of the NON-pointer-layout
-    * children of `base` — the migration's no-writer guard key (the
-    * [[graft.sink.Compactor]] snapshot discipline), shared by
-    * [[migrateToPointerModeImpl]]'s three re-checks and
-    * [[gcStaleGens]]'s migration-finish guard. Paths are recorded
-    * scheme-less (`toUri.getPath`) so a snapshot persisted by one
-    * process compares equal in a finisher that resolved the base
-    * through a differently-qualified path string. */
-  private def renameLayoutSnapshot(fs: FileSystem,
-      base: Path): Set[(String, Long, Long)] = {
-    val ptrNames = Set(MigratingMarker, MigratingMarker + ".tmp",
-      PtrFile, PtrFile + ".tmp", PtrModeMarker)
-    val b = Set.newBuilder[(String, Long, Long)]
-    if (!fs.exists(base)) return b.result()
-    for (s <- fs.listStatus(base).toSeq
-         if !ptrNames.contains(s.getPath.getName) &&
-           !(s.isDirectory && s.getPath.getName.matches("g\\d+"))
-         if fs.exists(s.getPath)) {
-      // listFiles handles files and directories alike: a file path
-      // yields its own status, a directory its recursive contents
-      val it = fs.listFiles(s.getPath, true)
-      while (it.hasNext) {
-        val st = it.next()
-        b += ((st.getPath.toUri.getPath, st.getLen, st.getModificationTime))
-      }
-    }
-    b.result()
-  }
-
-  /** The `_MIGRATING` sentinel's snapshot payload (VERDICT r18 #3):
-    * a `SNAP1` header line, then one `len \t mtime \t path` line per
-    * snapshotted file. An empty sentinel carries no snapshot — the
-    * pre-r19 layout, or the operator's explicit acceptance of one
-    * unguarded GC finish. */
-  private def serializeSnap(s: Set[(String, Long, Long)]): String =
-    ("SNAP1" +: s.toSeq.sorted.map { case (p, l, m) => s"$l\t$m\t$p" })
-      .mkString("\n")
-
-  private def parseSnap(content: String): Option[Set[(String, Long, Long)]] =
-    if (!content.startsWith("SNAP1")) None
-    else Some(content.split("\n").toSeq.drop(1).filter(_.nonEmpty).map { ln =>
-      // the witness-file parse policy ([[readWitness]]): corrupt
-      // content is LOUD and names its remedy, never a bare
-      // NumberFormatException
-      def bad(): Nothing = sys.error(
-        s"corrupt $MigratingMarker snapshot line '$ln' — restore the " +
-          "sentinel or truncate it to empty to accept one unguarded " +
-          "migration-GC finish")
-      val parts = ln.split("\t", 3)
-      if (parts.length != 3) bad()
-      val (len, mtime) =
-        scala.util.Try((parts(0).toLong, parts(1).toLong)).getOrElse(bad())
-      (parts(2), len, mtime)
-    }.toSet)
-
-  /** In-place rename→pointer migration of a LIVE state dir (VERDICT
-    * r16 #1 — [[enablePointerMode]] is virgin-dir-only, so a deployed
-    * store could previously adopt the object-store-safe layout only by
-    * full rebuild): stage a COPY of the live tree's children as
-    * generation `g0`, write `PTR`, then flip the mode with one atomic
-    * `PTRMODE` create, and GC the superseded rename-mode children
-    * (finished by the next writer entry's [[gcStaleGens]] if this call
-    * crashes first). The live tree itself is never renamed or moved —
-    * staging is copy-only — so a crash at ANY point leaves one of two
-    * servable stores:
-    *
-    *  - before the `PTRMODE` create: the UNTOUCHED rename-mode store.
-    *    The staged extras (`_MIGRATING`, a partial or complete `g0`,
-    *    `PTR`) are invisible to every rename-mode code path — v-dir
-    *    listings filter them out, witness files are read by exact name
-    *    — and a rerun of this method restarts the staging from scratch
-    *    (staged copies are never authoritative before the publish).
-    *  - at or after it: a FULLY-published pointer store — `PTR` and
-    *    the complete `g0` are in place before the marker by
-    *    construction — with at worst the old rename-layout children
-    *    left as invisible junk behind the `_MIGRATING` sentinel, which
-    *    the next [[gcStaleGens]] (any writer entry) or a rerun of this
-    *    method collects.
-    *
-    * NO CONCURRENT READERS OR WRITERS — enforced, not assumed (the
-    * [[graft.sink.Compactor]] discipline): the live tree is
-    * snapshotted at entry, re-checked immediately before the `PTRMODE`
-    * create, and re-checked ONCE MORE immediately after it (ADVICE
-    * r17). A writer landing mid-copy would otherwise split its output
-    * between the copied `g0` and the about-to-be-GC'd old layout. A
-    * difference caught BEFORE the flip aborts loudly with the staging
-    * discarded and the rename-mode store — the concurrent write
-    * included — intact and authoritative. A difference caught AFTER
-    * the flip (a writer in the instants between the pre-flip re-check
-    * and the `PTRMODE` create) SKIPS the trailing GC and fails loudly
-    * with BOTH layouts preserved behind `_MIGRATING`: the published
-    * pointer store serves, the superseded rename layout holds the
-    * orphaned write for manual reconciliation — not GC'd silently by
-    * THIS call. The preservation lasts only until the next writer
-    * entry (its `_MIGRATING`-gated [[gcStaleGens]] finishes the
-    * interrupted cleanup), so the error instructs copying the orphaned
-    * files aside before anything else touches the store.
-    *
-    * RESIDUAL WINDOW, named per the Compactor CONTRACT precedent
-    * (r15 #5): the snapshots key on (path, len, mtime), so a
-    * same-length in-place rewrite inside mtime granularity escapes
-    * every re-check — it requires a writer violating the stated
-    * no-writer precondition inside a sub-second instant; the
-    * precondition, not the guard, is the contract. The former
-    * residual (b) — a CRASH between the `PTRMODE` create and the
-    * post-flip re-check handing the old-layout GC to a finisher that
-    * could not re-check — is CLOSED since r19 (VERDICT r18 #3): the
-    * entry snapshot is persisted INTO the `_MIGRATING` sentinel at
-    * staging time, so [[gcStaleGens]]'s migration-finish path (and
-    * this method's own idempotent rerun, which routes through it —
-    * ADVICE r18) compares before collecting and refuses loudly on a
-    * mismatch, preserving the orphaned write. The post-flip GC
-    * retains only `g0` — no `retainPredecessors` depth applies here,
-    * because the no-READER precondition means no in-flight rename-mode
-    * scan can exist to still need the superseded layout.
-    *
-    * PRECONDITIONS, refused loudly: the base must exist (a virgin
-    * store wants [[enablePointerMode]]); any `.bak`/`.tmp` sibling
-    * (an unresolved rename-mode crash state) must have been repaired
-    * by the store's own writer-entry heal first; and `g*`/`PTR`
-    * children with NO `_MIGRATING` sentinel are foreign content under
-    * reserved pointer-layout names, not a crashed attempt — refused
-    * rather than clobbered. Idempotent: a completed migration returns
-    * after finishing any leftover cleanup. */
-  def migrateToPointerMode(spark: SparkSession, base: Path): Unit =
-    migrateToPointerModeImpl(spark, base, () => (), () => ())
-
-  /** [[migrateToPointerMode]] with injectable crash/test seams — the
-    * Compactor device: `afterStage` fires with `g0` fully copied but
-    * nothing published; `afterPtr` fires with `PTR` written but the
-    * mode not yet flipped. */
-  private[graft] def migrateToPointerModeImpl(spark: SparkSession, base: Path,
-      afterStage: () => Unit, afterPtr: () => Unit,
-      afterFlip: () => Unit = () => ()): Unit = {
-    val f = fs(spark, base)
-    val mig = new Path(base, MigratingMarker)
-    if (pointerMode(f, base)) {
-      // published already; finish a crashed run's old-layout GC
-      if (f.exists(mig)) gcStaleGens(f, base, resolveLive(f, base).getName)
-      return
-    }
-    require(f.exists(base),
-      s"migrate: $base does not exist — a virgin store opts in with " +
-        "enablePointerMode instead")
-    require(!f.exists(bakOf(base)) && !f.exists(tmpOf(base)),
-      s"migrate: $base has unresolved rename-mode swap state " +
-        s"(${bakOf(base).getName}/${tmpOf(base).getName}) — run the " +
-        "store's writer-entry repair first, then rerun the migration")
-    val g0 = new Path(base, "g0")
-    val ptr = new Path(base, PtrFile)
-    if (!f.exists(mig)) {
-      val reserved = f.listStatus(base).toSeq.map(_.getPath.getName)
-        .filter(n => n == PtrFile || n.matches("g\\d+")).sorted
-      require(reserved.isEmpty,
-        s"migrate: $base already contains pointer-layout name(s) " +
-          s"[${reserved.mkString(", ")}] with no migration in progress — " +
-          "these are reserved (g<k>/PTR); foreign content under them " +
-          "would be clobbered by the staging, so move it aside first")
-      f.create(mig, true).close()
-    }
-    // restart any crashed staging: pre-publish copies are never
-    // authoritative, and a partial g0 is indistinguishable from a
-    // complete one without the publish
-    deleteRec(f, g0)
-    deleteRec(f, ptr)
-    deleteRec(f, new Path(base, PtrFile + ".tmp"))
-    // children of the live rename-mode tree = everything that is not a
-    // staging artifact of this migration
-    val ours = Set(MigratingMarker, MigratingMarker + ".tmp", "g0",
-      PtrFile, PtrFile + ".tmp", PtrModeMarker)
-    def liveKids(): Seq[Path] = f.listStatus(base).toSeq.map(_.getPath)
-      .filterNot(p => ours.contains(p.getName))
-    // no-writer guard snapshot: every file under the live tree, keyed
-    // (path, len, mtime) — the Compactor snapshot discipline
-    // ([[renameLayoutSnapshot]], re-listed per call so a brand-new
-    // child — a concurrent append's fresh v-dir — is visible to the
-    // re-checks too)
-    def snap(): Set[(String, Long, Long)] = renameLayoutSnapshot(f, base)
-    val entrySnap = snap()
-    // Persist the snapshot INTO the sentinel (VERDICT r18 #3): a crash
-    // between the PTRMODE create and the post-flip re-check hands the
-    // old-layout GC to the next writer entry's gcStaleGens, which can
-    // now run THIS snapshot's comparison before collecting — the
-    // formerly-blind finisher window. Rewritten on every (re)staging so
-    // a rerun never finishes against a stale snapshot.
-    writeFileAtomicFs(f, mig, serializeSnap(entrySnap))
-    f.mkdirs(g0)
-    for (k <- liveKids())
-      if (!org.apache.hadoop.fs.FileUtil.copy(f, k, f, new Path(g0, k.getName),
-          false, f.getConf))
-        sys.error(s"migrate: copying $k into $g0 failed — staged copy " +
-          "incomplete; rerun the migration")
-    afterStage()
-    writeFileAtomic(spark, ptr, "g0")
-    afterPtr()
-    // pre-publish no-writer re-check: a writer landed in the live tree
-    // while we copied — its output is split between the copy and the
-    // layout about to be GC'd. Abort loudly, discarding only the
-    // staging; the rename-mode store (the concurrent write included)
-    // stays authoritative and untouched.
-    val now = snap()
-    if (now != entrySnap) {
-      val changed = ((now diff entrySnap) ++ (entrySnap diff now)).map(_._1)
-        .toSeq.sorted
-      deleteRec(f, g0)
-      deleteRec(f, ptr)
-      deleteRec(f, mig)
-      sys.error(s"migrate: $base changed during the staging copy " +
-        s"(concurrent writer; changed files: ${changed.mkString(", ")}) — " +
-        "staging discarded, rename-mode store intact including the " +
-        "concurrent write; rerun the migration in a no-reader/no-writer " +
-        "maintenance slot")
-    }
-    // THE atomic mode switch: until this create every reader and writer
-    // resolves the untouched rename-mode tree; from it, PTR and the
-    // complete g0 are already in place
-    f.create(new Path(base, PtrModeMarker), true).close()
-    afterFlip()
-    // post-flip re-check (ADVICE r17): the instants between the
-    // re-check above and the PTRMODE create are outside the pre-flip
-    // guard — a writer landing exactly there wrote into the rename
-    // layout the GC below would silently delete. On mismatch the GC is
-    // SKIPPED and the failure is loud with BOTH layouts preserved
-    // behind _MIGRATING: the published pointer store (g0) serves; the
-    // superseded layout holds the orphaned write for reconciliation.
-    val postFlip = snap()
-    if (postFlip != entrySnap) {
-      val changed = ((postFlip diff entrySnap) ++ (entrySnap diff postFlip))
-        .map(_._1).toSeq.sorted
-      sys.error(s"migrate: $base changed between the pre-flip re-check and " +
-        s"the mode flip (concurrent writer; changed files: " +
-        s"${changed.mkString(", ")}) — old-layout GC skipped; the published " +
-        s"pointer store (g0) is servable, and the superseded rename layout " +
-        s"(the concurrent write included) is preserved behind " +
-        s"$MigratingMarker, whose persisted snapshot makes every finisher " +
-        "(writer-entry gcStaleGens, a migration rerun) REFUSE the GC while " +
-        "the mismatch persists (VERDICT r18 #3). Copy the changed files " +
-        "aside, re-submit their rows through the store's writer API, then " +
-        "remove them so the layout matches the staged snapshot — the next " +
-        "writer entry or migration rerun then finishes the interrupted GC")
-    }
-    // GC the superseded rename-mode layout (invisible junk from here on;
-    // a crash mid-GC is finished by the next writer entry's gcStaleGens
-    // behind the _MIGRATING sentinel, or by a rerun of this method)
-    gcStaleGens(f, base, "g0")
-  }
 
   // ---- crash-interrupted-compaction marker ----
 
   /** Record, INSIDE a compacted generation directory, the names of
     * the directories it folded — written while the generation is
-    * still under `.tmp`, so the marker becomes visible atomically
-    * with the swap. Underscore-prefixed: parquet readers ignore it,
+    * still unpublished, so the marker becomes visible atomically
+    * with the PTR swap. Underscore-prefixed: parquet readers ignore it,
     * like `_SUCCESS`. A reader whose committed manifest names
     * directories that no longer exist can then distinguish a
     * crash-interrupted compaction (every missing name appears in a
@@ -773,23 +345,20 @@ object StateFs {
 
   /** Entries that appeared or vanished since `entry` — empty means no
     * concurrent writer landed during the rewrite and the swap is safe
-    * (modulo the residual instants between this check and the swap's
-    * first rename, the documented Compactor residual). */
+    * (modulo the residual instants between this check and the PTR
+    * rewrite, the documented Compactor residual). */
   def snapshotDiff(fs: FileSystem, dir: Path, entry: Set[String]): Seq[String] = {
     val now = appendSnapshot(fs, dir)
     ((now diff entry) ++ (entry diff now)).toSeq.sorted
   }
 
-  /** The loss-checked committed listing: [[healReader]] (so a
-    * mid-swap-crashed family is visible before any check), then
-    * [[committedVDirs]], then two cross-checks that turn external
+  /** The loss-checked committed listing: [[committedVDirs]], then two cross-checks that turn external
     * loss of committed state into loud errors naming what is missing
     * — `MANIFEST` (the compacted generation must exist: it holds the
     * whole pre-compaction corpus) and `applog/` (every logged append
     * generation must exist as a committed dir). `what` names the
     * index in the error messages ("IVF", "IVF-PQ", ...). */
   def checkedVDirs(fs: FileSystem, dir: Path, what: String): Seq[Path] = {
-    healReader(fs, dir)
     val dirs = committedVDirs(fs, dir)
     val manifest = new Path(dir, "MANIFEST")
     if (fs.exists(manifest)) {
@@ -895,23 +464,6 @@ object StateFs {
     dirs
   }
 
-  /** Read-side repair: restore a mid-swap-crashed family so the data
-    * is visible again. Touches nothing else. If an in-flight swap's
-    * second rename lands between our existence check and our rename,
-    * the restore NESTS the backup inside the newly-installed live
-    * tree (the Hadoop rename caveat above) — detected and un-nested,
-    * accepting the writer's generation as the winner. */
-  def healReader(fs: FileSystem, live: Path): Unit = {
-    val bak = bakOf(live)
-    if (!fs.exists(live) && fs.exists(bak)) {
-      if (!fs.rename(bak, live))
-        sys.error(s"heal: cannot restore $live from $bak — " +
-          "state is intact under the .bak; resolve the blocking path manually")
-      val nested = new Path(live, bak.getName)
-      if (fs.exists(nested)) { fs.rename(nested, bak); () }
-    }
-  }
-
   /** Delete every `v*`-named generation under `dir` except `keep` —
     * committed or partial (a crashed commit's half-written dir
     * included). The post-pointer-swap GC shared by the versioned
@@ -922,18 +474,4 @@ object StateFs {
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("v") &&
           s.getPath.getName != keep)
         .foreach(s => deleteRec(fs, s.getPath))
-
-  /** Writer-entry repair: [[healReader]] plus dropping a stale `.bak`
-    * (completed swap whose cleanup crashed) and any orphan `.tmp`
-    * (unfinished compaction write). For a manifest-carrying caller a
-    * stale `.bak` can also be a [[swapInKeepBak]] whose metadata
-    * re-commit crashed; dropping it is still safe because the
-    * installed live generation holds the union of the old ones and
-    * carries their names in its [[writeFolded]] marker — the reader
-    * fallback serves from it. */
-  def healWriter(fs: FileSystem, live: Path): Unit = {
-    healReader(fs, live)
-    if (fs.exists(live)) deleteRec(fs, bakOf(live))
-    deleteRec(fs, tmpOf(live))
-  }
 }

@@ -25,6 +25,28 @@ class Bm25IndexSpec extends SparkTestBase {
   private def dfMap(df: DataFrame): Map[String, Long] =
     df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  /** The live generation dir of one append family (the PTR-named
+    * `g<k>` under `state/sub`); compactions move it, so re-resolve per
+    * use. */
+  private def live(state: String, sub: String): File = {
+    val f = new File(state, sub)
+    new File(f, java.nio.file.Files.readString(new File(f, "PTR").toPath).trim)
+  }
+
+  /** The ranking computed in one shot from the documents — the twin a
+    * served index is compared against (the StreamingBm25Spec oracle). */
+  private def direct(corpus: DataFrame, terms: Seq[String]): Seq[String] = {
+    val ctoks = Bm25Index.chunkTokens(corpus)
+    val dl = ctoks.groupBy("doc_id", "chunk_id", "start", "len")
+      .agg(count(lit(1)).as("dl"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_tok"))
+    val tf = ctoks.filter(col("token").isin(terms: _*))
+      .groupBy("doc_id", "chunk_id", "token").agg(count(lit(1)).as("tf"))
+    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    Bm25Index.score(tf, dfreq, dl, stats, k = 10)
+      .collect().map(_.toString).toSeq
+  }
+
   test("two-batch fold == full rebuild for every stored statistic") {
     val state = Fixtures.tempDir("bm25-fold").resolve("state").toString
     assert(Bm25Index.appendBatch(spark, state, docs.filter(bucket < 90), 0L))
@@ -89,10 +111,10 @@ class Bm25IndexSpec extends SparkTestBase {
     ctoks.groupBy("doc_id", "chunk_id", "token").agg(count(lit(1)).as("tf"))
       .withColumn("tkb", pmod(xxhash64(col("token")), lit(64L)))
       .write.mode("overwrite").partitionBy("tkb")
-      .parquet(new File(new File(state2, "postings"), f"v${1L}%020d").getPath)
+      .parquet(new File(live(state2, "postings"), f"v${1L}%020d").getPath)
     ctoks.groupBy("doc_id", "chunk_id", "start", "len").agg(count(lit(1)).as("dl"))
       .write.mode("overwrite")
-      .parquet(new File(new File(state2, "dl"), f"v${1L}%020d").getPath)
+      .parquet(new File(live(state2, "dl"), f"v${1L}%020d").getPath)
     // the orphaned appends are invisible: served state == batch-1-only
     val (p2, _, _, st2) = Bm25Index.readState(spark, state2).get
     assert(st2.select("last_batch").head().getLong(0) === 0L)
@@ -110,7 +132,7 @@ class Bm25IndexSpec extends SparkTestBase {
   }
 
   private def versionDirs(state: String, sub: String): Seq[String] =
-    Option(new File(state, sub).listFiles()).getOrElse(Array.empty).toSeq
+    Option(live(state, sub).listFiles()).getOrElse(Array.empty).toSeq
       .filter(d => d.isDirectory && d.getName.startsWith("v"))
       .map(_.getName).sorted
 
@@ -149,40 +171,6 @@ class Bm25IndexSpec extends SparkTestBase {
       .collect().map(_.toString).toSeq === full)
   }
 
-  test("compact crash windows heal: mid-swap by readers, stale bak/tmp by writers only") {
-    val state = Fixtures.tempDir("bm25-cheal").resolve("state").toString
-    Bm25Index.appendBatch(spark, state, docs.filter(bucket < 50), 0L)
-    Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 50), 1L)
-    val want = Bm25Index.retrieve(spark, state, Seq("spark", "vector"))
-      .collect().map(_.toString).toSeq
-    // crash between the swap's two renames: live gone, backup present —
-    // the ONE repair a reader performs (it must, to see data at all)
-    val live = new File(state, "postings")
-    val bak = new File(state, "postings.bak")
-    assert(live.renameTo(bak))
-    assert(Bm25Index.retrieve(spark, state, Seq("spark", "vector"))
-      .collect().map(_.toString).toSeq === want, "heal must restore the backup")
-    assert(live.exists() && !bak.exists())
-    // crash after the swap, before cleanup: stale backup next to live
-    val staleBak = new File(state, "dl.bak")
-    assert(staleBak.mkdirs())
-    // crash mid-rewrite: an orphaned tmp tree
-    val orphan = new File(new File(state, "postings.tmp"), "vjunk")
-    assert(orphan.mkdirs())
-    // a READ leaves both alone (deleting the tmp would race an
-    // in-flight compaction on another session — review r12) and still
-    // serves the committed generation
-    assert(Bm25Index.retrieve(spark, state, Seq("spark", "vector"))
-      .collect().map(_.toString).toSeq === want)
-    assert(staleBak.exists() && new File(state, "postings.tmp").exists(),
-      "a reader must not delete writer-owned .bak/.tmp dirs")
-    // the next WRITER entry cleans both
-    assert(Bm25Index.compact(spark, state))
-    assert(!staleBak.exists() && !new File(state, "postings.tmp").exists())
-    assert(Bm25Index.retrieve(spark, state, Seq("spark", "vector"))
-      .collect().map(_.toString).toSeq === want)
-  }
-
   test("crash between compact's swap and its manifest re-commit: served, then completed") {
     // ADVICE r12 (high): the old flow destroyed the pre-compaction
     // generations inside the swap BEFORE the manifest re-commit — a
@@ -202,8 +190,8 @@ class Bm25IndexSpec extends SparkTestBase {
       .collect().map(_.toString).toSeq
     val nPost = Bm25Index.readState(spark, state).get._1.count()
     // snapshot merged/, compact, then restore the snapshot — exactly
-    // the on-disk state of a crash after both family swaps (and the
-    // bak cleanup) but before commitMerged rewrote the manifest
+    // the on-disk state of a crash after both family PTR swaps but
+    // before commitMerged rewrote the manifest
     val merged = new File(state, "merged")
     val saved = new File(state, "merged_saved")
     Fixtures.copyRec(merged, saved)
@@ -211,7 +199,7 @@ class Bm25IndexSpec extends SparkTestBase {
     Fixtures.deleteRec(merged)
     assert(saved.renameTo(merged))
     // the compacted generation carries the folded-dirs marker
-    val gen = new File(new File(state, "postings"), f"v${2L}%020d")
+    val gen = new File(live(state, "postings"), f"v${2L}%020d")
     assert(new File(gen, "_COMPACTED").exists())
     // reads serve the FULL corpus through the fallback, not a failure
     // and not a silently smaller index
@@ -375,7 +363,7 @@ class Bm25IndexSpec extends SparkTestBase {
     // and would have served half the corpus against full-corpus
     // df/N/T (review r12)
     Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 50), 1L)
-    nuke(new File(state, "postings") + f"/v${0L}%020d")
+    nuke(live(state, "postings") + f"/v${0L}%020d")
     val ePartial = intercept[IllegalArgumentException] {
       Bm25Index.readState(spark, state)
     }
@@ -413,7 +401,7 @@ class Bm25IndexSpec extends SparkTestBase {
     // rewrite both dl generations the way the pre-r12 layout wrote
     // them: unpartitioned, no dhb column
     for (v <- Seq(0L, 1L)) {
-      val d = new File(new File(state, "dl"), f"v$v%020d").getPath
+      val d = new File(live(state, "dl"), f"v$v%020d").getPath
       val old = spark.read.parquet(d)
         .select("doc_id", "chunk_id", "start", "len", "dl")
         .localCheckpoint(true)
@@ -427,7 +415,7 @@ class Bm25IndexSpec extends SparkTestBase {
       .collect().map(_.toString).toSeq === want)
     // compaction migrates to the bucketed layout
     assert(Bm25Index.compact(spark, state))
-    val gen = new File(new File(state, "dl"), f"v${1L}%020d")
+    val gen = new File(live(state, "dl"), f"v${1L}%020d")
     assert(gen.listFiles().exists(_.getName.startsWith("dhb=")),
       "compact must rewrite pre-dhb dl into the bucketed layout")
     assert(Bm25Index.retrieve(spark, state, Seq("spark", "vector", "customer"))
@@ -435,22 +423,19 @@ class Bm25IndexSpec extends SparkTestBase {
   }
 
   test("pointer mode: family compaction publishes via one PTR rewrite per " +
-      "family; retrieval identical to rename mode; a crash before the " +
-      "manifest re-commit serves through the fallback; the concurrency " +
-      "guard discards only the staged generations") {
-    // VERDICT r15 #1: the object-store-safe swap mode (the
-    // StreamingIvfSpec pointer-mode template) adopted for the BM25
-    // family stores — with it, NO directory rename anywhere in this
-    // index is load-bearing. A rename-mode TWIN is fed the same
-    // batches so mode transparency is checked at every step.
+      "family; retrieval identical to the direct computation; a crash " +
+      "before the manifest re-commit serves through the fallback; the " +
+      "concurrency guard discards only the staged generations") {
+    // The object-store-safe generation layout of the BM25 family
+    // stores — NO directory rename anywhere in this index is
+    // load-bearing. Every step is checked against the ranking computed
+    // directly from the applied documents.
     import spark.implicits._
     val baseDir = Fixtures.tempDir("bm25-ptr")
     val state = baseDir.resolve("state").toString
-    val twin = baseDir.resolve("twin").toString // rename mode
     val terms = Seq("spark", "vector", "customer")
-    Bm25Index.enablePointerMode(spark, state)
-    for (i <- 0 until 3; st <- Seq(state, twin))
-      assert(Bm25Index.appendBatch(spark, st,
+    for (i <- 0 until 3)
+      assert(Bm25Index.appendBatch(spark, state,
         docs.filter(bucket >= i * 25 && bucket < (i + 1) * 25), i.toLong))
     def ptrOf(sub: String): String = java.nio.file.Files.readString(
       new File(new File(state, sub), "PTR").toPath).trim
@@ -462,35 +447,33 @@ class Bm25IndexSpec extends SparkTestBase {
     // appends land inside the g0 generation of both families
     assert(ptrOf("postings") === "g0" && ptrOf("dl") === "g0")
     assert(genDirs("postings", "g0") === (0L to 2L).map(i => f"v$i%020d"))
-    val want = serve(twin)
-    assert(serve(state) === want, "pointer mode must be serving-transparent")
+    val want = direct(docs.filter(bucket < 75), terms)
+    assert(serve(state) === want, "the layout must be serving-transparent")
     // a stale partial target from a crashed compaction is invisible
     // (readers follow PTR) and falls to the next compact entry's GC
     assert(new File(new File(new File(state, "postings"), "g1"), "junk").mkdirs())
     assert(serve(state) === want)
-    // compact both modes: pointer mode publishes each family with ONE
-    // atomic PTR rewrite; the superseded g0 is KEPT (in-flight-reader
-    // grace window) and falls to the next writer-entry GC
+    // compaction publishes each family with ONE atomic PTR rewrite;
+    // the superseded g0 is KEPT (in-flight-reader grace window) and
+    // falls to the next writer-entry GC
     assert(Bm25Index.compact(spark, state))
-    assert(Bm25Index.compact(spark, twin))
     assert(ptrOf("postings") === "g1" && ptrOf("dl") === "g1")
     assert(new File(new File(state, "postings"), "g0").exists(),
       "the superseded generation must survive the swap (reader grace window)")
     assert(genDirs("postings", "g1") === Seq(f"v${2L}%020d"))
     assert(genDirs("dl", "g1") === Seq(f"v${2L}%020d"))
-    assert(serve(state) === serve(twin))
+    assert(serve(state) === want)
     val st1 = Bm25Index.readState(spark, state).get._4.head()
     assert(st1.getSeq[String](st1.fieldIndex("p_dirs")) === Seq(f"v${2L}%020d"),
       "the manifest must name the compacted generation")
     // appends continue into the published generation; replays no-op
-    for (st <- Seq(state, twin))
-      assert(Bm25Index.appendBatch(spark, st, docs.filter(bucket >= 75), 3L))
+    assert(Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 75), 3L))
     assert(!Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 75), 3L))
     assert(genDirs("postings", "g1") === (2L to 3L).map(i => f"v$i%020d"))
-    val full = serve(twin)
+    val full = direct(docs, terms)
     assert(serve(state) === full)
     // crash between the family PTR swaps and the manifest re-commit
-    // (the bm25-cwedge drill in pointer mode): snapshot merged/,
+    // (the bm25-cwedge drill): snapshot merged/,
     // compact, restore — reads serve the full corpus via the
     // folded-dirs fallback, and the next compact completes the
     // interrupted manifest commit instead of wedging
@@ -505,7 +488,7 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(Bm25Index.compact(spark, state), "completion commit")
     assert(!Bm25Index.compact(spark, state), "then the no-op")
     assert(serve(state) === full)
-    // the concurrency guard in pointer mode: the abort discards ONLY
+    // the concurrency guard: the abort discards ONLY
     // the staged target generations; neither family PTR moves; the
     // concurrent batch — its v-dirs AND its merged-pointer move —
     // survives intact
@@ -535,11 +518,6 @@ class Bm25IndexSpec extends SparkTestBase {
       "older generations must have fallen to the writer-entry GC")
     // still serving the union of every applied batch
     assert(Bm25Index.retrieve(spark, state, terms).count() > 0)
-    // converting a LIVE rename-mode index in place is refused loudly
-    val e2 = intercept[IllegalArgumentException] {
-      Bm25Index.enablePointerMode(spark, twin)
-    }
-    assert(e2.getMessage.contains("VIRGIN"), e2.getMessage)
   }
 
   test("compact: a concurrent batch between listing and swap aborts loudly; " +
@@ -567,8 +545,8 @@ class Bm25IndexSpec extends SparkTestBase {
     // batch's pointer move preserved, no staged rewrite left behind
     assert(versionDirs(state, "postings") === (0L to 2L).map(i => f"v$i%020d"))
     assert(versionDirs(state, "dl") === (0L to 2L).map(i => f"v$i%020d"))
-    assert(!new File(state, "postings.tmp").exists() &&
-      !new File(state, "dl.tmp").exists(),
+    assert(!new File(state, "postings/g1").exists() &&
+      !new File(state, "dl/g1").exists(),
       "the aborted rewrites must be discarded")
     val (_, _, _, st) = Bm25Index.readState(spark, state).get
     assert(st.select("last_batch").head().getLong(0) === 2L,
@@ -583,30 +561,10 @@ class Bm25IndexSpec extends SparkTestBase {
       .collect().map(_.toString).toSeq === before)
   }
 
-  test("randomized append/compact/crash/loss walk: served ranking always equals " +
-      "a plain twin fed the same batches, or fails loudly naming the loss") {
-    bm25FuzzWalk(ptrMode = false)
-  }
-
   test("randomized append/compact/crash/loss walk in POINTER mode: same walk, " +
       "same seed — crash states are the pointer-mode ones (stale unpublished " +
       "family targets, kept-predecessor grace windows, entry GC)") {
-    bm25FuzzWalk(ptrMode = true)
-  }
-
-  test("randomized walk with a MID-WALK in-place rename->pointer migration " +
-      "at a SEED-DERIVED step: served ranking stays equal to the rename-mode " +
-      "twin across the flip of both families; pointer crash states compose " +
-      "after it") {
-    // VERDICT r16 #1: the migration composed into the hardest state
-    // machine (two families + the merged stats store) — rename-mode
-    // states first, the in-place flip mid-walk against an unmigrated
-    // twin, pointer-mode states over the migrated store after. The
-    // step is drawn from the walk seed (VERDICT r17 #5; the r17
-    // one-off probe at step 20 ran green and was reverted) so rotating
-    // the seed rotates the flip point continuously, and the fired-set
-    // coverage check gains a migration case.
-    bm25FuzzWalk(ptrMode = false, migrate = true)
+    bm25FuzzWalk()
   }
 
   /** The composition fuzz the vector indexes already have
@@ -616,33 +574,20 @@ class Bm25IndexSpec extends SparkTestBase {
     * every interleaving. The directed cases above pin each crash
     * window once; 30 seeded steps interleave appends, crashed
     * appends (partial family v-dirs), frontier replays, compactions
-    * (pointer mode: a third of them over a planted stale target),
-    * the between-swaps-and-manifest-recommit crash, and move-aside
+    * (a third of them over a planted stale target), the
+    * between-swaps-and-manifest-recommit crash, and move-aside
     * external loss of random committed family generations — asserting
     * after EVERY step that the served ranking is row-identical to a
-    * plain rename-mode TWIN fed the same batches (mode AND state-
-    * machine transparency in one gate), and that an unrestored loss
-    * is loud on read, append, and compact, naming the missing dir. */
-  private def bm25FuzzWalk(ptrMode: Boolean, migrate: Boolean = false): Unit = {
-    val base = Fixtures.tempDir(
-      if (migrate) "bm25-fuzz-mig"
-      else if (ptrMode) "bm25-fuzz-ptr" else "bm25-fuzz")
+    * one-shot ranking of the applied union, and that an unrestored
+    * loss is loud on read, append, and compact, naming the missing
+    * dir. */
+  private def bm25FuzzWalk(): Unit = {
+    val base = Fixtures.tempDir("bm25-fuzz-ptr")
     val state = base.resolve("state").toString
-    val twin = base.resolve("twin").toString
     val terms = Seq("spark", "vector", "customer")
-    if (ptrMode) Bm25Index.enablePointerMode(spark, state)
-    // the swap mode can flip MID-WALK (the migrateAt step); every
-    // mode-sensitive branch reads this var, not the entry parameter
-    var ptr = ptrMode
-    // the walk's file-level drills target each family's LIVE tree —
-    // the family dir itself in rename mode, the PTR-named generation
-    // in pointer mode (re-resolved each use: compactions move it)
-    def fam(sub: String): File = {
-      val f = new File(state, sub)
-      if (ptr) new File(f, java.nio.file.Files.readString(
-        new File(f, "PTR").toPath).trim)
-      else f
-    }
+    // the walk's file-level drills target each family's LIVE
+    // generation (re-resolved each use: compactions move it)
+    def fam(sub: String): File = live(state, sub)
     // width-2 bucket slices: 50 disjoint 10-doc batches (sf0.001 has
     // exactly 5 docs in every bucket), more than the walk's
     // worst-case append count, so the union stays duplicate-free by
@@ -650,42 +595,28 @@ class Bm25IndexSpec extends SparkTestBase {
     // monotone
     def batchOf(id: Long) =
       docs.filter(bucket >= id * 2 && bucket < (id + 1) * 2)
+    // the applied batch ids; the one-shot twin ranking is recomputed
+    // only when an append changes them
+    var applied = Vector.empty[Long]
+    var twin: (Vector[Long], Seq[String]) = (Vector.empty, Seq.empty)
     def checkServed(): Unit = {
+      if (twin._1 != applied)
+        twin = (applied, direct(docs.filter(floor(bucket / 2).isin(applied: _*)), terms))
       val got = Bm25Index.retrieve(spark, state, terms)
         .collect().map(_.toString).toSeq
-      val want = Bm25Index.retrieve(spark, twin, terms)
-        .collect().map(_.toString).toSeq
-      assert(got === want, "served ranking diverges from the plain twin")
+      assert(got === twin._2, "served ranking diverges from the one-shot twin")
     }
     def appendBoth(id: Long): Unit = {
       assert(Bm25Index.appendBatch(spark, state, batchOf(id), id))
-      assert(Bm25Index.appendBatch(spark, twin, batchOf(id), id))
+      applied :+= id
     }
     appendBoth(0L)
     var nextId = 1L
     val rnd = new scala.util.Random(20260816)
-    // seed-derived migration step (VERDICT r17 #5): [2, 29], rotates
-    // with the walk seed — see StreamingIvfSpec.fuzzWalk
-    val migrateAt = if (migrate) 2 + rnd.nextInt(28) else -1
     // coverage self-check: a later seed/step change must not silently
-    // hollow the walk into one that never fires a drill — case 6 is
-    // "the migration fired" (VERDICT r17 #5)
+    // hollow the walk into one that never fires a drill
     val fired = scala.collection.mutable.Set.empty[Int]
     for (step <- 1 to 30) {
-      if (step == migrateAt) {
-        // in-place rename->pointer migration mid-walk (VERDICT r16 #1):
-        // both family trees ride into their g0 generations; the served
-        // ranking must not move against the still-rename-mode TWIN,
-        // and the remaining steps run the pointer-mode states over the
-        // migrated store
-        Bm25Index.migrateToPointerMode(spark, state)
-        ptr = true
-        fired += 6
-        for (sub <- Seq("postings", "dl"))
-          assert(new File(new File(state, sub), "PTRMODE").exists() &&
-            fam(sub).getName == "g0", s"step $step: migration did not publish")
-        checkServed()
-      }
       val c = rnd.nextInt(6)
       fired += c
       c match {
@@ -704,11 +635,11 @@ class Bm25IndexSpec extends SparkTestBase {
                   // WAL can re-deliver)
           assert(!Bm25Index.appendBatch(spark, state,
             batchOf(nextId - 1), nextId - 1))
-        case 3 => // compaction. Pointer mode: a third of the time,
-                  // first plant a crashed earlier compaction's partial
-                  // unpublished target in one family — invisible to
-                  // reads, clobbered by the entry GC
-          if (ptr && rnd.nextInt(3) == 0) {
+        case 3 => // compaction. A third of the time, first plant a
+                  // crashed earlier compaction's partial unpublished
+                  // target in one family — invisible to reads,
+                  // clobbered by the entry GC
+          if (rnd.nextInt(3) == 0) {
             val sub = if (rnd.nextBoolean()) "postings" else "dl"
             val next = new File(new File(state, sub),
               "g" + (fam(sub).getName.drop(1).toLong + 1))
@@ -752,25 +683,19 @@ class Bm25IndexSpec extends SparkTestBase {
       }
       checkServed()
     }
-    val want = Set(0, 1, 2, 3, 4, 5) ++ (if (migrate) Set(6) else Set.empty)
-    assert(fired === want,
-      s"the seed must exercise every walk case (6 = migration fired, " +
-        s"derived step $migrateAt), got $fired — rotate it")
+    assert(fired === Set(0, 1, 2, 3, 4, 5),
+      s"the seed must exercise every walk case, got $fired — rotate it")
     // tail composition: one clean compact + append on whatever the
-    // walk left, then the pointer-mode grace-window/GC contract on
-    // the final state (rename mode's tail windows are the directed
-    // crash-heal cases above)
+    // walk left, then the grace-window/GC contract on the final state
     if (Bm25Index.compact(spark, state)) checkServed()
     appendBoth(nextId)
     checkServed()
-    if (ptr) {
-      val liveGen = fam("postings").getName
-      assert(Bm25Index.compact(spark, state))
-      assert(new File(new File(state, "postings"), liveGen).exists(),
-        s"$liveGen must survive the swap as the reader grace window")
-      assert(fam("postings").getName != liveGen,
-        "the swap must publish a new generation")
-      checkServed()
-    }
+    val liveGen = fam("postings").getName
+    assert(Bm25Index.compact(spark, state))
+    assert(new File(new File(state, "postings"), liveGen).exists(),
+      s"$liveGen must survive the swap as the reader grace window")
+    assert(fam("postings").getName != liveGen,
+      "the swap must publish a new generation")
+    checkServed()
   }
 }

@@ -7,116 +7,54 @@ import graft.sink.Compactor
 class CompactionSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def rows(dir: String): Seq[String] =
+    Compactor.read(spark, dir).collect().map(_.toString).sorted.toSeq
+
   test("compaction: many small files → few, data identical") {
     val dir = Fixtures.tempDir("compact").resolve("t").toString
     // simulate 40 tiny incremental loads
     (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(40).write.parquet(dir)
+      .repartition(40).write.parquet(Compactor.writeDir(spark, dir))
     assert(Compactor.fileCount(spark, dir) >= 10) // AQE may coalesce some
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted
+    val before = rows(dir)
 
     val n = Compactor.compact(spark, dir, targetRowsPerFile = 20)
     assert(n == 2, s"expected 2 files, got $n")
-    val after = spark.read.parquet(dir).collect().map(_.toString).sorted
-    assert(after.toSeq == before.toSeq)
+    assert(rows(dir) == before)
   }
 
   test("compaction preserves Hive partition layout") {
     val dir = Fixtures.tempDir("compactpart").resolve("t").toString
     (1 to 100).map(i => (s"2025-05-${"%02d".format(i % 4 + 1)}", i.toLong))
       .toDF("date", "id")
-      .repartition(20).write.partitionBy("date").parquet(dir)
+      .repartition(20).write.partitionBy("date").parquet(Compactor.writeDir(spark, dir))
     assert(Compactor.fileCount(spark, dir) > 4) // recursive count sees them
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted
+    val before = rows(dir)
 
     Compactor.compact(spark, dir, targetRowsPerFile = 50,
       partitionBy = Seq("date"))
-    // date= directories survive and partition discovery still works
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isDirectory).map(_.getPath.getName).sorted
+    // date= directories survive in the new live generation and
+    // partition discovery still works
+    val live = new org.apache.hadoop.fs.Path(Compactor.writeDir(spark, dir))
+    val dirs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(live).filter(_.isDirectory).map(_.getPath.getName).sorted
     assert(dirs.count(_.startsWith("date=")) == 4, dirs.mkString(","))
-    val after = spark.read.parquet(dir).collect().map(_.toString).sorted
-    assert(after.toSeq == before.toSeq)
+    assert(rows(dir) == before)
   }
 
   test("cluster-by compaction sorts within files for stats pruning") {
     val dir = Fixtures.tempDir("cluster").resolve("t").toString
     val rnd = new scala.util.Random(3)
     (1 to 1000).map(_ => (rnd.nextInt(1000).toLong, "x")).toDF("k", "v")
-      .repartition(10).write.parquet(dir)
+      .repartition(10).write.parquet(Compactor.writeDir(spark, dir))
     Compactor.compact(spark, dir, targetRowsPerFile = 500, clusterBy = Seq("k"))
     // range partitioning: per-file key ranges must not overlap
-    val ranges = spark.read.parquet(dir)
+    val ranges = Compactor.read(spark, dir)
       .select(col("k"), input_file_name().as("f"))
       .groupBy("f").agg(min("k").as("lo"), max("k").as("hi"))
       .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
     for (Seq((_, hi1), (lo2, _)) <- ranges.toSeq.sliding(2))
       assert(hi1 <= lo2, s"file ranges overlap: $ranges")
-  }
-
-  test("crash windows: mid-swap, stale .bak, orphan .tmp all heal at the next compact") {
-    // VERDICT r12 #2: Compactor previously hand-rolled the two-rename
-    // swap — a crash between rename-aside and rename-in left NO live
-    // directory and no repair path. Now it rides StateFs: healWriter
-    // at every compact entry restores/cleans each window.
-    import java.io.File
-    val dir = Fixtures.tempDir("compactcrash").resolve("t").toString
-    (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(40).write.parquet(dir)
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-
-    // window 1 — between rename-aside and rename-in: live is GONE,
-    // the data survives only under .bak (the exact state the old code
-    // could not recover from)
-    val live = new File(dir)
-    val bak = new File(dir + ".bak")
-    assert(live.renameTo(bak) && !live.exists())
-    assert(Compactor.compact(spark, dir, targetRowsPerFile = 20) === 2)
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq === before)
-    assert(!bak.exists())
-
-    // window 2 — completed swap whose .bak cleanup crashed, plus an
-    // orphan .tmp from an unfinished rewrite: both dropped, live wins
-    new File(dir + ".bak/junk").mkdirs()
-    new File(dir + ".tmp/junk").mkdirs()
-    assert(Compactor.compact(spark, dir, targetRowsPerFile = 40) === 1)
-    assert(!new File(dir + ".bak").exists() && !new File(dir + ".tmp").exists())
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq === before)
-
-    // reader path on the mid-swap crash state: Compactor.read heals
-    // (bak -> live) and returns the rows where a bare
-    // spark.read.parquet would throw path-not-found; the writer-owned
-    // .tmp is left alone
-    assert(live.renameTo(bak) && !live.exists())
-    new File(dir + ".tmp/junk2").mkdirs()
-    assert(Compactor.read(spark, dir).collect().map(_.toString).sorted.toSeq === before)
-    assert(new File(dir + ".tmp/junk2").exists(),
-      "a reader must not delete the writer-owned .tmp")
-    assert(!bak.exists())
-
-    // window 3 — mid-swap crash, then an OUT-OF-BAND writer (a plain
-    // ingest job) recreates live before any repair runs: live and .bak
-    // now BOTH exist and live is not a compactor rewrite (no marker) —
-    // the entry heal must refuse to drop the .bak, which holds the
-    // only full pre-crash copy, instead of silently deleting history
-    assert(live.renameTo(bak) && !live.exists())
-    Seq((999L, "out-of-band")).toDF("id", "v").write.parquet(dir)
-    val e = intercept[RuntimeException] {
-      Compactor.compact(spark, dir, targetRowsPerFile = 40)
-    }
-    assert(e.getMessage.contains("out-of-band"))
-    assert(bak.exists(), "the .bak (full pre-crash table) must survive")
-
-    // the READ path refuses the same ambiguous state (ADVICE r13):
-    // live-without-marker + .bak — serving the possibly-partial live
-    // table while the .bak holds the only full copy would hand out
-    // missing history silently. Nothing is deleted by the refusal.
-    val eRead = intercept[RuntimeException] { Compactor.read(spark, dir) }
-    assert(eRead.getMessage.contains("Refusing"))
-    assert(bak.exists() && live.exists(),
-      "the read refusal must not delete either directory")
   }
 
   test("a concurrent append during a healthy compact aborts loudly and survives") {
@@ -129,138 +67,37 @@ class CompactionSpec extends SparkTestBase {
     import java.io.File
     val dir = Fixtures.tempDir("compactrace").resolve("t").toString
     (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(8).write.parquet(dir)
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+      .repartition(8).write.parquet(Compactor.writeDir(spark, dir))
+    val before = rows(dir)
     val e = intercept[RuntimeException] {
       Compactor.compactImpl(spark, dir, targetRowsPerFile = 20, Nil, Nil,
         beforeSwap = () =>
           Seq((999L, "landed-mid-compact")).toDF("id", "v")
-            .write.mode("append").parquet(dir))
+            .write.mode("append").parquet(Compactor.writeDir(spark, dir)))
     }
     assert(e.getMessage.contains("changed during the rewrite") &&
       e.getMessage.contains("no-writer maintenance slot"))
     // the concurrent write survives, the rewrite was discarded
-    val after = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    val after = rows(dir)
     assert(after.size === before.size + 1)
     assert(after.contains("[999,landed-mid-compact]"))
-    assert(!new File(dir + ".tmp").exists() && !new File(dir + ".bak").exists())
+    assert(!new File(dir, "g1").exists())
     // the next compact (no concurrent writer this time) succeeds and
     // keeps every row including the mid-compact append
     assert(Compactor.compact(spark, dir, targetRowsPerFile = 41) === 1)
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq === after)
-  }
-
-  test("healEntry refusal-matrix fuzz: crash windows composed with out-of-band " +
-      "writers never delete the only full copy") {
-    // VERDICT r13 #6: the StateFsSpec fuzz covers the swap primitives;
-    // this composes them with the moves only a TABLE (multi-writer
-    // world) sees — out-of-band recreate inside a crashed swap's
-    // repair window, recreate-then-append, external loss of the
-    // rewrite marker. 200 seeded iterations; each runs the entry heal
-    // on whatever the previous iteration's crash left, asserting the
-    // refusal matrix exactly: healEntry REFUSES (deleting nothing) iff
-    // live-without-marker sits next to a .bak (the .bak may be the
-    // only full copy), CLEANS when the marker proves live is a
-    // compactor rewrite, and across every seed the latest complete
-    // generation survives in live or .bak. Refusals are then resolved
-    // the way the error message prescribes (live complete → drop .bak;
-    // live partial → restore .bak) and the machine keeps running — so
-    // stale state from iteration k feeds iteration k+1's heal.
-    import scala.util.{Failure, Success, Try}
-    import org.apache.hadoop.fs.Path
-    import graft.util.StateFs
-    val base = new Path(Fixtures.tempDir("compact-fuzz").toString)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(base, "t")
-    val bak = StateFs.bakOf(live)
-    val tmp = StateFs.tmpOf(live)
-    val marker = "_COMPACTOR_GEN"
-    def touch(dir: Path, name: String, content: String): Unit = {
-      val out = fs.create(new Path(dir, name), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-    def writeGen(dir: Path, g: Int, withMarker: Boolean): Unit = {
-      fs.mkdirs(dir)
-      for (i <- 0 until 3) touch(dir, s"f$i", s"$g")
-      if (withMarker) touch(dir, marker, "")
-    }
-    def complete(dir: Path): Boolean =
-      (0 until 3).forall(i => fs.exists(new Path(dir, s"f$i"))) &&
-        (0 until 3).map(i => StateFs.readString(fs, new Path(dir, s"f$i")))
-          .distinct.size == 1
-    def genOf(dir: Path): Int =
-      StateFs.readString(fs, new Path(dir, "f0")).toInt
-    writeGen(live, 0, withMarker = false) // the original ingest table
-    var full = 0 // generation of the latest COMPLETE table
-    val rnd = new scala.util.Random(1234)
-    for (g <- 1 to 200) {
-      Try(Compactor.healEntry(fs, live)) match {
-        case Failure(e) =>
-          // refusal: exactly the ambiguous state, nothing deleted, and
-          // the full copy is where the message says — under the .bak
-          assert(e.getMessage.contains("Refusing to guess"), s"iter $g: $e")
-          assert(fs.exists(live) && fs.exists(bak) &&
-            !fs.exists(new Path(live, marker)),
-            s"iter $g: refusal outside the documented ambiguous state")
-          assert(complete(bak) || complete(live),
-            s"iter $g: refusal but NO complete copy survives anywhere")
-          // resolve per the error message's decision procedure
-          if (complete(live)) StateFs.deleteRec(fs, bak)
-          else { StateFs.deleteRec(fs, live); assert(fs.rename(bak, live)) }
-          StateFs.deleteRec(fs, tmp)
-        case Success(_) =>
-          assert(!fs.exists(bak) && !fs.exists(tmp),
-            s"iter $g: heal left writer-owned state behind")
-      }
-      assert(fs.exists(live) && complete(live) && genOf(live) == full,
-        s"iter $g: live serves gen ${Try(genOf(live))}, expected $full")
-      // a compactor cycle to generation g, crashed at a random point,
-      // possibly composed with an out-of-band writer move
-      writeGen(tmp, g, withMarker = true)
-      rnd.nextInt(7) match {
-        case 0 => () // crash before any rename: orphan tmp only
-        case 1 => // mid-swap crash: live gone, data only under .bak
-          assert(fs.rename(live, bak))
-        case 2 => // mid-swap crash + out-of-band PARTIAL recreate
-          assert(fs.rename(live, bak))
-          fs.mkdirs(live); touch(live, "f0", s"${1000 + g}")
-        case 3 => // ...recreate-then-append (still partial, extra file)
-          assert(fs.rename(live, bak))
-          fs.mkdirs(live); touch(live, "f0", s"${1000 + g}")
-          touch(live, "f9", "appended")
-        case 4 => // install done, .bak drop crashed (marker intact)
-          assert(fs.rename(live, bak)); assert(fs.rename(tmp, live))
-          full = g
-        case 5 => // install done + marker externally lost, .bak present:
-          // next heal must REFUSE; live (complete) wins the resolution
-          assert(fs.rename(live, bak)); assert(fs.rename(tmp, live))
-          fs.delete(new Path(live, marker), false)
-          full = g
-        case 6 => // clean swap
-          StateFs.swapIn(fs, live, tmp)
-          full = g
-      }
-    }
-    // settle the final iteration's state too
-    Try(Compactor.healEntry(fs, live)) match {
-      case Failure(_) => assert(complete(bak) || complete(live))
-      case Success(_) => assert(complete(live) && genOf(live) == full)
-    }
+    assert(rows(dir) === after)
   }
 
   test("pointer mode: compaction publishes via one PTR rewrite, data identical; " +
       "stale targets invisible and GC'd; the concurrency guard aborts loudly; " +
       "a non-virgin dir is refused") {
-    // VERDICT r15 #4: the StateFs pointer layout extended to TABLE
-    // compaction — the same rationale as the index stores (on an
-    // object store the rename-aside swap's renames are per-object
-    // copies, non-atomic), with rename mode staying the default.
+    // The StateFs generation layout for TABLE compaction — the same
+    // rationale as the index stores (on an object store a directory
+    // rename is a per-object copy, non-atomic).
     import java.io.File
     val dir = Fixtures.tempDir("compact-ptr").resolve("t").toString
-    Compactor.enablePointerMode(spark, dir)
-    Compactor.enablePointerMode(spark, dir) // idempotent
-    // writers resolve the live generation per job (the pointer-mode
-    // writer discipline — header scaladoc)
+    // writers resolve the live generation per job (the writer
+    // discipline — header scaladoc); the first one publishes PTR=g0
     (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       .repartition(40).write.mode("append")
       .parquet(Compactor.writeDir(spark, dir))
@@ -305,56 +142,27 @@ class CompactionSpec extends SparkTestBase {
     assert(!new File(dir, "g0").exists() && new File(dir, "g1").exists())
     assert(Compactor.read(spark, dir).collect().map(_.toString).sorted.toSeq
       === after)
-    // a non-virgin plain-layout table is refused loudly (its files
-    // would become invisible to pointer-mode readers)
+    // a non-virgin plain-layout table is refused loudly, never
+    // converted: its files would be invisible to PTR-following readers
     val dir2 = Fixtures.tempDir("compact-ptr2").resolve("t").toString
     Seq((1L, "a")).toDF("id", "v").write.parquet(dir2)
-    val e2 = intercept[IllegalArgumentException] {
-      Compactor.enablePointerMode(spark, dir2)
-    }
-    assert(e2.getMessage.contains("VIRGIN"))
+    val e2 = intercept[RuntimeException](Compactor.writeDir(spark, dir2))
+    assert(e2.getMessage.contains("leftover rename layout"), e2.getMessage)
   }
 
   test("pointer-mode randomized walk: appends, compactions, planted crash " +
       "states, orphan tmp files, and concurrent aborts interleaved — reads " +
       "always serve the full union, never a torn generation") {
-    // The healEntry refusal-matrix fuzz above is rename-only by
-    // nature (pointer mode never renames aside, so the ambiguous
-    // states it disambiguates cannot arise); this is pointer mode's
-    // own composition walk — the directed case above pins each state
-    // once, here 30 seeded steps interleave them: out-of-band appends
+    // The layout's own composition walk — the directed case above
+    // pins each state once, here 30 seeded steps interleave them: out-of-band appends
     // through writeDir, compactions, stale unpublished targets
     // planted before compactions, orphan `PTR.tmp` files (the crash
     // between writeFileAtomic's create and rename, collected by the
     // entry GC since r16), and concurrent-append aborts through the
     // pre-swap seam. After every step a read must serve exactly the
     // accumulated union.
-    compactorPtrWalk(migrate = false)
-  }
-
-  test("pointer-mode randomized walk over a MIGRATED table: rename-mode " +
-      "appends, rename-aside compactions, and a concurrent-abort drill " +
-      "first, the in-place migration at a SEED-DERIVED mid-walk step, then " +
-      "the seeded pointer walk over the g0 tree") {
-    // VERDICT r16 #1: the migration composed into the table walk —
-    // the store under the pointer-mode drills is not a virgin
-    // pointer table but a LIVE plain-layout one that adopted the
-    // layout in place (history includes a rename-aside compaction,
-    // enforced by the fired-set check). The flip step is drawn from
-    // the walk seed (VERDICT r17 #5) so rotating the seed rotates the
-    // boundary between the rename-phase and pointer-phase drills.
-    compactorPtrWalk(migrate = true)
-  }
-
-  private def compactorPtrWalk(migrate: Boolean): Unit = {
     import java.io.File
-    val dir = Fixtures.tempDir(
-      if (migrate) "compact-mig-fuzz" else "compact-ptr-fuzz")
-      .resolve("t").toString
-    if (!migrate) Compactor.enablePointerMode(spark, dir)
-    // the swap mode flips MID-WALK at the derived step; every
-    // mode-sensitive branch reads this var
-    var ptrNow = !migrate
+    val dir = Fixtures.tempDir("compact-ptr-fuzz").resolve("t").toString
     def ptr(): String =
       java.nio.file.Files.readString(new File(dir, "PTR").toPath).trim
     var expected = Vector.empty[String]
@@ -370,114 +178,61 @@ class CompactionSpec extends SparkTestBase {
         === expected.sorted, "read diverges from the accumulated union")
     append(4)
     val rnd = new scala.util.Random(20260817)
-    // seed-derived migration step (VERDICT r17 #5): [7, 20] — late
-    // enough that the rename phase accumulates real history (appends,
-    // rename-aside compactions, a concurrent abort; the fired set
-    // enforces all three), early enough that every pointer case still
-    // fires after the flip. The first range tried ([6, 18]) landed on
-    // step 14 and the 13-step rename phase never drew the compaction
-    // case — the fired-set check caught it exactly as designed.
-    val migrateAt = if (migrate) 7 + rnd.nextInt(14) else -1
     val fired = scala.collection.mutable.Set.empty[Int]
     for (step <- 1 to 30) {
-      if (step == migrateAt) {
-        // the in-place flip mid-walk: the accumulated plain-layout
-        // history rides into g0, and the remaining steps run the
-        // pointer-mode drills over the migrated tree
-        checkRead()
-        Compactor.migrateToPointerMode(spark, dir)
-        ptrNow = true
-        fired += 5
-        assert(ptr() === "g0", s"step $step: migration must publish g0")
-        checkRead()
+      val c = rnd.nextInt(5)
+      fired += c
+      c match {
+        case 0 => // out-of-band append, writer discipline: resolve per job
+          append(1 + rnd.nextInt(3))
+        case 1 => // compaction publishes one PTR move; the superseded
+                  // generation survives as the reader grace window
+          val liveGen = ptr()
+          assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
+          assert(ptr() != liveGen, "compact must publish a new generation")
+          assert(new File(dir, liveGen).exists(),
+            s"step $step: $liveGen must survive as the grace window")
+        case 2 => // a crashed compaction's partial unpublished target:
+                  // invisible to reads, clobbered by the next entry GC
+          val next = new File(dir, "g" + (ptr().drop(1).toLong + 1))
+          assert(new File(next, "junk-partial").mkdirs())
+          checkRead()
+          assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
+          assert(!new File(next, "junk-partial").exists(),
+            s"step $step: the entry GC must clobber the stale target")
+        case 3 => // orphan tmp FILE under the base (crash between
+                  // writeFileAtomic's create and rename): invisible,
+                  // collected by the next compact's entry GC
+          val orphan = new File(dir, "PTR.tmp")
+          val w = new java.io.FileWriter(orphan)
+          try w.write("g999") finally w.close()
+          checkRead()
+          assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
+          assert(!orphan.exists(),
+            s"step $step: the entry GC must collect the orphan tmp file")
+        case 4 => // concurrent append mid-compact: loud abort, PTR
+                  // unmoved, ONLY the staged generation discarded, the
+                  // concurrent rows intact
+          val liveGen = ptr()
+          val e = intercept[RuntimeException] {
+            Compactor.compactImpl(spark, dir, targetRowsPerFile = 1000,
+              Nil, Nil, beforeSwap = () => append(1))
+          }
+          assert(e.getMessage.contains("changed during the rewrite"),
+            s"step $step: ${e.getMessage}")
+          assert(ptr() === liveGen, "an aborted compact must not move PTR")
+          assert(!new File(dir, "g" + (liveGen.drop(1).toLong + 1)).exists(),
+            s"step $step: the aborted target generation must be discarded")
       }
-      if (!ptrNow) {
-        // rename-mode phase: the pointer drills (stale g-targets,
-        // PTR.tmp orphans, grace windows) cannot arise yet — draw from
-        // the rename-legal cases, tracked as 10+c so the coverage
-        // check proves the PRE-migration phase exercised each
-        val c = rnd.nextInt(3)
-        fired += 10 + c
-        c match {
-          case 0 => // out-of-band plain-layout append
-            append(1 + rnd.nextInt(3))
-          case 1 => // rename-aside compaction: swapIn replaces the live
-                    // tree whole — no grace window in this mode
-            assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
-            assert(!new File(dir + ".tmp").exists(),
-              s"step $step: the rename-aside staging must be consumed")
-          case 2 => // concurrent append mid-compact: loud abort, live
-                    // table (the concurrent rows included) intact, the
-                    // staged .tmp sibling discarded
-            val e = intercept[RuntimeException] {
-              Compactor.compactImpl(spark, dir, targetRowsPerFile = 1000,
-                Nil, Nil, beforeSwap = () => append(1))
-            }
-            assert(e.getMessage.contains("changed during the rewrite"),
-              s"step $step: ${e.getMessage}")
-            assert(!new File(dir + ".tmp").exists(),
-              s"step $step: the aborted staging must be discarded")
-        }
-        checkRead()
-      } else {
-        val c = rnd.nextInt(5)
-        fired += c
-        c match {
-          case 0 => // out-of-band append, writer discipline: resolve per job
-            append(1 + rnd.nextInt(3))
-          case 1 => // compaction publishes one PTR move; the superseded
-                    // generation survives as the reader grace window
-            val liveGen = ptr()
-            assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
-            assert(ptr() != liveGen, "compact must publish a new generation")
-            assert(new File(dir, liveGen).exists(),
-              s"step $step: $liveGen must survive as the grace window")
-          case 2 => // a crashed compaction's partial unpublished target:
-                    // invisible to reads, clobbered by the next entry GC
-            val next = new File(dir, "g" + (ptr().drop(1).toLong + 1))
-            assert(new File(next, "junk-partial").mkdirs())
-            checkRead()
-            assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
-            assert(!new File(next, "junk-partial").exists(),
-              s"step $step: the entry GC must clobber the stale target")
-          case 3 => // orphan tmp FILE under the base (crash between
-                    // writeFileAtomic's create and rename): invisible,
-                    // collected by the next compact's entry GC
-            val orphan = new File(dir, "PTR.tmp")
-            val w = new java.io.FileWriter(orphan)
-            try w.write("g999") finally w.close()
-            checkRead()
-            assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
-            assert(!orphan.exists(),
-              s"step $step: the entry GC must collect the orphan tmp file")
-          case 4 => // concurrent append mid-compact: loud abort, PTR
-                    // unmoved, ONLY the staged generation discarded, the
-                    // concurrent rows intact
-            val liveGen = ptr()
-            val e = intercept[RuntimeException] {
-              Compactor.compactImpl(spark, dir, targetRowsPerFile = 1000,
-                Nil, Nil, beforeSwap = () => append(1))
-            }
-            assert(e.getMessage.contains("changed during the rewrite"),
-              s"step $step: ${e.getMessage}")
-            assert(ptr() === liveGen, "an aborted compact must not move PTR")
-            assert(!new File(dir, "g" + (liveGen.drop(1).toLong + 1)).exists(),
-              s"step $step: the aborted target generation must be discarded")
-        }
-        checkRead()
-        // never more than live + one grace window, and no stray tmp dirs
-        // once a compaction has run this step
-        val gens = Option(new File(dir).list()).getOrElse(Array.empty)
-          .filter(_.startsWith("g")).sorted
-        assert(gens.contains(ptr()), s"step $step: PTR names a missing gen")
-      }
+      checkRead()
+      // never more than live + one grace window, and no stray tmp dirs
+      // once a compaction has run this step
+      val gens = Option(new File(dir).list()).getOrElse(Array.empty)
+        .filter(_.startsWith("g")).sorted
+      assert(gens.contains(ptr()), s"step $step: PTR names a missing gen")
     }
-    val want =
-      if (migrate) Set(10, 11, 12, 5, 0, 1, 2, 3, 4)
-      else Set(0, 1, 2, 3, 4)
-    assert(fired === want,
-      s"the seed must exercise every walk case (10-12 = rename phase, 5 = " +
-        s"migration fired at derived step $migrateAt), got $fired — rotate it")
+    assert(fired === Set(0, 1, 2, 3, 4),
+      s"the seed must exercise every walk case, got $fired — rotate it")
     // tail: one clean compact collects everything stale; exactly the
     // live generation and its grace window remain
     assert(Compactor.compact(spark, dir, targetRowsPerFile = 1000) === 1)
@@ -489,24 +244,17 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("grace-window contract: a reader's resolved generation survives ONE " +
-      "compaction but not two; retainGens deepens the window") {
-    // VERDICT r16 #3 — the one-generation contract made explicit
-    // (StateFs.pointerSwap scaladoc) and pinned: a reader that
-    // resolved the live generation keeps it through the next swap
-    // (the grace window) but loses it to the writer-entry GC of the
-    // compaction after that. Deployments whose scans outlive a full
-    // compaction cadence pass retainGens=N to span N+1 compactions.
+      "compaction but not two") {
+    // The one-generation contract (StateFs.pointerSwap scaladoc)
+    // pinned: a reader that resolved the live generation keeps it
+    // through the next swap (the grace window) but loses it to the
+    // writer-entry GC of the compaction after that.
     import java.io.File
-    def freshTable(tag: String): String = {
-      val dir = Fixtures.tempDir(tag).resolve("t").toString
-      Compactor.enablePointerMode(spark, dir)
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
-        .write.mode("append").parquet(Compactor.writeDir(spark, dir))
-      dir
-    }
-    // default retention: the reader's generation is gone after the
-    // SECOND compaction — a scan must not span two
-    val d1 = freshTable("grace-default")
+    val d1 = Fixtures.tempDir("grace-default").resolve("t").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
+      .write.mode("append").parquet(Compactor.writeDir(spark, d1))
+    // the reader's generation is gone after the SECOND compaction — a
+    // scan must not span two
     val readerGen = new File(Compactor.writeDir(spark, d1)) // resolves g0
     assert(Compactor.compact(spark, d1, targetRowsPerFile = 1000) === 1)
     assert(readerGen.exists(), "g0 must survive the first swap (grace window)")
@@ -516,32 +264,16 @@ class CompactionSpec extends SparkTestBase {
     assert(!readerGen.exists(),
       "the second compaction's entry GC collects the reader's generation " +
         "— the documented loss mode of a scan spanning two compactions")
-    // retainGens = 1: the same scan survives two compactions, falls to
-    // the third
-    val d2 = freshTable("grace-retain")
-    val readerGen2 = new File(Compactor.writeDir(spark, d2))
-    for (i <- 0 until 2) {
-      Seq((10L + i, s"x$i")).toDF("id", "v").coalesce(1)
-        .write.mode("append").parquet(Compactor.writeDir(spark, d2))
-      assert(Compactor.compact(spark, d2, targetRowsPerFile = 1000,
-        retainGens = 1) === 1)
-      assert(readerGen2.exists(),
-        s"retainGens=1 must keep g0 through compaction ${i + 1}")
-    }
-    Seq((20L, "y")).toDF("id", "v").coalesce(1)
-      .write.mode("append").parquet(Compactor.writeDir(spark, d2))
-    assert(Compactor.compact(spark, d2, targetRowsPerFile = 1000,
-      retainGens = 1) === 1)
-    assert(!readerGen2.exists(),
-      "beyond the retained depth the generation is collected")
   }
 
   test("schema evolution: mergeSchema unions batch schemas") {
     val dir = Fixtures.tempDir("evolve").resolve("t").toString
-    Seq((1L, "a")).toDF("id", "v").write.parquet(dir + "/b1")
-    Seq((2L, "b", 9.5)).toDF("id", "v", "score").write.parquet(dir + "/b2")
+    Seq((1L, "a")).toDF("id", "v").write.mode("append")
+      .parquet(Compactor.writeDir(spark, dir))
+    Seq((2L, "b", 9.5)).toDF("id", "v", "score").write.mode("append")
+      .parquet(Compactor.writeDir(spark, dir))
     val merged = spark.read.option("mergeSchema", "true")
-      .parquet(dir + "/b1", dir + "/b2")
+      .parquet(Compactor.writeDir(spark, dir))
     assert(merged.columns.sorted.toSeq == Seq("id", "score", "v"))
     val rows = merged.orderBy("id").collect()
     assert(rows(0).isNullAt(rows(0).fieldIndex("score"))) // old batch: null

@@ -6,21 +6,11 @@ import org.apache.hadoop.fs.Path
 
 import graft.util.StateFs
 
-/** Direct unit coverage of the shared swap/heal primitives — until now
-  * they were exercised only THROUGH the operators (Bm25IndexSpec /
-  * StreamingIvfSpec / CompactionSpec crash windows). Two things only a
-  * direct spec can pin:
-  *
-  *  1. the Hadoop behavior the race guards are BUILT ON:
-  *     `FileSystem.rename(src, existingDstDir)` NESTS src inside dst
-  *     instead of failing (verified against hadoop-client 3.4.2 when
-  *     the guards were written — if a Hadoop upgrade ever changes
-  *     this, the guards' un-nest re-checks become dead code and the
-  *     abort contract silently shifts; this spec makes that upgrade
-  *     fail loudly here instead);
-  *  2. each primitive's contract in isolation, so an operator-spec
-  *     failure can be bisected to "operator logic" vs "swap/heal
-  *     machinery".
+/** Direct unit coverage of the shared state-layout primitives — they
+  * are otherwise exercised only THROUGH the operators (Bm25IndexSpec /
+  * StreamingIvfSpec / CompactionSpec crash walks). Each primitive's
+  * contract is pinned in isolation, so an operator-spec failure can be
+  * bisected to "operator logic" vs "layout machinery".
   */
 class StateFsSpec extends SparkTestBase {
 
@@ -35,95 +25,6 @@ class StateFsSpec extends SparkTestBase {
     val fs = fsFor(dir)
     val out = fs.create(new Path(dir, name), true)
     try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  test("ASSUMPTION PIN: Hadoop rename into an existing NON-EMPTY directory NESTS instead of failing") {
-    val base = new Path(Fixtures.tempDir("statefs-nest").toString)
-    val fs = fsFor(base)
-    val src = mk(new Path(base, "src")); touch(src, "f", "x")
-    val dst = mk(new Path(base, "dst")); touch(dst, "g", "y")
-    // java.io.File.renameTo fails here with ENOTEMPTY; Hadoop
-    // "succeeds" by nesting — the exact trap swapIn/healReader re-check
-    // for after their renames. The realistic race destinations (a
-    // restored live generation, an installed rewrite) are always
-    // non-empty, so this is the case the guards protect.
-    assert(fs.rename(src, dst), "rename into existing non-empty dir was " +
-      "refused — Hadoop semantics changed; revisit the un-nest guards in StateFs")
-    assert(!fs.exists(src))
-    assert(fs.exists(new Path(dst, "src/f")), "src was not nested inside dst")
-    assert(fs.exists(new Path(dst, "g")), "dst's own content was lost")
-  }
-
-  test("ASSUMPTION PIN: LOCAL-fs rename onto an existing EMPTY directory REPLACES it") {
-    val base = new Path(Fixtures.tempDir("statefs-replace").toString)
-    val fs = fsFor(base)
-    val src = mk(new Path(base, "src")); touch(src, "f", "x")
-    mk(new Path(base, "dst"))
-    // POSIX rename(2) over an empty directory succeeds by replacing it
-    // — so the nesting guard sees nothing for an empty-dir destination
-    // and the rename quietly does the right thing (installs src's
-    // contents at dst). Pinned so the two regimes' boundary is
-    // explicit. LOCAL-FS-SPECIFIC (ADVICE r13): this replace regime is
-    // RawLocalFileSystem delegating to rename(2); HDFS nests src into
-    // an existing dst directory regardless of emptiness — the STRICTER
-    // regime, which the swapIn/healReader nesting re-checks already
-    // cover, so the guards transfer to hdfs:// while this pin does not.
-    assert(fs.rename(new Path(base, "src"), new Path(base, "dst")))
-    assert(fs.exists(new Path(base, "dst/f")) &&
-      !fs.exists(new Path(base, "dst/src")))
-  }
-
-  test("swapIn installs tmp as live and drops the backup") {
-    val base = new Path(Fixtures.tempDir("statefs-swap").toString)
-    val fs = fsFor(base)
-    val live = mk(new Path(base, "t")); touch(live, "old")
-    val tmp = mk(StateFs.tmpOf(live)); touch(tmp, "new")
-    StateFs.swapIn(fs, live, tmp)
-    assert(fs.exists(new Path(live, "new")) && !fs.exists(new Path(live, "old")))
-    assert(!fs.exists(tmp) && !fs.exists(new Path(base, "t.bak")))
-  }
-
-  test("swapInKeepBak leaves the old generation under .bak until dropBak") {
-    val base = new Path(Fixtures.tempDir("statefs-keepbak").toString)
-    val fs = fsFor(base)
-    val live = mk(new Path(base, "t")); touch(live, "old")
-    val tmp = mk(StateFs.tmpOf(live)); touch(tmp, "new")
-    StateFs.swapInKeepBak(fs, live, tmp)
-    val bak = new Path(base, "t.bak")
-    assert(fs.exists(new Path(live, "new")))
-    assert(fs.exists(new Path(bak, "old")),
-      "the pre-swap generation must survive until the caller's metadata commit")
-    StateFs.dropBak(fs, live)
-    assert(!fs.exists(bak))
-  }
-
-  test("healReader restores a mid-swap crash from .bak and touches nothing else") {
-    val base = new Path(Fixtures.tempDir("statefs-healr").toString)
-    val fs = fsFor(base)
-    // crash state: live gone, data under .bak, an in-flight .tmp present
-    val bak = mk(new Path(base, "t.bak")); touch(bak, "data")
-    val tmp = mk(new Path(base, "t.tmp")); touch(tmp, "half")
-    val live = new Path(base, "t")
-    StateFs.healReader(fs, live)
-    assert(fs.exists(new Path(live, "data")) && !fs.exists(bak))
-    assert(fs.exists(new Path(tmp, "half")),
-      "a reader heal must never delete the writer-owned .tmp")
-    // idempotent / no-op when live exists: a later .bak belongs to the writer
-    val bak2 = mk(new Path(base, "t.bak")); touch(bak2, "stale")
-    StateFs.healReader(fs, live)
-    assert(fs.exists(new Path(bak2, "stale")),
-      "a reader heal must never delete a stale .bak when live exists")
-  }
-
-  test("healWriter restores, then drops stale .bak and orphan .tmp") {
-    val base = new Path(Fixtures.tempDir("statefs-healw").toString)
-    val fs = fsFor(base)
-    val bak = mk(new Path(base, "t.bak")); touch(bak, "data")
-    val tmp = mk(new Path(base, "t.tmp")); touch(tmp, "half")
-    val live = new Path(base, "t")
-    StateFs.healWriter(fs, live)
-    assert(fs.exists(new Path(live, "data")))
-    assert(!fs.exists(bak) && !fs.exists(tmp))
   }
 
   test("committedVDirs: only _SUCCESS-committed v* child dirs, name-sorted") {
@@ -160,80 +61,23 @@ class StateFsSpec extends SparkTestBase {
     assert(!fs.exists(new Path(base, "CURRENT.tmp")))
   }
 
-  test("randomized crash/heal sequences never lose, roll back, or mix a generation") {
-    // 200 seeded iterations of the swap state machine, each crashing
-    // at a uniformly chosen point inside swapIn's three steps (orphan
-    // tmp / after rename-aside / before the .bak drop / no crash),
-    // followed by the reader heal. Invariants checked EVERY iteration:
-    // the healed live dir exists, holds a COMPLETE single generation
-    // (all three files, one generation id — a mixed dir would mean a
-    // partial swap leaked through), and that generation is exactly the
-    // newest one whose install step ran (crashes before the install
-    // keep the previous generation — never an older one, never a
-    // skipped one). This is the whole-lifecycle composition the
-    // single-window tests above cannot cover: stale .baks and orphan
-    // .tmps from iteration k feed iteration k+1's entry heal.
-    val base = new Path(Fixtures.tempDir("statefs-fuzz").toString)
-    val fs = fsFor(base)
-    val live = new Path(base, "t")
-    def writeGen(dir: Path, g: Int): Unit = {
-      fs.mkdirs(dir)
-      for (i <- 0 until 3) touch(dir, s"f$i", s"$g")
-    }
-    def genOf(dir: Path): Int = {
-      val vals = (0 until 3).map(i =>
-        StateFs.readString(fs, new Path(dir, s"f$i")))
-      assert(vals.distinct.size == 1, s"MIXED generation in $dir: $vals")
-      vals.head.toInt
-    }
-    writeGen(live, 0)
-    var committed = 0
-    val rnd = new scala.util.Random(42)
-    for (g <- 1 to 200) {
-      // writer entry heal (as compact/appendBatch do), then the rewrite
-      StateFs.healWriter(fs, live)
-      val tmp = StateFs.tmpOf(live)
-      writeGen(tmp, g)
-      rnd.nextInt(4) match {
-        case 0 => () // crash before any rename: orphan tmp only
-        case 1 => // crash between rename-aside and rename-in
-          StateFs.deleteRec(fs, StateFs.bakOf(live))
-          assert(fs.rename(live, StateFs.bakOf(live)))
-        case 2 => // crash after the install, before the .bak drop
-          StateFs.deleteRec(fs, StateFs.bakOf(live))
-          assert(fs.rename(live, StateFs.bakOf(live)))
-          assert(fs.rename(tmp, live))
-          committed = g
-        case 3 => // clean swap
-          StateFs.swapIn(fs, live, tmp)
-          committed = g
-      }
-      StateFs.healReader(fs, live)
-      assert(fs.exists(live), s"iteration $g: live missing after reader heal")
-      assert(genOf(live) == committed,
-        s"iteration $g: live serves generation ${genOf(live)}, " +
-          s"expected $committed")
-    }
-  }
-
   test("pointer mode: enable/resolve; virgin-only conversion; the swap is " +
       "one PTR rewrite and every crash state is read-safe with zero repair") {
-    // VERDICT r14 #2: the object-store-safe twin of the rename-aside
-    // swap cases — no directory rename is load-bearing, so the crash
-    // matrix needs no heals: a partial unpublished target serves the
-    // old generation, a published pointer with an undeleted previous
+    // No directory rename is load-bearing, so the crash matrix needs
+    // no heals: a partial unpublished target serves the old
+    // generation, a published pointer with an undeleted previous
     // generation serves the new one, stale generations fall to the
     // writer-entry GC.
     val base = new Path(Fixtures.tempDir("statefs-ptr").resolve("s").toString)
     val fs = fsFor(base)
-    // rename mode by default; enabling flips resolution to g0
-    assert(!StateFs.pointerMode(fs, base))
-    assert(StateFs.resolveLive(fs, base) === base)
-    StateFs.enablePointerMode(spark, base)
-    assert(StateFs.pointerMode(fs, base))
-    StateFs.enablePointerMode(spark, base) // idempotent
+    // a virgin base resolves to g0 and a reader creates nothing
     val g0 = new Path(base, "g0")
     assert(StateFs.resolveLive(fs, base) === g0)
+    assert(!fs.exists(base))
+    // the first writer publishes PTR=g0 before any generation exists
+    assert(StateFs.openLive(spark, base) === g0)
+    assert(StateFs.readString(fs, new Path(base, "PTR")) === "g0" && !fs.exists(g0))
+    assert(StateFs.openLive(spark, base) === g0) // idempotent
     // a "stream" writes a committed generation into the live tree
     mk(g0); val v0 = mk(new Path(g0, "v0")); touch(v0, "_SUCCESS"); touch(v0, "data", "a")
     // crash state 1: a compaction staged the next generation but died
@@ -250,7 +94,7 @@ class StateFsSpec extends SparkTestBase {
     // next writer-entry GC
     val g1b = mk(new Path(base, "g1"))
     val v1 = mk(new Path(g1b, "v1")); touch(v1, "_SUCCESS"); touch(v1, "data", "b")
-    StateFs.pointerSwap(spark, base, g0, g1b)
+    StateFs.pointerSwap(spark, base, g1b)
     assert(StateFs.resolveLive(fs, base) === g1b)
     assert(fs.exists(new Path(v0, "data")),
       "the superseded generation must survive the swap (reader grace window)")
@@ -282,20 +126,49 @@ class StateFsSpec extends SparkTestBase {
     // the one-line repair the message prescribes recovers
     StateFs.writeFileAtomic(spark, new Path(base, "PTR"), "g2")
     assert(StateFs.resolveLive(fs, base) === g2)
-    // ...while marker-without-PTR on a VIRGIN dir (the enable crash
-    // window — the marker is written first) safely defaults to g0
+    // ...and so is g0 alone without PTR: the first writer publishes
+    // PTR before it writes any generation
+    StateFs.deleteRec(fs, g2)
+    assert(fs.delete(new Path(base, "PTR"), false))
+    mk(g0)
+    assert(intercept[IllegalArgumentException](StateFs.resolveLive(fs, base))
+      .getMessage.contains("[g0]"))
+    // the PTR.tmp of a crashed first publish leaves a VIRGIN base, and
+    // the next writer's publish replaces it
     val virgin = new Path(Fixtures.tempDir("statefs-ptr3").resolve("s").toString)
     val vfs = fsFor(virgin)
-    vfs.mkdirs(virgin); touch(virgin, "PTRMODE", "")
+    vfs.mkdirs(virgin); touch(virgin, "PTR.tmp", "g0")
     assert(StateFs.resolveLive(vfs, virgin) === new Path(virgin, "g0"))
-    // conversion of a LIVE rename-mode dir is refused (the generations
-    // would become invisible to pointer-mode readers)
+    assert(StateFs.openLive(spark, virgin) === new Path(virgin, "g0"))
+    assert(StateFs.readString(vfs, new Path(virgin, "PTR")) === "g0")
+    // a non-empty base without PTR is a leftover rename layout:
+    // refused by readers and writers alike, nothing deleted
     val renameBase = new Path(Fixtures.tempDir("statefs-ptr2").resolve("s").toString)
     val rv = mk(new Path(renameBase, "v0")); touch(rv, "_SUCCESS")
-    val e = intercept[IllegalArgumentException] {
-      StateFs.enablePointerMode(spark, renameBase)
-    }
-    assert(e.getMessage.contains("VIRGIN state dir"))
+    for (e <- Seq(
+        intercept[RuntimeException](StateFs.resolveLive(fsFor(renameBase), renameBase)),
+        intercept[RuntimeException](StateFs.openLive(spark, renameBase))))
+      assert(e.getMessage.contains("leftover rename layout") &&
+        e.getMessage.contains("v0"), e.getMessage)
+    assert(fsFor(renameBase).exists(new Path(rv, "_SUCCESS")) &&
+      !fsFor(renameBase).exists(new Path(renameBase, "PTR")))
+  }
+
+  test("gcStaleGens keeps only the live generation: the one-compaction " +
+      "grace window, crashed targets above the live one, orphan .tmp files") {
+    val base = new Path(Fixtures.tempDir("statefs-gcgens").resolve("st").toString)
+    val fs = fsFor(base)
+    for (g <- 0 to 4) touch(mk(new Path(base, s"g$g")), "data.txt", s"g$g")
+    touch(base, "PTR", "g3")
+    touch(base, "PTR.tmp", "g4")
+    touch(mk(new Path(base, "other")), "f")
+    StateFs.gcStaleGens(fs, base, "g3")
+    assert(fs.exists(new Path(base, "g3/data.txt")), "the live generation survives")
+    assert((Seq(0, 1, 2, 4).map(g => new Path(base, s"g$g")) :+
+      new Path(base, "PTR.tmp")).forall(p => !fs.exists(p)),
+      "every predecessor, the crashed target above, and the orphan .tmp are stale")
+    assert(StateFs.readString(fs, new Path(base, "PTR")) === "g3" &&
+      fs.exists(new Path(base, "other/f")), "gc must not touch non-generation state")
   }
 
   test("witness write order (r16): FRONTIER strictly precedes GENESIS, so " +

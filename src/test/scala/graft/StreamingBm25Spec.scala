@@ -29,6 +29,20 @@ class StreamingBm25Spec extends SparkTestBase {
     StreamingBm25.retrieve(spark, state, terms)
       .collect().map(_.toString).toSeq
 
+  /** The ranking computed directly from the documents — the one-shot
+    * twin every served state is compared against. */
+  private def direct(corpus: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val ctoks = Bm25Index.chunkTokens(corpus)
+    val dl = ctoks.groupBy("doc_id", "chunk_id", "start", "len")
+      .agg(count(lit(1)).as("dl"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_tok"))
+    val tf = ctoks.filter(col("token").isin(terms: _*))
+      .groupBy("doc_id", "chunk_id", "token").agg(count(lit(1)).as("tf"))
+    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    Bm25Index.score(tf, dfreq, dl, stats, k = 10)
+      .collect().map(_.toString).toSeq
+  }
+
   test("streamed index == direct computation after drain; restarts replay clean") {
     val base = Fixtures.tempDir("sbm25")
     val data = base.resolve("docs").toString
@@ -50,27 +64,18 @@ class StreamingBm25Spec extends SparkTestBase {
       b.coalesce(1).write.mode("append").parquet(data)
       prefix = prefix.unionByName(b)
       runOnce()
-      val ctoks = Bm25Index.chunkTokens(prefix)
-      val dl = ctoks.groupBy("doc_id", "chunk_id", "start", "len")
-        .agg(count(lit(1)).as("dl"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_tok"))
-      val tf = ctoks.filter(col("token").isin(terms: _*))
-        .groupBy("doc_id", "chunk_id", "token").agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      val direct = Bm25Index.score(tf, dfreq, dl, stats, k = 10)
-        .collect().map(_.toString).toSeq
-      assert(served(state) === direct,
+      assert(served(state) === direct(prefix),
         "stream-maintained index diverged from the direct prefix computation")
     }
     // the full-corpus gate: identical to q_rag_retrieve
     assert(served(state) === CorpusQueries.ragRetrieve(spark, sfDir)
       .collect().map(_.toString).toSeq)
     // a restart with no new files must not grow or change the state
-    val dirsBefore = Option(new File(state, "postings").list())
+    val dirsBefore = Option(new File(state, "postings/g0").list())
       .getOrElse(Array.empty).sorted.toSeq
     val servedBefore = served(state)
     runOnce()
-    assert(Option(new File(state, "postings").list())
+    assert(Option(new File(state, "postings/g0").list())
       .getOrElse(Array.empty).sorted.toSeq === dirsBefore,
       "an empty drain must not grow the state")
     assert(served(state) === servedBefore)
@@ -82,43 +87,42 @@ class StreamingBm25Spec extends SparkTestBase {
 
   test("pointer mode through the REAL stream machinery: drains fold inside " +
       "the live generation, compaction moves both family PTRs, served " +
-      "ranking identical to a rename-mode twin") {
-    // r16: the Bm25Index pointer rollout exercised end-to-end through
-    // foreachBatch + AvailableNow + the offsets WAL (Bm25IndexSpec has
-    // the deep state-machine walk; this pins that the STREAM layer —
-    // whose foreachBatch hands appendBatch the outer session — resolves
-    // the pointer-mode layout transparently).
+      "ranking identical to the direct computation") {
+    // The generation layout exercised end-to-end through foreachBatch +
+    // AvailableNow + the offsets WAL (Bm25IndexSpec has the deep
+    // state-machine walk; this pins that the STREAM layer — whose
+    // foreachBatch hands appendBatch the outer session — resolves the
+    // layout transparently).
     val base = Fixtures.tempDir("sbm25-ptr")
     val data = base.resolve("docs").toString
     val state = base.resolve("state").toString
-    val twin = base.resolve("twin").toString
-    Bm25Index.enablePointerMode(spark, state)
-    def drain(st: String, ck: String): Unit = {
+    def drain(): Unit = {
       val src = spark.readStream
         .schema("doc_id BIGINT, text STRING")
         .parquet(data)
-      StreamingBm25.fit(spark, src, st, base.resolve(ck).toString)
+      StreamingBm25.fit(spark, src, state, base.resolve("ckpt").toString)
         .awaitTermination()
     }
     docs.filter(bucket < 60).coalesce(1).write.mode("append").parquet(data)
-    drain(state, "ckpt-p"); drain(twin, "ckpt-r")
+    drain()
     docs.filter(bucket >= 60).coalesce(1).write.mode("append").parquet(data)
-    drain(state, "ckpt-p"); drain(twin, "ckpt-r")
+    drain()
     def ptrOf(sub: String): String = java.nio.file.Files.readString(
       new File(new File(state, sub), "PTR").toPath).trim
     assert(ptrOf("postings") === "g0" && ptrOf("dl") === "g0")
-    assert(served(state) === served(twin),
-      "pointer mode must be serving-transparent through the stream")
+    val whole = direct(docs)
+    assert(served(state) === whole,
+      "the layout must be serving-transparent through the stream")
     // compact in the between-drains slot: both family PTRs advance
     assert(Bm25Index.compact(spark, state))
     assert(ptrOf("postings") === "g1" && ptrOf("dl") === "g1")
-    assert(served(state) === served(twin))
+    assert(served(state) === whole)
     // and the stream keeps folding into the published generation
     import spark.implicits._
-    Seq((900011L, "spark vector pointer stream doc"))
-      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(data)
-    drain(state, "ckpt-p"); drain(twin, "ckpt-r")
-    assert(served(state) === served(twin))
+    val extra = Seq((900011L, "spark vector pointer stream doc")).toDF("doc_id", "text")
+    extra.coalesce(1).write.mode("append").parquet(data)
+    drain()
+    assert(served(state) === direct(docs.unionByName(extra)))
     assert(Option(new File(new File(state, "postings"), "g1").list())
       .getOrElse(Array.empty).count(_.startsWith("v")) === 2,
       "the post-compaction drain must land inside the live generation")

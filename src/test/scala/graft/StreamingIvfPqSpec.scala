@@ -43,6 +43,13 @@ class StreamingIvfPqSpec extends SparkTestBase {
     df.select("vec_id", "sub", "code", "cell").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
 
+  /** The live codes generation (`codes/<PTR>`); compactions move it,
+    * so re-resolve per use. */
+  private def liveCodes(state: String): File = {
+    val base = new File(state, "codes")
+    new File(base, java.nio.file.Files.readString(new File(base, "PTR").toPath).trim)
+  }
+
   test("streamed codes equal the one-shot encode after every prefix; " +
       "stored-state probe bit-identical to the in-memory probe") {
     val base = Fixtures.tempDir("sivfpq")
@@ -75,9 +82,9 @@ class StreamingIvfPqSpec extends SparkTestBase {
         "streamed code table diverges from the one-shot encode of this prefix")
     }
     // rerun with no new files: committed state untouched
-    val before = new File(state, "codes").list().sorted.toSeq
+    val before = liveCodes(state).list().sorted.toSeq
     runOnce()
-    assert(new File(state, "codes").list().sorted.toSeq === before)
+    assert(liveCodes(state).list().sorted.toSeq === before)
     // stored-state probe ≡ in-memory probe over the same frames
     val queries = corpus.filter($"vec_id" >= 1000)
     val (cents, cbs, codes) = StreamingIvfPq.readIndex(spark, state).get
@@ -103,7 +110,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
     // true mid-write crash state: no _SUCCESS AND no applog entry
     val b2 = corpus.filter($"vec_id" >= 100)
     assert(StreamingIvfPq.appendBatch(spark, state, b2, kc, m, subLen, kCb, 1L))
-    val codesDir = new File(state, "codes")
+    val codesDir = liveCodes(state)
     assert(new File(new File(codesDir, f"v${1L}%020d"), "_SUCCESS").delete())
     assert(new File(new File(codesDir, "applog"), f"v${1L}%020d").delete())
     // regress the r15 frontier witness to the honestly-reachable crash
@@ -135,7 +142,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
     val queries = corpus.filter($"vec_id" >= 1000)
     val want = StreamingIvfPq.probe(spark, state, queries, k = 3, nProbe = 2,
       m, subLen).collect().map(_.toString).sorted.toSeq
-    def vdirs() = new File(state, "codes").list()
+    def vdirs() = liveCodes(state).list()
       .filter(_.startsWith("v")).sorted.toSeq
     assert(vdirs().size === 3)
     assert(StreamingIvfPq.compact(spark, state))
@@ -143,7 +150,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
     assert(codeSet(StreamingIvfPq.readIndex(spark, state).get._3) === before)
     assert(!StreamingIvfPq.compact(spark, state)) // idempotent no-op
     // physical layout: the compacted generation is partitionBy(cell)
-    val gen = new File(new File(state, "codes"), f"v${2L}%020d")
+    val gen = new File(liveCodes(state), f"v${2L}%020d")
     assert(gen.listFiles().exists(_.getName.startsWith("cell=")),
       s"compacted dir is not cell-partitioned: ${gen.listFiles().toSeq}")
     // the probe plan prunes non-probed cells at the directory level
@@ -169,7 +176,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
       assert(StreamingIvfPq.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), kc, m, subLen, kCb, bid))
     assert(StreamingIvfPq.compact(spark, state))
-    val codes = new File(state, "codes")
+    def codes = liveCodes(state)
     // post-compaction append, then external loss of its dir: loud on
     // read, append (fail-fast), compact — the applog guard
     assert(StreamingIvfPq.appendBatch(spark, state,
@@ -259,44 +266,45 @@ class StreamingIvfPqSpec extends SparkTestBase {
   }
 
   test("pointer mode: compaction publishes via one PTR rewrite, served codes " +
-      "and probes identical to rename mode") {
-    // the object-store-safe swap (VERDICT r14 #2), extended to the
-    // IVF-PQ store — the StreamingIvfSpec pointer e2e is the deep
-    // walk; this pins mode transparency for THIS index's layout
+      "and probes identical to the one-shot encode") {
+    // the object-store-safe generation layout of the IVF-PQ store —
+    // the StreamingIvfSpec e2e is the deep walk; this pins layout
+    // transparency for THIS index against the one-shot encode of the
+    // applied batches under the frozen pair
     val baseDir = Fixtures.tempDir("sivfpq-ptr")
     val state = baseDir.resolve("state").toString
-    val twin = baseDir.resolve("twin").toString
-    StreamingIvfPq.enablePointerMode(spark, state)
-    for ((lo, hi, bid) <- Seq((0L, 80L, 0L), (80L, 150L, 1L));
-         st <- Seq(state, twin))
-      assert(StreamingIvfPq.appendBatch(spark, st,
+    for ((lo, hi, bid) <- Seq((0L, 80L, 0L), (80L, 150L, 1L)))
+      assert(StreamingIvfPq.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi),
         kc, m, subLen, kCb, bid))
+    val (cents, cbs, _) = StreamingIvfPq.readIndex(spark, state).get
+    def oneShot(hi: Long) =
+      IvfPq.append(spark, quantized(corpus.filter($"vec_id" < hi)), cents, cbs, m, subLen)
     val codes = new File(state, "codes")
     def ptr() = java.nio.file.Files.readString(new File(codes, "PTR").toPath).trim
     assert(ptr() === "g0")
     assert(StreamingIvfPq.compact(spark, state))
-    assert(StreamingIvfPq.compact(spark, twin))
     assert(ptr() === "g1")
     assert(new File(codes, "g0").exists(),
       "the superseded generation must survive the swap (reader grace " +
         "window, ADVICE r15) until the next writer-entry GC")
     assert(new File(codes, "g1").list().filter(_.startsWith("v")).toSeq ===
       Seq(f"v${1L}%020d"))
-    // mode transparency: served codes and probes identical
-    assert(codeSet(StreamingIvfPq.readIndex(spark, state).get._3) ===
-      codeSet(StreamingIvfPq.readIndex(spark, twin).get._3))
+    // layout transparency: served codes and probes identical
+    val want = oneShot(150L)
+    assert(codeSet(StreamingIvfPq.readIndex(spark, state).get._3) === codeSet(want))
     val qs = corpus.filter($"vec_id" < 8)
     assert(StreamingIvfPq.probe(spark, state, qs, k = 5, nProbe = 2, m, subLen,
         excludeSelf = true).collect().map(_.toString).sorted.toSeq ===
-      StreamingIvfPq.probe(spark, twin, qs, k = 5, nProbe = 2, m, subLen,
-        excludeSelf = true).collect().map(_.toString).sorted.toSeq)
+      IvfPq.probe(spark, cents, cbs, want,
+        quantized(qs).select(col("vec_id").as("q_id"), col("qv")),
+        k = 5, nProbe = 2, m, subLen, excludeSelf = true)
+        .collect().map(_.toString).sorted.toSeq)
     // appends continue into the published generation and stay equal
-    for (st <- Seq(state, twin))
-      assert(StreamingIvfPq.appendBatch(spark, st,
-        corpus.filter($"vec_id" >= 150L), kc, m, subLen, kCb, 2L))
+    assert(StreamingIvfPq.appendBatch(spark, state,
+      corpus.filter($"vec_id" >= 150L), kc, m, subLen, kCb, 2L))
     assert(codeSet(StreamingIvfPq.readIndex(spark, state).get._3) ===
-      codeSet(StreamingIvfPq.readIndex(spark, twin).get._3))
+      codeSet(oneShot(Long.MaxValue)))
     // the next compaction's writer-entry GC collects the grace window
     assert(StreamingIvfPq.compact(spark, state))
     assert(ptr() === "g2")
@@ -306,36 +314,18 @@ class StreamingIvfPqSpec extends SparkTestBase {
       "g1 is the new grace window after the second swap")
   }
 
-  test("randomized drain/compact/crash/loss walk: the served codes always " +
-      "equal the one-shot encode of the applied union, or fail loudly " +
-      "naming exactly the induced loss") {
-    pqFuzzWalk(ptrMode = false)
-  }
-
   test("randomized drain/compact/crash/loss walk in POINTER mode: same walk, " +
       "same seed — stale unpublished targets, grace windows, and entry GC " +
       "compose with the quantizer-pair and chain-loss states") {
-    // VERDICT r15 #3, the IVF-PQ half: the pointer-mode crash states
-    // (partial `g<k+1>` targets planted before a third of the
-    // compactions, the moved-PTR-with-kept-predecessor state after
-    // every swap, stale-generation GC at writer entry) composed into
-    // the seeded fuzz rather than pinned once each.
-    pqFuzzWalk(ptrMode = true)
+    // The layout's crash states (partial `g<k+1>` targets planted
+    // before a third of the compactions, the moved-PTR-with-kept-
+    // predecessor state after every swap, stale-generation GC at
+    // writer entry) composed into the seeded fuzz rather than pinned
+    // once each.
+    pqFuzzWalk()
   }
 
-  test("randomized walk with a MID-WALK in-place rename->pointer migration " +
-      "at a SEED-DERIVED step: served codes identical across the mode flip; " +
-      "the pointer states compose with the quantizer-pair and chain-loss " +
-      "drills after it") {
-    // VERDICT r16 #1: the migration composed into the seeded state
-    // machine — rename-mode states first, the in-place flip mid-walk,
-    // pointer-mode states over the migrated g0 tree after. The step is
-    // drawn from the walk seed (VERDICT r17 #5) so rotating the seed
-    // rotates the flip point continuously.
-    pqFuzzWalk(ptrMode = false, migrate = true)
-  }
-
-  private def pqFuzzWalk(ptrMode: Boolean, migrate: Boolean = false): Unit = {
+  private def pqFuzzWalk(): Unit = {
     // The StreamingIvfSpec composition fuzz ported to the IVF-PQ
     // store (VERDICT r14 #6), with the states only THIS index has
     // composed in: the frozen-PAIR loss pair (commit marker without a
@@ -346,21 +336,12 @@ class StreamingIvfPqSpec extends SparkTestBase {
     // — asserting after EVERY step that the served code table is
     // exactly the one-shot encode of the applied batches against the
     // frozen pair, and that unrestored loss is loud naming its victim.
-    val base = Fixtures.tempDir(
-      if (migrate) "sivfpq-fuzz-mig"
-      else if (ptrMode) "sivfpq-fuzz-ptr" else "sivfpq-fuzz")
+    val base = Fixtures.tempDir("sivfpq-fuzz-ptr")
     val state = base.resolve("state").toString
     val codesBase = new File(state, "codes")
-    if (ptrMode) StreamingIvfPq.enablePointerMode(spark, state)
-    // the swap mode can flip MID-WALK (the migrateAt step); every
-    // mode-sensitive branch reads this var, not the entry parameter
-    var ptr = ptrMode
-    // file-level drills target the LIVE tree (PTR-resolved per use in
-    // pointer mode — compactions move it)
-    def codesDir: File =
-      if (ptr) new File(codesBase, java.nio.file.Files.readString(
-        new File(codesBase, "PTR").toPath).trim)
-      else codesBase
+    // file-level drills target the LIVE generation (PTR-resolved per
+    // use — compactions move it)
+    def codesDir: File = liveCodes(state)
     def batchOf(id: Long) =
       corpus.filter($"vec_id" >= id * 5 && $"vec_id" < (id + 1) * 5)
     def unionOf(ids: Seq[Long]) =
@@ -386,23 +367,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
       kc, m, subLen, kCb, 0L))
     applied :+= 0L; nextId = 1L
     val rnd = new scala.util.Random(20260815)
-    // seed-derived migration step (VERDICT r17 #5): [2, 29], rotates
-    // with the walk seed — see StreamingIvfSpec.fuzzWalk
-    val migrateAt = if (migrate) 2 + rnd.nextInt(28) else -1
-    var migrated = false
     for (step <- 1 to 30) {
-      if (step == migrateAt) {
-        // in-place rename->pointer migration mid-walk (VERDICT r16 #1):
-        // the whole codes tree rides into g0; the served code table
-        // must not move, and the remaining steps run the pointer-mode
-        // states over the migrated store
-        StreamingIvfPq.migrateToPointerMode(spark, state)
-        ptr = true
-        migrated = true
-        assert(new File(codesBase, "PTRMODE").exists() &&
-          codesDir.getName == "g0", s"step $step: migration did not publish")
-        checkServed()
-      }
       rnd.nextInt(9) match {
         case 0 => // plain append
           assert(StreamingIvfPq.appendBatch(spark, state, batchOf(nextId),
@@ -421,11 +386,11 @@ class StreamingIvfPqSpec extends SparkTestBase {
                   // WAL can re-deliver — possibly an empty batch): no-op
           assert(!StreamingIvfPq.appendBatch(spark, state,
             lastBatch, kc, m, subLen, kCb, lastId))
-        case 3 => // compaction (no-ops when ≤1 committed dir). Pointer
-                  // mode: a third of the time, first plant a crashed
-                  // earlier compaction's partial unpublished target —
-                  // invisible to reads, clobbered by the entry GC
-          if (ptr && rnd.nextInt(3) == 0) {
+        case 3 => // compaction (no-ops when ≤1 committed dir). A third
+                  // of the time, first plant a crashed earlier
+                  // compaction's partial unpublished target — invisible
+                  // to reads, clobbered by the entry GC
+          if (rnd.nextInt(3) == 0) {
             val next = new File(codesBase,
               "g" + (codesDir.getName.drop(1).toLong + 1))
             new File(next, "junk-partial").mkdirs()
@@ -522,17 +487,11 @@ class StreamingIvfPqSpec extends SparkTestBase {
       }
       checkServed()
     }
-    // migration-fired coverage check (VERDICT r17 #5): a derivation
-    // change that pushes the step outside the walk would silently
-    // hollow this test into the plain rename-mode walk
-    assert(migrated == migrate,
-      s"the seed-derived migration step ($migrateAt) must fire inside the walk")
     // settle: a final compaction and one more append keep serving the
-    // union; pointer mode additionally pins the post-swap crash shape
-    // (moved PTR + undeleted predecessor = the grace window) and its
-    // collection by the next writer-entry GC
-    val swapped = StreamingIvfPq.compact(spark, state)
-    if (ptr && swapped) {
+    // union; the post-swap crash shape (moved PTR + undeleted
+    // predecessor = the grace window) and its collection by the next
+    // writer-entry GC are pinned too
+    if (StreamingIvfPq.compact(spark, state)) {
       val live = codesDir
       val prev = new File(codesBase, "g" + (live.getName.drop(1).toLong - 1))
       assert(prev.exists(),
@@ -669,7 +628,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
       assert(StreamingIvfPq.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi),
         kc, m, subLen, kCb, bid))
-    val codes = new File(state, "codes")
+    def codes = liveCodes(state)
     def vdirs() = codes.list().filter(_.startsWith("v")).sorted.toSeq
     val e = intercept[RuntimeException] {
       StreamingIvfPq.compactImpl(spark, state, () => {
@@ -682,7 +641,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
     assert(vdirs() === (0L to 2L).map(i => f"v$i%020d"))
     assert(new File(new File(codes, "applog"), f"v${2L}%020d").exists(),
       "the concurrent append's applog evidence must survive the abort")
-    assert(!new File(state, "codes.tmp").exists(),
+    assert(!new File(state, "codes/g1").exists(),
       "the aborted rewrite must be discarded")
     // nothing lost: the served code table is the one-shot encode of
     // the full corpus against the frozen pair

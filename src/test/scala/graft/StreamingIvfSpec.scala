@@ -35,6 +35,13 @@ class StreamingIvfSpec extends SparkTestBase {
     df.select("c_id", "cluster").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** The live lists generation (`lists/<PTR>`); compactions move it,
+    * so re-resolve per use. */
+  private def liveLists(state: String): File = {
+    val base = new File(state, "lists")
+    new File(base, java.nio.file.Files.readString(new File(base, "PTR").toPath).trim)
+  }
+
   /** Overwrite the FRONTIER witness through the Hadoop API (the local
     * fs keeps `.crc` sidecars that a raw java.nio write invalidates). */
   private def setFrontier(stateSubDir: File, v: String): Unit = {
@@ -76,9 +83,9 @@ class StreamingIvfSpec extends SparkTestBase {
         "streamed lists diverge from the batch build of this prefix")
     }
     // a rerun with no new files must leave the committed state as-is
-    val dirsBefore = new File(state, "lists").list().sorted.toSeq
+    val dirsBefore = liveLists(state).list().sorted.toSeq
     runOnce()
-    assert(new File(state, "lists").list().sorted.toSeq === dirsBefore,
+    assert(liveLists(state).list().sorted.toSeq === dirsBefore,
       "an empty run must not grow the state")
     // serve: maintained-index probe ≡ batch-index probe, row for row
     val queries = corpus.filter($"vec_id" >= 1000)
@@ -112,14 +119,14 @@ class StreamingIvfSpec extends SparkTestBase {
     // detects loudly — pinned first, then the honest crash state.
     val b2 = corpus.filter($"vec_id" >= 100)
     assert(StreamingIvf.appendBatch(spark, state, b2, 8, batchId = 1L))
-    val v1 = new File(new File(state, "lists"), f"v${1L}%020d")
+    val v1 = new File(liveLists(state), f"v${1L}%020d")
     assert(new File(v1, "_SUCCESS").delete())
     val eMarker = intercept[IllegalArgumentException] {
       StreamingIvf.readIndex(spark, state)
     }
     assert(eMarker.getMessage.contains(f"v${1L}%020d") &&
       eMarker.getMessage.contains("removed externally"))
-    assert(new File(new File(new File(state, "lists"), "applog"),
+    assert(new File(new File(liveLists(state), "applog"),
       f"v${1L}%020d").delete())
     // ...and regress the r15 frontier witness to what a real mid-write
     // crash leaves (logAppend — marker AND frontier — runs only after
@@ -127,7 +134,7 @@ class StreamingIvfSpec extends SparkTestBase {
     // delete-after-commit construction above leaves it at 1, which the
     // suffix check would rightly call external loss). Through the
     // Hadoop API: the local fs keeps .crc sidecars a raw write breaks.
-    setFrontier(new File(state, "lists"), "0")
+    setFrontier(liveLists(state), "0")
     // now the true mid-write crash state: the partial is invisible...
     assert(clusterMap(StreamingIvf.readIndex(spark, state).get._2) === after1)
     // ...and the WAL re-delivers batch 1, whose replay completes it
@@ -147,7 +154,7 @@ class StreamingIvfSpec extends SparkTestBase {
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
     val before = clusterMap(StreamingIvf.readIndex(spark, state).get._2)
     // v* generations only: compaction also installs the MANIFEST file
-    def listDirs() = new File(state, "lists").list()
+    def listDirs() = liveLists(state).list()
       .filter(_.startsWith("v")).sorted.toSeq
     assert(listDirs().size === 3)
     assert(StreamingIvf.compact(spark, state))
@@ -163,24 +170,9 @@ class StreamingIvfSpec extends SparkTestBase {
     val queries = corpus.filter($"vec_id" >= 1000)
     val probed = StreamingIvf.probe(spark, state, queries, k = 1, nProbe = 8)
       .collect().map(_.toString).sorted.toSeq
-    // crash windows: mid-swap (live gone, bak present) and orphan tmp.
-    // A READ restores the missing live dir (it must, to see data) but
-    // leaves the writer-owned tmp alone — a reader deleting it would
-    // race an in-flight compaction on another session (review r12)
-    val live = new File(state, "lists")
-    val bak = new File(state, "lists.bak")
-    assert(live.renameTo(bak))
-    new File(state, "lists.tmp/vjunk").mkdirs()
-    assert(clusterMap(StreamingIvf.readIndex(spark, state).get._2) === before)
-    assert(live.exists() && !bak.exists())
-    assert(new File(state, "lists.tmp").exists(),
-      "a reader must not delete the writer-owned .tmp")
-    // the next WRITER entry (appendBatch) cleans the orphan tmp, and
     // appends continue on top of the compacted generation
     assert(StreamingIvf.appendBatch(spark, state,
       corpus.filter($"vec_id" >= 1000), 8, 3L))
-    assert(!new File(state, "lists.tmp").exists(),
-      "writer entry must clean the orphan tmp")
     assert(listDirs().size === 2)
     assert(clusterMap(StreamingIvf.readIndex(spark, state).get._2) ===
       clusterMap(Similarity.ivfAssign(
@@ -218,13 +210,13 @@ class StreamingIvfSpec extends SparkTestBase {
       assert(StreamingIvf.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
     assert(StreamingIvf.compact(spark, state))
-    val lists = new File(state, "lists")
+    def lists = liveLists(state)
     def manifest(): String =
       java.nio.file.Files.readString(new File(lists, "MANIFEST").toPath).trim
     assert(manifest() === f"v${2L}%020d")
     assert(new File(new File(lists, f"v${2L}%020d"), "_COMPACTED").exists())
     // compaction consumed the pre-compaction applog entries (the log
-    // lives inside the swapped tree); the folded mass is now
+    // lives inside the superseded generation); the folded mass is now
     // manifest-covered, so stale entries cannot false-alarm
     assert(!new File(new File(lists, "applog"), f"v${0L}%020d").exists())
     // a post-compaction append lands its applog marker with the commit
@@ -317,40 +309,19 @@ class StreamingIvfSpec extends SparkTestBase {
     assert(e5.getMessage.contains("removed externally"))
   }
 
-  test("randomized drain/compact/crash/loss sequences: the served index always " +
-      "equals the applied union, or fails loudly naming exactly the induced loss") {
-    fuzzWalk(ptrMode = false)
-  }
-
   test("randomized drain/compact/crash/loss sequences in POINTER mode: same " +
       "walk, same seed — crash states are the pointer-mode ones (stale " +
       "unpublished targets, kept-predecessor grace windows, entry GC)") {
-    // VERDICT r15 #3: pointer mode had directed end-to-end cases but
-    // was not composed into the seeded state-machine fuzz — here the
-    // SAME 30-step walk runs with the lists store in pointer mode, so
+    // The seeded 30-step walk composes the layout's crash states —
     // partial `g<k+1>` targets (planted before a third of the
     // compactions), the moved-PTR-with-undeleted-predecessor state
     // (every successful swap leaves it — the grace window), and
-    // stale-generation GC compose with every other crash/loss state
-    // under random interleaving.
-    fuzzWalk(ptrMode = true)
+    // stale-generation GC — with every other crash/loss state under
+    // random interleaving.
+    fuzzWalk()
   }
 
-  test("randomized walk with a MID-WALK in-place rename->pointer migration " +
-      "at a SEED-DERIVED step: the served index is identical across the " +
-      "mode flip and the pointer-mode crash states compose after it") {
-    // VERDICT r16 #1: the migration is not only twin-pinned in
-    // PointerMigrationSpec but composed into the seeded state machine
-    // — rename-mode crash/loss/compaction states first, the in-place
-    // flip mid-walk, pointer-mode states over the migrated g0 tree
-    // after. The step is drawn from the walk seed (VERDICT r17 #5) so
-    // rotating the seed rotates the flip point with it — the r17
-    // one-off probes at steps 5/25, run green and reverted, are now
-    // the continuous regime.
-    fuzzWalk(ptrMode = false, migrate = true)
-  }
-
-  private def fuzzWalk(ptrMode: Boolean, migrate: Boolean = false): Unit = {
+  private def fuzzWalk(): Unit = {
     // The composition fuzz for the r14 loss machinery (the StateFsSpec
     // / CompactionSpec discipline applied to the INDEX state machine):
     // the directed cases above pin each window once; here 30 seeded
@@ -363,23 +334,12 @@ class StreamingIvfSpec extends SparkTestBase {
     // the missing generation, then fully recovered by the restore the
     // message prescribes. Batches are id-disjoint slices so the union
     // is checkable by construction.
-    import java.io.File
-    val base = Fixtures.tempDir(
-      if (migrate) "sivf-fuzz-mig"
-      else if (ptrMode) "sivf-fuzz-ptr" else "sivf-fuzz")
+    val base = Fixtures.tempDir("sivf-fuzz-ptr")
     val state = base.resolve("state").toString
     val listsBase = new File(state, "lists")
-    if (ptrMode) StreamingIvf.enablePointerMode(spark, state)
-    // the swap mode can flip MID-WALK (the migrateAt step); every
-    // mode-sensitive branch reads this var, not the entry parameter
-    var ptr = ptrMode
-    // the walk's file-level drills target the LIVE tree — the lists
-    // dir itself in rename mode, the PTR-named generation in pointer
-    // mode (re-resolved each use: compactions move it)
-    def lists: File =
-      if (ptr) new File(listsBase, java.nio.file.Files.readString(
-        new File(listsBase, "PTR").toPath).trim)
-      else listsBase
+    // the walk's file-level drills target the LIVE generation
+    // (re-resolved each use: compactions move it)
+    def lists: File = liveLists(state)
     // 5-id-wide disjoint slices: 40 batches cover vec_ids 0..199, more
     // than the walk's worst-case append count, so the union stays
     // duplicate-free by construction
@@ -399,27 +359,7 @@ class StreamingIvfSpec extends SparkTestBase {
     assert(StreamingIvf.appendBatch(spark, state, batchOf(0), 4, 0L))
     applied :+= 0L; nextId = 1L
     val rnd = new scala.util.Random(20260815)
-    // the migration step is DERIVED from the walk seed (VERDICT r17
-    // #5): drawn in [2, 29] so it is genuinely mid-walk, and it moves
-    // whenever the seed rotates — the flip composes against a
-    // different prefix/suffix of crash states per rotation instead of
-    // a hand-pinned boundary
-    val migrateAt = if (migrate) 2 + rnd.nextInt(28) else -1
-    var migrated = false
     for (step <- 1 to 30) {
-      if (step == migrateAt) {
-        // in-place rename->pointer migration mid-walk (VERDICT r16 #1):
-        // the whole lists tree — committed generations, applog,
-        // MANIFEST, witnesses — rides into g0; the served index must
-        // not move, and the rest of the walk exercises the pointer
-        // states over the migrated store
-        StreamingIvf.migrateToPointerMode(spark, state)
-        ptr = true
-        migrated = true
-        assert(new File(listsBase, "PTRMODE").exists() &&
-          lists.getName === "g0", s"step $step: migration did not publish")
-        checkServed()
-      }
       rnd.nextInt(7) match {
         case 0 => // plain append
           assert(StreamingIvf.appendBatch(spark, state, batchOf(nextId), 4, nextId))
@@ -435,11 +375,11 @@ class StreamingIvfSpec extends SparkTestBase {
                   // WAL can re-deliver; its dir survives compaction)
           assert(!StreamingIvf.appendBatch(spark, state,
             batchOf(applied.last), 4, applied.last))
-        case 3 => // compaction (no-ops when ≤1 committed dir). Pointer
-                  // mode: a third of the time, first plant a crashed
-                  // earlier compaction's partial unpublished target —
-                  // invisible to reads, clobbered by the entry GC
-          if (ptr && rnd.nextInt(3) == 0) {
+        case 3 => // compaction (no-ops when ≤1 committed dir). A third
+                  // of the time, first plant a crashed earlier
+                  // compaction's partial unpublished target — invisible
+                  // to reads, clobbered by the entry GC
+          if (rnd.nextInt(3) == 0) {
             val next = new File(listsBase,
               "g" + (lists.getName.drop(1).toLong + 1))
             new File(next, "junk-partial").mkdirs()
@@ -506,52 +446,33 @@ class StreamingIvfSpec extends SparkTestBase {
       }
       checkServed()
     }
-    // migration-fired coverage check (VERDICT r17 #5, the fired-set
-    // discipline): a derivation/bound change that pushes the step
-    // outside the walk would silently hollow this test into the
-    // plain rename-mode walk
-    assert(migrated == migrate,
-      s"the seed-derived migration step ($migrateAt) must fire inside the walk")
     // post-compaction crash states compose with whatever the walk
-    // left — per mode: rename's mid-swap crash heals on read and the
-    // orphan tmp is cleaned by the next writer; pointer's swap leaves
-    // the moved-PTR-with-undeleted-predecessor state (the grace
-    // window) plus a planted partial target, both collected by the
-    // next compaction's entry GC. Union intact throughout.
+    // left: the swap leaves the moved-PTR-with-undeleted-predecessor
+    // state (the grace window) plus a planted partial target, both
+    // collected by the next compaction's entry GC. Union intact
+    // throughout.
     if (StreamingIvf.compact(spark, state)) {
-      if (!ptr) {
-        val bak = new File(state, "lists.bak")
-        assert(lists.renameTo(bak))
-        new File(state, "lists.tmp/junk").mkdirs()
-        checkServed() // reader heal restored the live tree
-        assert(lists.exists() && !bak.exists())
-        assert(StreamingIvf.appendBatch(spark, state, batchOf(nextId), 4, nextId))
-        applied :+= nextId
-        assert(!new File(state, "lists.tmp").exists())
-        checkServed()
-      } else {
-        val live = lists
-        val prev = new File(listsBase, "g" + (live.getName.drop(1).toLong - 1))
-        assert(prev.exists(),
-          "the superseded generation must survive the swap (grace window)")
-        val next = new File(listsBase, "g" + (live.getName.drop(1).toLong + 1))
-        new File(next, "junk-partial").mkdirs()
-        checkServed() // both the grace window and the partial are invisible
-        assert(StreamingIvf.appendBatch(spark, state, batchOf(nextId), 4, nextId))
-        applied :+= nextId
-        checkServed()
-        // the next compaction's entry GC collects the predecessor and
-        // clobbers the partial (whose g-name it then REUSES as the
-        // fresh staging target and publishes)
-        assert(StreamingIvf.compact(spark, state))
-        assert(!prev.exists(),
-          "the old grace window must fall to the writer-entry GC")
-        assert(lists.getName === next.getName,
-          "the swap publishes the regenerated target generation")
-        assert(new File(listsBase, live.getName).exists(),
-          s"${live.getName} is the new grace window")
-        checkServed()
-      }
+      val live = lists
+      val prev = new File(listsBase, "g" + (live.getName.drop(1).toLong - 1))
+      assert(prev.exists(),
+        "the superseded generation must survive the swap (grace window)")
+      val next = new File(listsBase, "g" + (live.getName.drop(1).toLong + 1))
+      new File(next, "junk-partial").mkdirs()
+      checkServed() // both the grace window and the partial are invisible
+      assert(StreamingIvf.appendBatch(spark, state, batchOf(nextId), 4, nextId))
+      applied :+= nextId
+      checkServed()
+      // the next compaction's entry GC collects the predecessor and
+      // clobbers the partial (whose g-name it then REUSES as the
+      // fresh staging target and publishes)
+      assert(StreamingIvf.compact(spark, state))
+      assert(!prev.exists(),
+        "the old grace window must fall to the writer-entry GC")
+      assert(lists.getName === next.getName,
+        "the swap publishes the regenerated target generation")
+      assert(new File(listsBase, live.getName).exists(),
+        s"${live.getName} is the new grace window")
+      checkServed()
     }
   }
 
@@ -581,17 +502,6 @@ class StreamingIvfSpec extends SparkTestBase {
       StreamingIvf.probe(spark, state, corpus.filter($"vec_id" >= 1000), k = 1)
     }
     assert(e3.getMessage.contains("centroids are missing"))
-    // heal-before-list (review r13 second pass): with lists ALSO in
-    // the mid-swap crash state, the committed dirs hide under .bak —
-    // an unhealed listing would come back empty and the guard would
-    // silently answer None for an index whose lists exist
-    val lists = new File(state, "lists")
-    assert(lists.renameTo(new File(state, "lists.bak")))
-    val e4 = intercept[IllegalArgumentException] {
-      StreamingIvf.readIndex(spark, state)
-    }
-    assert(e4.getMessage.contains("centroids are missing"))
-    assert(lists.exists(), "the guard must have healed the lists dir back")
   }
 
   test("compacted layout is cluster-partitioned and probe reads are partition-pruned to probed lists") {
@@ -608,7 +518,7 @@ class StreamingIvfSpec extends SparkTestBase {
     assert(StreamingIvf.compact(spark, state))
     // physical layout: the compacted generation is partitionBy(cluster)
     // (v* dirs only — the swap also installed the MANIFEST file)
-    val gen = new File(state, "lists").listFiles()
+    val gen = liveLists(state).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("v")).head
     assert(gen.listFiles().exists(_.getName.startsWith("cluster=")),
       s"compacted dir is not cluster-partitioned: ${gen.listFiles().toSeq}")
@@ -629,19 +539,19 @@ class StreamingIvfSpec extends SparkTestBase {
   }
 
   test("pointer mode end-to-end: compaction publishes via one PTR rewrite; " +
-      "served index and probes identical to rename mode; stale targets " +
-      "invisible; the concurrency guard discards only the staged generation") {
-    // VERDICT r14 #2: the object-store-safe swap mode exercised
-    // through a full index lifecycle, with a rename-mode TWIN fed the
-    // same batches so mode transparency is checked at every step.
+      "served index and probes identical to the one-shot build; stale " +
+      "targets invisible; the concurrency guard discards only the staged " +
+      "generation") {
+    // The object-store-safe generation layout exercised through a full
+    // index lifecycle, checked at every step against the one-shot
+    // batch build of the applied batches (id-ordered batches keep the
+    // centroid seed equal).
     val baseDir = Fixtures.tempDir("sivf-ptr")
     val state = baseDir.resolve("state").toString
-    val twin = baseDir.resolve("twin").toString // rename mode
-    StreamingIvf.enablePointerMode(spark, state)
-    for ((lo, hi, bid) <- Seq((0L, 60L, 0L), (60L, 130L, 1L));
-         st <- Seq(state, twin))
-      assert(StreamingIvf.appendBatch(spark, st,
+    for ((lo, hi, bid) <- Seq((0L, 60L, 0L), (60L, 130L, 1L)))
+      assert(StreamingIvf.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
+    def oneShot(hi: Long) = Similarity.ivfIndex(corpus.filter($"vec_id" < hi), 8)
     val lists = new File(state, "lists")
     def ptr() = java.nio.file.Files.readString(new File(lists, "PTR").toPath).trim
     def genDirs(g: String) = new File(lists, g).list()
@@ -652,34 +562,34 @@ class StreamingIvfSpec extends SparkTestBase {
     // a stale partial target from a crashed compaction is invisible
     new File(new File(lists, "g1"), "junk").mkdirs()
     val served = clusterMap(StreamingIvf.readIndex(spark, state).get._2)
-    assert(served === clusterMap(StreamingIvf.readIndex(spark, twin).get._2))
-    // compact both modes: pointer mode stages g1 (clobbering the stale
-    // partial) and publishes it with one PTR rewrite; g0 is KEPT as
-    // the in-flight-reader grace window (ADVICE r15) and falls to the
-    // next writer-entry GC
+    val (bc, ba) = oneShot(130L)
+    assert(served === clusterMap(ba))
+    // compaction stages g1 (clobbering the stale partial) and
+    // publishes it with one PTR rewrite; g0 is KEPT as the
+    // in-flight-reader grace window (ADVICE r15) and falls to the next
+    // writer-entry GC
     assert(StreamingIvf.compact(spark, state))
-    assert(StreamingIvf.compact(spark, twin))
     assert(ptr() === "g1")
     assert(new File(lists, "g0").exists(),
       "the superseded generation must survive the swap (reader grace window)")
     assert(genDirs("g1") === Seq(f"v${1L}%020d"))
     assert(clusterMap(StreamingIvf.readIndex(spark, state).get._2) === served)
-    // probes identical across modes (partition-pruned compacted layout)
+    // probes identical to the one-shot index (partition-pruned
+    // compacted layout)
     val queries = corpus.filter($"vec_id" >= 1000)
     assert(StreamingIvf.probe(spark, state, queries, k = 1, nProbe = 2)
       .collect().map(_.toString).sorted.toSeq ===
-      StreamingIvf.probe(spark, twin, queries, k = 1, nProbe = 2)
+      Similarity.ivfProbe(bc, ba, queries, k = 1, nProbe = 2)
         .collect().map(_.toString).sorted.toSeq)
     // appends continue into the published generation; replays no-op
-    for (st <- Seq(state, twin))
-      assert(StreamingIvf.appendBatch(spark, st,
-        corpus.filter($"vec_id" >= 130L), 8, 2L))
+    assert(StreamingIvf.appendBatch(spark, state,
+      corpus.filter($"vec_id" >= 130L), 8, 2L))
     assert(!StreamingIvf.appendBatch(spark, state,
       corpus.filter($"vec_id" >= 130L), 8, 2L))
     assert(genDirs("g1") === (1L to 2L).map(i => f"v$i%020d"))
     assert(clusterMap(StreamingIvf.readIndex(spark, state).get._2) ===
-      clusterMap(StreamingIvf.readIndex(spark, twin).get._2))
-    // the concurrency guard in pointer mode: the abort discards ONLY
+      clusterMap(oneShot(Long.MaxValue)._2))
+    // the concurrency guard: the abort discards ONLY
     // the staged target generation; the pointer never moves and the
     // concurrent append (in the live generation) is intact
     val e = intercept[RuntimeException] {
@@ -715,7 +625,7 @@ class StreamingIvfSpec extends SparkTestBase {
     for ((lo, hi, bid) <- Seq((0L, 60L, 0L), (60L, 130L, 1L), (130L, 2000L, 2L)))
       assert(StreamingIvf.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
-    val lists = new File(state, "lists")
+    val lists = liveLists(state)
     val applog = new File(lists, "applog")
     // an empty batch is a no-op for the index but its id is logged
     assert(!StreamingIvf.appendBatch(spark, state, corpus.limit(0), 8, 3L))
@@ -749,8 +659,8 @@ class StreamingIvfSpec extends SparkTestBase {
     for ((lo, hi, bid) <- Seq((0L, 60L, 0L), (60L, 130L, 1L), (130L, 2000L, 2L)))
       assert(StreamingIvf.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
-    val lists = new File(state, "lists")
-    val ff = new File(lists, "FRONTIER")
+    def lists = liveLists(state)
+    def ff = new File(lists, "FRONTIER")
     def frontier() = java.nio.file.Files.readString(ff.toPath).trim.toLong
     assert(frontier() === 2L)
     // the witness LAGS, never leads: a manually-regressed frontier
@@ -761,7 +671,7 @@ class StreamingIvfSpec extends SparkTestBase {
     assert(!StreamingIvf.appendBatch(spark, state,
       corpus.filter($"vec_id" >= 130L), 8, 2L))
     assert(frontier() === 2L, "the replay must re-advance the witness")
-    // compaction carries the witness into the new tree
+    // compaction carries the witness into the new generation
     assert(StreamingIvf.compact(spark, state))
     assert(frontier() === 2L)
     assert(StreamingIvf.appendBatch(spark, state,
@@ -811,7 +721,7 @@ class StreamingIvfSpec extends SparkTestBase {
     for ((lo, hi, bid) <- Seq((0L, 60L, 0L), (60L, 130L, 1L), (130L, 2000L, 2L)))
       assert(StreamingIvf.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
-    val lists = new File(state, "lists")
+    val lists = liveLists(state)
     // construct the legacy shape: strip the r15 witnesses and open an
     // interior hole exactly as a pre-r15 empty batch would have left
     // (v1 gone, no s1, nothing recording either)
@@ -852,8 +762,7 @@ class StreamingIvfSpec extends SparkTestBase {
       assert(StreamingIvf.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
     assert(!StreamingIvf.appendBatch(spark, state, corpus.limit(0), 8, 2L))
-    val lists = new File(state, "lists")
-    def vdirs() = lists.list().filter(_.startsWith("v")).sorted.toSeq
+    def vdirs() = liveLists(state).list().filter(_.startsWith("v")).sorted.toSeq
     assert(StreamingIvf.compact(spark, state))
     // the generation is named at the EMPTY frontier id, not the max dir
     assert(vdirs() === Seq(f"v${2L}%020d"))
@@ -882,7 +791,7 @@ class StreamingIvfSpec extends SparkTestBase {
     for ((lo, hi, bid) <- Seq((0L, 60L, 0L), (60L, 130L, 1L)))
       assert(StreamingIvf.appendBatch(spark, state,
         corpus.filter($"vec_id" >= lo && $"vec_id" < hi), 8, bid))
-    val lists = new File(state, "lists")
+    def lists = liveLists(state)
     def vdirs() = lists.list().filter(_.startsWith("v")).sorted.toSeq
     val e = intercept[RuntimeException] {
       StreamingIvf.compactImpl(spark, state, () => {
@@ -898,7 +807,7 @@ class StreamingIvfSpec extends SparkTestBase {
     assert(vdirs() === (0L to 2L).map(i => f"v$i%020d"))
     assert(new File(new File(lists, "applog"), f"v${2L}%020d").exists(),
       "the concurrent append's applog evidence must survive the abort")
-    assert(!new File(state, "lists.tmp").exists(),
+    assert(!new File(state, "lists/g1").exists(),
       "the aborted rewrite must be discarded")
     // served content covers every batch (nothing was lost)
     val served = clusterMap(StreamingIvf.readIndex(spark, state).get._2)

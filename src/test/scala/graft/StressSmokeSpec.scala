@@ -31,9 +31,7 @@ import graft.streaming.{StreamingBm25, StreamingIvf, StreamingIvfPq}
   * mirrored here at reduced counts. The one scale-coupled knob — the
   * matched-coarse kc — flows through [[StressConfigs.matchedKcFor]]
   * applied to this suite's toy base count, exactly as the harness
-  * applies it to `ann1mBases`; every other constant is used verbatim.
-  * MIGRATE's crash/seam depth lives in PointerMigrationSpec (also
-  * always-on); here the family's happy path runs end-to-end. */
+  * applies it to `ann1mBases`; every other constant is used verbatim. */
 class StressSmokeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -472,28 +470,25 @@ class StressSmokeSpec extends SparkTestBase {
       StressConfigs.streamNProbe, m, subLen, excludeSelf = true).count() > 0)
   }
 
-  smokeTest("IVFPQ_STREAM: 2 drains, 1 compact, 1 serve in BOTH swap modes with " +
-      "the exact stream config — the family that rotted r16-r18") {
-    for (ptrMode <- Seq(false, true)) {
-      val state = dirOf(s"pqstream-$ptrMode")
-      org.apache.commons.io.FileUtils.deleteQuietly(new File(state))
-      if (ptrMode) StreamingIvfPq.enablePointerMode(spark, state)
-      val (kc, m, subLen, kCb) = (StressConfigs.matchedKcFor(toyBases),
-        StressConfigs.streamM, StressConfigs.streamSubLen,
-        StressConfigs.streamKCb)
-      val half = (toyBases * toyVariants / 2).toLong
-      StreamingIvfPq.appendBatch(spark, state,
-        toyAnn.filter(col("vec_id") < half),
-        kc, m, subLen, kCb, 0L, pqRounds = StressConfigs.streamPqRounds)
-      StreamingIvfPq.appendBatch(spark, state,
-        toyAnn.filter(col("vec_id") >= half),
-        kc, m, subLen, kCb, 1L, pqRounds = StressConfigs.streamPqRounds)
-      StreamingIvfPq.compact(spark, state)
-      assert(StreamingIvfPq.probe(spark, state,
-        toyAnn.filter(col("vec_id") < 8), k = StressConfigs.annK,
-        nProbe = StressConfigs.streamNProbe, m, subLen,
-        excludeSelf = true).count() > 0, s"ptrMode=$ptrMode must serve")
-    }
+  smokeTest("IVFPQ_STREAM: 2 drains, 1 compact, 1 serve with the exact stream " +
+      "config — the family that rotted r16-r18") {
+    val state = dirOf("pqstream")
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(state))
+    val (kc, m, subLen, kCb) = (StressConfigs.matchedKcFor(toyBases),
+      StressConfigs.streamM, StressConfigs.streamSubLen,
+      StressConfigs.streamKCb)
+    val half = (toyBases * toyVariants / 2).toLong
+    StreamingIvfPq.appendBatch(spark, state,
+      toyAnn.filter(col("vec_id") < half),
+      kc, m, subLen, kCb, 0L, pqRounds = StressConfigs.streamPqRounds)
+    StreamingIvfPq.appendBatch(spark, state,
+      toyAnn.filter(col("vec_id") >= half),
+      kc, m, subLen, kCb, 1L, pqRounds = StressConfigs.streamPqRounds)
+    StreamingIvfPq.compact(spark, state)
+    assert(StreamingIvfPq.probe(spark, state,
+      toyAnn.filter(col("vec_id") < 8), k = StressConfigs.annK,
+      nProbe = StressConfigs.streamNProbe, m, subLen,
+      excludeSelf = true).count() > 0)
   }
 
   test("the rot tripwire: the configured streamPqRounds folds under the " +
@@ -596,43 +591,19 @@ class StressSmokeSpec extends SparkTestBase {
       nProbe = StressConfigs.sivfcNProbe).count() > 0)
   }
 
-  smokeTest("BM25INC: 2 folds, retrieve, compact, retrieve — in BOTH swap modes") {
+  smokeTest("BM25INC: 2 folds, retrieve, compact, retrieve") {
     val docs = Tables.documents(spark, dupDir).select(col("doc_id"), col("text"))
     val terms = Seq("spark", "vector", "customer")
-    for (ptrMode <- Seq(false, true)) {
-      val state = dirOf(s"bm25inc-$ptrMode")
-      org.apache.commons.io.FileUtils.deleteQuietly(new File(state))
-      if (ptrMode) Bm25Index.enablePointerMode(spark, state)
-      Bm25Index.appendBatch(spark, state, docs.filter(col("doc_id") < 500), 0L)
-      Bm25Index.appendBatch(spark, state, docs.filter(col("doc_id") >= 500), 1L)
-      val before = Bm25Index.retrieve(spark, state, terms)
-        .collect().map(_.toString).toSeq
-      Bm25Index.compact(spark, state)
-      val after = Bm25Index.retrieve(spark, state, terms)
-        .collect().map(_.toString).toSeq
-      assert(after === before, s"compaction must not change the ranking " +
-        s"(ptrMode=$ptrMode)")
-    }
-  }
-
-  smokeTest("MIGRATE: a live rename-mode IVF lists store migrates in place and " +
-      "serves identically (depth: PointerMigrationSpec)") {
-    val state = dirOf("migrate") + "/iv"
-    val half = (toyBases * toyVariants / 2).toLong
-    StreamingIvf.appendBatch(spark, state, toyAnn.filter(col("vec_id") < half),
-      StressConfigs.sivfcCentroids, 0L)
-    val qs = toyAnn.filter(col("vec_id") < 8)
-    val before = StreamingIvf.probe(spark, state, qs, StressConfigs.annK,
-      StressConfigs.sivfcNProbe).collect().map(_.toString).sorted.toSeq
-    StreamingIvf.migrateToPointerMode(spark, state)
-    val after = StreamingIvf.probe(spark, state, qs, StressConfigs.annK,
-      StressConfigs.sivfcNProbe).collect().map(_.toString).sorted.toSeq
-    assert(after === before)
-    StreamingIvf.appendBatch(spark, state, toyAnn.filter(col("vec_id") >= half),
-      StressConfigs.sivfcCentroids, 1L)
-    StreamingIvf.compact(spark, state)
-    assert(StreamingIvf.probe(spark, state, qs, StressConfigs.annK,
-      StressConfigs.sivfcNProbe).count() > 0)
+    val state = dirOf("bm25inc")
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(state))
+    Bm25Index.appendBatch(spark, state, docs.filter(col("doc_id") < 500), 0L)
+    Bm25Index.appendBatch(spark, state, docs.filter(col("doc_id") >= 500), 1L)
+    val before = Bm25Index.retrieve(spark, state, terms)
+      .collect().map(_.toString).toSeq
+    Bm25Index.compact(spark, state)
+    val after = Bm25Index.retrieve(spark, state, terms)
+      .collect().map(_.toString).toSeq
+    assert(after === before, "compaction must not change the ranking")
   }
 
   smokeTest("ALTERNATE: the 24/7 drain/compact shape through the REAL stream " +
