@@ -24,11 +24,11 @@ import org.apache.spark.sql.types._
   * `floor(x·1000)` quantization, so every stage is deterministic and
   * the oracle-checked `q_ann_pq` ([[graft.queries.VectorQueries]])
   * pins the seed-codebook configuration against DuckDB. Codebooks
-  * come either from [[seedCodebooks]] (deterministic: the k lowest
-  * vec_ids' subvectors — the oracle geometry) or [[trainedCodebooks]]
-  * (per-subspace Lloyd refinement via [[KMeans.fit]] — the production
-  * recall path; the PQ paper's estimator quality is a codebook
-  * property, measured in the 1M ablation, PLANS.md).
+  * come from [[seedCodebooks]] (deterministic: the k lowest vec_ids'
+  * subvectors — the oracle geometry); Lloyd-trained codebooks, the
+  * production recall path, are [[IvfPq]]'s `pqRounds > 0` (the PQ
+  * paper's estimator quality is a codebook property, measured in the
+  * 1M ablation, PLANS.md).
   */
 object ProductQuantizer {
 
@@ -53,21 +53,6 @@ object ProductQuantizer {
   def seedCodebooks(qvecs: DataFrame, m: Int, subLen: Int, k: Int): DataFrame =
     subRows(qvecs.filter(col("vec_id") < k), m, subLen)
       .select(col("vec_id").as("c_id"), col("sub"), col("sv").as("c_sv"))
-
-  /** Lloyd-refined codebooks: one independent [[KMeans.fit]] per
-    * subspace over the FLOAT subvector slices (fit quantizes
-    * internally with the same fixed-point map, so `c_sv` lands in the
-    * same integer units as [[subRows]]' `sv`). m small fits over
-    * 1/m-width slices — the training cost is one k-means of the full
-    * corpus width, split m ways. */
-  def trainedCodebooks(vecs: DataFrame, m: Int, subLen: Int, k: Int,
-      rounds: Int, mat: Materializer = Materializer.Local): DataFrame =
-    (0 until m).map { i =>
-      KMeans.fit(vecs.select(col("vec_id"),
-          slice(col("embedding"), i * subLen + 1, subLen).as("embedding")),
-        k, rounds, mat)
-        .select(lit(i).as("sub"), col("c_id"), col("cv").as("c_sv"))
-    }.reduce(_ unionByName _)
 
   /** Encode every vector as m codes `(vec_id, sub, code)` — exact-L2
     * argmin against the broadcast codebooks (min-struct aggregate
@@ -122,21 +107,6 @@ object ProductQuantizer {
       .withColumn("d2", d2(s, col("qv"), col("q_qv")))
     val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "d2")
-  }
-
-  /** Exact-L2 brute force over the full corpus (the recall oracle for
-    * ablations; corpus scored in place, queries broadcast). */
-  def exactL2TopK(s: SparkSession, qvecs: DataFrame, queries: DataFrame,
-      k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val scored = qvecs.crossJoin(broadcast(queries.select(col("q_id"),
-        col("qv").as("q_qv"))))
-      .withColumn("d2", d2(s, col("qv"), col("q_qv")))
-    val base = if (excludeSelf) scored.filter(col("vec_id") =!= col("q_id"))
-      else scored
-    val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id").asc)
-    base.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select("q_id", "rnk", "vec_id", "d2")
   }

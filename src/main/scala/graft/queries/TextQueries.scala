@@ -288,24 +288,13 @@ object TextQueries {
     // estimate's own jobs (measured 3.2 s vs 10.8 s at the 5k-doc
     // bench scale), so small corpora take the single-DAG plan
     // directly and the machinery below engages only where it can pay.
-    // graft.ppjoin.force=sparse|dense (sysprop, env fallback)
-    // overrides the estimate — an ops escape hatch for a misjudged
-    // corpus, and the A/B lever the 1M stress uses to measure both
-    // paths on the same corpus in one JVM.
     val nDocs = Tables.documents(s, dir).count()
-    val sparse = sys.props.get("graft.ppjoin.force")
-        .orElse(sys.env.get("GRAFT_PPJOIN_FORCE")) match {
-      case Some("sparse") => true
-      case Some("dense")  => false
-      case _ => nDocs >= 50000 && {
-        val hotSh = pfx.groupBy("sh").agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 2).select("sh")
-        val candDocEst = pfx.join(hotSh, Seq("sh"), "left_semi")
-          .select("doc_id").distinct().count()
-        if (sys.env.contains("GRAFT_PPJOIN_DEBUG")) // ops visibility knob
-          println(s"[ppjoin-debug] candDocEst=$candDocEst nDocs=$nDocs")
-        candDocEst * 4 <= nDocs
-      }
+    val sparse = nDocs >= 50000 && {
+      val hotSh = pfx.groupBy("sh").agg(count(lit(1)).as("n"))
+        .filter(col("n") >= 2).select("sh")
+      val candDocEst = pfx.join(hotSh, Seq("sh"), "left_semi")
+        .select("doc_id").distinct().count()
+      candDocEst * 4 <= nDocs
     }
     val (candJ, setsBase) =
       if (sparse) {

@@ -71,8 +71,11 @@ object VectorQueries {
     * pairwise cosine 0.51 at sf0.01 / 0.60 at sf0.1, no planted
     * duplicates) — hyperplane LSH's worst case, so pruning is modest
     * here; on a real near-dup corpus (cos ≥ 0.8, per-bit collision
-    * 0.80) wider bands (fewer, more bits — see [[embedNearDupWith]])
-    * prune >99% of pairs at >99% recall. */
+    * 0.80) wider bands (fewer, more bits, e.g. 4 × 16 bits = 65 536
+    * keys per band) prune >99% of pairs at >99% recall, because bucket
+    * sizes, and so the candidate volume Σ bucket², stay bounded by the
+    * true-duplicate mass rather than |corpus|²/2^bits (PLANS.md records
+    * that geometry on 100 000 vectors with planted duplicates). */
   private val nBands = 32
   private val bitsPerBand = 4
 
@@ -86,21 +89,9 @@ object VectorQueries {
     * buckets split by AQE). The sample (vec_id % 5 = 0) keeps the
     * oracle cheap; the production API is
     * [[graft.operators.Similarity.lshTopK]]. */
-  def embedNearDup(s: SparkSession, dir: String): DataFrame =
-    embedNearDupWith(s, dir, nBands, bitsPerBand, sampleMod = 5, minCosine = 0.25)
-
-  /** Parameterized form: band geometry is the scale knob. The oracle
-    * query uses (32 bands × 4 bits) tuned for recall on the isotropic
-    * test corpus at cos ≥ 0.25; a real near-dup corpus (cos ≥ 0.8)
-    * at 100× the size wants FEWER, WIDER bands (e.g. 4 × 16 bits =
-    * 65 536 keys/band) so bucket sizes — and the candidate volume,
-    * which is Σ bucket² — stay bounded by the true-duplicate mass
-    * rather than |corpus|²/2^bits. `StressMain` runs exactly that
-    * configuration against 100 000 vectors with planted duplicates. */
-  def embedNearDupWith(s: SparkSession, dir: String, nBands: Int,
-      bitsPerBand: Int, sampleMod: Int, minCosine: Double): DataFrame = {
+  def embedNearDup(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-      .filter(col("vec_id") % sampleMod === 0)
+      .filter(col("vec_id") % 5 === 0)
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
       .withColumn("n2", qdot(s, col("qv"), col("qv")))
     // All band keys in ONE native-kernel pass per vector
@@ -122,7 +113,7 @@ object VectorQueries {
       .withColumn("cosine",
         qdot(s, col("qv_a"), col("qv_b")).cast(DoubleType) /
           (sqrt(col("n2_a").cast(DoubleType)) * sqrt(col("n2_b").cast(DoubleType))))
-      .filter(col("cosine") >= minCosine)
+      .filter(col("cosine") >= 0.25)
       .select("id_a", "id_b", "cosine")
       .orderBy("id_a", "id_b")
   }

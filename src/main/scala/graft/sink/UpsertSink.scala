@@ -58,8 +58,8 @@ final class UpsertSink(spark: SparkSession, targetDir: String) {
     * 90%-one-key batch concentrates in a single task, and AQE cannot
     * split a window partition (the semantics need all of a key's
     * rows together). [[dedupBatchAgg]] is the skew-immune equivalent
-    * used under hot-key pressure; the StressMain `skew` section
-    * measures both. */
+    * used under hot-key pressure; PLANS.md ("Hot-key skew") records
+    * both at 2M rows. */
   def dedupBatch(batch: DataFrame, orderCol: String): DataFrame = {
     val w = Window.partitionBy(Consumption.key.map(col): _*)
       .orderBy(col(orderCol).desc)

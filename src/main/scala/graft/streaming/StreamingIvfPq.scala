@@ -202,7 +202,7 @@ object StreamingIvfPq {
       // smallest vec_ids' residual subvectors — the oracle-checked
       // driver config); pqRounds > 0 trains per-subspace Lloyd rounds
       // on the WHOLE first batch's residuals before freezing
-      // (VERDICT r14 #5 — the batch path's trainedCodebooks brought
+      // (VERDICT r14 #5 — the batch path's trained codebooks brought
       // to the streamed seeder). Both are deterministic functions of
       // the seed batch (smallest-id seeding throughout), so the
       // crash-window replay re-derives the identical pair.

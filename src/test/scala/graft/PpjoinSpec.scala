@@ -1,6 +1,15 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, collect_set}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.functions.{col, collect_set, length, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 
 import graft.functions.TextFunctions.shingleRows
 import graft.queries.TextQueries
@@ -61,5 +70,53 @@ class PpjoinSpec extends SparkTestBase {
     assert(got.exists { case (a, b, _) => a == 3L && b == 4L })
     assert(!got.exists { case (a, b, _) => a == 1L && b == 2L })
     for ((_, _, j) <- got) assert(j >= 0.7 - 1e-9)
+  }
+
+  test("sparse regime: 50 000 mostly salted docs take the checkpointed pair-frame " +
+      "plan and return exactly the planted pairs") {
+    // 100 planted pairs (10 tokens contained in the same 10 + 2, J = 8/10)
+    // and 50 decoy pairs (J = 6/10: they share a prefix shingle, so they
+    // reach verification, and must fail it); every other doc carries
+    // doc-unique salted tokens. 300 candidate docs of 50 000 is far
+    // under the estimate's 1/4 bound, so the input alone picks the
+    // sparse plan, whose verify join reads the checkpointed pair frame.
+    import spark.implicits._
+    def toks(prefix: String, n: Int) = (0 until n).map(j => s"$prefix$j").mkString(" ")
+    val planted = 100
+    val decoys = 50
+    val nDocs = 50000L
+    val decoyBase = 2L * planted
+    val docs = (0 until planted).flatMap(i => Seq(
+        2L * i -> toks(s"p${i}w", 10), (2L * i + 1) -> toks(s"p${i}w", 12))) ++
+      (0 until decoys).flatMap(i => Seq(
+        (decoyBase + 2 * i) -> toks(s"d${i}w", 10),
+        (decoyBase + 2 * i + 1) -> (toks(s"d${i}w", 8) + " " + toks(s"d${i}e", 2)))) ++
+      (decoyBase + 2 * decoys until nDocs).map(id => id -> toks(s"s${id}x", 6))
+    val dir = Fixtures.tempDir("ppjoin-sparse").toString
+    docs.toDF("doc_id", "text")
+      .withColumn("lang", lit("en"))
+      .withColumn("source", lit("t"))
+      .withColumn("n_chars", length(col("text")))
+      .coalesce(4).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+
+    val checkpointed = new ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpointed.add(qe.analyzed)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val got = TextQueries.dedupPpjoin(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(got === (0 until planted).map(i => (2L * i, 2L * i + 1, 8L, 0.8)).toSet)
+      // the verify plan joins the checkpointed candidate pairs: a
+      // localCheckpoint action whose plan reads a LogicalRDD (the dense
+      // plan's only checkpoint reads parquet alone)
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert(checkpointed.asScala.exists(_.exists(_.isInstanceOf[LogicalRDD])),
+          "the sparse branch was not taken")
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 }

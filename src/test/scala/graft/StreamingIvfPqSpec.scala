@@ -97,6 +97,11 @@ class StreamingIvfPqSpec extends SparkTestBase {
       .collect().map(_.toString).sorted.toSeq
     assert(served === direct && served.nonEmpty,
       "stored-state probe must be bit-identical to the in-memory probe")
+    // compacting the drained codes leaves the served probe unchanged
+    assert(StreamingIvfPq.compact(spark, state))
+    assert(StreamingIvfPq.probe(spark, state, queries, k = 3, nProbe = 2, m, subLen)
+      .collect().map(_.toString).sorted.toSeq === served,
+      "compaction after the drains changed the served probe")
   }
 
   test("appendBatch: replay no-ops; crashed write invisible and completed; empty batch no-op") {

@@ -100,6 +100,11 @@ class StreamingIvfSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     for (i <- 0 until 5) assert(top(1000L + i) == i.toLong,
       s"planted copy ${1000 + i} lost its original in the streamed index")
+    // compacting the drained lists leaves the served probe unchanged
+    assert(StreamingIvf.compact(spark, state))
+    assert(StreamingIvf.probe(spark, state, queries, k = 1, nProbe = 8)
+      .collect().map(_.toString).sorted.toSeq === fromBatch,
+      "compaction after the drains changed the served probe")
   }
 
   test("appendBatch: replayed batch id no-ops; crashed write is invisible " +

@@ -101,6 +101,22 @@ class UpsertSinkSpec extends SparkTestBase {
     try assert(canon(sink.dedupBatchAgg(batch, "ord")) ==
       canon(sink.dedupBatch(batch, "ord")))
     finally { batch.unpersist(); () }
+    // uniform: 2000 rows cycling through 200 keys, the order column
+    // unique, so both variants keep the same 200 winners; merging the
+    // deduped batch twice leaves the table as the first merge left it
+    val uniform = spark.range(2000L).select(
+      lit(Date.valueOf("2025-05-01")).as("date"),
+      concat(lit("C"), pmod(col("id"), lit(200L))).as("client_id"),
+      lit("Client").as("client_name"), lit("svc").as("service_name"),
+      col("id").as("total_consumed_tokens"), col("id").as("ord"))
+    val deduped = canon(sink.dedupBatchAgg(uniform, "ord"))
+    assert(deduped.size === 200)
+    assert(deduped == canon(sink.dedupBatch(uniform, "ord")))
+    assert(sink.merge(sink.dedupBatchAgg(uniform, "ord").drop("ord")) === 200)
+    val afterFirst = tableState(dir)
+    assert(sink.merge(sink.dedupBatchAgg(uniform, "ord").drop("ord")) === 200)
+    assert(tableState(dir) == afterFirst, "re-merge must be idempotent")
+    assert(afterFirst.values.toSet == (1800L until 2000L).toSet)
   }
 
   test("merge(batch, orderCol) dedups a duplicated batch deterministically") {
