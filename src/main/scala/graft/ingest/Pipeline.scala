@@ -2,8 +2,9 @@ package graft.ingest
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Observation, SparkSession}
 
 import graft.sink.UpsertSink
 import graft.util.Log
@@ -39,12 +40,37 @@ object Pipeline {
       message: String,
       processedDates: Seq[LocalDate],
       skippedDates: Seq[LocalDate],
-      rowsInTable: Long,
+      /** Batch keys written (inserted or updated), summed over the
+        * run's merges — the reference's `rows_inserted` (SURVEY.md A3). */
+      rowsUpserted: Long,
       /** One entry per successfully processed FILE (its date), in
         * processing order — the reference's `processed_files` list
         * (`src/db_operations.py:33,54`), which keeps duplicates when
         * a date has several files. */
-      processedFiles: Seq[LocalDate] = Nil)
+      processedFiles: Seq[LocalDate],
+      /** Rows read from the processed dates' files, and how many of
+        * them were dropped for an unparseable date. */
+      rowsIn: Long,
+      rowsNullDate: Long,
+      /** Dates recorded missing this run, and late dates (from the
+        * registry) processed this run. */
+      missingDates: Seq[LocalDate],
+      lateDates: Seq[LocalDate],
+      /** Wall milliseconds per phase, in run order. */
+      phaseMs: Seq[(String, Long)]) {
+
+    /** The run record: one JSON line of where the run's rows and time
+      * went. Every count comes from observations on jobs the run
+      * already ran. */
+    def record: String = {
+      def dates(ds: Seq[LocalDate]) = ds.map(d => jstr(d.toString)).mkString("[", ", ", "]")
+      val phases = phaseMs.map { case (p, ms) => s"${jstr(p)}: $ms" }.mkString("{", ", ", "}")
+      s"""{"event": "ingest_run", "files": ${processedFiles.size}, "rows_in": $rowsIn, """ +
+        s""""rows_null_date": $rowsNullDate, "rows_upserted": $rowsUpserted, """ +
+        s""""missing_dates": ${dates(missingDates)}, "late_dates": ${dates(lateDates)}, """ +
+        s""""phase_ms": $phases}"""
+    }
+  }
 
   /** HTTP-shaped response envelope (reference contract:
     * `/root/reference/src/lambda_handler.py:79-102` — 200 + JSON body
@@ -57,11 +83,13 @@ object Pipeline {
   private def jstr(s: String): String = graft.util.Json.str(s)
 
   /** Run with the reference's handler semantics: log the run's
-    * progress and wrap the result (`lambda_handler.py:37-106`). */
+    * progress and wrap the result (`lambda_handler.py:37-106`). Logs
+    * the run record ([[RunResult.record]]) as one JSON line. */
   def handle(spark: SparkSession, cfg: Config): Response = {
     Log.init()
     try {
       val r = run(spark, cfg)
+      log.info(r.record)
       if (r.processedDates.isEmpty && r.skippedDates.isEmpty)
         Response(200, jstr(r.message))
       else {
@@ -85,18 +113,28 @@ object Pipeline {
     val checkpoint = new Checkpoint(spark, cfg.checkpointDir, cfg.defaultDate)
     val registry = new LateRegistry(spark, cfg.registryDir, cfg.horizonDays)
     val sink = new UpsertSink(spark, cfg.targetDir)
+    val phaseMs = mutable.LinkedHashMap.empty[String, Long]
+    def timed[A](phase: String)(body: => A): A = {
+      val t0 = System.nanoTime()
+      try body
+      finally phaseMs(phase) = phaseMs.getOrElse(phase, 0L) + (System.nanoTime() - t0) / 1000000
+    }
 
-    val ckpt = checkpoint.read()
-    log.info(s"Last processed date: ${checkpoint.format(ckpt)}")
-    val late = registry.read()
-    val disc = Discovery.discover(spark, cfg.prefix, ckpt, cfg.today, late)
-    registry.add(disc.missingDates)
-    if (disc.missingDates.nonEmpty)
-      log.info(s"Recorded ${disc.missingDates.size} missing date(s)")
+    val (ckpt, late) = timed("control") {
+      val c = checkpoint.read()
+      log.info(s"Last processed date: ${checkpoint.format(c)}")
+      (c, registry.read())
+    }
+    val disc = timed("discovery")(Discovery.discover(spark, cfg.prefix, ckpt, cfg.today, late))
+    val missing = disc.missingDates.toSeq.sorted
+    timed("control")(registry.add(disc.missingDates))
+    if (missing.nonEmpty)
+      log.info(s"Recorded ${missing.size} missing date(s)")
 
     if (disc.files.isEmpty) {
       log.info("No new files to process")
-      return RunResult("No new files to process", Nil, Nil, sink.read().count())
+      return RunResult("No new files to process", Nil, Nil, 0L, Nil, 0L, 0L, missing, Nil,
+        phaseMs.toSeq)
     }
     log.info(s"Found ${disc.files.size} files to process")
 
@@ -104,16 +142,21 @@ object Pipeline {
     var processed = Vector.empty[LocalDate]
     var processedFiles = Vector.empty[LocalDate]
     var skipped = Vector.empty[LocalDate]
+    var rowsIn, rowsNullDate, rowsUpserted = 0L
     var halted = false
-    for ((date, files) <- byDate if !halted) {
+    for ((date, files) <- byDate if !halted) timed("merge") {
       try {
-        val batch = CsvIngest.ingestWithProvenance(spark, files.map(_.path))
-        val partRows =
-          sink.merge(sink.dedupBatch(batch, "_file_order").drop("_file_order"))
+        val counts = Observation()
+        val batch = CsvIngest.ingestWithProvenance(spark, files.map(_.path), Some(counts))
+        val merged = sink.merge(batch, "_file_order")
+        val read = counts.get
+        rowsIn += read("rows_in").asInstanceOf[Long]
+        rowsNullDate += read("rows_null_date").asInstanceOf[Long]
+        rowsUpserted += merged.upserted
         processed :+= date
         processedFiles ++= files.map(_ => date)
         log.info(s"Processed date $date (${files.size} file(s)); " +
-          s"$partRows row(s) in touched partition(s)")
+          s"${merged.partitionRows} row(s) in touched partition(s)")
       } catch {
         case e: CsvIngest.SchemaViolation =>
           // E2 intent: schema-invalid file halts the rest of the run.
@@ -127,20 +170,20 @@ object Pipeline {
       }
     }
 
-    // T6: checkpoint covers only the clean prefix of candidate dates —
-    // a skipped date caps how far the checkpoint may advance.
-    val firstSkipped = skipped.sorted.headOption
-    val advanceTo = firstSkipped match {
-      case Some(bad) => processed.filter(_.isBefore(bad)).sorted.lastOption
-      case None => processed.sorted.lastOption
+    timed("commit") {
+      // T6: checkpoint covers only the clean prefix of candidate dates —
+      // a skipped date caps how far the checkpoint may advance.
+      val firstSkipped = skipped.sorted.headOption
+      val advanceTo = firstSkipped match {
+        case Some(bad) => processed.filter(_.isBefore(bad)).sorted.lastOption
+        case None => processed.sorted.lastOption
+      }
+      advanceTo.foreach(checkpoint.advance)
+      registry.commit(processed.toSet, cfg.today)
     }
-    advanceTo.foreach(checkpoint.advance)
-    registry.commit(processed.toSet, cfg.today)
 
-    // whole-table count ONCE per run (merge returns only the touched
-    // partitions' count — bounded per merge; this is the unbounded one)
-    val rows = sink.read().count()
-    RunResult(s"Processed ${processed.size} date(s)", processed, skipped, rows,
-      processedFiles)
+    RunResult(s"Processed ${processed.size} date(s)", processed, skipped, rowsUpserted,
+      processedFiles, rowsIn, rowsNullDate, missing, processed.filter(late.contains),
+      phaseMs.toSeq)
   }
 }

@@ -250,9 +250,9 @@ object AnalyticsQueries {
     * Scale: the horizon cut is a 1-row scalar aggregate broadcast
     * into the filter (never collected); first-seen is one window
     * over the (user_id, event_type) key — same shape as sessionize;
-    * under a hot key the `max_by`/`min_by` aggregation form
-    * ([[graft.sink.UpsertSink.dedupBatchAgg]]) is the drop-in
-    * skew-immune variant. */
+    * under a hot key the `max_by`/`min_by` aggregation form (the
+    * shape [[graft.sink.UpsertSink]]'s merge aggregates with) is the
+    * drop-in skew-immune variant. */
   def watermarkDedup(s: SparkSession, dir: String): DataFrame = {
     val horizonUs = 30L * 86400L * 1000000L
     val ev = IngestQueries.events(s, dir)

@@ -131,10 +131,9 @@ object JdbcUpsertWriter {
     } finally conn.close()
   }
 
-  /** Write `df` (already deduplicated per key — see
-    * [[UpsertSink.dedupBatch]]) through the executor in batches of
-    * `batchSize` rows per round-trip, binding parameters in
-    * `statement.binds` order. Returns rows written. */
+  /** Write `df` (already deduplicated per key) through the executor
+    * in batches of `batchSize` rows per round-trip, binding parameters
+    * in `statement.binds` order. Returns rows written. */
   def write(df: DataFrame, execute: Batch => Unit, batchSize: Int = 500,
       statement: UpsertStatement = postgres): Long = {
     val cols = Consumption.expectedColumns

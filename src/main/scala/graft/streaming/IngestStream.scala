@@ -80,10 +80,10 @@ object IngestStream {
       .filter(col("date").isNotNull)
   }
 
-  /** The upsert pipeline: every micro-batch is deduplicated to one
-    * row per (date, client_id) — last writer by (file modification
-    * time, path), the same leading order as the batch path — and
-    * merged idempotently into the target table. A retried micro-batch
+  /** The upsert pipeline: every micro-batch is merged idempotently
+    * into the target table, one row per (date, client_id) — last
+    * writer by (file modification time, path), the same leading order
+    * as the batch path; an empty micro-batch writes nothing. A retried micro-batch
     * therefore picks the SAME winner per key across files (T5; a bare
     * `monotonically_increasing_id` would be partition-layout-
     * dependent). Duplicate keys WITHIN one file tie — see
@@ -98,9 +98,7 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          sink.merge(sink.dedupBatch(batch, "_file_order").drop("_file_order"))
-        }
+        sink.merge(batch, "_file_order")
         ()
       }
       .start()

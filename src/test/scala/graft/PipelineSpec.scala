@@ -1,7 +1,13 @@
 package graft
 
 import java.time.LocalDate
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Pipeline
@@ -35,6 +41,8 @@ class PipelineSpec extends SparkTestBase {
     val r1 = Pipeline.run(spark, c)
     assert(r1.processedDates.map(_.toString) ==
       Seq("2025-05-01", "2025-05-02", "2025-05-03"))
+    // every fixture row parses and is its own key
+    assert((r1.rowsIn, r1.rowsNullDate, r1.rowsUpserted) == ((29L, 0L, 29L)))
 
     val table = spark.read.parquet(c.targetDir)
     // 8 stable clients x 3 days + CLI009, CLI010 (day1) + CLI011 (day2)
@@ -57,7 +65,7 @@ class PipelineSpec extends SparkTestBase {
     // in the log, like the reference (`lambda_handler.py:83`)
     val (r2, logs) = capturingLogs(Pipeline.run(spark, c))
     assert(r2.message == "No new files to process")
-    assert(r2.rowsInTable == 29)
+    assert(r2.rowsUpserted == 0)
     assert(logs.exists { case (lvl, m) => lvl == "INFO" && m == "No new files to process" })
     assert(logs.exists { case (_, m) => m.startsWith("Last processed date: 2025_05_03") })
   }
@@ -71,11 +79,22 @@ class PipelineSpec extends SparkTestBase {
       Seq(Fixtures.clientRow("2025-05-01", 99, "Z", "9")), "part-1.csv")
     val c = cfg(base, "2025-05-04")
 
-    val ok = Pipeline.handle(spark, c)
+    // …plus a row whose date no format parses
+    Fixtures.writeDay(base.resolve("data"), "2025_05_01",
+      Seq("not-a-date,CLI098,Client 98,Z,1"), "part-2.csv")
+    val (ok, okLogs) = capturingLogs(Pipeline.handle(spark, c))
     assert(ok.statusCode == 200)
-    assert(ok.body.contains("\"message\": \"Successfully processed 4 files\""))
-    assert(ok.body.contains(
-      "\"processed_dates\": [\"2025_05_01\", \"2025_05_01\", \"2025_05_02\", \"2025_05_03\"]"))
+    // the run record: fixture rows + CLI099 read, the bad date dropped,
+    // one upserted row per distinct key, 05-04 recorded missing
+    val record = okLogs.collect { case ("INFO", m) if m.startsWith("{\"event\": \"ingest_run\"") => m }
+    assert(record.size == 1)
+    assert(record.head.contains(
+      "\"files\": 5, \"rows_in\": 31, \"rows_null_date\": 1, \"rows_upserted\": 30, " +
+        "\"missing_dates\": [\"2025-05-04\"], \"late_dates\": [], \"phase_ms\": {\"control\": "))
+    assert(Seq("discovery", "merge", "commit").forall(p => record.head.contains(s"\"$p\": ")))
+    assert(ok.body.contains("\"message\": \"Successfully processed 5 files\""))
+    assert(ok.body.contains("\"processed_dates\": " +
+      "[\"2025_05_01\", \"2025_05_01\", \"2025_05_01\", \"2025_05_02\", \"2025_05_03\"]"))
 
     val noop = Pipeline.handle(spark, c)
     assert(noop == Pipeline.Response(200, "\"No new files to process\""))
@@ -106,6 +125,7 @@ class PipelineSpec extends SparkTestBase {
     Fixtures.writeDay(data, "2025_05_02", Seq(Fixtures.clientRow("2025-05-02", 1, "A", "2")))
     val r2 = Pipeline.run(spark, c)
     assert(r2.processedDates.map(_.toString) == Seq("2025-05-02"))
+    assert(r2.lateDates.map(_.toString) == Seq("2025-05-02"))
     assert(!new graft.ingest.LateRegistry(spark, c.registryDir).read()
       .map(_.toString).contains("2025-05-02"))
     val table = spark.read.parquet(c.targetDir)
@@ -134,6 +154,92 @@ class PipelineSpec extends SparkTestBase {
     // halted: 05-03 not processed, checkpoint stuck at 05-01
     val ck = new graft.ingest.Checkpoint(spark, c.checkpointDir, c.defaultDate)
     assert(ck.read().toString == "2025-05-01")
+  }
+
+  /** Day 05-01: `part-0.csv` with the standard header and eight rows,
+    * beside a smaller second file written by `second`. The larger
+    * file's header is the one Spark would take for the whole dataset. */
+  private def dayWithSecondFile(tag: String, second: String) = {
+    val base = Fixtures.tempDir(tag)
+    val data = base.resolve("data")
+    Fixtures.writeDay(data, "2025_05_01",
+      (1 to 8).map(i => Fixtures.clientRow("2025-05-01", i, "API Gateway", (i * 100).toString)))
+    java.nio.file.Files.writeString(
+      data.resolve("consumption_2025_05_01").resolve("part-1.csv"), second)
+    (base, cfg(base, "2025-05-01"))
+  }
+
+  test("per-file headers: a reordered header is read by name; a header-only file adds no rows") {
+    val (base, c) = dayWithSecondFile("reorder",
+      "client_id,date,total_consumed_tokens,service_name,client_name\n" +
+        "CLI020,2025-05-01,2000,Search,Client 20\n" +
+        "CLI021,2025-05-01,2100,Vision,Client 21")
+    java.nio.file.Files.writeString(
+      base.resolve("data/consumption_2025_05_01/part-2.csv"), Fixtures.header + "\n")
+    val r = Pipeline.run(spark, c)
+    assert(r.processedDates.map(_.toString) == Seq("2025-05-01"))
+    val got = spark.read.parquet(c.targetDir)
+      .filter(col("client_id").isin("CLI020", "CLI021")).collect()
+      .map(row => (row.getAs[String]("client_id"), row.getAs[java.sql.Date]("date").toString,
+        row.getAs[String]("client_name"), row.getAs[String]("service_name"),
+        row.getAs[Long]("total_consumed_tokens"))).sortBy(_._1).toSeq
+    assert(got == Seq(
+      ("CLI020", "2025-05-01", "Client 20", "Search", 2000L),
+      ("CLI021", "2025-05-01", "Client 21", "Vision", 2100L)))
+    assert(spark.read.parquet(c.targetDir).count() == 10)
+  }
+
+  test("a file missing columns halts the run and the error names it, beside a complete file") {
+    val (_, c) = dayWithSecondFile("partial",
+      "date,client_id,client_name,service_name\n2025-05-01,CLI020,Client 20,Search")
+    val (r, logs) = capturingLogs(Pipeline.run(spark, c))
+    assert(r.processedDates.isEmpty)
+    assert(r.skippedDates.map(_.toString) == Seq("2025-05-01"))
+    assert(logs.exists { case (lvl, m) =>
+      lvl == "ERROR" && m.startsWith("Schema violation on 2025-05-01, halting run") &&
+        m.contains("total_consumed_tokens") && m.contains("part-1.csv") })
+    assert(!new java.io.File(c.targetDir).exists, "nothing of the day may be loaded")
+  }
+
+  test("one new day runs at most 6 Spark jobs, and none after the merge's write") {
+    val base = Fixtures.tempDir("jobs")
+    Fixtures.writeLayout(base.resolve("data"))
+    val c = cfg(base, "2025-05-02")
+    Pipeline.run(spark, c) // the table holds 05-01 and 05-02
+    // ("job", its SQL execution id) or ("exec" | "write", execution id)
+    val events = new ConcurrentLinkedQueue[(String, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val exec = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        events.add("job" -> exec.fold(-1L)(_.toLong))
+        ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val kind =
+            if (s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand")) "write"
+            else "exec"
+          events.add(kind -> s.executionId)
+          ()
+        case _ =>
+      }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val r =
+      try {
+        val r = Pipeline.run(spark, c.copy(today = LocalDate.parse("2025-05-03")))
+        ListenerBusDrain(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(r.processedDates.map(_.toString) == Seq("2025-05-03"))
+    val seen = events.asScala.toSeq
+    val jobs = seen.count(_._1 == "job")
+    assert(jobs <= 6, s"$jobs jobs: $seen")
+    val write = seen.lastIndexWhere(_._1 == "write")
+    assert(write >= 0, s"no write execution: $seen")
+    assert(seen.drop(write + 1).forall(_ == ("job" -> seen(write)._2)),
+      s"a job or execution ran after the merge's write: $seen")
   }
 
   test("checkpoint is monotonic") {

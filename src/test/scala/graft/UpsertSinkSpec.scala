@@ -1,14 +1,24 @@
 package graft
 
 import java.sql.Date
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.sink.UpsertSink
 
 class UpsertSinkSpec extends SparkTestBase {
   import spark.implicits._
+
+  private object ScanRoots extends AdaptiveSparkPlanHelper
 
   private def batchDf(rows: Seq[(String, String, Long)]) =
     rows.map { case (d, c, t) =>
@@ -72,57 +82,47 @@ class UpsertSinkSpec extends SparkTestBase {
       ("2025-05-02", "D") -> 4L, ("2025-05-03", "C") -> 3L))
   }
 
-  test("dedupBatch: deterministic last-writer-wins, not dropDuplicates") {
-    val dir = Fixtures.tempDir("sink3").resolve("t").toString
+  test("merge reads only the batch's date partitions; an empty batch writes nothing") {
+    val dir = Fixtures.tempDir("sinkscan").resolve("t").toString
     val sink = new UpsertSink(spark, dir)
-    val dup = batchDf(Seq(
-      ("2025-05-01", "A", 1L), ("2025-05-01", "A", 7L), ("2025-05-01", "A", 3L)))
-      .withColumn("ord", col("total_consumed_tokens"))
-    val out = sink.dedupBatch(dup, "ord").drop("ord").collect()
-    assert(out.length == 1)
-    assert(out(0).getAs[Long]("total_consumed_tokens") == 7L)
-  }
+    sink.merge(batchDf(Seq(
+      ("2025-05-01", "A", 1L), ("2025-05-02", "B", 2L), ("2025-05-03", "C", 3L))))
+    val roots = new ConcurrentLinkedQueue[Path]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        ScanRoots.collect(qe.executedPlan) { case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.foreach(roots.add)
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val merged =
+      try {
+        val m = sink.merge(batchDf(Seq(("2025-05-02", "B", 20L), ("2025-05-04", "D", 4L))))
+        ListenerBusDrain(spark.sparkContext)
+        m
+      } finally spark.listenerManager.unregister(listener)
+    // the existing side is the one batch date that is in the table; the
+    // table root (a whole-table listing) is never scanned
+    assert(roots.asScala.map(_.getName).toSet == Set("date=2025-05-02"))
+    assert(roots.asScala.forall(_.getParent.getName == "t"))
+    assert(merged == UpsertSink.Merged(partitionRows = 2, upserted = 2))
+    assert(tableState(dir) == Map(
+      ("2025-05-01", "A") -> 1L, ("2025-05-02", "B") -> 20L,
+      ("2025-05-03", "C") -> 3L, ("2025-05-04", "D") -> 4L))
 
-  test("dedupBatchAgg (skew-immune max_by) matches window dedupBatch") {
-    val dir = Fixtures.tempDir("sink4").resolve("t").toString
-    val sink = new UpsertSink(spark, dir)
-    // hot key: client H gets 90 of 100 rows; unique order column, so
-    // both variants must pick the identical winner per key
-    val rows = (0 until 90).map(i => ("2025-05-01", "H", i.toLong)) ++
-      (0 until 10).map(i => ("2025-05-02", s"U$i", 1000L + i))
-    val batch = batchDf(rows)
-      .withColumn("ord", monotonically_increasing_id())
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.drop("ord").collect()
-        .map(r => (r.getAs[Date]("date").toString, r.getAs[String]("client_id"),
-          r.getAs[Long]("total_consumed_tokens"))).sortBy(t => (t._1, t._2)).toSeq
-    // persist so both consumers see the same monotonic ids
-    batch.persist(); batch.count()
-    try assert(canon(sink.dedupBatchAgg(batch, "ord")) ==
-      canon(sink.dedupBatch(batch, "ord")))
-    finally { batch.unpersist(); () }
-    // uniform: 2000 rows cycling through 200 keys, the order column
-    // unique, so both variants keep the same 200 winners; merging the
-    // deduped batch twice leaves the table as the first merge left it
-    val uniform = spark.range(2000L).select(
-      lit(Date.valueOf("2025-05-01")).as("date"),
-      concat(lit("C"), pmod(col("id"), lit(200L))).as("client_id"),
-      lit("Client").as("client_name"), lit("svc").as("service_name"),
-      col("id").as("total_consumed_tokens"), col("id").as("ord"))
-    val deduped = canon(sink.dedupBatchAgg(uniform, "ord"))
-    assert(deduped.size === 200)
-    assert(deduped == canon(sink.dedupBatch(uniform, "ord")))
-    assert(sink.merge(sink.dedupBatchAgg(uniform, "ord").drop("ord")) === 200)
-    val afterFirst = tableState(dir)
-    assert(sink.merge(sink.dedupBatchAgg(uniform, "ord").drop("ord")) === 200)
-    assert(tableState(dir) == afterFirst, "re-merge must be idempotent")
-    assert(afterFirst.values.toSet == (1800L until 2000L).toSet)
+    val emptyDir = Fixtures.tempDir("sinkempty").resolve("t").toString
+    val empty = new UpsertSink(spark, emptyDir)
+    assert(empty.merge(batchDf(Nil).withColumn("ord", lit(1L)), "ord") ==
+      UpsertSink.Merged(0, 0))
+    assert(!empty.exists, "an empty batch must not create the table")
   }
 
   test("merge(batch, orderCol) dedups a duplicated batch deterministically") {
     // ADVICE r7: the 1-arg merge CONTRACT requires one row per key;
     // the 2-arg overload must make a raw duplicated batch safe by
-    // applying the skew-immune dedup itself — highest orderCol wins.
+    // deduplicating itself — highest orderCol wins.
     val dir = Fixtures.tempDir("sink5").resolve("t").toString
     val sink = new UpsertSink(spark, dir)
     val dup = batchDf(Seq(
@@ -137,6 +137,33 @@ class UpsertSinkSpec extends SparkTestBase {
       .withColumn("ord", col("total_consumed_tokens")), "ord")
     assert(tableState(dir) == Map(
       ("2025-05-01", "A") -> 11L, ("2025-05-01", "B") -> 2L))
+
+    // hot key: client H gets 90 of 100 rows; the greatest order value
+    // wins even where it is not the greatest token count
+    val hotDir = Fixtures.tempDir("sinkhot").resolve("t").toString
+    val rows = (0 until 90).map(i => ("2025-05-01", "H", (i * 7 % 90).toLong)) ++
+      (0 until 10).map(i => ("2025-05-02", s"U$i", 1000L + i))
+    val hot = new UpsertSink(spark, hotDir)
+    assert(hot.merge(batchDf(rows).withColumn("ord", monotonically_increasing_id()), "ord") ==
+      UpsertSink.Merged(11, 11))
+    assert(tableState(hotDir) == (Map(("2025-05-01", "H") -> (89L * 7 % 90)) ++
+      (0 until 10).map(i => ("2025-05-02", s"U$i") -> (1000L + i))))
+
+    // uniform: 2000 rows cycling through 200 keys, the order column
+    // unique, so the last 200 rows win; merging the batch again leaves
+    // the table as the first merge left it
+    val uniDir = Fixtures.tempDir("sinkuni").resolve("t").toString
+    val uni = new UpsertSink(spark, uniDir)
+    val uniform = spark.range(2000L).select(
+      lit(Date.valueOf("2025-05-01")).as("date"),
+      concat(lit("C"), pmod(col("id"), lit(200L))).as("client_id"),
+      lit("Client").as("client_name"), lit("svc").as("service_name"),
+      col("id").as("total_consumed_tokens"), col("id").as("ord"))
+    assert(uni.merge(uniform, "ord") == UpsertSink.Merged(200, 200))
+    val afterFirst = tableState(uniDir)
+    assert(uni.merge(uniform, "ord") == UpsertSink.Merged(200, 200))
+    assert(tableState(uniDir) == afterFirst, "re-merge must be idempotent")
+    assert(afterFirst.values.toSet == (1800L until 2000L).toSet)
   }
 
   test("property: sequential merges == merge of per-key-latest (upsert fold)") {
@@ -149,10 +176,9 @@ class UpsertSinkSpec extends SparkTestBase {
     val prop = Prop.forAllNoShrink(batchesGen) { batches =>
       val dirSeq = Fixtures.tempDir("prop").resolve("seq").toString
       val sinkSeq = new UpsertSink(spark, dirSeq)
-      // merging batch-by-batch (each pre-deduped to its last row per key)…
+      // merging batch-by-batch (each deduped to its last row per key)…
       batches.filter(_.nonEmpty).foreach { b =>
-        val df = batchDf(b).withColumn("ord", monotonically_increasing_id())
-        sinkSeq.merge(sinkSeq.dedupBatch(df, "ord").drop("ord"))
+        sinkSeq.merge(batchDf(b).withColumn("ord", monotonically_increasing_id()), "ord")
       }
       // …must equal the overall last-writer-wins of the concatenation.
       val all = batches.flatten
