@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * the Hadoop FileSystem API directly (works unchanged on file://,
   * hdfs://, s3a://) — no Spark job for a 10-byte read. The DATA-side
   * equivalent at scale is Structured Streaming's checkpointLocation
-  * (see [[graft.stream.IngestStream]]); this class exists for the
+  * (see [[graft.streaming.IngestStream]]); this class exists for the
   * batch pipeline and for parity with the reference's observable
   * state.
   */

@@ -16,12 +16,52 @@ import org.apache.spark.sql.SparkSession
   * files/day (SURVEY.md §2.6 O2); deliberately NOT reproduced.
   *
   * At scale, the streaming path replaces all of this with the file
-  * source's input log ([[graft.stream.IngestStream]]); this batch
+  * source's input log ([[graft.streaming.IngestStream]]), over the
+  * directories [[horizonGlob]] names; this batch
   * variant exists for reference parity and for backfills, where the
   * per-date directory probe is exactly a partition-pruned scan.
   */
 object Discovery {
   private val fmt = DateTimeFormatter.ofPattern("yyyy_MM_dd")
+  private val dirPrefix = "consumption_"
+
+  /** The late-data horizon (reference `src/s3_processor.py:179-180`):
+    * a day more than this many days behind the newest is never
+    * ingested. [[LateRegistry]] expires its dates by it, the streaming
+    * watermarks trail by it, and [[horizonGlob]] bounds the streaming
+    * source by it. A bound above 31 days names more than 32
+    * directories, past Spark's serial-listing threshold
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`), and
+    * brings back the parallel listing job on every trigger. */
+  final val HorizonDays = 30
+
+  /** The landing directory of day `d`: `consumption_yyyy_MM_dd`. */
+  private def dirName(d: LocalDate): String = dirPrefix + d.format(fmt)
+
+  /** The day a landing directory is named for, if the name is one. */
+  private def dateOf(dirName: String): Option[LocalDate] =
+    if (!dirName.startsWith(dirPrefix)) None
+    else scala.util.Try(LocalDate.parse(dirName.stripPrefix(dirPrefix), fmt)).toOption
+
+  /** The streaming source's path: the landing directories of the newest
+    * day N under `prefix` and the [[HorizonDays]] days before it, as one
+    * brace glob (`prefix/consumption_{N-30,…,N}`); the plain
+    * `prefix/consumption_*` when no dated directory exists. Finding N is
+    * one Hadoop FileSystem `globStatus`, no Spark job; reading at most 31
+    * directories keeps Spark's file index under its serial-listing
+    * threshold, so a trigger lists no more than can still be ingested. */
+  def horizonGlob(spark: SparkSession, prefix: String): String = {
+    val all = s"$prefix/$dirPrefix*"
+    val base = new Path(all)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // globStatus may return null rather than an empty array
+    val newest = Option(fs.globStatus(base)).toSeq.flatten
+      .filter(_.isDirectory).flatMap(st => dateOf(st.getPath.getName)).maxOption
+    newest.fold(all) { n =>
+      (HorizonDays to 0 by -1).map(k => n.minusDays(k.toLong).format(fmt))
+        .mkString(s"$prefix/$dirPrefix{", ",", "}")
+    }
+  }
 
   final case class FileInfo(path: String, date: LocalDate, size: Long, lastModified: Long)
   final case class Result(files: Seq[FileInfo], foundDates: Set[LocalDate],
@@ -45,7 +85,7 @@ object Discovery {
     val found = Set.newBuilder[LocalDate]
     val missing = Set.newBuilder[LocalDate]
     for (d <- dates) {
-      val dir = new Path(base, s"consumption_${d.format(fmt)}")
+      val dir = new Path(base, dirName(d))
       // Only a genuinely ABSENT directory means "date missing"; any
       // other listing fault (permissions, transient store error) must
       // PROPAGATE — classifying it as missing would park the date in

@@ -10,14 +10,16 @@ import org.apache.spark.sql.SparkSession
 /** The reference's missing-dates registry (SURVEY.md §2.1 S6/S9,
   * §2.2 P6/P7, §2.3 J1/J2, §2.7 U1/U2, §2.10 E6): dates whose file
   * has not arrived yet, re-probed every run, expired after the
-  * 30-day late-data horizon (`src/s3_processor.py:160-188`).
+  * late-data horizon, [[Discovery.HorizonDays]]
+  * (`src/s3_processor.py:160-188`).
   *
   * E6 fix (SURVEY.md §2.10): the reference removes a found date
   * BEFORE processing succeeds, so a found-but-failed file can fall
   * behind the checkpoint forever. Here `commit` removes only dates
   * that actually processed.
   */
-final class LateRegistry(spark: SparkSession, dir: String, horizonDays: Int = 30) {
+final class LateRegistry(spark: SparkSession, dir: String,
+    horizonDays: Int = Discovery.HorizonDays) {
   private val fmt = DateTimeFormatter.ofPattern("yyyy_MM_dd")
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -34,7 +34,7 @@ object Pipeline {
       targetDir: String,
       defaultDate: String,
       today: LocalDate,
-      horizonDays: Int = 30)
+      horizonDays: Int = Discovery.HorizonDays)
 
   final case class RunResult(
       message: String,

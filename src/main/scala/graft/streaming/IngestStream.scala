@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.ingest.CsvIngest
+import graft.ingest.{CsvIngest, Discovery}
 import graft.model.Consumption
 import graft.sink.UpsertSink
 
@@ -18,9 +18,14 @@ import graft.sink.UpsertSink
   *    run-to-completion per invocation, the Lambda poll analogue).
   *  - T2 offset tracking → `checkpointLocation` (offsets WAL).
   *  - T3 late-file registry → the file source discovers files in any
-  *    arrival order; no registry needed.
-  *  - T4 30-day horizon → `withWatermark("event_time", "30 days")` on
-  *    the windowed aggregation path.
+  *    arrival order; no registry needed. Files already seen are
+  *    skipped by path through the source's input log.
+  *  - T4 30-day horizon → every query reads only the landing
+  *    directories of the newest day and the 30 days before it
+  *    ([[Discovery.horizonGlob]], fixed when the query starts), so a
+  *    file more than 30 days late is never read and a trigger lists
+  *    at most 31 directories whatever the history; the rollup and the
+  *    dedup also trail a `withWatermark("event_time", "30 days")`.
   *  - T5 exactly-once effect → `foreachBatch` + idempotent keyed
   *    merge ([[UpsertSink]]); a retried micro-batch converges.
   *  - T6 in-order fail-stop → micro-batch ordering is native; a
@@ -28,8 +33,12 @@ import graft.sink.UpsertSink
   */
 object IngestStream {
 
+  /** The event-time watermark delay of the rollup and the dedup. */
+  private val horizon = s"${Discovery.HorizonDays} days"
+
   /** Streaming CSV source over the date-partitioned directory layout
-    * (csv files under each `consumption_YYYY_MM_DD` dir). Explicit schema (a
+    * (csv files under each `consumption_YYYY_MM_DD` dir inside the
+    * late-data horizon, [[Discovery.horizonGlob]]). Explicit schema (a
     * streaming source requires one — and so does 100 TB), then the
     * same validated parse stage as batch. */
   def source(spark: SparkSession, prefix: String, maxFilesPerTrigger: Int = 1000): DataFrame =
@@ -55,7 +64,7 @@ object IngestStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("pathGlobFilter", "*.csv")
       .schema(Consumption.rawSchema)
-      .csv(s"$prefix/consumption_*")
+      .csv(Discovery.horizonGlob(spark, prefix))
 
   /** [[source]] plus the batch path's `_file_order` provenance struct
     * (file modification time, then path — `CsvIngest
@@ -105,12 +114,13 @@ object IngestStream {
   }
 
   /** Windowed daily rollup with the reference's 30-day late-data
-    * horizon as a real watermark (T4): rows later than 30 days behind
-    * the max observed event time are dropped, state is bounded. */
+    * horizon as a real watermark (T4): rows more than
+    * [[Discovery.HorizonDays]] days behind the max observed event time
+    * are dropped, state is bounded. */
   def dailyRollup(spark: SparkSession, prefix: String): DataFrame =
     source(spark, prefix)
       .withColumn("event_time", col("date").cast(TimestampType))
-      .withWatermark("event_time", "30 days")
+      .withWatermark("event_time", horizon)
       .groupBy(window(col("event_time"), "1 day"), col("client_id"))
       .agg(sum(col("total_consumed_tokens")).as("daily_tokens"),
         count(lit(1)).as("n_rows"))
@@ -144,7 +154,7 @@ object IngestStream {
   def dedupStream(spark: SparkSession, prefix: String): DataFrame =
     source(spark, prefix)
       .withColumn("event_time", col("date").cast(TimestampType))
-      .withWatermark("event_time", "30 days")
+      .withWatermark("event_time", horizon)
       .dropDuplicatesWithinWatermark("date", "client_id")
 
   /** Run the rollup to completion against whatever is in the source

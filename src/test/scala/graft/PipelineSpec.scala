@@ -1,13 +1,7 @@
 package graft
 
 import java.time.LocalDate
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Pipeline
@@ -206,40 +200,18 @@ class PipelineSpec extends SparkTestBase {
     Fixtures.writeLayout(base.resolve("data"))
     val c = cfg(base, "2025-05-02")
     Pipeline.run(spark, c) // the table holds 05-01 and 05-02
-    // ("job", its SQL execution id) or ("exec" | "write", execution id)
-    val events = new ConcurrentLinkedQueue[(String, Long)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val exec = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-        events.add("job" -> exec.fold(-1L)(_.toLong))
-        ()
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          val kind =
-            if (s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand")) "write"
-            else "exec"
-          events.add(kind -> s.executionId)
-          ()
-        case _ =>
-      }
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val r =
-      try {
-        val r = Pipeline.run(spark, c.copy(today = LocalDate.parse("2025-05-03")))
-        ListenerBusDrain(spark.sparkContext)
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (r, seen) = SparkJobs.record(spark)(
+      Pipeline.run(spark, c.copy(today = LocalDate.parse("2025-05-03"))))
     assert(r.processedDates.map(_.toString) == Seq("2025-05-03"))
-    val seen = events.asScala.toSeq
-    val jobs = seen.count(_._1 == "job")
+    val jobs = SparkJobs.jobs(seen).size
     assert(jobs <= 6, s"$jobs jobs: $seen")
-    val write = seen.lastIndexWhere(_._1 == "write")
-    assert(write >= 0, s"no write execution: $seen")
-    assert(seen.drop(write + 1).forall(_ == ("job" -> seen(write)._2)),
-      s"a job or execution ran after the merge's write: $seen")
+    val writes = seen.zipWithIndex.collect { case (SparkJobs.Execution(id, true), i) => id -> i }
+    assert(writes.nonEmpty, s"no write execution: $seen")
+    val (writeId, at) = writes.last
+    assert(seen.drop(at + 1).forall {
+        case SparkJobs.Job(exec, _) => exec.contains(writeId)
+        case _ => false
+      }, s"a job or execution ran after the merge's write: $seen")
   }
 
   test("checkpoint is monotonic") {
