@@ -44,9 +44,11 @@ import graft.util.Log
   * executor loss on a real cluster costs a task retry, not the job.
   * Convergence is the no-change fixpoint: both steps only ever
   * decrease labels, so a round that changes no label (`old` carried
-  * through the round, one cheap aggregate over the materialized
-  * state) means every edge has equal labels on both ends —
-  * components are uniformly labeled. A round that exhausts `maxIter`
+  * through the round) means every edge has equal labels on both ends
+  * — components are uniformly labeled. The changed-label count is
+  * observed on the round's own materialization and read back when it
+  * returns ([[Materializer.observed]]): one job per round, and no wait
+  * on Spark's listener bus. A round that exhausts `maxIter`
   * without reaching the fixpoint THROWS (IllegalStateException)
   * instead of returning silently-wrong labels: with pointer jumping
   * maxIter=50 covers diameters up to ~2^50, so a trip here means a
@@ -90,11 +92,13 @@ object ConnectedComponents {
     // PINNED (Materializer.pin): it lives for the whole iteration, so
     // it must never ride Reliable's superseded-persist arm.
     val e = mat.pin(edges.repartition(col("dst")).sortWithinPartitions("dst"))
-    var labels = mat(e.select(col("dst").as("node")).distinct()
+    // The node count rides the initial materialization: an empty graph
+    // returns zero rounds and an empty (node, label) frame.
+    val (initial, nodes) = mat.observed(e.select(col("dst").as("node")).distinct()
       .withColumn("label", col("node"))
-      .sortWithinPartitions("node"))
-    // Empty graph: zero rounds, empty (node, label) frame.
-    if (labels.isEmpty) return (labels.select("node", "label"), 0)
+      .sortWithinPartitions("node"), count(lit(1)).as("n"))
+    if (nodes.getLong(0) == 0L) return (initial, 0)
+    var labels = initial
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -127,8 +131,13 @@ object ConnectedComponents {
       // schedule is at-or-better than both fixed counts on every
       // shape. The jump side is node-clustered (it is the frame's own
       // key), so only the probe side exchanges; the hash hint skips
-      // the sort-merge sorts — the build side is the label frame, the
-      // pipeline's smallest.
+      // the sort-merge sorts. The hint is forced, not size-aware: it
+      // relies on one task's hash table holding about label-frame rows
+      // ÷ shuffle partitions rows (one per node with an edge) — more
+      // where AQE coalesces small partitions, but then only up to its
+      // advisory partition size. The label frame is the pipeline's
+      // smallest; a per-partition share past executor memory would
+      // need the sort-merge join back.
       def jumped(df: DataFrame): DataFrame = {
         val j = df.select(col("node").as("jnode"), col("label").as("jlabel"))
         df.join(j.hint("shuffle_hash"), col("label") === col("jnode"))
@@ -138,37 +147,15 @@ object ConnectedComponents {
       // `old` through the round): both steps only ever decrease
       // labels, and a no-change round means every edge has equal
       // labels on both ends — components are uniformly labeled. The
-      // count rides the materialization job as an observed metric
-      // (one job per round, not two; replaces the r19 DECIMAL(38,0)
-      // label-sum fixpoint and its overflow guard); if the metric
-      // has not surfaced yet — observation delivery is listener-based
-      // — fall back to one cheap aggregate over the materialized
-      // frame.
+      // count is observed on the round's materialization and read
+      // from that action's own QueryExecution as it returns — one job
+      // per round, and nothing waits on the async listener bus.
       val nJumps = if (iter < 2) 1 else 2
       val jumpedAll = (1 to nJumps).foldLeft(hopped)((d, _) => jumped(d))
-      val obs = org.apache.spark.sql.Observation()
-      val next = mat(jumpedAll
-        .observe(obs,
-          sum(when(col("label") =!= col("old"), 1L).otherwise(0L)).as("c"))
-        .repartition(col("node")).sortWithinPartitions("node"))
-      // Observed metrics are delivered on the ASYNC QueryExecutionListener
-      // bus — under a loaded session (a bench run's event backlog) that
-      // delivery can lag far past the cost of just re-aggregating the
-      // already-materialized frame, so wait only a short grace and fall
-      // back to the direct aggregate: per round the cost is
-      // min(bus drain, one cached-scan agg job), never a blocked driver.
-      val changed =
-        try {
-          import scala.concurrent.Await
-          import scala.concurrent.duration._
-          Await.result(obs.future, 50.millis).getLong(0)
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            next.agg(
-              sum(when(col("label") =!= col("old"), 1L).otherwise(0L)).as("c"))
-              .collect()(0).getLong(0)
-        }
-      converged = changed == 0L
+      val (next, changed) = mat.observed(
+        jumpedAll.repartition(col("node")).sortWithinPartitions("node"),
+        count_if(col("label") =!= col("old")).as("c"))
+      converged = changed.getLong(0) == 0L
       labels = next.select("node", "label")
       iter += 1
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Per-round state materialization for iterative operators
   * ([[ConnectedComponents]] and its callers).
@@ -37,6 +37,12 @@ import org.apache.spark.sql.DataFrame
   *    implementation here). Plan depth between checkpoints grows with
   *    N; keep N small (3-5).
   *
+  * A round that needs a figure of its own state (CC's changed-label
+  * count) gets it from [[Materializer.observed]]: the aggregate rides
+  * the materializing action and is read back from that action's
+  * `QueryExecution` when the action returns — synchronously, never
+  * through the listener bus an `Observation` waits on.
+  *
   * The knob reaches production code via [[Materializer.fromEnv]]
   * (`GRAFT_ITER_CHECKPOINT_DIR` + `GRAFT_ITER_CHECKPOINT_EVERY`) and
   * [[graft.ingest.AppConfig.Resolved.iterMaterializer]].
@@ -46,6 +52,22 @@ sealed trait Materializer {
     * never re-runs the upstream plan (checkpointed, or cached with
     * lineage retained only as a recovery path). */
   def apply(df: DataFrame): DataFrame
+
+  /** [[apply]] with the named aggregate columns observed on the
+    * materializing action itself: returns the frame and the metrics
+    * row. The row is read from the observed frame's own
+    * `QueryExecution` once the action has returned — the checkpoint
+    * arms run that very execution, and the persist arm's plan is the
+    * cached scan, whose collector Spark reads from the cached plan the
+    * eager `count()` filled. Each call observes under a fresh name:
+    * under `everyN > 1` earlier rounds' lineage stays in the plan, and
+    * a repeated name would trip the analyzer or return a stale row. */
+  def observed(df: DataFrame, metric: Column, metrics: Column*): (DataFrame, Row) = {
+    val name = s"materializer-${java.util.UUID.randomUUID()}"
+    val o = df.observe(name, metric, metrics: _*)
+    val out = apply(o)
+    (out, o.queryExecution.observedMetrics(name))
+  }
 
   /** Materialize a frame that lives for the WHOLE iteration (the
     * edge frame, degree tables) rather than one round of it (r20):

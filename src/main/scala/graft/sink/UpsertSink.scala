@@ -1,7 +1,7 @@
 package graft.sink
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Consumption
@@ -66,19 +66,10 @@ final class UpsertSink(spark: SparkSession, targetDir: String) {
     * file offset — not written, since the sink schema has no home for
     * it) or one of the sink's own value columns (e.g.
     * `total_consumed_tokens`), which is written as usual. */
-  def merge(batch: DataFrame, orderCol: String): Merged =
-    upsert(batch, col(orderCol))
-
-  /** Merge a batch that holds at most one row per natural key: batch
-    * rows beat existing rows per key. A duplicated batch keeps an
-    * arbitrary row per key; callers with raw batches use
-    * [[merge(batch:org\.apache\.spark\.sql\.DataFrame,orderCol:String)*]]. */
-  def merge(batch: DataFrame): Merged = upsert(batch, lit(null))
-
-  private def upsert(batch: DataFrame, order: Column): Merged = {
+  def merge(batch: DataFrame, orderCol: String): Merged = {
     val now = current_timestamp()
     val incoming = batch
-      .select(Consumption.schema.fieldNames.map(col) :+ order.as("_ord"): _*)
+      .select(Consumption.schema.fieldNames.map(col) :+ col(orderCol).as("_ord"): _*)
       .withColumn("created_at", now)
       .withColumn("updated_at", now)
       .withColumn("is_active", lit(true))

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, Materializer}
 
 /** Iteration-schedule stress for the pointer-jumped connected
   * components (VERDICT r6 #1): the planted long-chain graph is the
@@ -31,12 +34,17 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(rounds <= 15, s"took $rounds rounds — pointer jumping regressed?")
   }
 
+  private lazy val mixed =
+    symmetric(Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)))
+  private val mixedLabels = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+    20L -> 20L, 21L -> 20L, 22L -> 20L)
+
+  private def labelMap(labels: DataFrame): Map[Long, Long] =
+    labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("mixed components + singleton-free node set") {
-    val edges = symmetric(Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)))
-    val (labels, _) = ConnectedComponents.minLabels(edges)
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L))
+    val (labels, _) = ConnectedComponents.minLabels(mixed)
+    assert(labelMap(labels) == mixedLabels)
   }
 
   test("empty edge set short-circuits to zero rounds") {
@@ -58,7 +66,7 @@ class ConnectedComponentsSpec extends SparkTestBase {
         Seq((200L, 201L), (201L, 202L)))
       val (localLabels, localRounds) = ConnectedComponents.minLabels(edges)
       val (relLabels, relRounds) = ConnectedComponents.minLabels(
-        edges, mat = graft.operators.Materializer.Reliable(ckptDir.getAbsolutePath))
+        edges, mat = Materializer.Reliable(ckptDir.getAbsolutePath))
       assert(relRounds == localRounds)
       val l = localLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val r = relLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -71,7 +79,6 @@ class ConnectedComponentsSpec extends SparkTestBase {
   }
 
   test("materializer knob: env selects reliable, default is local") {
-    import graft.operators.Materializer
     assert(Materializer.fromEnv(Map.empty) == Materializer.Local)
     assert(Materializer.fromEnv(Map("GRAFT_ITER_CHECKPOINT_DIR" -> " ")) == Materializer.Local)
     assert(Materializer.fromEnv(Map("GRAFT_ITER_CHECKPOINT_DIR" -> "/ckpt")) ==
@@ -95,7 +102,7 @@ class ConnectedComponentsSpec extends SparkTestBase {
         Seq((200L, 201L), (201L, 202L)))
       val (localLabels, localRounds) = ConnectedComponents.minLabels(edges)
       val (relLabels, relRounds) = ConnectedComponents.minLabels(
-        edges, mat = graft.operators.Materializer.Reliable(
+        edges, mat = Materializer.Reliable(
           ckptDir.getAbsolutePath, everyN = 3))
       assert(relRounds == localRounds)
       val l = localLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -109,6 +116,41 @@ class ConnectedComponentsSpec extends SparkTestBase {
       val eff = new java.io.File(
         new java.net.URI(spark.sparkContext.getCheckpointDir.get))
       assert(anyFile(eff), "interval mode wrote no reliable checkpoint state")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(ckptDir): Unit
+  }
+
+  test("a slow QueryExecutionListener adds no Spark job to minLabels and changes no label") {
+    // Each round's changed-label count is read from the round's own
+    // action, so a listener bus backed up one second per execution
+    // must not change how many jobs a call runs. Covers the
+    // checkpoint arm (Local) and the persist-with-lineage arm
+    // (Reliable, everyN = 3: rounds 0 and 1 are persists). Last in the
+    // spec: the reliable-checkpoint test above asserts on its own dir,
+    // which only holds while it is the first to set the context's.
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-cc-slow").toFile
+    val slow = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Thread.sleep(1000)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val edges = mixed // materialized outside the recorded calls
+    def run(mat: Materializer) = {
+      val ((labels, rounds), events) =
+        SparkJobs.record(spark)(ConnectedComponents.minLabels(edges, mat = mat))
+      (labelMap(labels), rounds, SparkJobs.jobs(events).size)
+    }
+    try {
+      val mats = Seq[() => Materializer](() => Materializer.Local,
+        () => Materializer.Reliable(ckptDir.getAbsolutePath, everyN = 3))
+      mats.foreach { mat =>
+        val quiet = run(mat())
+        spark.listenerManager.register(slow)
+        val loaded =
+          try run(mat())
+          finally spark.listenerManager.unregister(slow)
+        assert(loaded == quiet, s"quiet (labels, rounds, jobs) $quiet, slow listener $loaded")
+        assert(quiet._1 == mixedLabels)
+      }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(ckptDir): Unit
   }
 }

@@ -2,50 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.SkewJoin
-
+/** Bucketed tables: a join of two tables bucketed on the join key
+  * plans no exchange. (Skewed joins are AQE's skew-join split.) */
 class SkewAndBucketingSpec extends SparkTestBase {
-  import spark.implicits._
-
-  /** Skewed fact: 10k rows for one hot key, a few for others. */
-  private lazy val skewed = {
-    val hot = (0 until 10000).map(i => (1L, i.toDouble))
-    val cold = (0 until 100).map(i => (2L + (i % 5).toLong, i.toDouble))
-    (hot ++ cold).toDF("k", "v")
-  }
-  private lazy val dim = Seq((1L, "hot"), (2L, "a"), (3L, "b"), (4L, "c"),
-    (5L, "d"), (6L, "e")).toDF("k", "name")
-
-  test("salted join equals plain join") {
-    val plain = skewed.join(dim, Seq("k")).groupBy("name")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = SkewJoin.salted(skewed, dim, "k", nSalts = 8)
-      .groupBy("name").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-    assert(salted("hot") == 10000L)
-  }
-
-  test("salted join rejects right-preserving join types") {
-    val e = intercept[IllegalArgumentException] {
-      SkewJoin.salted(skewed, dim, "k", nSalts = 8, joinType = "right_outer")
-    }
-    assert(e.getMessage.contains("replicates the right side"))
-    intercept[IllegalArgumentException] {
-      SkewJoin.salted(skewed, dim, "k", nSalts = 8, joinType = "full_outer")
-    }
-    // left-preserving types still work
-    assert(SkewJoin.salted(skewed, dim, "k", 8, "left_outer").count() > 0)
-  }
-
-  test("salted aggregation equals plain aggregation") {
-    val plain = skewed.groupBy("k").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = SkewJoin.saltedCount(skewed, "k", nSalts = 8).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
 
   test("bucketed tables join without a shuffle (co-located join)") {
     val wh = Fixtures.tempDir("wh")

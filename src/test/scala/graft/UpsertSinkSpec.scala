@@ -20,10 +20,12 @@ class UpsertSinkSpec extends SparkTestBase {
 
   private object ScanRoots extends AdaptiveSparkPlanHelper
 
+  /** A batch with an `ord` column: its rows' positions, so a later row
+    * of the same key wins. */
   private def batchDf(rows: Seq[(String, String, Long)]) =
-    rows.map { case (d, c, t) =>
-      (Date.valueOf(d), c, s"Client $c", "svc", t)
-    }.toDF("date", "client_id", "client_name", "service_name", "total_consumed_tokens")
+    rows.zipWithIndex.map { case ((d, c, t), i) =>
+      (Date.valueOf(d), c, s"Client $c", "svc", t, i.toLong)
+    }.toDF("date", "client_id", "client_name", "service_name", "total_consumed_tokens", "ord")
 
   private def tableState(dir: String): Map[(String, String), Long] =
     spark.read.parquet(dir).collect().map { r =>
@@ -34,11 +36,11 @@ class UpsertSinkSpec extends SparkTestBase {
   test("merge inserts then updates on conflict; created_at preserved") {
     val dir = Fixtures.tempDir("sink").resolve("t").toString
     val sink = new UpsertSink(spark, dir)
-    sink.merge(batchDf(Seq(("2025-05-01", "A", 1L), ("2025-05-01", "B", 2L))))
+    sink.merge(batchDf(Seq(("2025-05-01", "A", 1L), ("2025-05-01", "B", 2L))), "ord")
     val created1 = spark.read.parquet(dir)
       .filter($"client_id" === "A").collect()(0).getAs[java.sql.Timestamp]("created_at")
     Thread.sleep(5)
-    sink.merge(batchDf(Seq(("2025-05-01", "A", 10L), ("2025-05-02", "A", 3L))))
+    sink.merge(batchDf(Seq(("2025-05-01", "A", 10L), ("2025-05-02", "A", 3L))), "ord")
     assert(tableState(dir) == Map(
       ("2025-05-01", "A") -> 10L, ("2025-05-01", "B") -> 2L, ("2025-05-02", "A") -> 3L))
     val rowA = spark.read.parquet(dir)
@@ -52,9 +54,9 @@ class UpsertSinkSpec extends SparkTestBase {
     val dir = Fixtures.tempDir("sink2").resolve("t").toString
     val sink = new UpsertSink(spark, dir)
     val b = batchDf(Seq(("2025-05-01", "A", 1L), ("2025-05-01", "B", 2L)))
-    sink.merge(b)
+    sink.merge(b, "ord")
     val s1 = tableState(dir)
-    sink.merge(b) // retried micro-batch
+    sink.merge(b, "ord") // retried micro-batch
     assert(tableState(dir) == s1)
   }
 
@@ -62,7 +64,7 @@ class UpsertSinkSpec extends SparkTestBase {
     val dir = Fixtures.tempDir("sinkpart").resolve("t").toString
     val sink = new UpsertSink(spark, dir)
     sink.merge(batchDf(Seq(
-      ("2025-05-01", "A", 1L), ("2025-05-02", "B", 2L), ("2025-05-03", "C", 3L))))
+      ("2025-05-01", "A", 1L), ("2025-05-02", "B", 2L), ("2025-05-03", "C", 3L))), "ord")
     def partFiles(day: String): Map[String, (Long, Long)] = {
       val d = new java.io.File(s"$dir/date=$day")
       d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -72,7 +74,7 @@ class UpsertSinkSpec extends SparkTestBase {
     val d3Before = partFiles("2025-05-03")
     assert(d1Before.nonEmpty && d3Before.nonEmpty)
     Thread.sleep(1100) // cross mtime granularity so rewrites are visible
-    sink.merge(batchDf(Seq(("2025-05-02", "B", 20L), ("2025-05-02", "D", 4L))))
+    sink.merge(batchDf(Seq(("2025-05-02", "B", 20L), ("2025-05-02", "D", 4L))), "ord")
     assert(partFiles("2025-05-01") == d1Before,
       "untouched partition 2025-05-01 must not be rewritten")
     assert(partFiles("2025-05-03") == d3Before,
@@ -86,7 +88,7 @@ class UpsertSinkSpec extends SparkTestBase {
     val dir = Fixtures.tempDir("sinkscan").resolve("t").toString
     val sink = new UpsertSink(spark, dir)
     sink.merge(batchDf(Seq(
-      ("2025-05-01", "A", 1L), ("2025-05-02", "B", 2L), ("2025-05-03", "C", 3L))))
+      ("2025-05-01", "A", 1L), ("2025-05-02", "B", 2L), ("2025-05-03", "C", 3L))), "ord")
     val roots = new ConcurrentLinkedQueue[Path]
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -99,7 +101,7 @@ class UpsertSinkSpec extends SparkTestBase {
     spark.listenerManager.register(listener)
     val merged =
       try {
-        val m = sink.merge(batchDf(Seq(("2025-05-02", "B", 20L), ("2025-05-04", "D", 4L))))
+        val m = sink.merge(batchDf(Seq(("2025-05-02", "B", 20L), ("2025-05-04", "D", 4L))), "ord")
         ListenerBusDrain(spark.sparkContext)
         m
       } finally spark.listenerManager.unregister(listener)
@@ -114,15 +116,14 @@ class UpsertSinkSpec extends SparkTestBase {
 
     val emptyDir = Fixtures.tempDir("sinkempty").resolve("t").toString
     val empty = new UpsertSink(spark, emptyDir)
-    assert(empty.merge(batchDf(Nil).withColumn("ord", lit(1L)), "ord") ==
+    assert(empty.merge(batchDf(Nil), "ord") ==
       UpsertSink.Merged(0, 0))
     assert(!empty.exists, "an empty batch must not create the table")
   }
 
   test("merge(batch, orderCol) dedups a duplicated batch deterministically") {
-    // ADVICE r7: the 1-arg merge CONTRACT requires one row per key;
-    // the 2-arg overload must make a raw duplicated batch safe by
-    // deduplicating itself — highest orderCol wins.
+    // ADVICE r7: merge must make a raw duplicated batch safe by
+    // deduplicating it itself — highest orderCol wins.
     val dir = Fixtures.tempDir("sink5").resolve("t").toString
     val sink = new UpsertSink(spark, dir)
     val dup = batchDf(Seq(
@@ -132,7 +133,7 @@ class UpsertSinkSpec extends SparkTestBase {
     sink.merge(dup, "ord")
     assert(tableState(dir) == Map(
       ("2025-05-01", "A") -> 9L, ("2025-05-01", "B") -> 2L))
-    // and it upserts like the 1-arg form on conflict
+    // and it upserts on conflict
     sink.merge(batchDf(Seq(("2025-05-01", "A", 3L), ("2025-05-01", "A", 11L)))
       .withColumn("ord", col("total_consumed_tokens")), "ord")
     assert(tableState(dir) == Map(
