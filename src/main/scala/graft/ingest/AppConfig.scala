@@ -43,22 +43,7 @@ object AppConfig {
       pipeline: Pipeline.Config,
       db: DbConfig,
       inPlatform: Boolean,
-      hadoopConf: Map[String, String] = Map.empty,
-      iterCheckpointDir: Option[String] = None,
-      iterCheckpointEvery: Int = 1) {
-    /** Durability mode for iterative operators (connected components
-      * and its dedup/embedding consumers): `GRAFT_ITER_CHECKPOINT_DIR`
-      * set → reliable `checkpoint()` against that FS URI (cluster
-      * mode — survives executor loss), reliably every
-      * `GRAFT_ITER_CHECKPOINT_EVERY`-th round (default 1; >1 persists
-      * with lineage between — the periodic-checkpoint pattern that
-      * shrinks the DFS price on deep iterations); unset → executor-
-      * resident `localCheckpoint` (local mode). See
-      * [[graft.operators.Materializer]]. */
-    def iterMaterializer: graft.operators.Materializer =
-      iterCheckpointDir
-        .map(graft.operators.Materializer.Reliable(_, iterCheckpointEvery))
-        .getOrElse(graft.operators.Materializer.Local)
+      hadoopConf: Map[String, String] = Map.empty) {
     /** Masks object-store credentials (same standard as [[DbConfig]]'s
       * password masking) so the resolved config can be logged safely:
       * the auto-generated case-class toString would print
@@ -68,8 +53,7 @@ object AppConfig {
         case (k, _) if Resolved.sensitive(k) => k -> "***"
         case kv => kv
       }
-      s"Resolved($pipeline, $db, inPlatform=$inPlatform, hadoopConf=$masked, " +
-        s"iterCheckpointDir=$iterCheckpointDir)"
+      s"Resolved($pipeline, $db, inPlatform=$inPlatform, hadoopConf=$masked)"
     }
   }
 
@@ -213,9 +197,6 @@ object AppConfig {
         today = today),
       db,
       platform,
-      s3aConf(env, secretJson),
-      env.get("GRAFT_ITER_CHECKPOINT_DIR").filter(_.trim.nonEmpty),
-      env.get("GRAFT_ITER_CHECKPOINT_EVERY").filter(_.trim.nonEmpty)
-        .map(_.trim.toInt).getOrElse(1))
+      s3aConf(env, secretJson))
   }
 }

@@ -44,8 +44,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * through the listener bus an `Observation` waits on.
   *
   * The knob reaches production code via [[Materializer.fromEnv]]
-  * (`GRAFT_ITER_CHECKPOINT_DIR` + `GRAFT_ITER_CHECKPOINT_EVERY`) and
-  * [[graft.ingest.AppConfig.Resolved.iterMaterializer]].
+  * (`GRAFT_ITER_CHECKPOINT_DIR` + `GRAFT_ITER_CHECKPOINT_EVERY`).
   */
 sealed trait Materializer {
   /** Materialize `df` eagerly and return a frame whose consumption

@@ -115,19 +115,25 @@ object MinHashDedup {
         idCol, textCol, shingleN)
       .filter(size(col("sh")) > 0)
       .persist()
+    // Materialize the (small) verified pair set eagerly: the shingle
+    // cache is released right after (a lazy return would leak a
+    // session-lifetime cache entry per call), and the checkpointed
+    // result severs lineage, so downstream consumers never re-trigger
+    // the shingle pipeline.
     try pairsFromShingles(sh, k, nBands, threshold, tokenHash, maxBucket)
+      .localCheckpoint(true)
     finally { sh.unpersist(); () }
   }
 
-  /** Pair pipeline over a PRE-BUILT `(doc_id, sh: array<string>)`
+  /** Pair plan over a PRE-BUILT `(doc_id, sh: array<string>)`
     * distinct-shingle frame — the shared-scan entry point: a caller
     * composing several shingle consumers (the ensemble query) builds
     * and persists ONE shingle frame and threads it here instead of
-    * paying a second corpus scan + shingling. The caller owns `sh`'s
-    * materialization (persist/checkpoint — it feeds the signature
-    * path and both verification joins); the returned pair set is
-    * eagerly materialized, so the caller may release `sh` as soon as
-    * this returns. */
+    * paying a second corpus scan + shingling. The returned plan is
+    * LAZY: the caller owns both `sh` (persist it — it feeds the
+    * signature path and both verification joins) and the action that
+    * materializes the pairs, and may release `sh` only after that
+    * action has run. */
   def pairsFromShingles(sh: DataFrame, k: Int, nBands: Int,
       threshold: Double, tokenHash: Column => Column,
       maxBucket: Int): DataFrame = {
@@ -155,7 +161,7 @@ object MinHashDedup {
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
     // exact verification on candidates only
-    val verified = cand
+    cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
       .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
@@ -163,12 +169,6 @@ object MinHashDedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("n_common")).cast(DoubleType))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "n_common", "jaccard")
-    // Materialize the (small) verified pair set eagerly: the caller
-    // releases the shingle cache right after this returns (a lazy
-    // return would leak a session-lifetime cache entry per call), and
-    // the checkpointed result severs lineage, so downstream consumers
-    // never re-trigger the shingle pipeline.
-    verified.localCheckpoint(true)
   }
 
   /** INCREMENTAL near-dup scan: a NEW batch's signatures against a

@@ -16,6 +16,13 @@ import graft.functions.{SimHash, TextFunctions}
   * Scale shape: signatures are one codegen'd projection (no shuffle);
   * banding explodes ×4; the band equi-join is the only shuffle and
   * joins on a 16-bit key + band index. |candidates| ≪ |D|².
+  *
+  * The band/verify half comes in two forms over one plan builder:
+  * [[pairPlan]] is the lazy banding + verification plan, for a caller
+  * that materializes several pair sources in one action of its own
+  * (the ensemble query); [[pairsFromSignatures]] is the eager form
+  * every other caller uses — it persists the banded frame, runs one
+  * local checkpoint and releases the cache before returning.
   */
 object SimHashDedup {
 
@@ -53,19 +60,37 @@ object SimHashDedup {
   /** The band/verify half over ANY precomputed `(doc_id, sig)` frame
     * of 64-bit signatures — shared by the text path above and the
     * image-dHash path ([[graft.multimodal.Multimodal.imageNearDupPairs]]):
-    * banding, capping and Hamming verification are signature-agnostic. */
+    * banding, capping and Hamming verification are signature-agnostic.
+    * Eager: the (small) pair set is checkpointed and the banded cache
+    * released before this returns — a lazy return leaked one cache
+    * entry per call for the session lifetime. */
   def pairsFromSignatures(sigs: DataFrame,
       maxHamming: Int, maxBucket: Int = 200): DataFrame = {
-    // persisted: the count pre-filter below and the kept-key join both
+    // persisted: the count pre-filter and the kept-key join both
     // consume `banded`, and the signature stage is a plain projection
     // (no shuffle, so no ReusedExchange) — unpersisted, the whole
     // signature pass would run twice.
-    val banded = sigs.select(col("doc_id"), col("sig"),
+    val banded = bands(sigs).persist()
+    try verify(banded, maxHamming, maxBucket).localCheckpoint(true)
+    finally { banded.unpersist(); () }
+  }
+
+  /** The same banding + verification as a LAZY plan that caches
+    * nothing; the caller runs the action. The signature projection
+    * then runs once per consumer of the banded frame, which is cheap
+    * over a persisted two-column corpus frame. */
+  def pairPlan(sigs: DataFrame, maxHamming: Int, maxBucket: Int = 200): DataFrame =
+    verify(bands(sigs), maxHamming, maxBucket)
+
+  /** Four 16-bit bands per signature. */
+  private def bands(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), col("sig"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),
           shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xffffL)).as("bits"))
       }: _*)).as("bk"))
-      .persist()
+
+  private def verify(banded: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame = {
     // Cap via a COUNT pre-filter, not a post-collect size filter: the
     // count aggregate combines map-side and the filtered key set is
     // small (AQE broadcasts it), so a pathological bucket is dropped
@@ -78,7 +103,7 @@ object SimHashDedup {
     val grouped = banded.join(keptKeys, "bk")
       .groupBy("bk")
       .agg(sort_array(collect_list(struct(col("doc_id"), col("sig")))).as("ds"))
-    val verified = grouped.select(explode(
+    grouped.select(explode(
         flatten(transform(col("ds"), (x, i) =>
           transform(slice(col("ds"), i + lit(2), size(col("ds")) - i - 1), y =>
             struct(x.getField("doc_id").as("doc_a"), y.getField("doc_id").as("doc_b"),
@@ -90,10 +115,5 @@ object SimHashDedup {
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
-    // Materialize the (small) pair set eagerly, then release the banded
-    // cache — same rationale as MinHashDedup: a lazy return leaked one
-    // cache entry per call for the session lifetime.
-    try verified.localCheckpoint(true)
-    finally { banded.unpersist(); () }
   }
 }

@@ -178,9 +178,10 @@ object DedupQueries {
     * eagerly-localCheckpointed pair set `nearDupPairs` returns —
     * near-dup-mass-bounded, safe to re-consume across actions. The
     * single-scan `ensembleQ` deliberately does NOT ride this memo:
-    * its simhash arm consumes the one persisted corpus frame shared
-    * with the shingle build, and routing it here would regress the
-    * cold ensemble to a second corpus scan. */
+    * its simhash arm is a lazy plan over the one persisted corpus
+    * frame shared with the shingle build, materialized by the
+    * ensemble's own single action; routing it here would regress the
+    * cold ensemble to a second corpus scan and a second action. */
   private val pairMemo = new SessionMemo.Memo[DataFrame]
 
   private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
@@ -388,9 +389,15 @@ object DedupQueries {
     * r8 each re-derived the identical `shingleSets(…, 3)` from their
     * own corpus scan — both consume the persisted shingle frame. At
     * 100 TB that is 1 corpus scan + 1 shingling instead of 3 + 2.
-    * Each arm eagerly materializes its (small) pair set, so both
-    * caches release before this returns; the consensus reduce then
-    * composes three lineage-severed pair frames. */
+    *
+    * ONE action: the three arms are lazy plans over the two persisted
+    * frames, and the tagged union with its consensus reduce is
+    * materialized by a single `localCheckpoint(true)`; only then are
+    * both caches released. No driver threads are needed for the arms
+    * to overlap — adaptive execution submits every stage whose inputs
+    * are ready, so the arms' independent shuffle stages run side by
+    * side within the one job set. If the action fails, Spark fails its
+    * own jobs, so no arm is still running when the caches go. */
   def ensembleQ(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions
     def tag(df: DataFrame, m: String) =
@@ -405,52 +412,19 @@ object DedupQueries {
       .filter(size(col("sh")) > 0)
       .persist()
     try {
-      // r19 (guide §2.6 "overlap independent jobs"): the three arms
-      // are independent pair jobs that each end in an eager
-      // localCheckpoint — run them from driver threads so the next
-      // arm's tasks back-fill the executor slots the current arm's
-      // stage tail leaves idle. The shared caches are materialized
-      // ONCE up front (sh.count() computes both the sh and docs cache
-      // entries) so the concurrent arms ride the cache instead of
-      // racing to fill it.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration._
-      sh.count()
-      // r20 (ADVICE r19): the arms share one job group and compose via
-      // Future.sequence with a FINITE await — if any arm throws (or
-      // the await times out on a hung arm), the group's live jobs are
-      // cancelled and the remaining futures drained briefly BEFORE the
-      // finally releases the shared caches, so no arm keeps running
-      // against silently-uncached frames. Job groups are thread-local:
-      // each arm sets the group inside its own thread.
-      val gid = s"ensemble-${java.util.UUID.randomUUID()}"
-      def arm[T](f: => T): Future[T] = Future {
-        s.sparkContext.setJobGroup(gid, "ensemble arm", true)
-        try f finally s.sparkContext.clearJobGroup()
-      }
-      val fMh = arm(MinHashDedup.pairsFromShingles(sh, k = K, nBands = Bands,
+      val mh = MinHashDedup.pairsFromShingles(sh, k = K, nBands = Bands,
         threshold = Threshold, tokenHash = MinHashDedup.tokenHashMd5,
-        maxBucket = MaxBucket))
-      val fSh2 = arm(SimHashDedup.nearDupPairs(s, docs, "doc_id", "text",
-        maxHamming = 12))
-      val fNg = arm(TextQueries.ngramJaccardPairs(sh).localCheckpoint(true))
-      val arms = Seq(fMh, fSh2, fNg)
-      val Seq(mh, sh2, ng) =
-        try Await.result(Future.sequence(arms), 6.hours)
-        catch {
-          case e: Throwable =>
-            s.sparkContext.cancelJobGroup(gid)
-            arms.foreach(f =>
-              try { Await.ready(f, 1.minute); () } catch { case _: Throwable => () })
-            throw e
-        }
+        maxBucket = MaxBucket)
+      val sh2 = SimHashDedup.pairPlan(
+        SimHashDedup.signatures(s, docs, "doc_id", "text"), maxHamming = 12)
+      val ng = TextQueries.ngramJaccardPairs(sh)
       tag(mh, "minhash")
         .unionByName(tag(sh2, "simhash"))
         .unionByName(tag(ng, "ngram"))
         .groupBy("doc_a", "doc_b")
         .agg(countDistinct(col("method")).cast(IntegerType).as("n_methods"))
         .filter(col("n_methods") >= 2)
+        .localCheckpoint(true)
         .orderBy("doc_a", "doc_b")
     } finally { sh.unpersist(); docs.unpersist(); () }
   }

@@ -50,26 +50,6 @@ class AppConfigSpec extends AnyFunSuite with SparkTestBase {
     assert(r.db == DbConfig("consumption", "svc", "pw-secret", "db.internal", 5433))
   }
 
-  test("iterative-durability knob: GRAFT_ITER_CHECKPOINT_DIR selects the reliable materializer") {
-    import graft.operators.Materializer
-    val local = AppConfig.resolve(storageEnv ++ localDbEnv,
-      today = LocalDate.parse("2025-05-04"))
-    assert(local.iterCheckpointDir.isEmpty)
-    assert(local.iterMaterializer == Materializer.Local)
-    val rel = AppConfig.resolve(storageEnv ++ localDbEnv ++
-        Map("GRAFT_ITER_CHECKPOINT_DIR" -> "hdfs:///ckpt/iter"),
-      today = LocalDate.parse("2025-05-04"))
-    assert(rel.iterMaterializer == Materializer.Reliable("hdfs:///ckpt/iter"))
-    // the toString must carry the knob (it is not sensitive) for run logs
-    assert(rel.toString.contains("hdfs:///ckpt/iter"))
-    // checkpoint-interval knob (VERDICT r8 #2) rides the same config
-    val every = AppConfig.resolve(storageEnv ++ localDbEnv ++
-        Map("GRAFT_ITER_CHECKPOINT_DIR" -> "hdfs:///ckpt/iter",
-          "GRAFT_ITER_CHECKPOINT_EVERY" -> "3"),
-      today = LocalDate.parse("2025-05-04"))
-    assert(every.iterMaterializer == Materializer.Reliable("hdfs:///ckpt/iter", 3))
-  }
-
   test("storage env maps onto Pipeline.Config; E5 default date flows through") {
     val r = AppConfig.resolve(storageEnv ++ localDbEnv,
       today = LocalDate.parse("2025-05-04"))

@@ -83,10 +83,26 @@ class QueriesSpec extends SparkTestBase {
     val expected = (m ++ s2 ++ n).map { p =>
       (p._1, p._2, Seq(m(p), s2(p), n(p)).count(identity))
     }.filter(_._3 >= 2)
-    val got = queries.DedupQueries.ensembleQ(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // One plan: every job of the call runs under an SQL execution, and
+    // they fall in at most two — the action that materializes the
+    // consensus and the collect — with no cached frame left behind.
+    // The one exception is the footer read Spark runs to infer the
+    // parquet schema when the table is loaded, before any plan exists.
+    def cached() = org.apache.spark.sql.CachedEntries(spark)
+    val cachedBefore = cached()
+    val (rows, events) = SparkJobs.record(spark) {
+      queries.DedupQueries.ensembleQ(spark, sfDir).collect()
+    }
+    val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == expected,
       s"ensemble diverged: only=${(got -- expected).take(3)} missing=${(expected -- got).take(3)}")
+    val jobs = SparkJobs.jobs(events)
+    val outside = jobs.filter(_.executionId.isEmpty)
+    assert(jobs.nonEmpty && outside.forall(_.description.startsWith("parquet at Tables")),
+      s"jobs outside any SQL execution: $outside")
+    val executions = jobs.flatMap(_.executionId).distinct
+    assert(executions.size <= 2, s"jobs ran in ${executions.size} SQL executions: $jobs")
+    assert(cached() == cachedBefore, "ensembleQ left a cached frame behind")
   }
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
