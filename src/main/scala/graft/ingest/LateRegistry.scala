@@ -25,15 +25,20 @@ final class LateRegistry(spark: SparkSession, dir: String,
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val path = new Path(dir, "missing_dates.txt")
 
-  /** Read: newline-delimited, blanks dropped (P7), missing file → ∅. */
-  def read(): Set[LocalDate] =
-    try {
-      val in = fs.open(path)
-      val body = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-      body.split("\n").map(_.trim).filter(_.nonEmpty)
-        .map(LocalDate.parse(_, fmt)).toSet
-    } catch { case _: Exception => Set.empty }
+  /** Read: newline-delimited, blanks dropped (P7), missing file → ∅
+    * (the reference's `NoSuchKey → []`). Any other fault — a store
+    * error, an unparseable line — PROPAGATES: read as ∅, it would let
+    * [[add]]/[[commit]] overwrite the file with only the new dates,
+    * silently dropping every registered late date. */
+  def read(): Set[LocalDate] = {
+    val in =
+      try fs.open(path)
+      catch { case _: java.io.FileNotFoundException => return Set.empty }
+    val body = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    finally in.close()
+    body.split("\n").map(_.trim).filter(_.nonEmpty)
+      .map(LocalDate.parse(_, fmt)).toSet
+  }
 
   /** U1/J1: register candidate dates not already covered. */
   def add(dates: Set[LocalDate]): Set[LocalDate] = {

@@ -183,17 +183,6 @@ object Bm25Index {
         spark.read.parquet(new Path(d, "stats").toString))
     }
 
-  /** Append dirs visible at the committed frontier: `v<bid>` with
-    * `_SUCCESS`, bid <= the merged state's last_batch (dirs from a
-    * half-committed batch exist but are NOT served). */
-  private def visibleAppendDirs(spark: SparkSession, stateDir: String,
-      sub: String, lastBatch: Long): Seq[String] = {
-    val frontier = f"v$lastBatch%020d"
-    val dir = familyLive(spark, stateDir, sub)
-    StateFs.committedVDirs(StateFs.fs(spark, dir), dir)
-      .filter(_.getName <= frontier).map(_.toString)
-  }
-
   /** The full served state `(postings, dl, df, stats)` after every
     * committed batch, or None before the first. */
   def readState(spark: SparkSession, stateDir: String)
@@ -229,19 +218,13 @@ object Bm25Index {
       // Serve exactly the MANIFEST the committing writer recorded
       // (resolveFamily — crash-interrupted compactions are repaired
       // in place, genuine external loss fails loudly).
-      val pDirs = resolveFamily(spark, stateDir, "postings", "p_dirs",
-        st, stats.columns)._1
-        .map(n => new Path(familyLive(spark, stateDir, "postings"), n).toString)
-      val postings =
-        if (pDirs.isEmpty) emptyPostings(spark)
-        else pDirs.map(d => spark.read.option("basePath", d).parquet(d))
-          .reduce(_ unionByName _)
-      val dlDirs = resolveFamily(spark, stateDir, "dl", "dl_dirs",
-        st, stats.columns)._1
-        .map(n => new Path(familyLive(spark, stateDir, "dl"), n).toString)
-      val dl =
-        if (dlDirs.isEmpty) emptyDl(spark)
-        else dlDirs.map(readDlDir(spark, _)).reduce(_ unionByName _)
+      def served(sub: String, manifestCol: String): Seq[String] =
+        resolveFamily(spark, stateDir, sub, manifestCol, st, stats.columns)._1
+          .map(n => new Path(familyLive(spark, stateDir, sub), n).toString)
+      val pDirs = served("postings", "p_dirs")
+      val postings = if (pDirs.isEmpty) emptyPostings(spark) else readDirs(spark, pDirs)
+      val dlDirs = served("dl", "dl_dirs")
+      val dl = if (dlDirs.isEmpty) emptyDl(spark) else readDirs(spark, dlDirs)
       (postings, dl, dfreq, stats)
     }
   }
@@ -261,59 +244,45 @@ object Bm25Index {
     * swap-then-commit window previously wedged the index with all
     * data present). Returns (names, stale); stale=true means the
     * manifest pre-dates the compacted layout — [[compact]] re-commits
-    * it to complete the interrupted run. Pre-manifest generations (no
-    * dir columns in stats) fall back to the frontier listing with the
-    * total-loss check only. */
+    * it to complete the interrupted run. A stats row without the
+    * manifest column was written before manifests existed and is
+    * refused: no served base can hold one. */
   private def resolveFamily(spark: SparkSession, stateDir: String,
       sub: String, manifestCol: String, st: org.apache.spark.sql.Row,
       statsCols: Seq[String]): (Seq[String], Boolean) = {
+    require(statsCols.contains(manifestCol),
+      s"BM25 state refused: the merged stats row under $stateDir carries " +
+        s"no $manifestCol manifest — it was written by a pre-manifest " +
+        "build, whose layout is no longer served; rebuild the index into " +
+        "a fresh directory from the raw documents")
     val sdir = familyLive(spark, stateDir, sub)
     val last = st.getLong(st.fieldIndex("last_batch"))
-    if (statsCols.contains(manifestCol)) {
-      val names = st.getSeq[String](st.fieldIndex(manifestCol))
-      val fs = StateFs.fs(spark, sdir)
-      val missing = names.filterNot(n =>
-        StateFs.committed(fs, new Path(sdir, n)))
-      if (missing.isEmpty) (names, false)
-      else {
-        val vname = f"v$last%020d"
-        val gen = new Path(sdir, vname)
-        val folded =
-          if (StateFs.committed(fs, gen))
-            StateFs.readFolded(fs, gen).getOrElse(Seq.empty)
-          else Seq.empty
-        require(missing.forall(folded.contains),
-          s"BM25 state inconsistent: merged stats expect $sub dirs " +
-            s"[${names.mkString(", ")}] but [${missing.mkString(", ")}] " +
-            s"are missing under $stateDir — append dirs were removed " +
-            "externally; restore them or rebuild the index from the " +
-            "raw documents")
-        ((names.filterNot(folded.contains) :+ vname).distinct, true)
-      }
-    } else {
-      val nDocs = st.getLong(st.fieldIndex("n_docs"))
-      val dirs = visibleAppendDirs(spark, stateDir, sub, last)
-      require(dirs.nonEmpty || nDocs == 0L,
-        s"BM25 state inconsistent: merged stats claim n_docs=$nDocs " +
-          s"but no committed $sub/v* dirs are visible under $stateDir — " +
-          "append dirs were removed externally; restore them or rebuild " +
-          "the index from the raw documents")
-      (dirs.map(d => new Path(d).getName), false)
+    val names = st.getSeq[String](st.fieldIndex(manifestCol))
+    val fs = StateFs.fs(spark, sdir)
+    val missing = names.filterNot(n =>
+      StateFs.committed(fs, new Path(sdir, n)))
+    if (missing.isEmpty) (names, false)
+    else {
+      val vname = f"v$last%020d"
+      val gen = new Path(sdir, vname)
+      val folded =
+        if (StateFs.committed(fs, gen))
+          StateFs.readFolded(fs, gen).getOrElse(Seq.empty)
+        else Seq.empty
+      require(missing.forall(folded.contains),
+        s"BM25 state inconsistent: merged stats expect $sub dirs " +
+          s"[${names.mkString(", ")}] but [${missing.mkString(", ")}] " +
+          s"are missing under $stateDir — append dirs were removed " +
+          "externally; restore them or rebuild the index from the " +
+          "raw documents")
+      ((names.filterNot(folded.contains) :+ vname).distinct, true)
     }
   }
 
-  /** One dl version dir, `dhb` back-compat applied: generations
-    * written before the doc-hash bucketing carry no dhb column —
-    * synthesize it with the SAME expression the write path uses
-    * (row-level, no partition pruning on those dirs; [[compact]]
-    * migrates them to the bucketed layout). The single definition
-    * shared by [[readState]] and [[compact]] keeps the synthesized
-    * hash bit-identical to the written one. */
-  private def readDlDir(spark: SparkSession, d: String): DataFrame = {
-    val f = spark.read.option("basePath", d).parquet(d)
-    if (f.columns.contains("dhb")) f
-    else f.withColumn("dhb", pmod(xxhash64(col("doc_id")), lit(DhBuckets)))
-  }
+  /** Per-dir reads of one family's served dirs, unioned by name. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    dirs.map(d => spark.read.option("basePath", d).parquet(d))
+      .reduce(_ unionByName _)
 
   private def emptyPostings(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -552,11 +521,11 @@ object Bm25Index {
       StateFs.gcStaleGens(f, base, StateFs.resolveLive(f, base).getName)
     }
     // the concurrency snapshot is taken at ENTRY, before readMerged /
-    // resolveFamily / the migration schema probes (review r15 — taken
-    // after them, a batch committing inside those several Spark
-    // actions was already in the snapshot, so the pre-swap re-check
-    // passed and the swaps destroyed it): a batch landing after this
-    // instant always differs from the snapshot and aborts loudly.
+    // resolveFamily (review r15 — taken after them, a batch committing
+    // inside those Spark actions was already in the snapshot, so the
+    // pre-swap re-check passed and the swaps destroyed it): a batch
+    // landing after this instant always differs from the snapshot and
+    // aborts loudly.
     val snapshot = familySnapshot(spark, stateDir)
     val cur = readMerged(spark, stateDir)
     if (cur.isEmpty) return false
@@ -564,10 +533,8 @@ object Bm25Index {
     val st = stats0.head()
     val last = st.getLong(st.fieldIndex("last_batch"))
     val vname = f"v$last%020d"
-    // compact what is SERVED (resolveFamily: the manifest when
-    // present — crash-fallback applied — else the legacy frontier
-    // listing; compacting also upgrades such a state to a
-    // manifest-carrying one)
+    // compact what is SERVED (resolveFamily: the manifest, with the
+    // crash fallback applied)
     val (pNames, pStale) =
       resolveFamily(spark, stateDir, "postings", "p_dirs", st, stats0.columns)
     val (dlNames, dlStale) =
@@ -576,13 +543,8 @@ object Bm25Index {
     val dlLive = familyLive(spark, stateDir, "dl")
     val pPaths = pNames.map(n => new Path(pLive, n).toString)
     val dlPaths = dlNames.map(n => new Path(dlLive, n).toString)
-    // a SINGLE pre-dhb dl generation still needs the bucketed rewrite
-    // (review r12: the dir-count guard alone left such a state
-    // permanently unmigrated and its dl scans permanently unpruned)
-    val dlNeedsMigration = dlPaths.exists(d =>
-      !spark.read.option("basePath", d).parquet(d).columns.contains("dhb"))
     val doP = pPaths.size > 1
-    val doDl = dlPaths.size > 1 || dlNeedsMigration
+    val doDl = dlPaths.size > 1
     // nothing to rewrite AND the manifest already names the served
     // layout → true no-op; a stale manifest alone still needs the
     // completion commit below
@@ -596,22 +558,19 @@ object Bm25Index {
     // scaladoc — with write-swap interleaved per family, a concurrent
     // batch landing during the dl rewrite would be caught only after
     // the postings swap had already destroyed its postings dir)
-    if (doP) {
-      pPaths.map(d => spark.read.option("basePath", d).parquet(d))
-        .reduce(_ unionByName _)
-        .repartition(col("tkb")) // bucket-aligned: ≤64 files, not tasks×64
-        .write.mode("overwrite").partitionBy("tkb")
-        .parquet(new Path(pTarget, vname).toString)
-      StateFs.writeFolded(StateFs.fs(spark, pLive), new Path(pTarget, vname), pNames)
+    // both plans are analyzed before either writes, so a family Spark
+    // cannot analyze (a dl generation without `dhb`) stages nothing;
+    // bucket-aligned writes: ≤64 files, not tasks×64
+    val pFold = Option.when(doP)(readDirs(spark, pPaths).repartition(col("tkb")))
+    val dlFold = Option.when(doDl)(readDirs(spark, dlPaths).repartition(col("dhb")))
+    def stage(fold: DataFrame, bucket: String, live: Path, target: Path,
+        names: Seq[String]): Unit = {
+      fold.write.mode("overwrite").partitionBy(bucket)
+        .parquet(new Path(target, vname).toString)
+      StateFs.writeFolded(StateFs.fs(spark, live), new Path(target, vname), names)
     }
-    if (doDl) {
-      dlPaths.map(readDlDir(spark, _))
-        .reduce(_ unionByName _)
-        .repartition(col("dhb"))
-        .write.mode("overwrite").partitionBy("dhb")
-        .parquet(new Path(dlTarget, vname).toString)
-      StateFs.writeFolded(StateFs.fs(spark, dlLive), new Path(dlTarget, vname), dlNames)
-    }
+    pFold.foreach(stage(_, "tkb", pLive, pTarget, pNames))
+    dlFold.foreach(stage(_, "dhb", dlLive, dlTarget, dlNames))
     beforeSwap()
     // pre-swap optimistic-concurrency re-check: a concurrent
     // appendBatch committed mid-rewrite — abort loudly, keep the live

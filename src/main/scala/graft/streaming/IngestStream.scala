@@ -156,22 +156,4 @@ object IngestStream {
       .withColumn("event_time", col("date").cast(TimestampType))
       .withWatermark("event_time", horizon)
       .dropDuplicatesWithinWatermark("date", "client_id")
-
-  /** Run the rollup to completion against whatever is in the source
-    * dirs (AvailableNow), materializing to an in-memory table.
-    * Complete mode: append-mode emission would hold back windows
-    * newer than the 30-day watermark (by design); complete shows the
-    * whole rollup for inspection/testing. */
-  def runRollupOnce(spark: SparkSession, prefix: String, queryName: String,
-      checkpointDir: String): Unit = {
-    val q = dailyRollup(spark, prefix)
-      .writeStream
-      .outputMode("complete")
-      .queryName(queryName)
-      .format("memory")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 }

@@ -392,34 +392,47 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(e2.getMessage.contains("rebuild"))
   }
 
-  test("pre-dhb dl generations read via back-compat and compact() migrates them") {
-    val state = Fixtures.tempDir("bm25-predhb").resolve("state").toString
+  test("pre-dhb dl and pre-manifest stats are refused by retrieve and compact") {
+    // each legacy state fails both entry points and every file stays
+    val base = Fixtures.tempDir("bm25-legacy")
+    val state = base.resolve("state").toString
     Bm25Index.appendBatch(spark, state, docs.filter(bucket < 50), 0L)
     Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 50), 1L)
-    val want = Bm25Index.retrieve(spark, state, Seq("spark", "vector", "customer"))
-      .collect().map(_.toString).toSeq
-    // rewrite both dl generations the way the pre-r12 layout wrote
-    // them: unpartitioned, no dhb column
-    for (v <- Seq(0L, 1L)) {
-      val d = new File(live(state, "dl"), f"v$v%020d").getPath
-      val old = spark.read.parquet(d)
-        .select("doc_id", "chunk_id", "start", "len", "dl")
-        .localCheckpoint(true)
+    val terms = Seq("spark", "vector", "customer")
+    def rewrite(d: String)(f: DataFrame => DataFrame): Unit = {
+      val old = f(spark.read.parquet(d)).localCheckpoint(true)
       Fixtures.deleteRec(new File(d))
       old.write.mode("overwrite").parquet(d)
     }
-    // reads synthesize dhb (no partition pruning on these dirs, but
-    // results identical — a stored index from the previous layout is
-    // NOT bricked by the upgrade)
-    assert(Bm25Index.retrieve(spark, state, Seq("spark", "vector", "customer"))
-      .collect().map(_.toString).toSeq === want)
-    // compaction migrates to the bucketed layout
-    assert(Bm25Index.compact(spark, state))
-    val gen = new File(live(state, "dl"), f"v${1L}%020d")
-    assert(gen.listFiles().exists(_.getName.startsWith("dhb=")),
-      "compact must rewrite pre-dhb dl into the bucketed layout")
-    assert(Bm25Index.retrieve(spark, state, Seq("spark", "vector", "customer"))
-      .collect().map(_.toString).toSeq === want)
+    def files(root: File): Seq[(String, Long)] = {
+      import scala.jdk.CollectionConverters._
+      org.apache.commons.io.FileUtils.listFiles(root, null, true).asScala.toSeq
+        .map(f => (root.toPath.relativize(f.toPath).toString, f.length)).sorted
+    }
+    def refused(st: String): Seq[Throwable] = {
+      val before = files(new File(st))
+      val es = Seq(
+        intercept[Exception](Bm25Index.retrieve(spark, st, terms).collect()),
+        intercept[Exception](Bm25Index.compact(spark, st)))
+      assert(files(new File(st)) === before, "a refusal must leave every file in place")
+      es
+    }
+    // the pre-dhb dl layout: unpartitioned, no dhb column
+    val preDhb = base.resolve("pre-dhb").toString
+    Fixtures.copyRec(new File(state), new File(preDhb))
+    for (v <- Seq(0L, 1L))
+      rewrite(new File(live(preDhb, "dl"), f"v$v%020d").getPath)(
+        _.select("doc_id", "chunk_id", "start", "len", "dl"))
+    for (e <- refused(preDhb)) assert(e.getMessage.contains("dhb"), e.getMessage)
+    // the pre-manifest stats row: no p_dirs / dl_dirs
+    val preManifest = base.resolve("pre-manifest").toString
+    Fixtures.copyRec(new File(state), new File(preManifest))
+    val merged = new File(preManifest, "merged")
+    val cur = java.nio.file.Files.readString(new File(merged, "CURRENT").toPath).trim
+    rewrite(new File(new File(merged, cur), "stats").getPath)(_.drop("p_dirs", "dl_dirs"))
+    for (e <- refused(preManifest))
+      assert(e.getMessage.contains("pre-manifest") && e.getMessage.contains("rebuild"),
+        e.getMessage)
   }
 
   test("pointer mode: family compaction publishes via one PTR rewrite per " +

@@ -232,5 +232,22 @@ class PipelineSpec extends SparkTestBase {
     reg.add(Set(LocalDate.parse("2025-03-01"), LocalDate.parse("2025-04-20")))
     val left = reg.commit(Set.empty, LocalDate.parse("2025-05-01"))
     assert(left.map(_.toString) == Set("2025-04-20"))
+    // a registry that does not parse is a fault, not an empty registry:
+    // read, add and commit all throw and the file keeps its bytes
+    // (read as ∅, add/commit would overwrite it with the new dates only)
+    val bad = base.resolve("bad")
+    java.nio.file.Files.createDirectories(bad)
+    val file = bad.resolve("missing_dates.txt")
+    val bytes = "2025_04_20\nnot-a-date\n".getBytes("UTF-8")
+    java.nio.file.Files.write(file, bytes)
+    val corrupt = new graft.ingest.LateRegistry(spark, bad.toString)
+    val today = LocalDate.parse("2025-05-01")
+    intercept[java.time.format.DateTimeParseException](corrupt.read())
+    intercept[java.time.format.DateTimeParseException](
+      corrupt.add(Set(LocalDate.parse("2025-04-25"))))
+    intercept[java.time.format.DateTimeParseException](
+      corrupt.commit(Set.empty, today))
+    assert(java.nio.file.Files.readAllBytes(file).sameElements(bytes),
+      "a failed read must leave the registry file untouched")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 
-import graft.util.StateFs
+import graft.util.{AppendLog, StateFs}
 
 /** Direct unit coverage of the shared state-layout primitives — they
   * are otherwise exercised only THROUGH the operators (Bm25IndexSpec /
@@ -178,24 +178,24 @@ class StateFsSpec extends SparkTestBase {
     val fs = StateFs.fs(spark, base)
     val v0 = mk(new Path(base, f"v${0L}%020d"))
     touch(v0, "_SUCCESS"); touch(v0, "data", "a")
-    StateFs.logAppend(fs, base, v0.getName)
-    assert(fs.exists(StateFs.frontierFile(base)) &&
-      fs.exists(StateFs.genesisFile(base)))
+    AppendLog.logAppend(fs, base, v0.getName)
+    assert(fs.exists(AppendLog.frontierFile(base)) &&
+      fs.exists(AppendLog.genesisFile(base)))
     // the benign crash window: FRONTIER written, GENESIS not yet —
     // the dense check is skipped (no GENESIS), the frontier check
     // passes, listings stay quiet; the same id's WAL replay
     // (logAppend again) completes the pair
-    assert(fs.delete(StateFs.genesisFile(base), false))
-    assert(StateFs.checkedVDirs(fs, base, "T").map(_.getName) === Seq(v0.getName))
-    StateFs.logAppend(fs, base, v0.getName)
-    assert(fs.exists(StateFs.genesisFile(base)),
+    assert(fs.delete(AppendLog.genesisFile(base), false))
+    assert(AppendLog.checkedVDirs(fs, base, "T").map(_.getName) === Seq(v0.getName))
+    AppendLog.logAppend(fs, base, v0.getName)
+    assert(fs.exists(AppendLog.genesisFile(base)),
       "the replay must complete the missing GENESIS")
     // the inverse — GENESIS present, FRONTIER gone — cannot arise
     // benignly under the r16 order, so it is certain external removal
     // of the witness and every listing refuses it naming the repair
-    assert(fs.delete(StateFs.frontierFile(base), false))
+    assert(fs.delete(AppendLog.frontierFile(base), false))
     val e = intercept[IllegalArgumentException] {
-      StateFs.checkedVDirs(fs, base, "T")
+      AppendLog.checkedVDirs(fs, base, "T")
     }
     assert(e.getMessage.contains("FRONTIER") &&
       e.getMessage.contains("GENESIS exists"), e.getMessage)

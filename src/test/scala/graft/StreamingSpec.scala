@@ -243,8 +243,17 @@ class StreamingSpec extends SparkTestBase {
     val base = Fixtures.tempDir("rollup")
     val data = base.resolve("data")
     Fixtures.writeLayout(data)
-    IngestStream.runRollupOnce(spark, data.toString, "rollup_t",
-      base.resolve("ckpt").toString)
+    // complete mode: append-mode emission would hold back windows newer
+    // than the 30-day watermark (by design)
+    IngestStream.dailyRollup(spark, data.toString)
+      .writeStream
+      .outputMode("complete")
+      .queryName("rollup_t")
+      .format("memory")
+      .option("checkpointLocation", base.resolve("ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     val out = spark.table("rollup_t")
     // CLI001: one window per day, tokens = 100/110/120
     val cli1 = out.filter(col("client_id") === "CLI001")
