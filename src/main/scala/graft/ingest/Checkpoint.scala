@@ -7,6 +7,8 @@ import java.time.format.DateTimeFormatter
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.util.StateFs
+
 /** The reference's checkpoint singleton (SURVEY.md §2.1 S5/S8, §2.4
   * A2, §2.10 E5): a tiny control-plane object holding the last
   * processed date as `YYYY_MM_DD` text, plus a JSON audit twin
@@ -51,24 +53,21 @@ final class Checkpoint(spark: SparkSession, dir: String, defaultDate: String) {
   /** Monotonic write (reference A2: `date_value <= current → skip`,
     * `src/s3_processor.py:122-125`): returns true iff advanced.
     * Also writes the JSON audit twin (`:147-154`). A read fault here
-    * propagates (see [[readStrict]]) instead of defaulting. */
+    * propagates (see [[readStrict]]) instead of defaulting. Both files
+    * are replaced atomically ([[StateFs.writeFileAtomicFs]]): a crash
+    * mid-write leaves the previous checkpoint, never a torn one that
+    * [[read]] would turn into `defaultDate`. */
   def advance(candidate: LocalDate): Boolean = {
     val current = readStrict()
     if (!candidate.isAfter(current)) return false
-    write(txtPath, format(candidate))
+    StateFs.writeFileAtomicFs(fs, txtPath, format(candidate))
     val ts = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-    write(jsonPath,
+    StateFs.writeFileAtomicFs(fs, jsonPath,
       s"""{
          |  "last_processed_date": "${format(candidate)}",
          |  "updated_at": "${ts}",
          |  "processor": "graft-ingest"
          |}""".stripMargin)
     true
-  }
-
-  private def write(p: Path, body: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
   }
 }

@@ -7,6 +7,8 @@ import java.time.format.DateTimeFormatter
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.util.StateFs
+
 /** The reference's missing-dates registry (SURVEY.md §2.1 S6/S9,
   * §2.2 P6/P7, §2.3 J1/J2, §2.7 U1/U2, §2.10 E6): dates whose file
   * has not arrived yet, re-probed every run, expired after the
@@ -57,10 +59,8 @@ final class LateRegistry(spark: SparkSession, dir: String,
     remaining
   }
 
-  private def write(dates: Set[LocalDate]): Unit = {
-    val body = dates.toSeq.sorted.map(_.format(fmt)).mkString("\n")
-    val out = fs.create(path, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** Atomic replace ([[StateFs.writeFileAtomicFs]]): a crash mid-write
+    * leaves the previous registry whole, never a truncated one. */
+  private def write(dates: Set[LocalDate]): Unit =
+    StateFs.writeFileAtomicFs(fs, path, dates.toSeq.sorted.map(_.format(fmt)).mkString("\n"))
 }

@@ -27,7 +27,12 @@ import graft.sink.UpsertSink
   *    at most 31 directories whatever the history; the rollup and the
   *    dedup also trail a `withWatermark("event_time", "30 days")`.
   *  - T5 exactly-once effect → `foreachBatch` + idempotent keyed
-  *    merge ([[UpsertSink]]); a retried micro-batch converges.
+  *    merge ([[UpsertSink]]); a retried micro-batch converges. Its
+  *    cost on restart: the engine re-creates the last committed
+  *    micro-batch through the file source, whose index re-lists that
+  *    batch's files — for more than 32 files a parallel listing job
+  *    outside any SQL execution, paid once per restart (seen for a
+  *    40-file batch: one listing job before the 3 merge jobs).
   *  - T6 in-order fail-stop → micro-batch ordering is native; a
   *    failed batch commits no offset and is retried.
   */

@@ -22,10 +22,12 @@ import graft.operators.Bm25Index
   * `last_batch` as the replay frontier (batch ids at or below it
   * no-op), and Structured Streaming re-delivers a failed micro-batch
   * under the SAME batch id from the checkpoint WAL — so a crash
-  * anywhere in the append/merge window is replayed idempotently (the
-  * half-written append dirs are overwritten byte-for-byte, the merge
-  * completes; spec-pinned in Bm25IndexSpec and re-proven through the
-  * real stream machinery in StreamingBm25Spec's restart test).
+  * anywhere in the append/merge window is replayed idempotently (a
+  * family dir the crash left committed is kept and only its
+  * [[graft.util.AppendLog]] marker completed, an uncommitted partial
+  * is overwritten, and the merge completes; spec-pinned in
+  * Bm25IndexSpec and re-proven through the real stream machinery in
+  * StreamingBm25Spec's restart test).
   *
   * The checkpoint and the state dir live and die TOGETHER — the
   * replay frontier makes a mismatch in EITHER direction silently

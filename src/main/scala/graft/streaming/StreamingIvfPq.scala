@@ -148,43 +148,43 @@ object StreamingIvfPq {
         // recall@10 measured 0.000 at 1M; two Lloyd rounds on the seed
         // drain took it to 1.000 for a one-time ~38 s surcharge. Since
         // r16 that regime is ENFORCED at freeze time, not just
-        // documented — see the degeneracy guard below the pair write.
-        val cb =
-          if (pqRounds == 0) {
-            val seedRes = IvfPq.residuals(sb, qb.orderBy("vec_id").limit(kCb), ceRead)
-              .select(col("vec_id"), col("rv").as("qv"))
-            ProductQuantizer.subRows(seedRes, m, subLen)
-              .select(col("vec_id").as("c_id"), col("sub"), col("sv").as("c_sv"))
-          } else {
-            val res = IvfPq.residuals(sb, qb, ceRead)
-              .select(col("vec_id"), col("rv").as("qv"))
-            IvfPq.codebooksFor(res, m, subLen, kCb, pqRounds)
-          }
-        // Freeze-time degeneracy guard (VERDICT r15 #2): a collapsed
-        // codebook must not freeze — frozen, it serves recall-0 ADC
-        // results SILENTLY and forever (fold ≡ one-shot still holds, so
-        // no equality gate ever fires; the failure is invisible until
-        // someone measures recall). Detected here, before the pair
-        // commits, the crash is loud, names the remedy, and leaves an
-        // uncommitted quantizer the replay simply re-attempts. The
-        // guard triggers only when the codebooks carry zero residual
-        // energy while the seed batch's residuals do not
-        // ([[IvfPq.degenerateCodebooks]]) — an all-zero-residual batch
-        // (corpus == centroid set, zero codebooks exact) stays legal.
-        require(!IvfPq.degenerateCodebooks(cb,
-            IvfPq.residuals(sb, qb, ceRead)
-              .select(col("vec_id"), col("rv").as("qv"))),
-          s"IVF-PQ seed codebooks are DEGENERATE under $stateDir: every " +
-            "codeword has zero residual energy while the seed batch's " +
-            "residuals do not — the coarse quantizer matches the corpus's " +
-            "cluster structure, so the kCb-smallest-id seed rows are the " +
-            "centroids' own (zero) residuals and every ADC distance " +
-            "collapses to one value (recall 0.000 at 1M, PLANS.md). " +
-            "Refusing to freeze the pair: seed with pqRounds >= 1 " +
-            "(Lloyd-trained codebooks on the first batch's residuals) or " +
-            "use a coarse quantizer the corpus does not match")
-        cb.coalesce(1).write.mode("overwrite")
-          .parquet(codebooksDir(stateDir).toString)
+        // documented — see the degeneracy guard below.
+        // One residual frame for the whole seeding block, persisted: at
+        // pqRounds > 0 it feeds m per-subspace Lloyd fits, and the
+        // degeneracy guard below reads it again.
+        val res = IvfPq.residuals(sb, qb, ceRead)
+          .select(col("vec_id"), col("rv").as("qv"))
+          .persist()
+        try {
+          val cb =
+            if (pqRounds == 0)
+              ProductQuantizer.subRows(res.orderBy("vec_id").limit(kCb), m, subLen)
+                .select(col("vec_id").as("c_id"), col("sub"), col("sv").as("c_sv"))
+            else IvfPq.codebooksFor(res, m, subLen, kCb, pqRounds)
+          // Freeze-time degeneracy guard (VERDICT r15 #2): a collapsed
+          // codebook must not freeze — frozen, it serves recall-0 ADC
+          // results SILENTLY and forever (fold ≡ one-shot still holds, so
+          // no equality gate ever fires; the failure is invisible until
+          // someone measures recall). Detected here, before the pair
+          // commits, the crash is loud, names the remedy, and leaves an
+          // uncommitted quantizer the replay simply re-attempts. The
+          // guard triggers only when the codebooks carry zero residual
+          // energy while the seed batch's residuals do not
+          // ([[IvfPq.degenerateCodebooks]]) — an all-zero-residual batch
+          // (corpus == centroid set, zero codebooks exact) stays legal.
+          require(!IvfPq.degenerateCodebooks(cb, res),
+            s"IVF-PQ seed codebooks are DEGENERATE under $stateDir: every " +
+              "codeword has zero residual energy while the seed batch's " +
+              "residuals do not — the coarse quantizer matches the corpus's " +
+              "cluster structure, so the kCb-smallest-id seed rows are the " +
+              "centroids' own (zero) residuals and every ADC distance " +
+              "collapses to one value (recall 0.000 at 1M, PLANS.md). " +
+              "Refusing to freeze the pair: seed with pqRounds >= 1 " +
+              "(Lloyd-trained codebooks on the first batch's residuals) or " +
+              "use a coarse quantizer the corpus does not match")
+          cb.coalesce(1).write.mode("overwrite")
+            .parquet(codebooksDir(stateDir).toString)
+        } finally { res.unpersist(); () }
         // the PAIR commit (readQuantizer scaladoc): both frames are in
         // place — one atomic marker create makes them visible together;
         // a crash before this line leaves an uncommitted quantizer the

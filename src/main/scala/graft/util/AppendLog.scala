@@ -4,10 +4,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** The per-batch append log of a streamed index — the one
+/** The per-batch append log of a stored index — the one
   * implementation behind [[graft.streaming.StreamingIvf]] (`lists/`,
-  * partitioned by `cluster`) and [[graft.streaming.StreamingIvfPq]]
-  * (`codes/`, partitioned by `cell`). It is the `foreachBatch`
+  * partitioned by `cluster`), [[graft.streaming.StreamingIvfPq]]
+  * (`codes/`, partitioned by `cell`) and both families of
+  * [[graft.operators.Bm25Index]] (`postings/` by `tkb`, `dl/` by
+  * `dhb`). It is the `foreachBatch`
   * exactly-once recipe of the Structured Streaming paper: the batch's
   * own committed directory is its idempotency marker.
   *
@@ -70,7 +72,7 @@ import org.apache.spark.sql.functions.col
   * against a deleted state dir serves an empty index forever. Reset
   * both or neither.
   *
-  * `label` names the index in error messages ("IVF", "IVF-PQ"). */
+  * `label` names the index in error messages ("IVF", "IVF-PQ", "BM25"). */
 final class AppendLog(base: Path, partCol: String, label: String) {
   import AppendLog._
 
@@ -87,11 +89,12 @@ final class AppendLog(base: Path, partCol: String, label: String) {
     if (ds.isEmpty) None else Some(union(spark, ds))
   }
 
-  /** Per-dir reads unioned by name: a compacted dir holds `partCol` as
-    * a partition column (inferred Int, cast back to the Long the data
+  /** Per-dir reads of `ds` (a checked listing, or a caller's subset of
+    * one) unioned by name: a compacted dir holds `partCol` as a
+    * partition column (inferred Int, cast back to the Long the data
     * column carries), fresh dirs as a data column — one multi-path read
     * would refuse the mix. */
-  private def union(spark: SparkSession, ds: Seq[Path]): DataFrame =
+  private[graft] def union(spark: SparkSession, ds: Seq[Path]): DataFrame =
     ds.map(d => spark.read.option("basePath", d.toString).parquet(d.toString)
         .withColumn(partCol, col(partCol).cast("long")))
       .reduce(_ unionByName _)
@@ -246,7 +249,7 @@ object AppendLog {
         s"$what state inconsistent: the compaction manifest under $dir " +
           s"names generation $gen but no committed directory of that " +
           "name exists — the compacted corpus was removed externally; " +
-          "restore it or rebuild the index from the raw vectors")
+          "restore it or rebuild the index from its source rows")
     }
     val log = logged(fs, dir)
     val names = dirs.map(_.getName).toSet
@@ -256,7 +259,7 @@ object AppendLog {
         s"committed generation(s) [${missing.mkString(", ")}] but no " +
         "committed directory of that name exists — committed appends " +
         "were removed externally; restore them or rebuild the index " +
-        "from the raw vectors")
+        "from its source rows")
     val ids = (dirs.map(_.getName) ++ log).flatMap(idOf).toSet
     val gf = genesisFile(dir)
     if (ids.nonEmpty && fs.exists(gf)) {
@@ -272,7 +275,7 @@ object AppendLog {
           "accounted by neither a committed directory nor an append-log " +
           "entry — the id chain is dense by construction, so a committed " +
           "generation AND its log marker were removed together externally; " +
-          "restore them or rebuild the index from the raw vectors")
+          "restore them or rebuild the index from its source rows")
     }
     val ff = frontierFile(dir)
     if (fs.exists(ff)) {
@@ -285,7 +288,7 @@ object AppendLog {
           s"${if (maxSeen < 0) "none" else f"v$maxSeen%020d"} — the chain's " +
           "suffix (the newest committed generation(s) and their log " +
           "markers) was removed externally; restore them or rebuild the " +
-          "index from the raw vectors")
+          "index from its source rows")
     } else require(!fs.exists(gf),
       s"$what state inconsistent: the FRONTIER witness under $dir is " +
         "missing but GENESIS exists — FRONTIER is written before GENESIS " +
@@ -297,7 +300,7 @@ object AppendLog {
         "the restore is one line: write FRONTIER holding the max delivered " +
         "batch id (for the legacy-upgrade case, the newest generation's " +
         "id). Otherwise restore the lost generation(s) or rebuild the " +
-        "index from the raw vectors")
+        "index from its source rows")
     dirs
   }
 }

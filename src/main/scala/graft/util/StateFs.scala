@@ -182,17 +182,15 @@ object StateFs {
           deleteRec(fs, s.getPath)
       }
 
-  // ---- crash-interrupted-compaction marker ----
+  // ---- compacted-generation marker ----
 
   /** Record, INSIDE a compacted generation directory, the names of
     * the directories it folded — written while the generation is
     * still unpublished, so the marker becomes visible atomically
     * with the PTR swap. Underscore-prefixed: parquet readers ignore it,
-    * like `_SUCCESS`. A reader whose committed manifest names
-    * directories that no longer exist can then distinguish a
-    * crash-interrupted compaction (every missing name appears in a
-    * committed generation's folded list → serve that generation, it
-    * holds the union) from genuine external data loss (fail loudly). */
+    * like `_SUCCESS`. Its presence tells a compacted generation from a
+    * plain append dir of the same name ([[AppendLog]]; BM25's served
+    * set and its merged-state-loss rule). */
   def writeFolded(fs: FileSystem, genDir: Path, folded: Seq[String]): Unit = {
     val out = fs.create(new Path(genDir, "_COMPACTED"), true)
     try out.write(folded.mkString("\n").getBytes(StandardCharsets.UTF_8))

@@ -95,40 +95,42 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(!Bm25Index.appendBatch(spark, state, b1, 0L))
     assert(Bm25Index.readState(spark, state).get._4
       .select("n_docs", "t_tok", "last_batch").head().toSeq === after1)
-    // crash window: batch 1's appends land but the merged swap never
-    // happens — emulate by applying batch 1 then rolling the merged
-    // state back to generation 0
-    val gen0 = new File(new File(state, "merged"), "CURRENT")
-    val v0 = new String(java.nio.file.Files.readAllBytes(gen0.toPath)).trim
+    // crash window: batch 1's family appends land but the merged swap
+    // never happens — emulate with the real writer: apply batch 1, then
+    // put back the merged/ saved after batch 0
+    val merged = new File(state, "merged")
+    val saved = new File(new File(state).getParentFile, "merged-after-0")
+    Fixtures.copyRec(merged, saved)
     assert(Bm25Index.appendBatch(spark, state, b2, 1L))
-    // roll the pointer back (the crash left the old generation live;
-    // GC'd dirs mean we simulate by rewriting the pointer BEFORE GC
-    // would have run — so rebuild generation 0 instead)
-    val state2 = Fixtures.tempDir("bm25-crash").resolve("state").toString
-    Bm25Index.appendBatch(spark, state2, b1, 0L)
-    // write batch 2's APPENDS only (what a crash before commit leaves)
-    val ctoks = Bm25Index.chunkTokens(b2)
-    ctoks.groupBy("doc_id", "chunk_id", "token").agg(count(lit(1)).as("tf"))
-      .withColumn("tkb", pmod(xxhash64(col("token")), lit(64L)))
-      .write.mode("overwrite").partitionBy("tkb")
-      .parquet(new File(live(state2, "postings"), f"v${1L}%020d").getPath)
-    ctoks.groupBy("doc_id", "chunk_id", "start", "len").agg(count(lit(1)).as("dl"))
-      .write.mode("overwrite")
-      .parquet(new File(live(state2, "dl"), f"v${1L}%020d").getPath)
-    // the orphaned appends are invisible: served state == batch-1-only
-    val (p2, _, _, st2) = Bm25Index.readState(spark, state2).get
+    val fullStats = Bm25Index.readState(spark, state).get._4
+      .select("n_docs", "t_tok").head()
+    Fixtures.deleteRec(merged)
+    Fixtures.copyRec(saved, merged)
+    // the orphaned appends are invisible: served state == batch-0-only
+    val (p2, _, _, st2) = Bm25Index.readState(spark, state).get
     assert(st2.select("last_batch").head().getLong(0) === 0L)
     assert(p2.select("doc_id").distinct().count() ===
       b1.select("doc_id").distinct().count(),
       "orphaned postings must not be served")
-    // the WAL re-delivers batch 1 → replay recomputes + commits
-    assert(Bm25Index.appendBatch(spark, state2, b2, 1L))
-    val healedStats = Bm25Index.readState(spark, state2).get._4
-      .select("n_docs", "t_tok").head()
-    val fullStats = Bm25Index.readState(spark, state).get._4
+    // a half-committed batch is not folded by a compaction
+    val eC = intercept[IllegalArgumentException](Bm25Index.compact(spark, state))
+    assert(eC.getMessage.contains("half-committed") &&
+      eC.getMessage.contains(f"v${1L}%020d"), eC.getMessage)
+    // the WAL re-delivers batch 1 → the replay completes the merge and
+    // leaves the committed family dirs as they are
+    def files(sub: String): Seq[(String, Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val root = new File(live(state, sub), f"v${1L}%020d")
+      org.apache.commons.io.FileUtils.listFiles(root, null, true).asScala.toSeq
+        .map(f => (f.getPath, f.length, f.lastModified)).sorted
+    }
+    val dirsBefore = Seq("postings", "dl").map(files)
+    assert(Bm25Index.appendBatch(spark, state, b2, 1L))
+    assert(Seq("postings", "dl").map(files) === dirsBefore,
+      "the replay rewrote a committed family dir")
+    val healedStats = Bm25Index.readState(spark, state).get._4
       .select("n_docs", "t_tok").head()
     assert(healedStats.toSeq === fullStats.toSeq, "healed state diverged")
-    assert(v0.nonEmpty) // silence unused warning; generation sanity
   }
 
   private def versionDirs(state: String, sub: String): Seq[String] =
@@ -171,89 +173,76 @@ class Bm25IndexSpec extends SparkTestBase {
       .collect().map(_.toString).toSeq === full)
   }
 
-  test("crash between compact's swap and its manifest re-commit: served, then completed") {
-    // ADVICE r12 (high): the old flow destroyed the pre-compaction
-    // generations inside the swap BEFORE the manifest re-commit — a
-    // crash in between left the committed manifest naming dirs that no
-    // longer existed, every read failed the consistency check, and
-    // re-running compact threw on the missing paths: wedged with all
-    // data present. Now the compacted generation carries a _COMPACTED
-    // marker of the folded names; readers serve it in place of the
-    // missing manifest entries and the next compact() completes the
-    // interrupted manifest commit.
+  /** `compactImpl` killed between its two family swaps: the first
+    * family is published, the second's rewrite staged but not. Returns
+    * false when neither family had anything to fold. */
+  private def crashBetweenSwaps(state: String): Boolean = {
+    var swaps = 0
+    try {
+      Bm25Index.compactImpl(spark, state, () => {
+        swaps += 1
+        if (swaps == 2) throw new IllegalStateException("crash between the family swaps")
+      })
+      false
+    } catch {
+      case e: IllegalStateException if e.getMessage == "crash between the family swaps" => true
+    }
+  }
+
+  test("crash between compact's two family swaps: reads row-identical, " +
+      "appends continue, the next compact finishes the other family") {
+    import spark.implicits._
     val state = Fixtures.tempDir("bm25-cwedge").resolve("state").toString
     val terms = Seq("spark", "vector", "customer")
     for (i <- 0 until 3)
       assert(Bm25Index.appendBatch(spark, state,
         docs.filter(bucket >= i * 25 && bucket < (i + 1) * 25), i.toLong))
+    def rows: (Seq[String], Seq[String]) = {
+      val (p, d, _, _) = Bm25Index.readState(spark, state).get
+      (p.collect().map(_.toString).sorted.toSeq, d.collect().map(_.toString).sorted.toSeq)
+    }
     val want = Bm25Index.retrieve(spark, state, terms)
       .collect().map(_.toString).toSeq
-    val nPost = Bm25Index.readState(spark, state).get._1.count()
-    // snapshot merged/, compact, then restore the snapshot — exactly
-    // the on-disk state of a crash after both family PTR swaps but
-    // before commitMerged rewrote the manifest
-    val merged = new File(state, "merged")
-    val saved = new File(state, "merged_saved")
-    Fixtures.copyRec(merged, saved)
-    assert(Bm25Index.compact(spark, state))
-    Fixtures.deleteRec(merged)
-    assert(saved.renameTo(merged))
-    // the compacted generation carries the folded-dirs marker
-    val gen = new File(live(state, "postings"), f"v${2L}%020d")
-    assert(new File(gen, "_COMPACTED").exists())
-    // reads serve the FULL corpus through the fallback, not a failure
-    // and not a silently smaller index
-    val (pC, _, _, _) = Bm25Index.readState(spark, state).get
-    assert(pC.count() === nPost, "fallback must serve the whole corpus")
+    val before = rows
+    assert(crashBetweenSwaps(state))
+    // dl compacted first; postings still holds its three append dirs
+    val v2 = f"v${2L}%020d"
+    assert(versionDirs(state, "dl") === Seq(v2))
+    assert(new File(live(state, "dl"), s"$v2/_COMPACTED").exists())
+    assert(versionDirs(state, "postings").size === 3)
+    assert(rows === before, "the crash window must serve the same rows")
     assert(Bm25Index.retrieve(spark, state, terms)
       .collect().map(_.toString).toSeq === want)
-    // re-running compact completes the interrupted manifest commit
-    // (true = state changed) instead of throwing on missing paths
-    assert(Bm25Index.compact(spark, state))
-    assert(!Bm25Index.compact(spark, state), "second run is the no-op")
-    assert(Bm25Index.retrieve(spark, state, terms)
-      .collect().map(_.toString).toSeq === want)
-    // genuine external loss of the compacted generation stays LOUD
-    Fixtures.deleteRec(gen)
-    val e = intercept[IllegalArgumentException] {
-      Bm25Index.readState(spark, state)
-    }
-    assert(e.getMessage.contains(f"v${2L}%020d") &&
-      e.getMessage.contains("removed externally"))
-  }
-
-  test("append on a crash-interrupted compaction completes the manifest instead of failing") {
-    import spark.implicits._
-    // the r13 loud-loss gate at appendBatch entry must NOT fire on the
-    // legitimate crash state (manifest names folded into the committed
-    // frontier generation) — the append goes through, and its commit
-    // IS the manifest completion the interrupted compaction needed
-    val state = Fixtures.tempDir("bm25-cappend").resolve("state").toString
-    for (i <- 0 until 2)
-      assert(Bm25Index.appendBatch(spark, state,
-        docs.filter(bucket >= i * 50 && bucket < (i + 1) * 50), i.toLong))
+    // an append in the window folds normally
     val nDocs0 = Bm25Index.readState(spark, state).get._4
       .select("n_docs").head().getLong(0)
-    val merged = new File(state, "merged")
-    val saved = new File(state, "merged_saved")
-    Fixtures.copyRec(merged, saved)
-    assert(Bm25Index.compact(spark, state))
-    Fixtures.deleteRec(merged)
-    assert(saved.renameTo(merged)) // manifest now names the folded dirs
     val extra = Seq((900001L, "spark vector extra doc"),
       (900002L, "customer extra doc")).toDF("doc_id", "text")
-    assert(Bm25Index.appendBatch(spark, state, extra, 2L))
-    val st = Bm25Index.readState(spark, state).get._4.head()
-    val pDirs = st.getSeq[String](st.fieldIndex("p_dirs"))
-    assert(pDirs.contains(f"v${1L}%020d") && !pDirs.contains(f"v${0L}%020d"),
-      s"the new manifest must name the compacted generation, got $pDirs")
-    assert(st.getLong(st.fieldIndex("n_docs")) === nDocs0 + 2)
-    assert(Bm25Index.retrieve(spark, state,
-      Seq("spark", "vector", "customer")).count() > 0)
-    // and the state compacts cleanly from there
+    assert(Bm25Index.appendBatch(spark, state, extra, 3L))
+    assert(Bm25Index.readState(spark, state).get._4
+      .select("n_docs").head().getLong(0) === nDocs0 + 2)
+    val want3 = Bm25Index.retrieve(spark, state, terms)
+      .collect().map(_.toString).toSeq
+    val before3 = rows
+    // the next compact finishes: one generation per family
     assert(Bm25Index.compact(spark, state))
-    assert(Bm25Index.retrieve(spark, state,
-      Seq("spark", "vector", "customer")).count() > 0)
+    val v3 = f"v${3L}%020d"
+    assert(versionDirs(state, "postings") === Seq(v3))
+    assert(versionDirs(state, "dl") === Seq(v3))
+    assert(!Bm25Index.compact(spark, state), "second run is the no-op")
+    assert(rows === before3)
+    assert(Bm25Index.retrieve(spark, state, terms)
+      .collect().map(_.toString).toSeq === want3)
+    // external loss of the compacted generation stays LOUD everywhere
+    Fixtures.deleteRec(new File(live(state, "postings"), v3))
+    for (op <- Seq(
+        () => Bm25Index.readState(spark, state),
+        () => Bm25Index.appendBatch(spark, state, extra, 4L),
+        () => Bm25Index.compact(spark, state))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(v3) &&
+        e.getMessage.contains("removed externally"), e.getMessage)
+    }
   }
 
   test("external loss of the merged stats with live append dirs fails loudly, not as a fresh index") {
@@ -261,8 +250,8 @@ class Bm25IndexSpec extends SparkTestBase {
     // merged/ gone while ≥2 committed append generations remain: a
     // read returning None ("no index yet") is total silent amnesia,
     // and the next append would commit BATCH-ONLY df/n_docs/t_tok
-    // under a manifest naming ALL surviving dirs — the whole corpus
-    // scored against one batch's statistics (review r13)
+    // while serving ALL surviving dirs — the whole corpus scored
+    // against one batch's statistics (review r13)
     val state = Fixtures.tempDir("bm25-mergedloss").resolve("state").toString
     for (i <- 0 until 2)
       assert(Bm25Index.appendBatch(spark, state,
@@ -277,6 +266,8 @@ class Bm25IndexSpec extends SparkTestBase {
         Seq((900001L, "spark extra")).toDF("doc_id", "text"), 2L)
     }
     assert(e2.getMessage.contains("merged state was removed externally"))
+    val eC = intercept[IllegalArgumentException](Bm25Index.compact(spark, state))
+    assert(eC.getMessage.contains("merged state was removed externally"))
     // boundary, pinned: a SINGLE uncompacted generation without merged
     // stats is indistinguishable from the legitimate first-batch crash
     // window (appends land before the stats commit) — reads stay
@@ -328,6 +319,11 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(!Bm25Index.appendBatch(spark, state, blank, 1L))
     assert(Bm25Index.readState(spark, state).get._4
       .select("n_docs", "t_tok", "last_batch").head().toSeq === st0)
+    // both families log the delivered-but-empty id, and write no dir
+    for (sub <- Seq("postings", "dl")) {
+      assert(new File(live(state, sub), f"applog/s${1L}%020d").exists(), sub)
+      assert(versionDirs(state, sub) === Seq(f"v${0L}%020d"), sub)
+    }
     // ...so the real batch 1 still lands under its id
     assert(Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 50), 1L))
   }
@@ -357,11 +353,11 @@ class Bm25IndexSpec extends SparkTestBase {
       val t = new File(sub)
       Fixtures.deleteRec(if (t.isAbsolute) t else new File(state, sub))
     }
-    // PARTIAL loss first: merged manifest expects both batches'
-    // dirs; deleting only batch 0's postings dir must fail naming the
-    // missing dir — the listing-based check caught only TOTAL loss
-    // and would have served half the corpus against full-corpus
-    // df/N/T (review r12)
+    // PARTIAL loss first: the append log names both batches' dirs;
+    // deleting only batch 0's postings dir must fail naming the
+    // missing dir — a listing-only check caught only TOTAL loss and
+    // would have served half the corpus against full-corpus df/N/T
+    // (review r12)
     Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 50), 1L)
     nuke(live(state, "postings") + f"/v${0L}%020d")
     val ePartial = intercept[IllegalArgumentException] {
@@ -369,31 +365,37 @@ class Bm25IndexSpec extends SparkTestBase {
     }
     assert(ePartial.getMessage.contains(f"v${0L}%020d") &&
       ePartial.getMessage.contains("removed externally"))
-    // the APPEND path must fail the same way (review r13): its commit
-    // rebuilds the manifest from the on-disk listing, so an append
-    // here would bake the hole into a fresh manifest whose stats
-    // still count the lost docs — wrong rankings forever after, with
-    // every later read passing the manifest check
+    // the APPEND path must fail the same way (review r13): an append
+    // here would commit stats that still count the lost docs over a
+    // corpus that no longer holds them — wrong rankings forever after
     val eAppend = intercept[IllegalArgumentException] {
       Bm25Index.appendBatch(spark, state, docs.filter(bucket < 10), 2L)
     }
     assert(eAppend.getMessage.contains(f"v${0L}%020d") &&
       eAppend.getMessage.contains("removed externally"))
-    // TOTAL loss: same contract
+    val eCompact = intercept[IllegalArgumentException](Bm25Index.compact(spark, state))
+    assert(eCompact.getMessage.contains(f"v${0L}%020d") &&
+      eCompact.getMessage.contains("removed externally"))
+    // TOTAL loss: same contract, naming the family
     nuke("postings"); nuke("dl")
-    val e = intercept[IllegalArgumentException] {
-      Bm25Index.readState(spark, state)
+    for (op <- Seq(
+        () => Bm25Index.readState(spark, state),
+        () => Bm25Index.appendBatch(spark, state, docs.filter(bucket < 10), 2L),
+        () => Bm25Index.compact(spark, state))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("missing") &&
+        e.getMessage.contains("removed externally") &&
+        e.getMessage.contains(new File(state, "postings").toString), e.getMessage)
     }
-    assert(e.getMessage.contains("missing") &&
-      e.getMessage.contains("removed externally"))
     val e2 = intercept[IllegalArgumentException] {
       Bm25Index.retrieve(spark, state, Seq("spark")).count()
     }
     assert(e2.getMessage.contains("rebuild"))
   }
 
-  test("pre-dhb dl and pre-manifest stats are refused by retrieve and compact") {
-    // each legacy state fails both entry points and every file stays
+  test("pre-dhb dl and parent-layout families without GENESIS are refused, every file left in place") {
+    // each legacy state fails its entry points and every file stays
+    import spark.implicits._
     val base = Fixtures.tempDir("bm25-legacy")
     val state = base.resolve("state").toString
     Bm25Index.appendBatch(spark, state, docs.filter(bucket < 50), 0L)
@@ -409,36 +411,69 @@ class Bm25IndexSpec extends SparkTestBase {
       org.apache.commons.io.FileUtils.listFiles(root, null, true).asScala.toSeq
         .map(f => (root.toPath.relativize(f.toPath).toString, f.length)).sorted
     }
-    def refused(st: String): Seq[Throwable] = {
+    def refused(st: String, ops: Seq[() => Any]): Seq[Throwable] = {
       val before = files(new File(st))
-      val es = Seq(
-        intercept[Exception](Bm25Index.retrieve(spark, st, terms).collect()),
-        intercept[Exception](Bm25Index.compact(spark, st)))
+      val es = ops.map(op => intercept[Exception](op()))
       assert(files(new File(st)) === before, "a refusal must leave every file in place")
       es
     }
+    def readAndCompact(st: String) = Seq(
+      () => Bm25Index.retrieve(spark, st, terms).collect(),
+      () => Bm25Index.compact(spark, st))
     // the pre-dhb dl layout: unpartitioned, no dhb column
     val preDhb = base.resolve("pre-dhb").toString
     Fixtures.copyRec(new File(state), new File(preDhb))
     for (v <- Seq(0L, 1L))
       rewrite(new File(live(preDhb, "dl"), f"v$v%020d").getPath)(
         _.select("doc_id", "chunk_id", "start", "len", "dl"))
-    for (e <- refused(preDhb)) assert(e.getMessage.contains("dhb"), e.getMessage)
-    // the pre-manifest stats row: no p_dirs / dl_dirs
-    val preManifest = base.resolve("pre-manifest").toString
-    Fixtures.copyRec(new File(state), new File(preManifest))
-    val merged = new File(preManifest, "merged")
+    for (e <- refused(preDhb, readAndCompact(preDhb)))
+      assert(e.getMessage.contains("dhb"), e.getMessage)
+    // the parent layout: families without the append log's applog/,
+    // FRONTIER and GENESIS, the stats row carrying its dir manifests
+    val parent = base.resolve("parent-layout").toString
+    Fixtures.copyRec(new File(state), new File(parent))
+    for (sub <- Seq("postings", "dl"); f <- live(parent, sub).listFiles()
+        if f.getName.matches("\\.?(applog|FRONTIER|GENESIS)(\\.crc)?"))
+      Fixtures.deleteRec(f)
+    val merged = new File(parent, "merged")
     val cur = java.nio.file.Files.readString(new File(merged, "CURRENT").toPath).trim
-    rewrite(new File(new File(merged, cur), "stats").getPath)(_.drop("p_dirs", "dl_dirs"))
-    for (e <- refused(preManifest))
-      assert(e.getMessage.contains("pre-manifest") && e.getMessage.contains("rebuild"),
+    val names = Seq(0L, 1L).map(v => f"v$v%020d")
+    rewrite(new File(new File(merged, cur), "stats").getPath)(
+      _.withColumn("p_dirs", typedLit(names)).withColumn("dl_dirs", typedLit(names)))
+    val appendOp = () => Bm25Index.appendBatch(spark, parent,
+      Seq((900001L, "spark extra")).toDF("doc_id", "text"), 2L)
+    for (e <- refused(parent, readAndCompact(parent) :+ appendOp))
+      assert(e.getMessage.contains("GENESIS") && e.getMessage.contains("rebuild"),
         e.getMessage)
   }
 
+  test("a dir, its log marker and GENESIS removed together fail loudly on " +
+      "read, append and compact") {
+    // the one co-loss the append log's own matrix cannot see: with
+    // GENESIS gone its dense-chain check is off, and the surviving
+    // markers all name surviving dirs
+    val state = Fixtures.tempDir("bm25-genesis").resolve("state").toString
+    for (i <- 0 until 3)
+      assert(Bm25Index.appendBatch(spark, state,
+        docs.filter(bucket >= i * 25 && bucket < (i + 1) * 25), i.toLong))
+    val g = live(state, "postings")
+    val v0 = f"v${0L}%020d"
+    for (f <- Seq(v0, s"applog/$v0", s"applog/.$v0.crc", "GENESIS", ".GENESIS.crc"))
+      Fixtures.deleteRec(new File(g, f))
+    for (op <- Seq(
+        () => Bm25Index.readState(spark, state),
+        () => Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 75), 3L),
+        () => Bm25Index.compact(spark, state))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("GENESIS") &&
+        e.getMessage.contains(new File(state, "postings").toString) &&
+        e.getMessage.contains("removed externally"), e.getMessage)
+    }
+  }
+
   test("pointer mode: family compaction publishes via one PTR rewrite per " +
-      "family; retrieval identical to the direct computation; a crash " +
-      "before the manifest re-commit serves through the fallback; the " +
-      "concurrency guard discards only the staged generations") {
+      "family; retrieval identical to the direct computation; the " +
+      "concurrency guard discards only the staged generation") {
     // The object-store-safe generation layout of the BM25 family
     // stores — NO directory rename anywhere in this index is
     // load-bearing. Every step is checked against the ranking computed
@@ -476,35 +511,26 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(genDirs("postings", "g1") === Seq(f"v${2L}%020d"))
     assert(genDirs("dl", "g1") === Seq(f"v${2L}%020d"))
     assert(serve(state) === want)
-    val st1 = Bm25Index.readState(spark, state).get._4.head()
-    assert(st1.getSeq[String](st1.fieldIndex("p_dirs")) === Seq(f"v${2L}%020d"),
-      "the manifest must name the compacted generation")
+    for (sub <- Seq("postings", "dl"))
+      assert(java.nio.file.Files.readString(new File(new File(state, sub),
+        "g1/MANIFEST").toPath).trim === f"v${2L}%020d",
+        "the family MANIFEST must name the compacted generation")
     // appends continue into the published generation; replays no-op
     assert(Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 75), 3L))
     assert(!Bm25Index.appendBatch(spark, state, docs.filter(bucket >= 75), 3L))
     assert(genDirs("postings", "g1") === (2L to 3L).map(i => f"v$i%020d"))
     val full = direct(docs, terms)
     assert(serve(state) === full)
-    // crash between the family PTR swaps and the manifest re-commit
-    // (the bm25-cwedge drill): snapshot merged/,
-    // compact, restore — reads serve the full corpus via the
-    // folded-dirs fallback, and the next compact completes the
-    // interrupted manifest commit instead of wedging
-    val merged = new File(state, "merged")
-    val saved = new File(state, "merged_saved")
-    Fixtures.copyRec(merged, saved)
+    // a second compaction publishes g2; a third finds one dir per
+    // family and is the no-op
     assert(Bm25Index.compact(spark, state))
-    Fixtures.deleteRec(merged)
-    assert(saved.renameTo(merged))
-    assert(ptrOf("postings") === "g2")
-    assert(serve(state) === full, "fallback must serve the whole corpus")
-    assert(Bm25Index.compact(spark, state), "completion commit")
+    assert(ptrOf("postings") === "g2" && ptrOf("dl") === "g2")
     assert(!Bm25Index.compact(spark, state), "then the no-op")
     assert(serve(state) === full)
-    // the concurrency guard: the abort discards ONLY
-    // the staged target generations; neither family PTR moves; the
-    // concurrent batch — its v-dirs AND its merged-pointer move —
-    // survives intact
+    // the concurrency guard: the abort discards ONLY the staged target
+    // generation (dl compacts first, so postings never stages); neither
+    // family PTR moves; the concurrent batch — its v-dirs AND its
+    // merged-pointer move — survives intact
     assert(Bm25Index.appendBatch(spark, state,
       Seq((900001L, "spark vector pointer doc")).toDF("doc_id", "text"), 4L))
     val e = intercept[RuntimeException] {
@@ -514,11 +540,12 @@ class Bm25IndexSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("concurrent writer"), e.getMessage)
     assert(ptrOf("postings") === "g2" && ptrOf("dl") === "g2")
-    assert(!new File(new File(state, "postings"), "g3").exists(),
+    assert(!new File(new File(state, "postings"), "g3").exists() &&
+      !new File(new File(state, "dl"), "g3").exists(),
       "the aborted target generation must be discarded")
     val st2 = Bm25Index.readState(spark, state).get._4.head()
     assert(st2.getLong(st2.fieldIndex("last_batch")) === 5L,
-      "the concurrent batch's manifest commit must survive the abort")
+      "the concurrent batch's merged commit must survive the abort")
     // the next clean compaction folds everything and advances to g3,
     // leaving g2 as the new grace window and GC'ing everything older
     assert(Bm25Index.compact(spark, state))
@@ -538,9 +565,9 @@ class Bm25IndexSpec extends SparkTestBase {
       "compact folds it") {
     // VERDICT r14 #1 (the Compactor guard ported to the BM25 store):
     // a concurrent appendBatch commits postings/dl v-dirs AND moves
-    // the merged CURRENT pointer — the family swaps would destroy the
-    // dirs and the completion re-commit would clobber the pointer (a
-    // lost manifest update). Injected through the pre-swap seam.
+    // the merged CURRENT pointer — a family swap would destroy its
+    // dirs while the merged stats still count them. Injected through
+    // the pre-swap seam.
     val state = Fixtures.tempDir("bm25-ccg").resolve("state").toString
     val terms = Seq("spark", "vector", "customer")
     for (i <- 0 until 2)
@@ -563,7 +590,7 @@ class Bm25IndexSpec extends SparkTestBase {
       "the aborted rewrites must be discarded")
     val (_, _, _, st) = Bm25Index.readState(spark, state).get
     assert(st.select("last_batch").head().getLong(0) === 2L,
-      "the concurrent batch's manifest commit must survive the abort")
+      "the concurrent batch's merged commit must survive the abort")
     // nothing lost: served ranking covers all three batches
     val before = Bm25Index.retrieve(spark, state, terms)
       .collect().map(_.toString).toSeq
@@ -587,8 +614,8 @@ class Bm25IndexSpec extends SparkTestBase {
     * every interleaving. The directed cases above pin each crash
     * window once; 30 seeded steps interleave appends, crashed
     * appends (partial family v-dirs), frontier replays, compactions
-    * (a third of them over a planted stale target), the
-    * between-swaps-and-manifest-recommit crash, and move-aside
+    * (a third of them over a planted stale target), a compaction
+    * crashed between its two family swaps, and move-aside
     * external loss of random committed family generations — asserting
     * after EVERY step that the served ranking is row-identical to a
     * one-shot ranking of the applied union, and that an unrestored
@@ -679,20 +706,13 @@ class Bm25IndexSpec extends SparkTestBase {
               s"step $step: loss of $sub/${victim.getName} not loud: ${e.getMessage}")
           }
           assert(aside.renameTo(victim))
-        case 5 => // crash between the family swaps and the manifest
-                  // re-commit: the stale manifest's missing names fall
-                  // inside the frontier generation's _COMPACTED list,
-                  // so reads serve through the fallback and the next
-                  // compact completes the interrupted commit
-          val merged = new File(state, "merged")
-          val saved = new File(base.toFile, s"msave-$step")
-          Fixtures.copyRec(merged, saved)
-          if (Bm25Index.compact(spark, state)) {
-            Fixtures.deleteRec(merged)
-            assert(saved.renameTo(merged))
-            checkServed() // served via the fallback
-            assert(Bm25Index.compact(spark, state), "completion commit")
-          } else Fixtures.deleteRec(saved)
+        case 5 => // a compaction crashed between its two family
+                  // swaps: one family compacted, the other not, reads
+                  // unchanged, and the next compact finishes it
+          if (crashBetweenSwaps(state)) {
+            checkServed()
+            assert(Bm25Index.compact(spark, state), "the next compact finishes")
+          }
       }
       checkServed()
     }

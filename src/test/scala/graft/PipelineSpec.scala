@@ -250,4 +250,33 @@ class PipelineSpec extends SparkTestBase {
     assert(java.nio.file.Files.readAllBytes(file).sameElements(bytes),
       "a failed read must leave the registry file untouched")
   }
+
+  test("control-plane writes are atomic: a write killed mid-stream leaves " +
+      "the registry and the checkpoint byte-identical") {
+    CrashFs.register(spark.sparkContext.hadoopConfiguration)
+    val local = Fixtures.tempDir("atomic-ctl")
+    val dir = s"${CrashFs.Scheme}://${local.toUri.getPath}"
+    def bytes(name: String): Seq[Byte] =
+      java.nio.file.Files.readAllBytes(local.resolve(name)).toSeq
+    val d = (s: String) => LocalDate.parse(s)
+    val reg = new graft.ingest.LateRegistry(spark, dir)
+    reg.add(Set(d("2025-04-20"), d("2025-04-22"), d("2025-04-24")))
+    val regBytes = bytes("missing_dates.txt")
+    intercept[java.io.IOException](CrashFs.crashing(5)(reg.add(Set(d("2025-04-25")))))
+    assert(bytes("missing_dates.txt") === regBytes, "a killed add tore the registry")
+    intercept[java.io.IOException](
+      CrashFs.crashing(5)(reg.commit(Set(d("2025-04-20")), d("2025-05-01"))))
+    assert(bytes("missing_dates.txt") === regBytes, "a killed commit tore the registry")
+    assert(reg.read() === Set(d("2025-04-20"), d("2025-04-22"), d("2025-04-24")))
+    val ckpt = new graft.ingest.Checkpoint(spark, dir, "2025_01_01")
+    assert(ckpt.advance(d("2025-05-01")))
+    val txt = bytes("last_processed_date.txt")
+    val json = bytes("last_processed_date_detailed.json")
+    intercept[java.io.IOException](CrashFs.crashing(4)(ckpt.advance(d("2025-05-02"))))
+    assert(bytes("last_processed_date.txt") === txt, "a killed advance tore the checkpoint")
+    assert(bytes("last_processed_date_detailed.json") === json)
+    // the torn file would read back as the default date, not 05-01
+    assert(ckpt.read() === d("2025-05-01"))
+    assert(ckpt.advance(d("2025-05-02")) && ckpt.read() === d("2025-05-02"))
+  }
 }
