@@ -189,31 +189,78 @@ class Bm25IndexSpec extends SparkTestBase {
     }
   }
 
-  test("crash between compact's two family swaps: reads row-identical, " +
-      "appends continue, the next compact finishes the other family") {
+  /** Both families' served rows, sorted — the crash window must not
+    * change them. */
+  private def servedRows(state: String): (Seq[String], Seq[String]) = {
+    val (p, d, _, _) = Bm25Index.readState(spark, state).get
+    (p.collect().map(_.toString).sorted.toSeq, d.collect().map(_.toString).sorted.toSeq)
+  }
+
+  /** The family's compaction MANIFEST in its live generation, if any. */
+  private def manifest(state: String, sub: String): Option[String] = {
+    val f = new File(live(state, sub), "MANIFEST")
+    if (f.exists()) Some(java.nio.file.Files.readString(f.toPath).trim) else None
+  }
+
+  test("crash between compact's swap and its manifest re-commit: served, then completed") {
+    // the store's compaction manifest is the pair of family MANIFESTs,
+    // each published by its family's swap: a crash after the dl swap
+    // leaves postings uncompacted and without one. Reads serve the
+    // same rows; the next compact publishes the missing MANIFEST.
     import spark.implicits._
     val state = Fixtures.tempDir("bm25-cwedge").resolve("state").toString
     val terms = Seq("spark", "vector", "customer")
     for (i <- 0 until 3)
       assert(Bm25Index.appendBatch(spark, state,
         docs.filter(bucket >= i * 25 && bucket < (i + 1) * 25), i.toLong))
-    def rows: (Seq[String], Seq[String]) = {
-      val (p, d, _, _) = Bm25Index.readState(spark, state).get
-      (p.collect().map(_.toString).sorted.toSeq, d.collect().map(_.toString).sorted.toSeq)
-    }
     val want = Bm25Index.retrieve(spark, state, terms)
       .collect().map(_.toString).toSeq
-    val before = rows
+    val before = servedRows(state)
     assert(crashBetweenSwaps(state))
     // dl compacted first; postings still holds its three append dirs
     val v2 = f"v${2L}%020d"
     assert(versionDirs(state, "dl") === Seq(v2))
     assert(new File(live(state, "dl"), s"$v2/_COMPACTED").exists())
+    assert(manifest(state, "dl") === Some(v2))
     assert(versionDirs(state, "postings").size === 3)
-    assert(rows === before, "the crash window must serve the same rows")
+    assert(manifest(state, "postings") === None)
+    assert(servedRows(state) === before, "the crash window must serve the same rows")
     assert(Bm25Index.retrieve(spark, state, terms)
       .collect().map(_.toString).toSeq === want)
-    // an append in the window folds normally
+    // the next compact finishes the postings family
+    assert(Bm25Index.compact(spark, state))
+    assert(versionDirs(state, "postings") === Seq(v2))
+    assert(manifest(state, "postings") === Some(v2))
+    assert(versionDirs(state, "dl") === Seq(v2))
+    assert(!Bm25Index.compact(spark, state), "second run is the no-op")
+    assert(servedRows(state) === before)
+    assert(Bm25Index.retrieve(spark, state, terms)
+      .collect().map(_.toString).toSeq === want)
+    // external loss of the compacted generation stays LOUD everywhere
+    Fixtures.deleteRec(new File(live(state, "postings"), v2))
+    val extra = Seq((900001L, "spark vector extra doc")).toDF("doc_id", "text")
+    for (op <- Seq(
+        () => Bm25Index.readState(spark, state),
+        () => Bm25Index.appendBatch(spark, state, extra, 3L),
+        () => Bm25Index.compact(spark, state))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(v2) &&
+        e.getMessage.contains("removed externally"), e.getMessage)
+    }
+  }
+
+  test("append on a crash-interrupted compaction completes the manifest instead of failing") {
+    // the loss checks at appendBatch entry must NOT fire on the crash
+    // window (dl compacted, postings not): the append folds normally,
+    // and the next compact completes the postings MANIFEST on top of it
+    import spark.implicits._
+    val state = Fixtures.tempDir("bm25-cappend").resolve("state").toString
+    val terms = Seq("spark", "vector", "customer")
+    for (i <- 0 until 3)
+      assert(Bm25Index.appendBatch(spark, state,
+        docs.filter(bucket >= i * 25 && bucket < (i + 1) * 25), i.toLong))
+    assert(crashBetweenSwaps(state))
+    assert(manifest(state, "postings") === None)
     val nDocs0 = Bm25Index.readState(spark, state).get._4
       .select("n_docs").head().getLong(0)
     val extra = Seq((900001L, "spark vector extra doc"),
@@ -221,28 +268,22 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(Bm25Index.appendBatch(spark, state, extra, 3L))
     assert(Bm25Index.readState(spark, state).get._4
       .select("n_docs").head().getLong(0) === nDocs0 + 2)
-    val want3 = Bm25Index.retrieve(spark, state, terms)
+    val want = Bm25Index.retrieve(spark, state, terms)
       .collect().map(_.toString).toSeq
-    val before3 = rows
-    // the next compact finishes: one generation per family
+    assert(want.nonEmpty)
+    val before = servedRows(state)
+    // the next compact finishes: one generation per family, both named
+    // by their MANIFEST at the new frontier
     assert(Bm25Index.compact(spark, state))
     val v3 = f"v${3L}%020d"
-    assert(versionDirs(state, "postings") === Seq(v3))
-    assert(versionDirs(state, "dl") === Seq(v3))
-    assert(!Bm25Index.compact(spark, state), "second run is the no-op")
-    assert(rows === before3)
-    assert(Bm25Index.retrieve(spark, state, terms)
-      .collect().map(_.toString).toSeq === want3)
-    // external loss of the compacted generation stays LOUD everywhere
-    Fixtures.deleteRec(new File(live(state, "postings"), v3))
-    for (op <- Seq(
-        () => Bm25Index.readState(spark, state),
-        () => Bm25Index.appendBatch(spark, state, extra, 4L),
-        () => Bm25Index.compact(spark, state))) {
-      val e = intercept[IllegalArgumentException](op())
-      assert(e.getMessage.contains(v3) &&
-        e.getMessage.contains("removed externally"), e.getMessage)
+    for (sub <- Seq("postings", "dl")) {
+      assert(versionDirs(state, sub) === Seq(v3))
+      assert(manifest(state, sub) === Some(v3))
     }
+    assert(!Bm25Index.compact(spark, state), "second run is the no-op")
+    assert(servedRows(state) === before)
+    assert(Bm25Index.retrieve(spark, state, terms)
+      .collect().map(_.toString).toSeq === want)
   }
 
   test("external loss of the merged stats with live append dirs fails loudly, not as a fresh index") {
