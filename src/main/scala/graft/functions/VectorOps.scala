@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.{call_function, floor, lit, transform}
 import org.apache.spark.sql.types._
 
 /** Native vector kernels for the embedding operators.
@@ -192,6 +192,18 @@ object VectorOps {
     register(spark)
     call_function("dot_long", a, b)
   }
+
+  /** The engine-wide fixed-point quantization, `floor(x·1000)` per
+    * element as `array<long>` — exact for float inputs (float→double is
+    * lossless, ×1000 never lands on an exact .5, floor is exact), so
+    * every vector operator computes in exact integers. */
+  def quantize(c: Column): Column =
+    transform(c, e => floor(e.cast(DoubleType) * 1000).cast(LongType))
+
+  /** Exact integer squared distance `a·a − 2a·b + b·b` of two quantized
+    * vectors. */
+  def d2(spark: SparkSession, a: Column, b: Column): Column =
+    dotLong(spark, a, a) - lit(2L) * dotLong(spark, a, b) + dotLong(spark, b, b)
 
   /** Double dot product; casts both sides to array<double> so float/
     * long/int embeddings all work. Left-to-right accumulation order

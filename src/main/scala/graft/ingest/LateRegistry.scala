@@ -44,9 +44,8 @@ final class LateRegistry(spark: SparkSession, dir: String,
 
   /** U1/J1: register candidate dates not already covered. */
   def add(dates: Set[LocalDate]): Set[LocalDate] = {
-    val merged = read() ++ dates
-    write(merged)
-    merged
+    val cur = read()
+    write(cur, cur ++ dates)
   }
 
   /** J2/U2 + P6 + E6 fix: after a successful run, drop processed
@@ -54,13 +53,17 @@ final class LateRegistry(spark: SparkSession, dir: String,
     * `today`. */
   def commit(processed: Set[LocalDate], today: LocalDate): Set[LocalDate] = {
     val horizon = today.minusDays(horizonDays.toLong)
-    val remaining = (read() -- processed).filter(_.isAfter(horizon))
-    write(remaining)
-    remaining
+    val cur = read()
+    write(cur, (cur -- processed).filter(_.isAfter(horizon)))
   }
 
-  /** Atomic replace ([[StateFs.writeFileAtomicFs]]): a crash mid-write
-    * leaves the previous registry whole, never a truncated one. */
-  private def write(dates: Set[LocalDate]): Unit =
-    StateFs.writeFileAtomicFs(fs, path, dates.toSeq.sorted.map(_.format(fmt)).mkString("\n"))
+  /** Replace the registry `cur` with `dates`, returned. Atomic
+    * ([[StateFs.writeFileAtomicFs]]): a crash mid-write leaves the
+    * previous registry whole, never a truncated one. An unchanged set
+    * writes nothing — the replace costs a file create and rename. */
+  private def write(cur: Set[LocalDate], dates: Set[LocalDate]): Set[LocalDate] = {
+    if (dates != cur)
+      StateFs.writeFileAtomicFs(fs, path, dates.toSeq.sorted.map(_.format(fmt)).mkString("\n"))
+    dates
+  }
 }

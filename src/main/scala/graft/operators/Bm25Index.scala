@@ -40,12 +40,12 @@ import graft.util.{AppendLog, StateFs}
   *    already-pruned postings slice) — the `tkb` device applied to the
   *    length table, closing the one unpruned scan the r11 audit
   *    flagged.
-  *  - `merged/v<batchId>/{df,stats}` + `merged/CURRENT` pointer —
-  *    the two frames that must MERGE rather than append: `df` is
-  *    vocabulary-sized (token → containing-chunk count) and `stats`
-  *    is one row `(n_docs, t_tok, last_batch)`; each batch writes a
-  *    new version and atomically swaps the pointer (the
-  *    StreamingKMeans state discipline).
+  *  - `merged/` — the two frames that must MERGE rather than append:
+  *    `df` is vocabulary-sized (token → containing-chunk count) and
+  *    `stats` is one row `(n_docs, t_tok, last_batch)`. A
+  *    [[graft.util.StateFs]] replace store, as the StreamingKMeans
+  *    accumulator: each batch writes both into the next generation
+  *    and publishes them with one `PTR` rewrite.
   *
   * Each family dir is an [[graft.util.AppendLog]] base, the one
   * per-batch append, replay, loss-check and compaction protocol of the
@@ -160,31 +160,10 @@ object Bm25Index {
   private def dlLog(stateDir: String) =
     new AppendLog(new Path(stateDir, "dl"), "dhb", "BM25")
 
-  /** The committed merged version name, or None before the first
-    * fully-committed batch. A version is served only if the pointer
-    * names it AND both its frames finished writing. */
-  private def currentVersion(spark: SparkSession, stateDir: String): Option[String] = {
-    val md = mergedDir(stateDir)
-    val fs = StateFs.fs(spark, md)
-    val cur = new Path(md, "CURRENT")
-    if (!fs.exists(cur)) None
-    else {
-      val v = StateFs.readString(fs, cur)
-      val d = new Path(md, v)
-      if (StateFs.committed(fs, new Path(d, "df")) &&
-          StateFs.committed(fs, new Path(d, "stats")))
-        Some(v)
-      else None
-    }
-  }
-
   /** `(df, stats)` of the current committed generation. */
   def readMerged(spark: SparkSession, stateDir: String): Option[(DataFrame, DataFrame)] =
-    currentVersion(spark, stateDir).map { v =>
-      val d = new Path(mergedDir(stateDir), v)
-      (spark.read.parquet(new Path(d, "df").toString),
-        spark.read.parquet(new Path(d, "stats").toString))
-    }
+    StateFs.readFrames(spark, mergedDir(stateDir), Seq("df", "stats"))
+      .map { case Seq(dfreq, stats) => (dfreq, stats) }
 
   private def lastBatch(merged: (DataFrame, DataFrame)): Long =
     merged._2.select("last_batch").head().getLong(0)
@@ -313,26 +292,11 @@ object Bm25Index {
               .agg(sum(col("n_docs")).as("n_docs"),
                 sum(col("t_tok")).as("t_tok")))
       }
-      commitMerged(spark, stateDir, f"v$batchId%020d",
-        nDf.localCheckpoint(true),
-        nStats.withColumn("last_batch", lit(batchId)).localCheckpoint(true))
+      StateFs.commitFrames(spark, mergedDir(stateDir), Seq(
+        "df" -> nDf.localCheckpoint(true),
+        "stats" -> nStats.withColumn("last_batch", lit(batchId)).localCheckpoint(true)))
       true
     } finally { tfAll.unpersist(); () }
-  }
-
-  /** Write-new-version + atomic pointer swap + GC (the
-    * StreamingKMeans commit). The localCheckpoints upstream severed
-    * lineage from the generation being collected. */
-  private def commitMerged(spark: SparkSession, stateDir: String,
-      vname: String, dfreq: DataFrame, stats: DataFrame): Unit = {
-    val md = mergedDir(stateDir)
-    val d = new Path(md, vname)
-    dfreq.coalesce(1).write.mode("overwrite").parquet(new Path(d, "df").toString)
-    stats.coalesce(1).write.mode("overwrite").parquet(new Path(d, "stats").toString)
-    StateFs.writePointer(spark, md, vname)
-    // GC every generation the pointer left behind, committed or
-    // partial (a crashed earlier commit's half-written dir included)
-    StateFs.gcVersions(StateFs.fs(spark, md), md, vname)
   }
 
   /** Background compaction: fold each family's committed dirs into one

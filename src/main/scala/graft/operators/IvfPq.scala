@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorOps.d2
+
 /** IVF-PQ: product quantization over RESIDUALS against a coarse
   * quantizer — the IVFADC scheme of Jégou, Douze & Schmid (TPAMI
   * 2011, §IV), and the architecture behind every production
@@ -35,11 +37,6 @@ import org.apache.spark.sql.functions._
   * ([[graft.queries.VectorQueries]]).
   */
 object IvfPq {
-
-  private def d2(s: SparkSession, a: Column, b: Column): Column = {
-    import graft.functions.VectorOps.dotLong
-    dotLong(s, a, a) - lit(2L) * dotLong(s, a, b) + dotLong(s, b, b)
-  }
 
   /** Assign each `(vec_id, qv)` to its nearest coarse centroid and
     * emit the integer residual: `(vec_id, cell, rv)`. One broadcast
@@ -277,9 +274,7 @@ object IvfPq {
     // remedy rather than an opaque NPE on the NULL percentile.
     val nnRow = eval
       .crossJoin(broadcast(fit.select(col("qv").as("fv"))))
-      .select(col("vec_id"), (dotLong(s, col("qv"), col("qv"))
-        - lit(2L) * dotLong(s, col("qv"), col("fv"))
-        + dotLong(s, col("fv"), col("fv"))).as("_d2"))
+      .select(col("vec_id"), d2(s, col("qv"), col("fv")).as("_d2"))
       .filter(col("_d2") > 0)
       .groupBy("vec_id").agg(min(col("_d2")).as("nn"))
       .agg(expr("percentile(nn, 0.5)")).head()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.VectorOps.{d2, quantize}
+
 /** Distributed Lloyd k-means over integer-quantized embedding vectors —
   * the iterative refinement behind embedding-space corpus balancing
   * (the one-step oracle-checked E-step is
@@ -37,16 +39,6 @@ import org.apache.spark.sql.types._
   * k×corpus.
   */
 object KMeans {
-
-  /** Same fixed-point quantization as the oracle-checked vector
-    * queries: `floor(x·1000)` — exact for float inputs. */
-  private def quantize(c: Column): Column =
-    transform(c, e => floor(e.cast(DoubleType) * 1000).cast(LongType))
-
-  private def d2(s: SparkSession, v: Column, c: Column): Column = {
-    import graft.functions.VectorOps.dotLong
-    dotLong(s, v, v) - lit(2L) * dotLong(s, v, c) + dotLong(s, c, c)
-  }
 
   /** `rounds` Lloyd iterations over `vecs` (`vec_id`, `embedding`);
     * seeds are the k lowest `vec_id`s. Returns one row per centroid:

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.VectorOps.d2
+
 /** Product quantization for billion-scale ANN (Jégou, Douze &
   * Schmid, TPAMI 2011): split each vector into `m` subspaces, learn a
   * small per-subspace codebook, store each vector as `m` codes, and
@@ -31,15 +33,6 @@ import org.apache.spark.sql.types._
   * 1M ablation, PLANS.md).
   */
 object ProductQuantizer {
-
-  /** The engine-wide fixed-point quantization (exact for floats). */
-  def quantize(c: Column): Column =
-    transform(c, e => floor(e.cast(DoubleType) * 1000).cast(LongType))
-
-  private def d2(s: SparkSession, a: Column, b: Column): Column = {
-    import graft.functions.VectorOps.dotLong
-    dotLong(s, a, a) - lit(2L) * dotLong(s, a, b) + dotLong(s, b, b)
-  }
 
   /** `(vec_id, sub, sv)` subvector rows of a `(vec_id, qv)` frame. */
   def subRows(qvecs: DataFrame, m: Int, subLen: Int): DataFrame =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.functions.VectorOps.quantize
 
 /** Third relational wave: outer joins, array higher-order functions,
   * correlated-scalar semantics, RANGE window frames, rank statistics. */
@@ -45,8 +46,7 @@ object AdvancedQueries {
   def arrayFuncs(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"),
-        transform(col("embedding"),
-          e => floor(e.cast(DoubleType) * 1000).cast(LongType)).as("q"))
+        quantize(col("embedding")).as("q"))
       .select(
         col("vec_id"),
         size(col("q")).as("dim"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.functions.VectorOps.{d2, dotLong, quantize}
 
 /** Embedding similarity queries over the `embeddings` table
   * (SURVEY.md §2.11). The oracle-checked variants quantize each
@@ -19,18 +20,8 @@ import graft.Tables
   */
 object VectorQueries {
 
-  /** Integer-quantized embedding: ArrayType(LongType). */
-  private def quantize(c: Column): Column =
-    transform(c, e => floor(e.cast(DoubleType) * 1000).cast(LongType))
-
   private val quantizeSql =
     "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT))"
-
-  /** Exact integer dot product through the native codegen'd
-    * [[graft.functions.DotLong]] kernel — one JVM loop per row instead
-    * of 64 interpreted higher-order-function element evaluations. */
-  private def qdot(s: SparkSession, a: Column, b: Column): Column =
-    graft.functions.VectorOps.dotLong(s, a, b)
 
   /** Brute-force k-NN baseline: 8 fixed query vectors against the
     * whole corpus, top-5 by integer dot product. Queries broadcast;
@@ -42,7 +33,7 @@ object VectorQueries {
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
     val pairs = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("dot", qdot(s, col("q_qv"), col("qv")))
+      .withColumn("dot", dotLong(s, col("q_qv"), col("qv")))
     val w = Window.partitionBy("q_id").orderBy(col("dot").desc, col("vec_id").asc)
     pairs.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
@@ -93,7 +84,7 @@ object VectorQueries {
     val e = Tables.embeddings(s, dir)
       .filter(col("vec_id") % 5 === 0)
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("n2", qdot(s, col("qv"), col("qv")))
+      .withColumn("n2", dotLong(s, col("qv"), col("qv")))
     // All band keys in ONE native-kernel pass per vector
     // (graft.functions.LshBandKeys — same integer LCG mix as the
     // DuckDB twin below, bit-for-bit); posexplode emits (band, key).
@@ -111,7 +102,7 @@ object VectorQueries {
     val vb = e.select(col("vec_id").as("id_b"), col("qv").as("qv_b"), col("n2").as("n2_b"))
     cand.join(va, "id_a").join(vb, "id_b")
       .withColumn("cosine",
-        qdot(s, col("qv_a"), col("qv_b")).cast(DoubleType) /
+        dotLong(s, col("qv_a"), col("qv_b")).cast(DoubleType) /
           (sqrt(col("n2_a").cast(DoubleType)) * sqrt(col("n2_b").cast(DoubleType))))
       .filter(col("cosine") >= 0.25)
       .select("id_a", "id_b", "cosine")
@@ -353,12 +344,12 @@ object VectorQueries {
       .agg(collect_list(struct(col("pos"), col("cs"))).as("raw"))
       .select(col("label"),
         transform(array_sort(col("raw")), x => x.getField("cs")).as("cv"))
-    val centN = cent.withColumn("cn2", qdot(s, col("cv"), col("cv")))
+    val centN = cent.withColumn("cn2", dotLong(s, col("cv"), col("cv")))
     val scored = e.join(broadcast(centN), Seq("label"))
-      .withColumn("n2", qdot(s, col("qv"), col("qv")))
+      .withColumn("n2", dotLong(s, col("qv"), col("qv")))
       .filter(col("n2") > 0)
       .withColumn("cos",
-        qdot(s, col("qv"), col("cv")).cast(DoubleType) /
+        dotLong(s, col("qv"), col("cv")).cast(DoubleType) /
           (sqrt(col("n2").cast(DoubleType)) * sqrt(col("cn2").cast(DoubleType))))
     val w = Window.partitionBy("label").orderBy(col("cos").asc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))
@@ -422,8 +413,7 @@ object VectorQueries {
       .select(col("vec_id").as("c_id"), col("qv").as("c_qv"))
     val scored = e.crossJoin(broadcast(cents))
       .withColumn("d2",
-        qdot(s, col("qv"), col("qv")) - lit(2L) * qdot(s, col("qv"), col("c_qv")) +
-          qdot(s, col("c_qv"), col("c_qv")))
+        d2(s, col("qv"), col("c_qv")))
     scored.groupBy("vec_id")
       .agg(min(struct(col("d2"), col("c_id"))).as("m"))
       .select(col("m.c_id").as("c_id"), col("m.d2").as("d2"))
@@ -479,7 +469,7 @@ object VectorQueries {
   def semanticDedupFrom(s: SparkSession, vecs: DataFrame, k: Int,
       tau: Double): DataFrame = {
     val e = vecs.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("n2", qdot(s, col("qv"), col("qv")))
+      .withColumn("n2", dotLong(s, col("qv"), col("qv")))
     val cents = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("c_id"), col("qv").as("c_qv"),
         col("n2").as("c_n2"))
@@ -487,7 +477,7 @@ object VectorQueries {
     // lexicographic min(struct) so qv/n2 tag along without a rejoin
     val asg = e.crossJoin(broadcast(cents))
       .withColumn("d2",
-        col("n2") - lit(2L) * qdot(s, col("qv"), col("c_qv")) + col("c_n2"))
+        col("n2") - lit(2L) * dotLong(s, col("qv"), col("c_qv")) + col("c_n2"))
       .groupBy("vec_id")
       .agg(min(struct(col("d2"), col("c_id"), col("qv"), col("n2"))).as("m"))
       .select(col("vec_id"), col("m.c_id").as("c_id"), col("m.d2").as("d2"),
@@ -499,7 +489,7 @@ object VectorQueries {
     val pairs = rnk.join(u, Seq("c_id"))
       .filter(col("pos_u") < col("pos"))
       .withColumn("cos",
-        qdot(s, col("qv_u"), col("qv")).cast(DoubleType) /
+        dotLong(s, col("qv_u"), col("qv")).cast(DoubleType) /
           (sqrt(col("n2_u").cast(DoubleType)) * sqrt(col("n2").cast(DoubleType))))
     // per vector: the most-similar EARLIER candidate (ties → lower id)
     val best = pairs.groupBy("vec_id")

@@ -139,11 +139,8 @@ final class UpsertSink(spark: SparkSession, targetDir: String) {
         (if (c == "created_at") col("_created") else col("_row").getField(c)).as(c)): _*)
     // Dynamic partition overwrite: only the date= directories present
     // in `merged` are replaced, through the committer's staging dir —
-    // no window where the live table is deleted. Scoped per-write so
-    // the session's static-overwrite default is untouched for callers.
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("date").parquet(targetDir)
+    // no window where the live table is deleted.
+    PartitionedWriter.write(merged, targetDir)
     val w = written.get
     Merged(w("rows").asInstanceOf[Long], w("upserted").asInstanceOf[Long])
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.functions.VectorOps
 import graft.operators.{IvfPq, ProductQuantizer}
 import graft.util.{AppendLog, StateFs}
 
@@ -115,7 +116,7 @@ object StreamingIvfPq {
       // is why every IvfPq call below takes `sb`.
       val sb = batch.sparkSession
       val qb = batch.select(col(idCol).as("vec_id"),
-        ProductQuantizer.quantize(col(vecCol)).as("qv"))
+        VectorOps.quantize(col(vecCol)).as("qv"))
       val (cents, cbs) = readQuantizer(sb, stateDir).getOrElse {
         // seeding is only legitimate on a virgin index (header)
         requireNoCodes(existing)
@@ -240,7 +241,7 @@ object StreamingIvfPq {
     val (cents, cbs, codes) = readIndex(spark, stateDir).getOrElse(
       sys.error(s"no committed IVF-PQ index under $stateDir"))
     val qs = queries.select(col(idCol).as("q_id"),
-      ProductQuantizer.quantize(col(vecCol)).as("qv"))
+      VectorOps.quantize(col(vecCol)).as("qv"))
     val probed = IvfPq.probedCells(spark, cents, qs, nProbe)
     IvfPq.probe(spark, cents, cbs,
       codes.filter(col("cell").isin(probed: _*)),

@@ -25,61 +25,38 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType}
   * centroid is `sums DIV n` (elementwise floor mean, exactly the
   * batch operator's update rule), so after any prefix of the stream
   * the centroid equals the floor-mean of ALL points assigned so far —
-  * deterministic, engine-exact, and restart-safe: each batch commits
-  * its state to a NEW versioned directory and then atomically swaps a
-  * `CURRENT` pointer file onto it (`Files.move` ATOMIC_MOVE), so a
-  * crash at any instant leaves the previous fully-committed version
-  * referenced — a mid-write crash can never be mistaken for "no
-  * state" (the failure mode of a plain overwrite, which deletes the
-  * old directory before the new `_SUCCESS` lands). The `last_batch`
-  * column makes replays detectable: a re-delivered batch id is
-  * skipped, the foreachBatch-idempotence recipe of the ingest stream.
+  * deterministic, engine-exact, and restart-safe: each batch writes
+  * its whole state into the next [[graft.util.StateFs]] generation and
+  * publishes it with one atomic `PTR` rewrite, so a crash at any instant
+  * leaves the previous fully-committed generation served, and a
+  * mid-write crash can never be mistaken for "no state" (the failure
+  * mode of a plain overwrite, which deletes the old directory before
+  * the new `_SUCCESS` lands). A lost pointer or live generation is
+  * refused loudly, never re-seeded from the next batch. The
+  * `last_batch` column makes replays detectable: a re-delivered batch
+  * id is skipped, the foreachBatch-idempotence recipe of the ingest
+  * stream.
   *
   * Assignment ties and empty clusters follow the batch operator:
   * argmin by `(d2, c_id)`, an empty batch leaves state untouched.
   */
 object StreamingKMeans {
 
-  /** Load the accumulator state the `CURRENT` pointer names, or None
-    * before the first committed batch. Only a version that BOTH
-    * finished its parquet write (`_SUCCESS`) and won the pointer swap
-    * is ever served; partially-written versions are invisible. */
-  def readState(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    // state I/O through the Hadoop FileSystem API (graft.util.StateFs)
-    // so file:// and hdfs:// state dirs behave identically — the
-    // Bm25Index/StreamingIvf discipline (review r12)
-    val base = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = graft.util.StateFs.fs(spark, base)
-    val cur = new org.apache.hadoop.fs.Path(base, "CURRENT")
-    if (!fs.exists(cur)) None
-    else {
-      val v = graft.util.StateFs.readString(fs, cur)
-      val d = new org.apache.hadoop.fs.Path(base, v)
-      if (graft.util.StateFs.committed(fs, d))
-        Some(spark.read.parquet(d.toString))
-      else None
-    }
-  }
+  /** The replace-store base of the accumulator: one frame, `state`. */
+  private def base(stateDir: String) = new org.apache.hadoop.fs.Path(stateDir)
 
-  /** Commit `next` as the state after `batchId`: write the k-row frame
-    * to `stateDir/v<batchId>`, atomically swap `CURRENT` onto it
-    * (write-temp + rename-over via `StateFs.writePointer` — atomic on
-    * HDFS and the local fs), then GC every version directory the
-    * pointer no longer references, committed or partial.
-    * Crash windows: before the swap → old pointer + old version stay
-    * intact; during GC → orphan directories only, re-collected on the
-    * next commit. Replay of a batch id rewrites the same version dir
-    * (overwrite) and re-swaps — idempotent. */
-  def commitState(next: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val spark = next.sparkSession
-    val vname = f"v$batchId%020d"
-    val base = new org.apache.hadoop.fs.Path(stateDir)
-    next.coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(base, vname).toString)
-    graft.util.StateFs.writePointer(spark, base, vname)
-    graft.util.StateFs.gcVersions(
-      graft.util.StateFs.fs(spark, base), base, vname)
-  }
+  /** Load the accumulator state, or None before the first committed
+    * batch ([[graft.util.StateFs.readFrames]]: a partially-written
+    * generation is invisible, external loss is refused). */
+  def readState(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    graft.util.StateFs.readFrames(spark, base(stateDir), Seq("state")).map(_.head)
+
+  /** Commit the k-row frame `next` as the state after `batchId`
+    * ([[graft.util.StateFs.commitFrames]]); the id rides in the frame's
+    * `last_batch` column, not in the layout. */
+  def commitState(next: DataFrame, stateDir: String, batchId: Long): Unit =
+    graft.util.StateFs.commitFrames(next.sparkSession, base(stateDir),
+      Seq("state" -> next))
 
   /** Serve the current model: `(c_id, centroid)` with the elementwise
     * integer floor-mean centroid (`sums DIV n`, matching
@@ -140,7 +117,7 @@ object StreamingKMeans {
 
   /** Wire the updater into a stream: each micro-batch folds into the
     * versioned parquet accumulator under `stateDir` via
-    * [[commitState]] (write-new-version + atomic pointer swap; k
+    * [[commitState]] (write-next-generation + atomic pointer swap; k
     * rows). Replayed batch ids are skipped via the persisted
     * `last_batch` marker column — the idempotent-foreachBatch recipe. */
   def fit(spark: SparkSession, vecs: Dataset[_], stateDir: String,

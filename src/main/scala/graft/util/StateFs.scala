@@ -3,16 +3,16 @@ package graft.util
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Hadoop-FileSystem primitives for the stored-state stores
   * ([[graft.operators.Bm25Index]], [[graft.sink.Compactor]],
   * [[AppendLog]] — the streamed vector indexes — and
   * [[graft.streaming.StreamingKMeans]]): version-dir listing, `_SUCCESS`
-  * commit checks, the CURRENT pointer, the `_COMPACTED` folded-dirs
-  * marker, and the one state layout every stored base uses — factored
-  * here so the layout and its crash matrix exist ONCE. Through the Hadoop API
-  * the same code serves `file://`, `hdfs://` and object stores alike.
+  * commit checks, the `_COMPACTED` folded-dirs marker, and the one
+  * state layout every stored base uses — factored here so the layout
+  * and its crash matrix exist ONCE. Through the Hadoop API the same
+  * code serves `file://`, `hdfs://` and object stores alike.
   *
   * THE LAYOUT. A state base dir is a container of generation dirs
   * `g<k>` plus a one-line `PTR` file naming the live one. Compaction
@@ -29,6 +29,12 @@ import org.apache.spark.sql.SparkSession
   * while the predecessor idles; stale generations and an orphan
   * `PTR.tmp` are collected at the next compaction entry.
   *
+  * Two kinds of store share it: append stores ([[AppendLog]], the
+  * Compactor tables) write into the live generation and compact into
+  * the next, and replace stores (BM25's merged df/stats, the
+  * StreamingKMeans accumulator) write each whole new state into the
+  * next generation ([[commitFrames]], read back by [[readFrames]]).
+  *
   * VIRGIN BASES. A base that is absent, empty, or holds only the
   * `PTR.tmp` of a crashed first publish is virgin: [[resolveLive]]
   * names `g0` without creating anything, so readers see an empty
@@ -38,8 +44,10 @@ import org.apache.spark.sql.SparkSession
   * LEFTOVER LAYOUTS. A non-empty base without `PTR` is refused loudly
   * on read, append and compact, deleting nothing: with generation dirs
   * present the pointer was lost externally; otherwise it is a leftover
-  * of the retired rename-aside layout (`v*` dirs, parquet files, or
-  * `.bak`/`.tmp` siblings), which must be rebuilt into a fresh dir. */
+  * of a retired layout — the rename-aside swap (`v*` dirs, parquet
+  * files, or `.bak`/`.tmp` siblings) or the `v<id>` dirs and `CURRENT`
+  * pointer replace stores once used — which must be rebuilt into a
+  * fresh dir. */
 object StateFs {
 
   def fs(spark: SparkSession, p: Path): FileSystem =
@@ -82,10 +90,6 @@ object StateFs {
       .rename(tmp, target, Options.Rename.OVERWRITE)
   }
 
-  /** Atomically (re)point `dir/CURRENT` at `value`. */
-  def writePointer(spark: SparkSession, dir: Path, value: String): Unit =
-    writeFileAtomic(spark, new Path(dir, "CURRENT"), value)
-
   def deleteRec(fs: FileSystem, p: Path): Unit = {
     if (fs.exists(p)) fs.delete(p, true)
     ()
@@ -104,7 +108,7 @@ object StateFs {
     * dirs (external loss of the pointer: defaulting to `g0` would
     * serve an empty store while the next compaction's [[gcStaleGens]]
     * deleted the real live generation), and a base holding a leftover
-    * rename-aside layout (object scaladoc). */
+    * layout (object scaladoc). */
   def resolveLive(fs: FileSystem, base: Path): Path = {
     val ptr = new Path(base, PtrFile)
     if (fs.exists(ptr)) return new Path(base, readString(fs, ptr))
@@ -123,9 +127,10 @@ object StateFs {
     if (kids.nonEmpty || siblings.nonEmpty) {
       val found = (kids.map(_.getPath.getName).sorted ++
         siblings.map(_.getName)).take(8)
-      sys.error(s"leftover rename layout refused: $base holds state in the " +
-        s"retired rename-aside layout (found: ${found.mkString(", ")}) and " +
-        "no PTR version pointer — only the g<k>/PTR generation layout is " +
+      sys.error(s"leftover rename layout refused: $base holds state in a " +
+        "retired layout — the rename-aside swap or the v<id>/CURRENT " +
+        s"pointer (found: ${found.mkString(", ")}) — and no PTR version " +
+        "pointer; only the g<k>/PTR generation layout is " +
         "served. Rebuild the store into a fresh directory; nothing was " +
         "deleted")
     }
@@ -182,6 +187,54 @@ object StateFs {
           deleteRec(fs, s.getPath)
       }
 
+  // ---- replace stores: each commit writes the whole state ----
+
+  /** The live generation holding a replace store's `frames`, or None
+    * while the store is virgin: `live` is `g0`, which replace stores
+    * never write (their first commit publishes `PTR=g0` and writes
+    * `g1`, so a crash inside it stays quiet). A named `g<k>` that is
+    * missing, or whose frames lack `_SUCCESS`, is external loss. */
+  private def replacedLive(fs: FileSystem, base: Path, live: Path,
+      frames: Seq[String]): Option[Path] =
+    if (live.getName == "g0") None
+    else {
+      val lost = frames.filterNot(f => committed(fs, new Path(live, f)))
+      require(lost.isEmpty,
+        s"state inconsistent: the version pointer under $base names " +
+          s"generation ${live.getName} but its frame(s) " +
+          s"[${lost.mkString(", ")}] are missing or uncommitted — the live " +
+          "state was removed externally; restore it or rebuild the store " +
+          "from its source rows")
+      Some(live)
+    }
+
+  /** The committed `frames` of a replace store, in order, or None
+    * before its first commit. A lost pointer, a lost live generation
+    * and a leftover layout are refused loudly ([[resolveLive]]). */
+  def readFrames(spark: SparkSession, base: Path,
+      frames: Seq[String]): Option[Seq[DataFrame]] = {
+    val f = fs(spark, base)
+    replacedLive(f, base, resolveLive(f, base), frames)
+      .map(g => frames.map(n => spark.read.parquet(new Path(g, n).toString)))
+  }
+
+  /** Replace a store's whole state with `frames` (name → one-file
+    * frame): after the read-side refusals, collect stale generations,
+    * write every frame into the next generation, and publish it with
+    * one [[pointerSwap]]. The previous generation stays as the reader
+    * grace window; the frames may read the live one. */
+  def commitFrames(spark: SparkSession, base: Path,
+      frames: Seq[(String, DataFrame)]): Unit = {
+    val f = fs(spark, base)
+    val live = openLive(spark, base)
+    replacedLive(f, base, live, frames.map(_._1))
+    gcStaleGens(f, base, live.getName)
+    val next = nextGen(base, live)
+    for ((n, df) <- frames)
+      df.coalesce(1).write.mode("overwrite").parquet(new Path(next, n).toString)
+    pointerSwap(spark, base, next)
+  }
+
   // ---- compacted-generation marker ----
 
   /** Record, INSIDE a compacted generation directory, the names of
@@ -196,23 +249,4 @@ object StateFs {
     try out.write(folded.mkString("\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
-
-  /** The folded-dir names of a compacted generation, or None for a
-    * plain append generation. */
-  def readFolded(fs: FileSystem, genDir: Path): Option[Seq[String]] = {
-    val m = new Path(genDir, "_COMPACTED")
-    if (!fs.exists(m)) None
-    else Some(readString(fs, m).split("\n").toSeq.filter(_.nonEmpty))
-  }
-
-  /** Delete every `v*`-named generation under `dir` except `keep` —
-    * committed or partial (a crashed commit's half-written dir
-    * included). The post-pointer-swap GC shared by the versioned
-    * state stores. */
-  def gcVersions(fs: FileSystem, dir: Path, keep: String): Unit =
-    if (fs.exists(dir))
-      fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v") &&
-          s.getPath.getName != keep)
-        .foreach(s => deleteRec(fs, s.getPath))
 }

@@ -476,10 +476,8 @@ class Bm25IndexSpec extends SparkTestBase {
     for (sub <- Seq("postings", "dl"); f <- live(parent, sub).listFiles()
         if f.getName.matches("\\.?(applog|FRONTIER|GENESIS)(\\.crc)?"))
       Fixtures.deleteRec(f)
-    val merged = new File(parent, "merged")
-    val cur = java.nio.file.Files.readString(new File(merged, "CURRENT").toPath).trim
     val names = Seq(0L, 1L).map(v => f"v$v%020d")
-    rewrite(new File(new File(merged, cur), "stats").getPath)(
+    rewrite(new File(live(parent, "merged"), "stats").getPath)(
       _.withColumn("p_dirs", typedLit(names)).withColumn("dl_dirs", typedLit(names)))
     val appendOp = () => Bm25Index.appendBatch(spark, parent,
       Seq((900001L, "spark extra")).toDF("doc_id", "text"), 2L)
@@ -606,7 +604,7 @@ class Bm25IndexSpec extends SparkTestBase {
       "compact folds it") {
     // VERDICT r14 #1 (the Compactor guard ported to the BM25 store):
     // a concurrent appendBatch commits postings/dl v-dirs AND moves
-    // the merged CURRENT pointer — a family swap would destroy its
+    // the merged store's PTR — a family swap would destroy its
     // dirs while the merged stats still count them. Injected through
     // the pre-swap seam.
     val state = Fixtures.tempDir("bm25-ccg").resolve("state").toString

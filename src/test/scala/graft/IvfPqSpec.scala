@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
+import graft.functions.VectorOps
 import graft.operators.{IvfPq, ProductQuantizer}
 import graft.queries.VectorQueries
 
@@ -57,7 +58,7 @@ class IvfPqSpec extends SparkTestBase {
 
   private def quantized =
     graft.Tables.embeddings(spark, dir).select(col("vec_id"),
-      ProductQuantizer.quantize(col("embedding")).as("qv"))
+      VectorOps.quantize(col("embedding")).as("qv"))
 
   test("exact-residual corpus: IVF-PQ ADC == brute-force L2 top-10, estimates exact") {
     val e = quantized
@@ -205,7 +206,7 @@ class IvfPqSpec extends SparkTestBase {
     val dir = Fixtures.tempDir("ivfpq-tiny").toString
     tiny.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val e = graft.Tables.embeddings(spark, dir).select(col("vec_id"),
-      ProductQuantizer.quantize(col("embedding")).as("qv"))
+      VectorOps.quantize(col("embedding")).as("qv"))
     val (cents, cbs, codes) = IvfPq.build(spark, e, kc = 64, coarseRounds = 0,
       m = 4, subLen = 16, kCb = 64, pqRounds = 0)
     assert(cents.count() == 10) // seeds clamp to the corpus
@@ -284,14 +285,14 @@ class IvfPqSpec extends SparkTestBase {
     val tiny = (0L until 10L)
       .map(i => (i, Array.tabulate(64)(d => (i * 100 + d).toFloat)))
       .toDF("vec_id", "embedding")
-      .select(col("vec_id"), ProductQuantizer.quantize(col("embedding")).as("qv"))
+      .select(col("vec_id"), VectorOps.quantize(col("embedding")).as("qv"))
     val (kcT, centsT, _) = IvfPq.autoKc(spark, tiny, grid = Seq(2, 4))
     assert(Seq(2, 4).contains(kcT) && centsT.count() > 0)
     // all-duplicate corpus: every eval-to-fit distance is 0, there is
     // no neighbor scale — must fail with the remedy in the message
     val dup = (0L until 50L).map(i => (i, Array.fill(64)(1.5f)))
       .toDF("vec_id", "embedding")
-      .select(col("vec_id"), ProductQuantizer.quantize(col("embedding")).as("qv"))
+      .select(col("vec_id"), VectorOps.quantize(col("embedding")).as("qv"))
     val ex = intercept[IllegalArgumentException] {
       IvfPq.autoKc(spark, dup, grid = Seq(2))
     }

@@ -9,16 +9,17 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Bm25Index
 import graft.sink.Compactor
-import graft.streaming.{StreamingIvf, StreamingIvfPq}
+import graft.streaming.{StreamingIvf, StreamingIvfPq, StreamingKMeans}
 
 /** The one state layout, from the outside: every stored base (the
-  * BM25 `postings`/`dl` families, the IVF `lists`, the IVF-PQ `codes`,
-  * a Compactor table) is a `PTR` file plus `g<k>` generation dirs.
+  * BM25 `postings`/`dl` families and `merged` store, the IVF `lists`,
+  * the IVF-PQ `codes`, a Compactor table, a StreamingKMeans state) is a
+  * `PTR` file plus `g<k>` generation dirs.
   *
-  *  - A base left in the retired rename-aside layout (`v*` dirs or
-  *    parquet files directly under it, or a `.bak` sibling) is refused
-  *    loudly on read, append and compact, naming the layout, and
-  *    every file stays in place.
+  *  - A base left in a retired layout (`v*` dirs or parquet files
+  *    directly under it, a `.bak` sibling, or `v<id>` dirs named by a
+  *    `CURRENT` pointer) is refused loudly on read, append and compact,
+  *    naming the layout, and every file stays in place.
   *  - A virgin base (absent, or holding only a crashed first
   *    publish's `PTR.tmp`) reads as an empty store without creating
   *    anything, and the first append publishes `PTR=g0`.
@@ -133,6 +134,39 @@ class LeftoverLayoutSpec extends SparkTestBase {
       "read" -> (() => Compactor.read(spark, dir.toString).count()),
       "append" -> (() => Compactor.writeDir(spark, dir.toString)),
       "compact" -> (() => Compactor.compact(spark, dir.toString, 10)))
+  }
+
+  /** Rewrite a replace store built in the generation layout into the
+    * retired `v<id>` + `CURRENT` layout: the live generation renamed
+    * to a version dir the pointer names, no `PTR`. */
+  private def toCurrentLayout(base: File): Unit = {
+    val live = java.nio.file.Files.readString(new File(base, "PTR").toPath).trim
+    val v = f"v${0L}%020d"
+    assert(new File(base, live).renameTo(new File(base, v)))
+    for (f <- base.listFiles() if f.getName.matches("g\\d+|\\.?PTR.*"))
+      Fixtures.deleteRec(f)
+    java.nio.file.Files.writeString(new File(base, "CURRENT").toPath, v)
+  }
+
+  test("a leftover CURRENT-layout BM25 merged store and StreamingKMeans " +
+      "state are refused on every entry point, every file left in place") {
+    val root = Fixtures.tempDir("leftover-current").toFile
+    val bm = new File(root, "bm"); val st = bm.toString
+    Bm25Index.appendBatch(spark, st,
+      Seq((1L, "spark vector"), (2L, "customer spark")).toDF("doc_id", "text"), 0L)
+    toCurrentLayout(new File(bm, "merged"))
+    assertRefused(bm, "merged")(
+      "read" -> (() => Bm25Index.retrieve(spark, st, Seq("spark")).count()),
+      "append" -> (() => Bm25Index.appendBatch(spark, st,
+        Seq((3L, "spark")).toDF("doc_id", "text"), 1L)),
+      "compact" -> (() => Bm25Index.compact(spark, st)))
+    val km = new File(root, "km").toString
+    val state = Seq((0L, Seq(0L, 0L), 1L)).toDF("c_id", "sums", "n")
+    StreamingKMeans.commitState(state, km, 0L)
+    toCurrentLayout(new File(km))
+    assertRefused(new File(km), km)(
+      "read" -> (() => StreamingKMeans.readState(spark, km)),
+      "commit" -> (() => StreamingKMeans.commitState(state, km, 1L)))
   }
 
   test("virgin bases: a read creates nothing, a PTR.tmp-only base is " +

@@ -251,6 +251,25 @@ class PipelineSpec extends SparkTestBase {
       "a failed read must leave the registry file untouched")
   }
 
+  test("the registry writes only on change: a no-op add or commit creates no file") {
+    CrashFs.register(spark.sparkContext.hadoopConfiguration)
+    val local = Fixtures.tempDir("reg-noop")
+    val reg = new graft.ingest.LateRegistry(spark,
+      s"${CrashFs.Scheme}://${local.toUri.getPath}")
+    val d = LocalDate.parse("2025-04-20")
+    // every create fails at its first byte: a write attempt would throw
+    CrashFs.crashing(0) {
+      assert(reg.add(Set.empty).isEmpty)
+      assert(reg.commit(Set.empty, d).isEmpty)
+    }
+    assert(local.toFile.list().isEmpty, s"a no-op wrote ${local.toFile.list().toSeq}")
+    assert(reg.add(Set(d)) === Set(d))
+    CrashFs.crashing(0) {
+      assert(reg.add(Set(d)) === Set(d))
+      assert(reg.commit(Set.empty, d.plusDays(1)) === Set(d))
+    }
+  }
+
   test("control-plane writes are atomic: a write killed mid-stream leaves " +
       "the registry and the checkpoint byte-identical") {
     CrashFs.register(spark.sparkContext.hadoopConfiguration)

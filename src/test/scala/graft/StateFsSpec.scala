@@ -40,13 +40,13 @@ class StateFsSpec extends SparkTestBase {
     assert(StateFs.committedVDirs(fs, new Path(base, "absent")).isEmpty)
   }
 
-  test("writeFolded/readFolded roundtrip; plain generations read as None") {
+  test("writeFolded records the folded dir names; a plain generation has no marker") {
     val base = new Path(Fixtures.tempDir("statefs-folded").toString)
     val fs = fsFor(base)
     val gen = mk(new Path(base, "v0"))
     StateFs.writeFolded(fs, gen, Seq("a", "b", "c"))
-    assert(StateFs.readFolded(fs, gen) === Some(Seq("a", "b", "c")))
-    assert(StateFs.readFolded(fs, mk(new Path(base, "v1"))) === None)
+    assert(StateFs.readString(fs, new Path(gen, "_COMPACTED")) === "a\nb\nc")
+    assert(!fs.exists(new Path(mk(new Path(base, "v1")), "_COMPACTED")))
   }
 
   test("writeFileAtomic overwrites an existing target in place") {
@@ -199,17 +199,5 @@ class StateFsSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("FRONTIER") &&
       e.getMessage.contains("GENESIS exists"), e.getMessage)
-  }
-
-  test("gcVersions deletes every v* generation except keep, committed or partial") {
-    val base = new Path(Fixtures.tempDir("statefs-gc").toString)
-    val fs = fsFor(base)
-    val keep = mk(new Path(base, "v2")); touch(keep, "_SUCCESS")
-    val old = mk(new Path(base, "v1")); touch(old, "_SUCCESS")
-    mk(new Path(base, "v0")) // crashed half-commit, no _SUCCESS
-    val other = mk(new Path(base, "other")); touch(other, "f")
-    StateFs.gcVersions(fs, base, "v2")
-    assert(fs.exists(keep) && !fs.exists(old) && !fs.exists(new Path(base, "v0")))
-    assert(fs.exists(new Path(other, "f")), "gc must not touch non-v dirs")
   }
 }

@@ -6,7 +6,8 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IvfPq, ProductQuantizer}
+import graft.functions.VectorOps
+import graft.operators.IvfPq
 import graft.streaming.StreamingIvfPq
 
 /** Streaming IVF-PQ maintenance: the served code table after ANY
@@ -37,7 +38,7 @@ class StreamingIvfPqSpec extends SparkTestBase {
   }
 
   private def quantized(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("vec_id"), ProductQuantizer.quantize(col("embedding")).as("qv"))
+    df.select(col("vec_id"), VectorOps.quantize(col("embedding")).as("qv"))
 
   private def codeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long, Long)] =
     df.select("vec_id", "sub", "code", "cell").collect()

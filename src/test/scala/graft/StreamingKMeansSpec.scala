@@ -114,21 +114,64 @@ class StreamingKMeansSpec extends SparkTestBase {
       StreamingKMeans.updateState(None, b1, k = 2), state, 0L)
     val committed = StreamingKMeans.readState(spark, state).get.collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))).toSet
-    // simulate a crash mid-write of the NEXT version: a partial dir
-    // with data but no _SUCCESS, pointer swap never reached
-    val partial = new java.io.File(state, f"v${1L}%020d")
+    // simulate a crash mid-write of the NEXT generation: a partial
+    // frame with data but no _SUCCESS, pointer swap never reached
+    assert(readPtr(state) === "g1")
+    val partial = new java.io.File(state, "g2/state")
     assert(partial.mkdirs())
-    java.nio.file.Files.write(partial.toPath.resolve("part-00000.parquet"),
-      Array[Byte](1, 2, 3))
+    val junk = partial.toPath.resolve("part-00000.parquet")
+    java.nio.file.Files.write(junk, Array[Byte](1, 2, 3))
     val read = StreamingKMeans.readState(spark, state).get.collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))).toSet
     assert(read == committed, "partial write must be invisible to readState")
-    // the next successful commit swaps the pointer and GCs the orphan
+    // the next commit collects the partial at its entry, writes the
+    // generation afresh and swaps; g1 stays as the reader grace window
     StreamingKMeans.commitState(
       StreamingKMeans.updateState(
         StreamingKMeans.readState(spark, state), b1, k = 2), state, 1L)
-    val vdirs = new java.io.File(state).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v")).map(_.getName)
-    assert(vdirs.toSet == Set(f"v${1L}%020d"), s"stale versions not GC'd: ${vdirs.toSeq}")
+    assert(readPtr(state) === "g2" && !java.nio.file.Files.exists(junk))
+    assert(gens(state) === Seq("g1", "g2"))
+    assert(StreamingKMeans.readState(spark, state).get.collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSet === Set((0L, 2L), (1L, 2L)))
+  }
+
+  private def readPtr(state: String): String =
+    java.nio.file.Files.readString(new java.io.File(state, "PTR").toPath).trim
+
+  private def gens(state: String): Seq[String] =
+    new java.io.File(state).list().toSeq.filter(_.matches("g\\d+")).sorted
+
+  test("a lost pointer or live generation is refused on read and commit, " +
+      "every file left in place") {
+    val state = Fixtures.tempDir("skml").resolve("state").toString
+    val st = Seq((0L, Seq(0L, 0L), 1L)).toDF("c_id", "sums", "n")
+    for (b <- 0L to 2L) StreamingKMeans.commitState(st, state, b)
+    // g1 fell to the third commit's entry GC; g2 is the grace window
+    assert(readPtr(state) === "g3" && gens(state) === Seq("g2", "g3"))
+    def files: Seq[(String, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val root = new java.io.File(state)
+      org.apache.commons.io.FileUtils.listFiles(root, null, true).asScala.toSeq
+        .map(f => (root.toPath.relativize(f.toPath).toString, f.length)).sorted
+    }
+    def refused(what: String): Unit = {
+      val before = files
+      for (op <- Seq(() => StreamingKMeans.readState(spark, state),
+          () => StreamingKMeans.commitState(st, state, 3L))) {
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains(what) &&
+          e.getMessage.contains("removed externally"), e.getMessage)
+        assert(files === before, "a refusal must leave every file in place")
+      }
+    }
+    // the pointer lost: re-seeding would fold the next batch into an
+    // empty model and the commit's GC would delete the accumulator
+    for (f <- Seq("PTR", ".PTR.crc")) Fixtures.deleteRec(new java.io.File(state, f))
+    refused("[g2, g3]")
+    java.nio.file.Files.writeString(new java.io.File(state, "PTR").toPath, "g3")
+    assert(StreamingKMeans.readState(spark, state).isDefined)
+    // the live generation lost, its predecessor still present
+    Fixtures.deleteRec(new java.io.File(state, "g3"))
+    refused("g3")
   }
 }
